@@ -204,37 +204,13 @@ def prefix_filtered_candidates(sh: DataFrame, threshold: float) -> DataFrame:
             & (1 + F.least(F.col("na") - F.col("ra"), F.col("nb") - F.col("rb"))
                >= alpha)
         )
-        # r17 — PPJoin SUFFIX-style accumulated bound (Xiao et al. §4.3's
-        # insight recast for the set-at-a-time form): the old `.distinct()`
-        # shuffled one row per pair and kept EVERY pair with one passing
-        # collision; grouping on the oriented pair instead (same exchange
-        # grain — a distinct IS a groupBy) yields, per pair,
-        #   c_pre  = |collisions|  — common tokens inside both retained
-        #            prefixes.  Both docs sort by the same global (df, g)
-        #            key, so the common-token sequence has strictly
-        #            increasing local ranks in BOTH docs and the collision
-        #            set is a PREFIX of it: c_pre counts w_1..w_k exactly.
-        #   ra_mx  = rank_a(w_k), rb_mx = rank_b(w_k) — every remaining
-        #            common token sits strictly after both, so there are
-        #            at most min(na-ra_mx, nb-rb_mx) of them.
-        # Hence overlap <= c_pre + min(na-ra_mx, nb-rb_mx) EXACTLY; a pair
-        # with true J >= t has overlap >= alpha, so the filter is lossless
-        # (the callers' all-pairs oracles re-prove it at every selfcheck).
-        # The per-row positional filter above keeps the collision fan-out
-        # off the exchange; this accumulated form then prunes the pairs the
-        # single-witness bound is too weak to reject, BEFORE the exact
-        # array_intersect verify that dominates the pipeline wall-clock.
-        .groupBy("doc_a", "doc_b", "na", "nb")
-        .agg(
-            F.count(F.lit(1)).alias("c_pre"),
-            F.max("ra").alias("ra_mx"),
-            F.max("rb").alias("rb_mx"),
-        )
-        .filter(
-            F.col("c_pre")
-            + F.least(F.col("na") - F.col("ra_mx"), F.col("nb") - F.col("rb_mx"))
-            >= alpha
-        )
+        # one row per oriented pair.  An accumulated PPJoin suffix bound
+        # over a pair's collisions (c + min(na - max ra, nb - max rb) >=
+        # alpha) would prune nothing more: both docs rank tokens by the
+        # same (df, g) key, so the pair's last collision holds both max
+        # ranks, and the per-row filter above already passed it with c = 1.
+        .select("doc_a", "doc_b")
+        .distinct()
         .select(
             F.least("doc_a", "doc_b").alias("doc_a"),
             F.greatest("doc_a", "doc_b").alias("doc_b"),
@@ -322,9 +298,9 @@ def _ngram_jaccard_scored(
     spills instead of evicting (the scored triple is ~24 B/row).  Note
     the CacheManager dedups by plan equality, so a same-session consumer
     (the curation pipeline building this same subtree) legitimately
-    reuses the materialized candidates; bench.py calls
-    ``spark.catalog.clearCache()`` between extended reps so its recorded
-    wall-clocks stay full re-executions.
+    reuses the materialized candidates; a timing harness must call
+    ``spark.catalog.clearCache()`` between reps so each one stays a full
+    re-execution.
 
     r16: the documents scan comes through ``load_spread`` — the sf parquet
     is a single row group, so the shingling + prefix-index map work (stage-
@@ -361,6 +337,9 @@ def _ngram_jaccard_scored(
 N_HASHES = 64
 N_BANDS = 16
 ROWS_PER_BAND = N_HASHES // N_BANDS
+# exact-Jaccard cut of dedup_minhash_lsh; lsh_candidate_pairs' size band
+# uses it too, and its 0.55 signature-estimate cut is calibrated for it
+LSH_JACCARD = 0.8
 
 
 def minhash_signatures(docs_with_shingles: DataFrame) -> DataFrame:
@@ -390,13 +369,14 @@ def minhash_signatures(docs_with_shingles: DataFrame) -> DataFrame:
     )
 
 
-def lsh_candidate_pairs(sig: DataFrame, threshold: float = 0.8) -> DataFrame:
+def lsh_candidate_pairs(sig: DataFrame) -> DataFrame:
     """Band the signature (16 bands × 4 rows), bucket-join per band, then
-    pre-filter candidates on the signature-estimated Jaccard.
+    pre-filter candidates on the signature-estimated Jaccard, for pairs
+    whose exact Jaccard may reach ``LSH_JACCARD``.
 
     The estimate (fraction of equal minhashes) costs a 64-int compare per
     pair — orders cheaper than exact shingle intersection.  Cut at 0.55 for
-    a 0.8 exact threshold: stderr of the estimate is ≈√(j(1-j)/64) ≈ 0.05,
+    the 0.8 exact threshold: stderr of the estimate is ≈√(j(1-j)/64) ≈ 0.05,
     so true positives sit >4σ above the cut while the j≈0.5 bulk of a
     near-degenerate corpus is dropped before the expensive verify.
 
@@ -453,7 +433,7 @@ def lsh_candidate_pairs(sig: DataFrame, threshold: float = 0.8) -> DataFrame:
                 F.least(F.col("a.n_sh"), F.col("b.n_sh")).cast("bigint")
                 >= F.ceil(
                     F.round(
-                        F.lit(threshold)
+                        F.lit(LSH_JACCARD)
                         * F.greatest(F.col("a.n_sh"), F.col("b.n_sh")),
                         9,
                     )
@@ -485,7 +465,7 @@ def lsh_candidate_pairs(sig: DataFrame, threshold: float = 0.8) -> DataFrame:
         / F.lit(N_HASHES)
     )
     size_band = F.least(F.col("na"), F.col("nb")).cast("bigint") >= F.ceil(
-        F.round(F.lit(threshold) * F.greatest(F.col("na"), F.col("nb")), 9)
+        F.round(F.lit(LSH_JACCARD) * F.greatest(F.col("na"), F.col("nb")), 9)
     )
     return (
         pairs.join(sa, "doc_a")
@@ -508,7 +488,7 @@ def lsh_candidate_pairs(sig: DataFrame, threshold: float = 0.8) -> DataFrame:
     "asserts containment + recall explicitly.",
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _minhash_lsh_scored(spark, sf_dir).filter(F.col("jaccard") >= 0.8)
+    return _minhash_lsh_scored(spark, sf_dir).filter(F.col("jaccard") >= LSH_JACCARD)
 
 
 def _minhash_lsh_scored(

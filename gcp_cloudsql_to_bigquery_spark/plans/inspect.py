@@ -251,14 +251,15 @@ def unbounded_global_buffer_aggregates(df: DataFrame) -> list[str]:
     bound — so each offending aggregate is flagged exactly once.
     Returns the matched function names, one entry per offending node.
 
-    Round-16 registry scan (scripts/scan_udf_buffers.py) findings: 4
-    hits — two rewritten onto scale.global_order_stats (the bookmark
-    high-water mark, the range-layout boundaries), two allowlisted at
-    the time.  Round 17 rewrote the remaining two as well
-    (agg_quantile_sketch's exact certification percentiles onto
-    scale.global_order_stats; profile_table's median onto a
-    bounded-domain value histogram), so the registry-wide count is now
-    ZERO and the plan_audit allowlist carries no buffer_agg entries."""
+    Round-16 registry scan (now ``scripts/plan_audit.py`` invariant 5,
+    whose VIOLATION lines list these names) findings: 4 hits — two
+    rewritten onto scale.global_order_stats (the bookmark high-water
+    mark, the range-layout boundaries), two allowlisted at the time.
+    Round 17 rewrote the remaining two as well (agg_quantile_sketch's
+    exact certification percentiles onto scale.global_order_stats;
+    profile_table's median onto a bounded-domain value histogram), so
+    the registry-wide count is now ZERO and the plan_audit allowlist
+    carries no buffer_agg entries."""
     out: list[str] = []
 
     def walk(node) -> None:

@@ -1,8 +1,10 @@
-"""Dump the formatted physical plans of the bench headline + extended
-queries to PLANS.md — a reviewable snapshot of the plan shapes the perf
-claims rest on (pushed filters, exchange count, broadcast joins,
-whole-stage codegen spans), regenerated per round so plan regressions
-are visible in the diff, not just in wall-clocks.
+"""Dump the formatted physical plans of the benchmark's query operations
+(``perfbench/workloads.py``: ``SQL_BATCH + PY_KERNELS``) to PLANS.md — a
+reviewable snapshot of the plan shapes the perf numbers rest on (pushed
+filters, exchange count, broadcast joins, whole-stage codegen spans),
+regenerated after operator changes so plan regressions are visible in the
+diff, not just in wall-clocks.  The session is the benchmark's:
+``local[nproc]`` with ``session.get_spark`` defaults.
 
 Usage:  python scripts/dump_plans.py [--sf /root/testdata/sf0.01]
 """
@@ -10,15 +12,15 @@ Usage:  python scripts/dump_plans.py [--sf /root/testdata/sf0.01]
 from __future__ import annotations
 
 import argparse
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# the bench query sets are the single source of truth — import them so the
-# snapshot cannot drift from what bench.py actually times; streaming
-# entries are StreamingQueries with no batch plan to dump
-from bench import EXTENDED, HEADLINE, STREAMING  # noqa: E402
+# the benchmark's query list is the single source of truth, so the snapshot
+# cannot drift from what perfbench times
+from perfbench.workloads import PY_KERNELS, SQL_BATCH  # noqa: E402
 
 MAX_PLAN_LINES = 80  # keep the artifact reviewable; long tails truncated
 
@@ -33,10 +35,13 @@ def main() -> int:
     from gcp_cloudsql_to_bigquery_spark.session import get_spark
     from gcp_cloudsql_to_bigquery_spark.workload import queries
 
-    spark = get_spark(app_name="dump_plans", master="local[8]", shuffle_partitions=8)
+    nproc = len(os.sched_getaffinity(0))
+    os.environ.setdefault("SPARK_GRAFT_CPUS", str(nproc))  # as perfbench/run.py
+    spark = get_spark(app_name="dump_plans", master=f"local[{nproc}]")
+    shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     qs = queries()
     sections = []
-    for name in tuple(n for n in HEADLINE if n not in STREAMING) + EXTENDED:
+    for name in SQL_BATCH + PY_KERNELS:
         df = qs[name](spark, args.sf)
         df.collect()  # finalize the AQE plan (isFinalPlan=true) so the
         # dumped shape and codegen spans are the ones that actually ran
@@ -97,15 +102,16 @@ def main() -> int:
         sections.append(f"## {name}\n\n`{summary}`\n\n```\n{body}\n```\n")
 
     header = (
-        "# PLANS — formatted physical plans of the bench headliners\n\n"
+        "# PLANS — formatted physical plans of the benchmark's queries\n\n"
         f"Generated by `scripts/dump_plans.py` at `{args.sf}` "
-        "(local[8], shuffle=8).  `shuffle_exchanges` counts hash/range "
+        f"(local[{nproc}], shuffle={shuffle}, `session.get_spark` defaults) "
+        "for the `batch` workload's queries in `perfbench/workloads.py`.  "
+        "`shuffle_exchanges` counts hash/range "
         "partitioning exchanges only (the `inspect.exchange_count` "
         "semantics `tests/test_plans.py` asserts; `Exchange "
         "SinglePartition` collect barriers are excluded); regenerate "
         "after any operator change so plan-shape regressions show up in "
-        "the git diff.  `stream_tumbling_window` is a StreamingQuery and "
-        "has no batch plan to dump.\n\n"
+        "the git diff.\n\n"
     )
     with open(args.out, "w") as f:
         f.write(header + "\n".join(sections))

@@ -53,15 +53,18 @@ Known-justified exceptions are allowlisted with reasons (kept in sync
 with tests/test_plans.py, which pins the same invariants in CI).
 
 Usage:  python scripts/plan_audit.py [--sf /root/testdata/sf0.001]
-Exit status 1 if any non-allowlisted violation is found.
+Exit status 1 if any non-allowlisted violation is found.  A VIOLATION line
+for invariant 3 lists the child node under each offending exchange, and
+one for invariant 5 the value-collecting functions of each aggregate.
 """
 
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # (query, invariant) -> expected count, with the justification
 # r17: the window_ntile_first_last window/single-partition entries and the
@@ -124,22 +127,20 @@ def main() -> int:
     def check(name: str, df) -> None:
         nonlocal n_checked
         n_checked += 1
-        for kind, count in (
-            ("window", inspect.unpartitioned_fact_window_count(df)),
-            ("cartesian", inspect.fact_cartesian_count(df)),
-            (
-                "single_partition",
-                len(inspect.unbounded_single_partition_exchanges(df)),
-            ),
-            ("py_row_udf", inspect.batch_eval_python_count(df)),
-            (
-                "buffer_agg",
-                len(inspect.unbounded_global_buffer_aggregates(df)),
-            ),
+        single = inspect.unbounded_single_partition_exchanges(df)
+        buffers = inspect.unbounded_global_buffer_aggregates(df)
+        # (kind, count, offending child nodes where the detector names them)
+        for kind, count, nodes in (
+            ("window", inspect.unpartitioned_fact_window_count(df), []),
+            ("cartesian", inspect.fact_cartesian_count(df), []),
+            ("single_partition", len(single), single),
+            ("py_row_udf", inspect.batch_eval_python_count(df), []),
+            ("buffer_agg", len(buffers), buffers),
         ):
             expected, _why = ALLOWLIST.get((name, kind), (0, ""))
             if count != expected:
-                violations.append(f"{name}: {kind}={count} (expected {expected})")
+                hits = f" <- {nodes}" if nodes else ""
+                violations.append(f"{name}: {kind}={count} (expected {expected}){hits}")
 
     # pre-barrier builders FIRST: the verify barriers fence the candidate/
     # verify subtrees out of the registered queries' plans, so the audit

@@ -101,6 +101,39 @@ def test_minhash_verify_no_forced_broadcast(spark):
     assert inspect.broadcast_hint_count(df) == 0
 
 
+def test_minhash_signature_aggregate_is_shared(spark):
+    # the 64 minhashes are computed ONCE: the band join's second side and
+    # the signature re-attach read the one signature exchange back as a
+    # ReusedExchange (lsh_candidate_pairs selects n_sh on the re-attach
+    # sides so their column-pruned aggregates stay plan-equal).  Pinned on
+    # the static plan: AQE plans its stages one by one and shows the reuse
+    # only at run time.
+    import re
+
+    from gcp_cloudsql_to_bigquery_spark.operators.dedup import audit_subplans
+
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        spark.catalog.clearCache()
+        df = audit_subplans(spark, SF)["dedup_minhash_lsh.pre_barrier"]
+        plan = inspect.formatted_plan(df)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    # one map-side signature aggregate of any width (a pruned copy would
+    # be 64 wide), and it is count(1) + 64 mins
+    partials = re.findall(
+        r"Functions \[(\d+)\]: \[(?:partial_count\(1\), )?partial_min\(xxhash64\(0,", plan
+    )
+    assert partials == ["65"], plan
+    # its exchange (doc_id + 65 buffers) feeds the band join's second side
+    # and the signature re-attach through ReusedExchange
+    sig_exchanges = re.findall(r"^\((\d+)\) Exchange\nInput \[66\]", plan, re.M)
+    assert len(sig_exchanges) == 1, plan
+    reused = re.findall(r"ReusedExchange \[Reuses operator id: (\d+)\]", plan)
+    assert reused.count(sig_exchanges[0]) >= 2, plan
+
+
 def test_anchor_lsh_bucket_shuffle_carries_ids_only(spark):
     # the LSH bucket key has only 2^8 values — any exchange partitioned on
     # it is low-cardinality and must carry (id, sig) pairs only; vectors are
@@ -309,13 +342,6 @@ def test_pq_encode_is_scan_local(spark):
     (codebook and query tables ride the closure): the plan has NO join at
     all, and the only exchange is the final top-k rank window on the
     (query, neighbor) pair table — corpus vectors are never shuffled."""
-    # pin the FRESH build: ann_pq_topk keeps a prepared-plan cache (r16),
-    # and a cached DataFrame another test already executed explains as the
-    # final adaptive plan (ShuffleQueryStage wrappers) instead of the
-    # pre-execution shape this test pins
-    from gcp_cloudsql_to_bigquery_spark.operators import similarity as S
-
-    S._PQ_PLAN_CACHE.clear()
     df = queries()["ann_pq_topk"](spark, "/root/testdata/sf0.001")
     plan = physical_plan(df)
     assert "Join" not in plan, plan
@@ -546,8 +572,8 @@ def test_no_unbounded_single_partition_barrier_family(spark):
     one partial row per map task, a GlobalLimit fed <= k rows per task by
     its LocalLimit, post-WindowGroupLimit ranks) are exempt by the
     detector's boundedness walk.  The r16 full-registry scan (377 plans,
-    scripts/scan_singlepartition.py — the r15 WindowGroupLimit scan
-    methodology) found exactly ONE hit: the documented ntile single-
+    now scripts/plan_audit.py invariant 3, whose VIOLATION lines name the
+    offending child nodes) found exactly ONE hit: the documented ntile single-
     reducer.  This test pins the detector on the high-single-partition-
     count queries from the count-based sweep (global-agg/limit heavy
     plans, 4-14 SinglePartition exchanges each, all bounded) plus the

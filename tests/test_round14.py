@@ -13,8 +13,6 @@
 - ``elt_bad_records_quarantine``: a row with BOTH c_custkey and c_acctbal
   NULL now exports a 3-field line (balance coalesced to ''), which
   PERMISSIVE reads back as a good row — matching the oracle.
-- ``bench.time_oracle_extended``: fresh DuckDB connection per timed query;
-  an interrupt landing on query N's connection cannot cancel query N+1.
 """
 
 from __future__ import annotations
@@ -241,32 +239,6 @@ def test_quarantine_both_null_row_counts_good(spark, bothnull_customer_sf):
     (balance coalesced to ''), load back un-corrupt, and count good —
     matching the oracle, which never sees the CSV round-trip."""
     _match(spark, bothnull_customer_sf, "elt_bad_records_quarantine")
-
-
-# ---------------------------------------------------------------------------
-# bench oracle-extended: fresh connection per timed query (ADVICE r13, low)
-# ---------------------------------------------------------------------------
-
-
-def test_oracle_extended_interrupt_cannot_leak_to_next_query():
-    """Query 1 blows a ~0 cap and is interrupted; query 2 must still record
-    a numeric time.  Under the old shared-connection loop, an interrupt
-    delivered around query 1's completion could cancel query 2's execute;
-    with one connection per query that cross-talk is structurally gone."""
-    import bench
-
-    heavy = (
-        "SELECT count(*) FROM (SELECT a.o_orderkey FROM orders a, orders b "
-        "WHERE (a.o_orderkey * b.o_orderkey) % 7 = 3)"
-    )
-    out = bench.time_oracle_extended(
-        SF0001, {"heavy": heavy, "trivial": "SELECT 1 AS x"}, cap_sec=0.05
-    )
-    assert isinstance(out["trivial"], float), out
-    # the heavy one either got interrupted (the bound string) or, on a very
-    # fast box, finished under the cap — both are valid records; what may
-    # NOT happen is the trivial query inheriting the interrupt
-    assert "interrupted" not in str(out["trivial"])
 
 
 # ---------------------------------------------------------------------------

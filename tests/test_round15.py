@@ -214,16 +214,12 @@ def test_pq_rank_windows_have_partial_window_group_limit(spark):
     extra shuffle — see ranked_topk's docstring.)"""
     import re
 
-    from gcp_cloudsql_to_bigquery_spark.operators import similarity as S
     from gcp_cloudsql_to_bigquery_spark.operators.similarity import (
         ann_pq_topk_candidates,
     )
     from gcp_cloudsql_to_bigquery_spark.plans.inspect import physical_plan
     from gcp_cloudsql_to_bigquery_spark.workload import queries
 
-    # fresh build (see test_plans.test_pq_encode_is_scan_local): a cached,
-    # already-executed prepared plan explains in its final adaptive shape
-    S._PQ_PLAN_CACHE.clear()
     for df, k in (
         (queries()["ann_pq_topk"](spark, SF0001), 5),
         (queries()["ann_ivfpq_topk"](spark, SF0001), 5),

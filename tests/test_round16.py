@@ -4,13 +4,11 @@
 #    comes from a DRIVER-SIDE pyarrow read with row-group-stat pruning
 #    instead of a Spark collect job — parity with the collect it replaced
 #    is proven on benign data AND the planted element-degeneracy fixture.
-# 2. ann_pq_topk prepared-plan cache: repeat invocations return the same
-#    immutable plan per (session, tier); distinct tiers never share.
-# 3. embedding_label_centroid_arrow per-ROW fast/exact split (ADVICE r15):
+# 2. embedding_label_centroid_arrow per-ROW fast/exact split (ADVICE r15):
 #    the mixed kernel path (vectorized clean subset + scalar degenerate
 #    tail) is driven directly on hand-built Arrow groups against a pure-
 #    Python oracle-semantics reference.
-# 4. dedup_minhash_ml expected-miss budget (ADVICE r15): the AND-2 banding
+# 3. dedup_minhash_ml expected-miss budget (ADVICE r15): the AND-2 banding
 #    recall contract is checked against the ACTUAL oracle pair population —
 #    the summed per-pair miss probability at each checked tier is asserted
 #    ~0, so a future recall flake is diagnosable as a regression, not
@@ -49,8 +47,11 @@ def test_pq_head_parquet_read_matches_spark_collect(spark):
     from gcp_cloudsql_to_bigquery_spark.operators.similarity import (
         _pq_head_from_parquet,
     )
+    from gcp_cloudsql_to_bigquery_spark.workload import queries
 
     assert _pq_head_from_parquet(SFD) == _collect_head(spark, SFD)
+    # and the head drives the full ranked result: 10 queries x top 5
+    assert len(queries()["ann_pq_topk"](spark, SFD).collect()) == 50
 
 
 def test_pq_head_parquet_read_matches_on_degenerate_rows(
@@ -90,26 +91,7 @@ def test_pq_head_parquet_read_empty_tier(tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# 2. prepared-plan cache semantics
-# ---------------------------------------------------------------------------
-
-
-def test_pq_topk_plan_cache_reuses_per_tier(spark):
-    from gcp_cloudsql_to_bigquery_spark.operators import similarity as S
-    from gcp_cloudsql_to_bigquery_spark.workload import queries
-
-    S._PQ_PLAN_CACHE.clear()
-    a = queries()["ann_pq_topk"](spark, SF0001)
-    b = queries()["ann_pq_topk"](spark, SF0001)
-    assert a is b, "repeat invocation must return the prepared plan"
-    c = queries()["ann_pq_topk"](spark, SF001)
-    assert c is not a, "tiers must never share a prepared plan"
-    # and the prepared plan keeps producing the full ranked result
-    assert len(b.collect()) == 50
-
-
-# ---------------------------------------------------------------------------
-# 3. per-row fast/exact split in the label-centroid kernel
+# 2. per-row fast/exact split in the label-centroid kernel
 # ---------------------------------------------------------------------------
 
 _D = 64
@@ -192,7 +174,7 @@ def test_centroid_mixed_tier_matches_oracle(spark, nullelem_embeddings_sf):
 
 
 # ---------------------------------------------------------------------------
-# 4. AND-2 banding expected-miss budget (ADVICE r15)
+# 3. AND-2 banding expected-miss budget (ADVICE r15)
 # ---------------------------------------------------------------------------
 
 
@@ -231,7 +213,7 @@ def test_minhash_ml_oracle_pairs_carry_negligible_miss_budget(sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# 5. integer-exact rank selection == percentile_disc (r16 buffer-agg fixes)
+# 4. integer-exact rank selection == percentile_disc (r16 buffer-agg fixes)
 # ---------------------------------------------------------------------------
 # elt_incremental_bookmark_extract and elt_range_partition_layout replaced
 # their GLOBAL percentile_disc aggregates (value->count buffer merged on a
@@ -293,7 +275,7 @@ def test_bookmark_plan_has_no_percentile_and_one_rank_pass(spark):
 
 
 # ---------------------------------------------------------------------------
-# 6. RocksDB state store — the production large-state scale path
+# 5. RocksDB state store — the production large-state scale path
 # ---------------------------------------------------------------------------
 # The HDFS-backed (in-JVM-heap) state store the suite runs on caps state at
 # executor memory; the 100 TB story for stateful streaming is Spark's

@@ -1,31 +1,18 @@
-"""Round-17 optimization witnesses, part A (PPJoin accumulated suffix bound).
+"""Round-17 witnesses: the PPJoin candidate model and the LSH size band.
 
-The substantive r17 change to proven machinery is the ACCUMULATED overlap
-bound in ``prefix_filtered_candidates`` (the suffix-filtering insight of
-Xiao et al. WWW'08 §4.3 recast for the set-at-a-time SQL form): instead of
-`.distinct()`-ing the surviving prefix collisions, the collisions are
-grouped per oriented pair and the pair survives only if
+``prefix_filtered_candidates`` keeps a pair when one of its prefix
+collisions passes the per-row positional filter
+``1 + min(na - ra, nb - rb) >= alpha``, with
+alpha = ceil9(t/(1+t) * (na+nb)) the minimum overlap J >= t requires.
 
-    c_pre + min(na - ra_mx, nb - rb_mx) >= alpha
-
-where c_pre is the collision count, ra_mx/rb_mx the max collision ranks,
-and alpha = ceil9(t/(1+t) * (na+nb)) the minimum overlap J >= t requires.
-
-Losslessness argument (pinned here as a model + end-to-end):
-
-- both docs order their tokens by the same global (df, g) key, so the
-  common-token sequence w_1 < w_2 < ... < w_O has strictly increasing
-  LOCAL ranks in both docs;
-- the collision set (common tokens inside both retained prefixes) is
-  therefore a PREFIX w_1..w_k of that sequence (the membership predicate
-  is monotone along it), so c_pre counts it exactly and ra_mx/rb_mx are
-  the ranks of w_k;
-- every remaining common token sits strictly after rank ra_mx in a AND
-  strictly after rb_mx in b, so O <= c_pre + min(na - ra_mx, nb - rb_mx).
-
-A true pair (J >= t => O >= alpha) therefore always passes; pairs whose
-ACCUMULATED bound falls below alpha were never true and are pruned before
-the exact array_intersect verify — the verify-stage floor this round cuts.
+Round 17 also grouped each pair's collisions and applied the accumulated
+(PPJoin suffix-style) bound ``c_pre + min(na - ra_mx, nb - rb_mx) >=
+alpha``.  That bound can never prune after the per-row filter: both docs
+order tokens by the same global (df, g) key, so the pair's last passing
+collision carries both max ranks and alone already satisfies
+``1 + min(na - ra_mx, nb - rb_mx) >= alpha``.  It was removed;
+``test_accumulated_bound_never_prunes_past_positional_filter`` pins the
+implication.
 """
 from __future__ import annotations
 
@@ -39,10 +26,11 @@ def _ceil9(x: float) -> int:
     return math.ceil(round(x, 9))
 
 
-def _model_candidates(docs: dict, t: float) -> set:
-    """Pure-Python replica of the FULL r17 candidate rule: asymmetric
-    prefixes + size band + per-row positional filter + accumulated
-    suffix bound.  Returns canonicalized (lo, hi) pairs."""
+def _model_collisions(docs: dict, t: float) -> dict:
+    """Pure-Python replica of the candidate rule: asymmetric prefixes +
+    size band + per-row positional filter.  Returns, per canonical
+    (lo, hi) pair with at least one passing collision, ``(na, nb, alpha,
+    [(ra, rb), ...])`` for its passing collisions."""
     df = Counter(g for d in docs.values() for g in d)
     ordered = {i: sorted(d, key=lambda g: (df[g], g)) for i, d in docs.items()}
     probe = {
@@ -55,7 +43,7 @@ def _model_candidates(docs: dict, t: float) -> set:
     rank = {
         i: {g: r + 1 for r, g in enumerate(od)} for i, od in ordered.items()
     }
-    out = set()
+    out = {}
     for i, j in itertools.combinations(sorted(docs), 2):
         # orient: b = smaller in (size, id) order, a = larger
         b, a = sorted((i, j), key=lambda k: (len(docs[k]), k))
@@ -65,26 +53,24 @@ def _model_candidates(docs: dict, t: float) -> set:
             continue
         alpha = _ceil9(t / (1.0 + t) * (na + nb))
         collisions = [
-            g
+            (rank[a][g], rank[b][g])
             for g in probe[a] & index[b] & (docs[a] & docs[b])
             if 1 + min(na - rank[a][g], nb - rank[b][g]) >= alpha
         ]
-        if not collisions:
-            continue
-        c_pre = len(collisions)
-        ra_mx = max(rank[a][g] for g in collisions)
-        rb_mx = max(rank[b][g] for g in collisions)
-        if c_pre + min(na - ra_mx, nb - rb_mx) >= alpha:
-            out.add((min(i, j), max(i, j)))
+        if collisions:
+            out[(min(i, j), max(i, j))] = (na, nb, alpha, collisions)
     return out
 
 
+def _model_candidates(docs: dict, t: float) -> set:
+    return set(_model_collisions(docs, t))
+
+
 def test_accumulated_suffix_bound_lossless_model():
-    """300 random universes x 4 thresholds: the model candidate set (with
-    the accumulated bound) must contain every brute-force pair with
-    J >= t.  An off-by-one in the bound (e.g. forgetting that collision
-    ranks are 1-based, or maxing the wrong side's rank) drops borderline
-    pairs and this catches it."""
+    """300 random universes x 4 thresholds: the model candidate set must
+    contain every brute-force pair with J >= t.  An off-by-one in the
+    positional filter (e.g. forgetting that collision ranks are 1-based)
+    drops borderline pairs and this catches it."""
     rng = random.Random(17)
     for t in (0.5, 0.55, 0.65, 0.8):
         for trial in range(300):
@@ -104,56 +90,48 @@ def test_accumulated_suffix_bound_lossless_model():
                     )
 
 
-def test_accumulated_bound_actually_prunes():
-    """Effectiveness witness: a pair whose SINGLE witness collision passes
-    the per-row positional filter but whose accumulated bound proves the
-    overlap cannot reach alpha must be pruned by the r17 rule.
+def _accumulated_bound(na, nb, collisions) -> int:
+    return len(collisions) + min(
+        na - max(ra for ra, _ in collisions), nb - max(rb for _, rb in collisions)
+    )
 
-    Construction at t = 0.65: x and y share exactly their two rarest
-    tokens (the prefix heads), sizes 10/10 => alpha = ceil(0.65/1.65*20)
-    = 8.  Each collision row alone gives bound 1 + min(10-1, 10-1) = 10
-    >= 8 (per-row filter passes), but accumulated: c_pre = 2, ra_mx =
-    rb_mx = 2 => 2 + min(8, 8) = 10 >= 8... so sharing MORE uniquely
-    ranked tail tokens is needed; instead share the two PREFIX tokens at
-    ranks 9 and 10 of each doc — impossible (prefix = rarest).  The
-    witness below instead uses asymmetric sizes where the bound binds."""
-    # x (size 16) and y (size 10) share exactly y's first prefix token.
-    # t=0.65: size band ceil(.65*16)=11 > 10 -> banded out; use t=0.6:
-    # alpha = ceil(0.6/1.6 * 26) = ceil(9.75) = 10; per-row filter for a
-    # collision at ranks (1, 1): 1 + min(15, 9) = 10 >= 10 passes, but
-    # TRUE overlap can be at most... accumulated with c_pre = 1, ra_mx=1,
-    # rb_mx=1 gives the same 10 — equal, passes.  To get a strict prune,
-    # use a collision at ranks (1, 2): 1 + min(15, 8) = 9 < 10 — per-row
-    # already rejects.  The regimes only separate with c_pre >= 2:
-    # collisions at ranks (1,1) and (7,2): per-row mins are 10 and 8 ->
-    # one passing witness under the OLD rule; accumulated: c_pre = 2,
-    # ra_mx = 7, rb_mx = 2, bound = 2 + min(9, 8) = 10 >= 10 passes...
-    # and with ranks (1,1) and (8,3): bound = 2 + min(8, 7) = 9 < 10 —
-    # pruned, while the old rule kept it on the (1,1) witness (1 +
-    # min(15, 9) = 10 >= 10).  Model that exact geometry.
+
+def test_accumulated_bound_never_prunes_past_positional_filter():
+    """The round-17 geometry that was meant to show the accumulated bound
+    pruning: t = 0.6, x of size 16 and y of size 10 (alpha = 10) sharing
+    exactly two tokens, at ranks (1, 1) and (8, 3).  Through the model the
+    (8, 3) collision never counts — rank 8 lies outside x's 7-token probe
+    prefix and its per-row bound is 1 + min(8, 7) = 8 < 10 — so the pair
+    keeps its lone (1, 1) witness, whose accumulated bound is
+    1 + min(15, 9) = 10 = alpha: kept, though its true J is 2/24.  Then,
+    over random universes, every kept pair meets the accumulated bound."""
     t = 0.6
-    na, nb = 16, 10
-    alpha = _ceil9(t / (1.0 + t) * (na + nb))
-    assert alpha == 10
-    # old rule: witness at (ra=1, rb=1) passes the per-row filter
-    assert 1 + min(na - 1, nb - 1) >= alpha
-    # second collision at (ra=8, rb=3) fails per-row, but contributes to
-    # the accumulated count
-    assert 1 + min(na - 8, nb - 3) < alpha
-    # r17 accumulated bound over BOTH collisions: strictly below alpha
-    c_pre, ra_mx, rb_mx = 2, 8, 3
-    assert c_pre + min(na - ra_mx, nb - rb_mx) < alpha
-    # ... and it is SAFE to prune: common tokens are a prefix of the
-    # ordered common sequence, so with the 2nd common token at ranks
-    # (8, 3), at most min(16-8, 10-3) = 7 more can follow => overlap <=
-    # 9 < 10 = alpha => true J < t.  (The arithmetic above IS the proof;
-    # this comment anchors it to the docstring's argument.)
+    # every token has df 2 (fillers 3 and 4 pair with x- and y-only
+    # tokens), so each doc ranks its tokens by id
+    x = {0, 10, 20, 30, 40, 50, 60, 70} | set(range(80, 160, 10))
+    y = {0, 5, 70} | set(range(200, 207))
+    docs = {1: x, 2: y, 3: x - y, 4: y - x}
+    assert (len(x), len(y)) == (16, 10)
+    assert (sorted(x).index(70) + 1, sorted(y).index(70) + 1) == (8, 3)
+    na, nb, alpha, collisions = _model_collisions(docs, t)[(1, 2)]
+    assert (na, nb, alpha, collisions) == (16, 10, 10, [(1, 1)])
+    assert _accumulated_bound(na, nb, collisions) == alpha
+
+    rng = random.Random(5)
+    for t in (0.5, 0.6, 0.65, 0.8, 0.9):
+        for _ in range(300):
+            universe = list(range(rng.randint(3, 30)))
+            docs = {
+                k: set(rng.sample(universe, rng.randint(1, len(universe))))
+                for k in range(rng.randint(2, 8))
+            }
+            for na, nb, alpha, collisions in _model_collisions(docs, t).values():
+                assert _accumulated_bound(na, nb, collisions) >= alpha
 
 
 def test_spark_candidates_still_superset_and_canonical(spark):
-    """End-to-end through the real operator after the r17 groupBy rewrite:
-    candidate set still contains every brute-force pair with J >= t,
-    rows still canonicalized (doc_a < doc_b) exactly once, and the set
+    """End-to-end through the real operator: candidate set still contains
+    every brute-force pair with J >= t, rows still canonicalized (doc_a < doc_b) exactly once, and the set
     matches the pure-Python model exactly (the model is the spec)."""
     from gcp_cloudsql_to_bigquery_spark.operators.dedup import (
         prefix_filtered_candidates,

@@ -273,23 +273,21 @@ def test_partition_invariance_ci_sample(spark, name):
 
 # --- 4. bench contract ------------------------------------------------------
 #
-# scripts/dump_plans.py imports HEADLINE/EXTENDED/STREAMING from bench.py,
-# and the driver's BENCH artifact runs them against oracle_sql() — pin the
-# wiring so a rename or registry change can't silently break either.
+# perfbench checks every query result against its oracle_sql() digest and
+# scripts/dump_plans.py reads the same query lists — pin the wiring so a
+# rename or registry change can't silently break either.
 
 
 def test_bench_query_sets_are_registered_and_oracle_backed():
-    import bench
     from gcp_cloudsql_to_bigquery_spark.workload import oracle_sql, queries
+    from perfbench.workloads import ETL_STREAMS, PY_KERNELS, SQL_BATCH
 
     qs, sqls = queries(), oracle_sql()
-    for name in bench.HEADLINE + bench.EXTENDED:
+    names = SQL_BATCH + PY_KERNELS + ETL_STREAMS
+    assert len(set(names)) == len(names)
+    for name in names:
         assert name in qs, f"bench names unregistered query {name}"
         assert name in sqls, f"bench query {name} lacks an oracle"
-    assert set(bench.STREAMING) <= set(bench.HEADLINE)
-    assert not (set(bench.EXTENDED) & set(bench.HEADLINE))
-    for name in bench.SCALING:
-        assert name in qs and name in sqls
 
 
 # --- 5. PNG integrity kernel: seeded structural fuzz ------------------------
