@@ -27,6 +27,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 NULL_SENTINEL = '"N'
+#: a sentinel that is a whole field: at start-of-line or after a comma,
+#: followed by a comma or end-of-line (never inside a quoted value)
+SENTINEL_FIELD = r'(?:(?<=^)|(?<=,))"N(?=,|$)'
 
 
 def clean_line_compat_str(line: str) -> str:
@@ -48,6 +51,34 @@ def clean_lines_compat(df_text: DataFrame) -> DataFrame:
     return df_text.select(cleaned.alias("value"))
 
 
+def clean_sentinel_fields(df_text: DataFrame) -> DataFrame:
+    """Distributed CSV-aware clean over a one-column ``value`` text
+    DataFrame (batch or streaming).
+
+    The sentinel '"N' is an unterminated quote — no CSV parser option
+    reads it as a null token directly.  Rewrite it to an empty field only
+    at field boundaries (start-of-line or after a comma, followed by comma
+    or end-of-line): fixes all four sentinel positions the reference
+    misses/corrupts (FIXTURES.md B2) while leaving quoted substrings like
+    «"literal ""N, inside"» intact.  Pure JVM regex → fully distributed.
+    """
+    return df_text.select(F.regexp_replace(F.col("value"), SENTINEL_FIELD, "").alias("value"))
+
+
+def parse_csv_lines(df_text: DataFrame, schema: T.StructType) -> DataFrame:
+    """Schema-applied ``from_csv`` parse of a cleaned ``value`` column:
+    one typed column per schema field, an empty field reads as NULL."""
+    parsed = df_text.select(
+        F.from_csv(
+            F.col("value"), schema.simpleString(), {"nullValue": "", "header": "false", "escape": '"'}
+        ).alias("r")
+    )
+    return parsed.select([F.col(f"r.{f.name}").alias(f.name) for f in schema.fields])
+
+
+_CLEANERS = {"csv-aware": clean_sentinel_fields, "line-compat": clean_lines_compat}
+
+
 def read_csv_with_sentinel(
     spark: SparkSession,
     path: str,
@@ -56,35 +87,11 @@ def read_csv_with_sentinel(
 ) -> DataFrame:
     """Schema-applied CSV read with MySQL NULL-sentinel semantics.
 
-    ``csv-aware``: sentinel handled by the parser (correct).  ``line-compat``:
-    reference byte behavior — text-transform the lines first, then parse with
-    empty-as-null (distributed end to end via from_csv).
+    ``csv-aware``: sentinel rewritten at field boundaries (correct).
+    ``line-compat``: reference byte behavior.  Either way the lines are
+    text-transformed first, then parsed with empty-as-null (distributed end
+    to end via from_csv).
     """
-    if mode == "csv-aware":
-        # The sentinel '"N' is an unterminated quote — no CSV parser option
-        # reads it as a null token directly.  Rewrite it to an empty field
-        # only at field boundaries (start-of-line or after a comma, followed
-        # by comma or end-of-line): fixes all four sentinel positions the
-        # reference misses/corrupts (FIXTURES.md B2) while leaving quoted
-        # substrings like «"literal ""N, inside"» intact.  Pure JVM regex →
-        # fully distributed, then a schema-applied from_csv parse.
-        text = spark.read.text(path)
-        cleaned = text.select(
-            F.regexp_replace(F.col("value"), r'(?:(?<=^)|(?<=,))"N(?=,|$)', "").alias("value")
-        )
-        parsed = cleaned.select(
-            F.from_csv(
-                F.col("value"), schema.simpleString(), {"nullValue": "", "header": "false", "escape": '"'}
-            ).alias("r")
-        )
-        return parsed.select([F.col(f"r.{f.name}").alias(f.name) for f in schema.fields])
-    if mode == "line-compat":
-        text = spark.read.text(path)
-        cleaned = clean_lines_compat(text)
-        parsed = cleaned.select(
-            F.from_csv(
-                F.col("value"), schema.simpleString(), {"nullValue": "", "header": "false", "escape": '"'}
-            ).alias("r")
-        )
-        return parsed.select([F.col(f"r.{f.name}").alias(f.name) for f in schema.fields])
-    raise ValueError(f"unknown mode {mode!r}; use 'csv-aware' or 'line-compat'")
+    if mode not in _CLEANERS:
+        raise ValueError(f"unknown mode {mode!r}; use 'csv-aware' or 'line-compat'")
+    return parse_csv_lines(_CLEANERS[mode](spark.read.text(path)), schema)

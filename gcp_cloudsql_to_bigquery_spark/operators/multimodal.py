@@ -1,15 +1,16 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata,
-decode / feature-extract as Arrow-batched ``mapInPandas`` stages.
+synthesize / decode / feature-extract as ONE Arrow-batched ``mapInPandas``
+crossing per pipeline (``media_kernel``).
 
 North-star extension surface (BASELINE.json).  The decode kernels for PPM
 images and RIFF/WAV audio are REAL (header parse, buffer validation, numpy
 reduction) and oracle-verified against closed forms; only formats needing an
 external codec library (JPEG/MP4 — not installed in this container) remain
 out of scope.  Everything Spark-side is load-bearing: the binary column
-representation, the metadata struct schema, the ``mapInPandas``
-batch-iterator signature, partition-preserving narrow execution, and the
-projection contract (binary column dropped after feature extraction so the
-heavy bytes never travel further than necessary).
+representation, the metadata struct schema, the per-row kernel steps that
+``media_kernel`` chains inside one Python worker, partition-preserving
+narrow execution, and the projection contract (binary column dropped after
+feature extraction so the heavy bytes never travel further than necessary).
 
 At 100 TB: payload bytes dominate — keep them in their own column so column
 pruning skips them for metadata-only queries; decode early, project the
@@ -18,8 +19,13 @@ payload away, and carry only extracted features downstream.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import re
+import struct
+import zlib
+from collections.abc import Iterable, Iterator
+from itertools import chain, starmap
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,14 +49,93 @@ def media_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     11.37 s plain vs 16.76 s spread, EVERY query flat-to-worse (e.g.
     phash_thumbnail_match 3.22 -> 3.48 s, decode_features 0.49 -> 1.71 s).
     Unlike the JVM-codegen text/dedup map work the r17 spread batch
-    parallelized, this module's cost sits in stacked mapInPandas kernels:
-    above a spread exchange each Python stage pays 32 worker spin-ups and
-    many small Arrow batches where the single-task form streams a few
-    large batches through one warm worker — at bench volume the boundary
-    overhead swamps the parallelism (the r16 cosine-revert lesson, guide
-    §4.2's batch-size caveat).  On a real multi-row-group corpus the scan
-    fans out natively and none of this applies."""
+    parallelized, this module's cost sits in its Python kernels: above a
+    spread exchange each Python crossing pays 32 worker spin-ups and many
+    small Arrow batches where the single-task form streams a few large
+    batches through one warm worker — at bench volume the boundary
+    overhead swamped the parallelism (the r16 cosine-revert lesson, guide
+    §4.2's batch-size caveat).  Those numbers were taken while each
+    pipeline still ran as 2-3 chained mapInPandas stages; every pipeline
+    is one ``media_kernel`` crossing now, and the scan stays unspread on
+    the measured numbers until an A/B over the fused form says otherwise.
+    On a real multi-row-group corpus the scan fans out natively and none
+    of this applies."""
     return load(spark, sf_dir, "documents").filter(F.col("doc_id").isNotNull())
+
+
+def run_steps(rows: Iterable[tuple], *steps) -> list[tuple]:
+    """Thread ``(doc_id, value)`` rows through per-row ``steps`` in order.
+
+    Each step is a generator ``(doc_id, value) -> output tuples``: a
+    synthesizer maps ``(doc_id, n_chars)`` to ``(doc_id, payload)``, a
+    transcoder (resize, decimate) maps a payload to a new payload, and the
+    last step yields the output rows — one per input for decoders, any
+    number for the fan-out kernels (histogram, shot detect, box walk)."""
+    for step in steps:
+        rows = chain.from_iterable(starmap(step, rows))
+    return list(rows)
+
+
+def media_kernel(docs: DataFrame, schema: str, *steps) -> DataFrame:
+    """Run a media pipeline over ``docs``' (doc_id, n_chars) as ONE Arrow
+    crossing: every Arrow batch goes through all of ``steps``
+    (``run_steps``) inside a single Python worker, so intermediate
+    payloads never return to the JVM and the plan holds one MapInPandas
+    node whatever the chain length.  The output frame takes its column
+    names from ``schema`` (a flat DDL string)."""
+    columns = [field.split()[0] for field in schema.split(",")]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = run_steps(zip(pdf["doc_id"], pdf["n_chars"]), *steps)
+            yield pd.DataFrame(rows, columns=columns)
+
+    run.__name__ = "->".join(step.__name__ for step in steps)  # names the plan node
+    return docs.select("doc_id", "n_chars").mapInPandas(run, schema=schema)
+
+
+_P6_HEADER = re.compile(rb"P6\s+(\d+)\s+(\d+)\s+255\s")
+
+
+def parse_ppm(doc_id, buf: bytes, pos: int = 0):
+    """Parse the binary P6 PPM image that starts at byte ``pos`` of
+    ``buf``: header, then w*h*3 pixel bytes.  Returns ``(w, h,
+    pixels, end)`` with pixels an (h, w, 3) uint8 view and ``end`` the
+    offset just past them (the next frame of a multi-frame container).
+    Raises on a bad header or a truncated pixel buffer."""
+    m = _P6_HEADER.match(buf, pos)
+    if not m:
+        raise ValueError(f"doc {doc_id}: not a P6 PPM header at {pos}")
+    w, h = int(m.group(1)), int(m.group(2))
+    start, end = m.end(), m.end() + 3 * w * h
+    if end > len(buf):
+        raise ValueError(f"doc {doc_id}: pixel buffer {len(buf) - start} < {w}x{h}x3 at {pos}")
+    px = np.frombuffer(buf, dtype=np.uint8, count=3 * w * h, offset=start)
+    return w, h, px.reshape(h, w, 3), end
+
+
+def _ppm_image(doc_id, payload: bytes) -> np.ndarray:
+    """Pixels of a payload holding exactly one P6 image (trailing bytes
+    are a corrupt payload, not a second frame)."""
+    _w, _h, px, end = parse_ppm(doc_id, payload)
+    if end != len(payload):
+        raise ValueError(f"doc {doc_id}: pixel buffer has {len(payload) - end} trailing bytes")
+    return px
+
+
+def _ppm_bytes(px: np.ndarray) -> bytes:
+    """Encode an (h, w, 3) uint8 array as a binary P6 PPM file."""
+    h, w = px.shape[:2]
+    return f"P6\n{w} {h}\n255\n".encode() + px.tobytes()
+
+
+def _wav_bytes(samples: np.ndarray, rate: int, n_ch: int) -> bytes:
+    """Encode interleaved int16 ``samples`` as a RIFF/WAVE PCM16 file."""
+    data = samples.astype("<i2").tobytes()
+    fmt = struct.pack("<HHIIHH", 1, n_ch, rate, rate * 2 * n_ch, 2 * n_ch, 16)
+    chunks = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+    chunks += b"data" + struct.pack("<I", len(data)) + data
+    return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
 
 
 def as_media_table(docs: DataFrame) -> DataFrame:
@@ -131,11 +216,11 @@ def multimodal_metadata_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "checked against the DuckDB closed forms.",
 )
 def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = media_docs(spark, sf_dir).select("doc_id", "n_chars")
+    docs = media_docs(spark, sf_dir)
     img = (
-        docs.filter(F.col("doc_id") % 3 == 0)
-        .mapInPandas(synthesize_ppm_batch, schema="doc_id bigint, payload binary")
-        .mapInPandas(decode_ppm_batch, schema=PPM_DECODED_SCHEMA)
+        media_kernel(
+            docs.filter(F.col("doc_id") % 3 == 0), PPM_DECODED_SCHEMA, synthesize_ppm, decode_ppm
+        )
         .select(
             "doc_id",
             F.lit("image/ppm").alias("media_type"),
@@ -146,9 +231,9 @@ def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     aud = (
-        docs.filter(F.col("doc_id") % 3 == 1)
-        .mapInPandas(synthesize_wav_batch, schema="doc_id bigint, payload binary")
-        .mapInPandas(decode_wav_batch, schema=WAV_DECODED_SCHEMA)
+        media_kernel(
+            docs.filter(F.col("doc_id") % 3 == 1), WAV_DECODED_SCHEMA, synthesize_wav, decode_wav
+        )
         .select(
             "doc_id",
             F.lit("audio/wav").alias("media_type"),
@@ -198,59 +283,32 @@ PPM_DECODED_SCHEMA = (
 )
 
 
-def synthesize_ppm_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def synthesize_ppm(doc_id, n_chars):
     """Fixture-side encoder: build a REAL binary P6 PPM image per row,
     deterministic from (doc_id, n_chars) — r plane constant doc_id%256,
     g plane a vertical gradient (y), b plane constant (doc_id*31)%256.
     Runs distributed (mapInPandas) so the binary column is produced the
     way a real ingest would: bytes born on executors, never the driver."""
-    import numpy as np
-
-    for pdf in batches:
-        payloads = []
-        for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-            w = int(n_chars) % 64 + 8
-            h = int(doc_id) % 48 + 8
-            px = np.empty((h, w, 3), dtype=np.uint8)
-            px[:, :, 0] = int(doc_id) % 256
-            px[:, :, 1] = (np.arange(h, dtype=np.uint8) % 256)[:, None]
-            px[:, :, 2] = (int(doc_id) * 31) % 256
-            payloads.append(f"P6\n{w} {h}\n255\n".encode() + px.tobytes())
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    w = int(n_chars) % 64 + 8
+    h = int(doc_id) % 48 + 8
+    px = np.empty((h, w, 3), dtype=np.uint8)
+    px[:, :, 0] = int(doc_id) % 256
+    px[:, :, 1] = (np.arange(h, dtype=np.uint8) % 256)[:, None]
+    px[:, :, 2] = (int(doc_id) * 31) % 256
+    yield doc_id, _ppm_bytes(px)
 
 
-def decode_ppm_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def decode_ppm(doc_id, payload):
     """REAL decode kernel: parse the P6 header, validate the pixel-buffer
     length, reshape to (h, w, 3), reduce to per-channel means.  Nothing
     here is stubbed — a wrong header parse, byte offset, or memory layout
     produces wrong means and fails the closed-form oracle."""
-    import re
-
-    import numpy as np
-
-    hdr = re.compile(rb"^P6\s+(\d+)\s+(\d+)\s+255\s")
-    for pdf in batches:
-        out = {k: [] for k in ("doc_id", "width", "height", "n_bytes", "mean_r", "mean_g", "mean_b")}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            m = hdr.match(payload)
-            if not m:
-                raise ValueError(f"doc {doc_id}: not a P6 PPM header")
-            w, h = int(m.group(1)), int(m.group(2))
-            px = np.frombuffer(payload, dtype=np.uint8, offset=m.end())
-            if px.size != w * h * 3:
-                raise ValueError(f"doc {doc_id}: pixel buffer {px.size} != {w}x{h}x3")
-            px = px.reshape(h, w, 3)
-            # integer sums < 2^53 are exact in float64 → means are exact,
-            # so the oracle can state them in closed form with no rounding
-            means = px.reshape(-1, 3).mean(axis=0, dtype=np.float64)
-            out["doc_id"].append(doc_id)
-            out["width"].append(w)
-            out["height"].append(h)
-            out["n_bytes"].append(len(payload))
-            out["mean_r"].append(float(means[0]))
-            out["mean_g"].append(float(means[1]))
-            out["mean_b"].append(float(means[2]))
-        yield pd.DataFrame(out)
+    px = _ppm_image(doc_id, payload)
+    h, w = px.shape[:2]
+    # integer sums < 2^53 are exact in float64 → means are exact,
+    # so the oracle can state them in closed form with no rounding
+    r, g, b = px.reshape(-1, 3).mean(axis=0, dtype=np.float64)
+    yield doc_id, w, h, len(payload), float(r), float(g), float(b)
 
 
 @register(
@@ -270,20 +328,18 @@ def decode_ppm_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """,
     doc="REAL binary image decode, fully oracle-verified: synthesize a "
     "deterministic P6 PPM per document (constant r/b planes, vertical "
-    "gradient g plane) in one distributed mapInPandas stage, decode it in "
-    "a second (header parse, buffer-length validation, (h,w,3) reshape, "
-    "per-channel means), and check dims/sizes/means against the DuckDB "
+    "gradient g plane) and decode it (header parse, buffer-length "
+    "validation, (h,w,3) reshape, per-channel means) in one distributed "
+    "mapInPandas crossing, and check dims/sizes/means against the DuckDB "
     "closed forms.  This is the production multimodal pipeline shape with "
     "nothing faked — only codec-library formats (JPEG/MP4) stay out of "
     "scope.  Channel means are exact (integer sums < 2^53 in "
     "float64), so the comparison needs no rounding slack.  At 100 TB the "
-    "two stages fuse into one narrow pass: bytes never shuffle, and the "
+    "two steps run as one narrow pass: bytes never shuffle, and the "
     "payload is projected away right after decode.",
 )
 def multimodal_decode_ppm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = media_docs(spark, sf_dir).select("doc_id", "n_chars")
-    media = docs.mapInPandas(synthesize_ppm_batch, schema="doc_id bigint, payload binary")
-    return media.mapInPandas(decode_ppm_batch, schema=PPM_DECODED_SCHEMA)
+    return media_kernel(media_docs(spark, sf_dir), PPM_DECODED_SCHEMA, synthesize_ppm, decode_ppm)
 
 
 WAV_DECODED_SCHEMA = (
@@ -294,35 +350,19 @@ WAV_DECODED_SCHEMA = (
 _WAV_RATE = 8000
 
 
-def synthesize_wav_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def synthesize_wav(doc_id, n_chars):
     """Fixture-side encoder: a REAL RIFF/WAVE PCM16 mono file per row —
     a Nyquist square wave of amplitude doc_id%1000 (alternating +A/-A),
     n_chars%2000+100 samples at 8 kHz, so RMS == A exactly."""
-    import struct
-
-    import numpy as np
-
-    for pdf in batches:
-        payloads = []
-        for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-            n = int(n_chars) % 2000 + 100
-            amp = int(doc_id) % 1000
-            samples = np.full(n, amp, dtype=np.int16)
-            samples[1::2] *= -1
-            data = samples.tobytes()
-            fmt = struct.pack("<HHIIHH", 1, 1, _WAV_RATE, _WAV_RATE * 2, 2, 16)
-            chunks = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            chunks += b"data" + struct.pack("<I", len(data)) + data
-            payloads.append(b"RIFF" + struct.pack("<I", len(chunks)) + chunks)
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    samples = np.full(int(n_chars) % 2000 + 100, int(doc_id) % 1000, dtype=np.int16)
+    samples[1::2] *= -1
+    yield doc_id, _wav_bytes(samples, _WAV_RATE, 1)
 
 
 def parse_wav_chunks(doc_id, payload):
     """Shared RIFF/WAVE chunk walk (not fixed offsets — real files carry
     LIST/INFO chunks): validate the container, return (fmt tuple, data
     bytes) or raise."""
-    import struct
-
     if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError(f"doc {doc_id}: not a RIFF/WAVE container")
     pos, fmt, data = 12, None, None
@@ -340,37 +380,21 @@ def parse_wav_chunks(doc_id, payload):
     return fmt, data
 
 
-def decode_wav_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def decode_wav(doc_id, payload):
     """REAL audio decode kernel: validate the RIFF/WAVE container, walk the
     chunk list (not fixed offsets — real files carry LIST/INFO chunks),
     parse the PCM fmt block, then reduce the int16 frame buffer to
     duration + RMS.  Wrong endianness, chunk walk, or frame math fails the
     closed-form oracle."""
-    import struct
-
-    import numpy as np
-
-    for pdf in batches:
-        out = {
-            k: []
-            for k in ("doc_id", "sample_rate", "n_channels", "n_samples", "duration_sec", "rms")
-        }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            fmt, data = parse_wav_chunks(doc_id, payload)
-            audio_fmt, n_ch, rate, _byterate, _align, bits = fmt
-            if audio_fmt != 1 or bits != 16:
-                raise ValueError(f"doc {doc_id}: not PCM16 (fmt={audio_fmt}, bits={bits})")
-            x = np.frombuffer(data, dtype="<i2").astype(np.float64)
-            n = x.size // n_ch
-            out["doc_id"].append(doc_id)
-            out["sample_rate"].append(rate)
-            out["n_channels"].append(n_ch)
-            out["n_samples"].append(n)
-            out["duration_sec"].append(n / rate)
-            # int16² sums stay < 2^53 → mean exact; sqrt of the exact
-            # perfect square A² is exactly A (IEEE sqrt is correctly rounded)
-            out["rms"].append(float(np.sqrt(np.mean(x * x))))
-        yield pd.DataFrame(out)
+    fmt, data = parse_wav_chunks(doc_id, payload)
+    audio_fmt, n_ch, rate, _byterate, _align, bits = fmt
+    if audio_fmt != 1 or bits != 16:
+        raise ValueError(f"doc {doc_id}: not PCM16 (fmt={audio_fmt}, bits={bits})")
+    x = np.frombuffer(data, dtype="<i2").astype(np.float64)
+    n = x.size // n_ch
+    # int16² sums stay < 2^53 → mean exact; sqrt of the exact
+    # perfect square A² is exactly A (IEEE sqrt is correctly rounded)
+    yield doc_id, rate, n_ch, n, n / rate, float(np.sqrt(np.mean(x * x)))
 
 
 @register(
@@ -396,38 +420,17 @@ def decode_wav_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     "end-to-end; only codec-library formats remain stubbed.",
 )
 def multimodal_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = media_docs(spark, sf_dir).select("doc_id", "n_chars")
-    media = docs.mapInPandas(synthesize_wav_batch, schema="doc_id bigint, payload binary")
-    return media.mapInPandas(decode_wav_batch, schema=WAV_DECODED_SCHEMA)
+    return media_kernel(media_docs(spark, sf_dir), WAV_DECODED_SCHEMA, synthesize_wav, decode_wav)
 
 
-def resize_ppm_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def resize_ppm(doc_id, payload):
     """REAL resize kernel (binary → binary): parse the P6 header, validate
     the buffer, nearest-neighbor downsample by 2 (px[::2, ::2]), re-encode
     as a well-formed P6 payload.  The output is a genuine image file again
-    — the next pipeline stage (decode, thumbnail sink) needs no special
+    — the next pipeline step (decode, thumbnail sink) needs no special
     casing — and wrong stride/reshape order produces wrong downstream
     means, failing the closed-form oracle."""
-    import re
-
-    import numpy as np
-
-    hdr = re.compile(rb"^P6\s+(\d+)\s+(\d+)\s+255\s")
-    for pdf in batches:
-        out_ids, out_payloads = [], []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            m = hdr.match(payload)
-            if not m:
-                raise ValueError(f"doc {doc_id}: not a P6 PPM header")
-            w, h = int(m.group(1)), int(m.group(2))
-            px = np.frombuffer(payload, dtype=np.uint8, offset=m.end())
-            if px.size != w * h * 3:
-                raise ValueError(f"doc {doc_id}: pixel buffer {px.size} != {w}x{h}x3")
-            small = px.reshape(h, w, 3)[::2, ::2]
-            nh, nw = small.shape[:2]
-            out_ids.append(doc_id)
-            out_payloads.append(f"P6\n{nw} {nh}\n255\n".encode() + small.tobytes())
-        yield pd.DataFrame({"doc_id": out_ids, "payload": out_payloads})
+    yield doc_id, _ppm_bytes(_ppm_image(doc_id, payload)[::2, ::2])
 
 
 @register(
@@ -448,63 +451,33 @@ def resize_ppm_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """,
     doc="REAL image resize, the brief's named multimodal op: synthesize a "
     "P6 PPM per document, nearest-neighbor downsample 2x in a distributed "
-    "binary-to-binary mapInPandas stage (header parse, [::2,::2] pixel "
+    "binary-to-binary step (header parse, [::2,::2] pixel "
     "slice, re-encode as valid P6), then decode the RESIZED file with the "
     "standard decoder and check dims/bytes/channel means against DuckDB "
     "closed forms: new dims are ceil(w/2) x ceil(h/2), constant r/b "
     "planes are invariant under subsampling, and the gradient g plane's "
     "selected rows 0,2,..,2(k-1) have exact integer mean k-1.  Three "
-    "chained narrow stages — bytes never shuffle, each stage's output is "
-    "a self-describing image the next stage re-validates.  At 100 TB "
+    "chained steps in one narrow Arrow crossing — bytes never shuffle, "
+    "each step's output is a self-describing image the next step "
+    "re-validates.  At 100 TB "
     "this is the thumbnail/downsample pass that cuts payload bytes 4x "
     "before any shuffle or sink.",
 )
 def multimodal_resize_ppm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = media_docs(spark, sf_dir).select("doc_id", "n_chars")
-    media = docs.mapInPandas(synthesize_ppm_batch, schema="doc_id bigint, payload binary")
-    resized = media.mapInPandas(resize_ppm_batch, schema="doc_id bigint, payload binary")
-    return resized.mapInPandas(decode_ppm_batch, schema=PPM_DECODED_SCHEMA)
+    return media_kernel(
+        media_docs(spark, sf_dir), PPM_DECODED_SCHEMA, synthesize_ppm, resize_ppm, decode_ppm
+    )
 
 
-def decimate_wav_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def decimate_wav(doc_id, payload):
     """REAL audio resample kernel (binary → binary): walk the RIFF chunks,
     take every 2nd PCM16 frame (decimation by 2 — the no-filter nearest
     neighbor of resampling), re-encode a valid RIFF/WAVE at half the
     sample rate.  The output is a playable file the standard decoder
     re-validates."""
-    import struct
-
-    import numpy as np
-
-    for pdf in batches:
-        out_ids, out_payloads = [], []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-                raise ValueError(f"doc {doc_id}: not a RIFF/WAVE container")
-            pos, fmt, data = 12, None, None
-            while pos + 8 <= len(payload):
-                cid = payload[pos : pos + 4]
-                (clen,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
-                body = payload[pos + 8 : pos + 8 + clen]
-                if cid == b"fmt ":
-                    fmt = struct.unpack("<HHIIHH", body[:16])
-                elif cid == b"data":
-                    data = body
-                pos += 8 + clen + (clen & 1)
-            if fmt is None or data is None:
-                raise ValueError(f"doc {doc_id}: missing fmt/data chunk")
-            _afmt, n_ch, rate, _br, _al, _bits = fmt
-            x = np.frombuffer(data, dtype="<i2").reshape(-1, n_ch)[::2]
-            new_rate = rate // 2
-            new_data = x.astype("<i2").tobytes()
-            new_fmt = struct.pack(
-                "<HHIIHH", 1, n_ch, new_rate, new_rate * 2 * n_ch, 2 * n_ch, 16
-            )
-            chunks = b"WAVE" + b"fmt " + struct.pack("<I", len(new_fmt)) + new_fmt
-            chunks += b"data" + struct.pack("<I", len(new_data)) + new_data
-            out_ids.append(doc_id)
-            out_payloads.append(b"RIFF" + struct.pack("<I", len(chunks)) + chunks)
-        yield pd.DataFrame({"doc_id": out_ids, "payload": out_payloads})
+    (_afmt, n_ch, rate, _br, _al, _bits), data = parse_wav_chunks(doc_id, payload)
+    frames = np.frombuffer(data, dtype="<i2").reshape(-1, n_ch)[::2]
+    yield doc_id, _wav_bytes(frames, rate // 2, n_ch)
 
 
 @register(
@@ -520,8 +493,8 @@ def decimate_wav_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
     WHERE doc_id IS NOT NULL
     """,
     doc="REAL audio resample (the WAV sibling of multimodal_resize_ppm): "
-    "decimate the PCM16 stream by 2 in a binary-to-binary mapInPandas "
-    "stage (chunk walk, [::2] frame slice, re-encode a valid RIFF at "
+    "decimate the PCM16 stream by 2 in a binary-to-binary "
+    "step (chunk walk, [::2] frame slice, re-encode a valid RIFF at "
     "half rate), then decode the RESAMPLED file with the standard "
     "decoder.  Closed forms: ceil-half sample count, duration preserved "
     "to within one sample (n'/(r/2) ~ n/r), and the Nyquist +/-A square "
@@ -531,10 +504,28 @@ def decimate_wav_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
     "audio payloads, all byte-level real, all oracle-verified.",
 )
 def multimodal_resample_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = media_docs(spark, sf_dir).select("doc_id", "n_chars")
-    media = docs.mapInPandas(synthesize_wav_batch, schema="doc_id bigint, payload binary")
-    small = media.mapInPandas(decimate_wav_batch, schema="doc_id bigint, payload binary")
-    return small.mapInPandas(decode_wav_batch, schema=WAV_DECODED_SCHEMA)
+    return media_kernel(
+        media_docs(spark, sf_dir), WAV_DECODED_SCHEMA, synthesize_wav, decimate_wav, decode_wav
+    )
+
+
+def wav_spectral(doc_id, payload):
+    """Per-clip spectral features of a mono PCM16 payload: sample count,
+    peak and mean absolute amplitude, zero crossings, and the dominant
+    frequency implied by the crossing rate (Nyquist for the fixture)."""
+    fmt, data = parse_wav_chunks(doc_id, payload)
+    audio_fmt, n_ch, rate, _br, _al, bits = fmt
+    if audio_fmt != 1 or bits != 16 or n_ch != 1:
+        raise ValueError(f"doc {doc_id}: not mono PCM16")
+    x = np.frombuffer(data, dtype="<i2").astype(np.int64)
+    zc = int(np.count_nonzero(x[:-1] * x[1:] < 0))
+    # sum(|x|) < 2^31 * n — exact integer; mean via floor-div
+    # rounded ((2S+n) // (2n); values non-negative)
+    s_abs = int(np.abs(x).sum())
+    n = int(x.size)
+    peak = int(np.abs(x).max()) if n else 0
+    mean_abs = (2 * s_abs + n) // (2 * n) if n else 0
+    yield doc_id, n, peak, mean_abs, zc, rate // 2
 
 
 @register(
@@ -566,49 +557,22 @@ def multimodal_resample_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     "payload bytes never shuffle.",
 )
 def multimodal_audio_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import struct  # noqa: F401  (parity with decode kernel imports)
-
-    def spectral_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = {
-                k: []
-                for k in (
-                    "doc_id",
-                    "n_samples",
-                    "peak",
-                    "mean_abs",
-                    "zero_crossings",
-                    "dominant_hz",
-                )
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                fmt, data = parse_wav_chunks(doc_id, payload)
-                audio_fmt, n_ch, rate, _br, _al, bits = fmt
-                if audio_fmt != 1 or bits != 16 or n_ch != 1:
-                    raise ValueError(f"doc {doc_id}: not mono PCM16")
-                x = np.frombuffer(data, dtype="<i2").astype(np.int64)
-                zc = int(np.count_nonzero(x[:-1] * x[1:] < 0))
-                # sum(|x|) < 2^31 * n — exact integer; mean via floor-div
-                # rounded ((2S+n) // (2n); values non-negative)
-                s_abs = int(np.abs(x).sum())
-                n = int(x.size)
-                out["doc_id"].append(doc_id)
-                out["n_samples"].append(n)
-                out["peak"].append(int(np.abs(x).max()) if n else 0)
-                out["mean_abs"].append((2 * s_abs + n) // (2 * n) if n else 0)
-                out["zero_crossings"].append(zc)
-                out["dominant_hz"].append(rate // 2)
-            yield pd.DataFrame(out)
-
-    docs = media_docs(spark, sf_dir).select("doc_id", "n_chars")
-    media = docs.mapInPandas(synthesize_wav_batch, schema="doc_id bigint, payload binary")
-    return media.mapInPandas(
-        spectral_batch,
-        schema="doc_id bigint, n_samples bigint, peak bigint, mean_abs bigint, "
+    return media_kernel(
+        media_docs(spark, sf_dir),
+        "doc_id bigint, n_samples bigint, peak bigint, mean_abs bigint, "
         "zero_crossings bigint, dominant_hz bigint",
+        synthesize_wav,
+        wav_spectral,
     )
+
+
+def ppm_histogram(doc_id, payload):
+    """Green-plane intensity histogram of a P6 payload in 16-value bins;
+    one (doc_id, bucket, n_px) row per non-empty bin."""
+    g = _ppm_image(doc_id, payload)[:, :, 1]
+    counts = np.bincount(g.ravel() // 16, minlength=16)
+    for b in np.flatnonzero(counts):
+        yield doc_id, int(b), int(counts[b])
 
 
 @register(
@@ -640,34 +604,11 @@ def multimodal_audio_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
     "payload never shuffles; histograms are mergeable integer vectors.",
 )
 def multimodal_image_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import re
-
-    def hist_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = {"doc_id": [], "bucket": [], "n_px": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                m = re.match(rb"P6\n(\d+) (\d+)\n255\n", payload)
-                if not m:
-                    raise ValueError(f"doc {doc_id}: not a canonical P6 header")
-                w, h = int(m.group(1)), int(m.group(2))
-                px = np.frombuffer(payload[m.end():], dtype=np.uint8)
-                if px.size != w * h * 3:
-                    raise ValueError(f"doc {doc_id}: pixel buffer size mismatch")
-                g = px.reshape(h, w, 3)[:, :, 1]
-                counts = np.bincount(g.ravel() // 16, minlength=16)
-                for b in range(16):
-                    if counts[b] > 0:
-                        out["doc_id"].append(doc_id)
-                        out["bucket"].append(b)
-                        out["n_px"].append(int(counts[b]))
-            yield pd.DataFrame(out)
-
-    docs = media_docs(spark, sf_dir).select("doc_id", "n_chars")
-    media = docs.mapInPandas(synthesize_ppm_batch, schema="doc_id bigint, payload binary")
-    return media.mapInPandas(
-        hist_batch, schema="doc_id bigint, bucket int, n_px bigint"
+    return media_kernel(
+        media_docs(spark, sf_dir),
+        "doc_id bigint, bucket int, n_px bigint",
+        synthesize_ppm,
+        ppm_histogram,
     )
 
 
@@ -686,9 +627,10 @@ def _phash_sql(hexpr: str) -> str:
 
 
 _PHASH_ORACLE_BYTES = _phash_sql("h")
+_PHASH_SCHEMA = "doc_id bigint, phash string"
 
 
-def phash_ppm_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def phash_ppm(doc_id, payload):
     """REAL aHash kernel: P6 parse, grayscale (r+g+b integer sum), 8x8
     block-mean pooling via a 2-D integral image (the classic O(1)-per-block
     summed-area table), exact cross-multiplied integer threshold against
@@ -696,44 +638,27 @@ def phash_ppm_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     the grid in either dimension yield empty blocks (floor boundaries
     coincide); an empty block's bit is 0 (0 > 0 is false) — well-defined
     for thumbnails down to 1px."""
-    import re
-
-    import numpy as np
-
-    hdr = re.compile(rb"^P6\s+(\d+)\s+(\d+)\s+255\s")
     g = _PHASH_GRID
-    for pdf in batches:
-        out = {"doc_id": [], "phash": []}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            m = hdr.match(payload)
-            if not m:
-                raise ValueError(f"doc {doc_id}: not a P6 PPM header")
-            w, h = int(m.group(1)), int(m.group(2))
-            px = np.frombuffer(payload, dtype=np.uint8, offset=m.end())
-            if px.size != w * h * 3:
-                raise ValueError(f"doc {doc_id}: pixel buffer {px.size} != {w}x{h}x3")
-            gray = px.reshape(h, w, 3).sum(axis=2, dtype=np.int64)
-            integral = np.zeros((h + 1, w + 1), dtype=np.int64)
-            integral[1:, 1:] = gray.cumsum(axis=0).cumsum(axis=1)
-            total = int(integral[h, w])
-            rb = [i * h // g for i in range(g + 1)]
-            cb = [j * w // g for j in range(g + 1)]
-            hash_bytes = bytearray()
-            for i in range(g):
-                byte = 0
-                a, b = rb[i], rb[i + 1]
-                for j in range(g):
-                    c, d = cb[j], cb[j + 1]
-                    s = int(
-                        integral[b, d] - integral[a, d] - integral[b, c] + integral[a, c]
-                    )
-                    # exact integer threshold: mean_block > mean_image
-                    if s * (w * h) > total * ((b - a) * (d - c)):
-                        byte |= 1 << (7 - j)
-                hash_bytes.append(byte)
-            out["doc_id"].append(doc_id)
-            out["phash"].append(bytes(hash_bytes).hex())
-        yield pd.DataFrame(out)
+    px = _ppm_image(doc_id, payload)
+    h, w = px.shape[:2]
+    gray = px.sum(axis=2, dtype=np.int64)
+    integral = np.zeros((h + 1, w + 1), dtype=np.int64)
+    integral[1:, 1:] = gray.cumsum(axis=0).cumsum(axis=1)
+    total = int(integral[h, w])
+    rb = [i * h // g for i in range(g + 1)]
+    cb = [j * w // g for j in range(g + 1)]
+    hash_bytes = bytearray()
+    for i in range(g):
+        byte = 0
+        a, b = rb[i], rb[i + 1]
+        for j in range(g):
+            c, d = cb[j], cb[j + 1]
+            s = int(integral[b, d] - integral[a, d] - integral[b, c] + integral[a, c])
+            # exact integer threshold: mean_block > mean_image
+            if s * (w * h) > total * ((b - a) * (d - c)):
+                byte |= 1 << (7 - j)
+        hash_bytes.append(byte)
+    yield doc_id, bytes(hash_bytes).hex()
 
 
 @register(
@@ -783,9 +708,7 @@ def phash_ppm_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    docs = media_docs(spark, sf_dir).select("doc_id", "n_chars")
-    media = docs.mapInPandas(synthesize_ppm_batch, schema="doc_id bigint, payload binary")
-    hashed = media.mapInPandas(phash_ppm_batch, schema="doc_id bigint, phash string")
+    hashed = media_kernel(media_docs(spark, sf_dir), _PHASH_SCHEMA, synthesize_ppm, phash_ppm)
     w = W.partitionBy("phash")
     clustered = hashed.select(
         "doc_id",
@@ -798,30 +721,24 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def synthesize_ppm_striped_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def synthesize_ppm_striped(doc_id, n_chars):
     """Striped variant of the PPM fixture: same constant r/b planes and
     vertical-gradient g plane, but with a BRIGHT STRIPE (g=255) across the
     grid-row band ``doc_id % 8`` — rows [ceil(k*h/8), ceil((k+1)*h/8)).
     The stripe position survives 2x decimation, giving the perceptual-hash
     operators a corpus with genuinely DIVERSE hashes (stripe x boundary
     effects) instead of the gradient's two."""
-    import numpy as np
-
-    for pdf in batches:
-        payloads = []
-        for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-            w = int(n_chars) % 64 + 8
-            h = int(doc_id) % 48 + 8
-            k = int(doc_id) % 8
-            lo, hi = (k * h + 7) // 8, ((k + 1) * h + 7) // 8
-            g = (np.arange(h, dtype=np.int64) % 256).astype(np.uint8)
-            g[lo:hi] = 255
-            px = np.empty((h, w, 3), dtype=np.uint8)
-            px[:, :, 0] = int(doc_id) % 256
-            px[:, :, 1] = g[:, None]
-            px[:, :, 2] = (int(doc_id) * 31) % 256
-            payloads.append(f"P6\n{w} {h}\n255\n".encode() + px.tobytes())
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    w = int(n_chars) % 64 + 8
+    h = int(doc_id) % 48 + 8
+    k = int(doc_id) % 8
+    lo, hi = (k * h + 7) // 8, ((k + 1) * h + 7) // 8
+    g = (np.arange(h, dtype=np.int64) % 256).astype(np.uint8)
+    g[lo:hi] = 255
+    px = np.empty((h, w, 3), dtype=np.uint8)
+    px[:, :, 0] = int(doc_id) % 256
+    px[:, :, 1] = g[:, None]
+    px[:, :, 2] = (int(doc_id) * 31) % 256
+    yield doc_id, _ppm_bytes(px)
 
 
 def _tri(x: str) -> str:
@@ -964,14 +881,9 @@ _PHASH_HAMMING_SQL = " + ".join(
     "(corpus-bounded) broadcast back onto per-doc rows.",
 )
 def multimodal_phash_thumbnail_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = media_docs(spark, sf_dir).select("doc_id", "n_chars")
-    media = docs.mapInPandas(
-        synthesize_ppm_striped_batch, schema="doc_id bigint, payload binary"
-    )
-    orig = media.mapInPandas(phash_ppm_batch, schema="doc_id bigint, phash string")
-    thumbs = media.mapInPandas(
-        resize_ppm_batch, schema="doc_id bigint, payload binary"
-    ).mapInPandas(phash_ppm_batch, schema="doc_id bigint, phash string")
+    docs = media_docs(spark, sf_dir)
+    orig = media_kernel(docs, _PHASH_SCHEMA, synthesize_ppm_striped, phash_ppm)
+    thumbs = media_kernel(docs, _PHASH_SCHEMA, synthesize_ppm_striped, resize_ppm, phash_ppm)
 
     t_counts = thumbs.groupBy("phash").agg(F.count(F.lit(1)).alias("n_thumb"))
     o_dist = orig.select("phash").distinct()
@@ -1025,6 +937,40 @@ def multimodal_phash_thumbnail_match(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
+def synthesize_video(doc_id, n_chars):
+    """Fixture-side encoder: a 4-9 frame 'video' of CONCATENATED P6 PPM
+    frames with scene cuts at frames floor(F/3) and floor(2F/3), where
+    the g-plane base jumps by 60."""
+    doc_id, n_chars = int(doc_id), int(n_chars)
+    nf = doc_id % 6 + 4
+    w, h = n_chars % 32 + 8, doc_id % 24 + 8
+    c1, c2 = nf // 3, (2 * nf) // 3
+    frames = []
+    for f in range(nf):
+        scene = (f >= c1) + (f >= c2)
+        g = (10 + 60 * scene + np.arange(h, dtype=np.int64)).astype(np.uint8)
+        px = np.empty((h, w, 3), dtype=np.uint8)
+        px[:, :, 0] = doc_id % 256
+        px[:, :, 1] = g[:, None]
+        px[:, :, 2] = (doc_id * 31) % 256
+        frames.append(_ppm_bytes(px))
+    yield doc_id, b"".join(frames)
+
+
+def detect_shots(doc_id, payload):
+    """Walk a concatenated-P6 container frame by frame, reduce each frame
+    to its doubled mean intensity ((2*graysum) // npx), and emit one
+    (doc_id, cut_frame, mean_before_x2, mean_after_x2) row per adjacent
+    pair whose doubled means differ by more than 60."""
+    pos, means = 0, []
+    while pos < len(payload):
+        w, h, px, pos = parse_ppm(doc_id, payload, pos)
+        means.append(2 * int(px.sum(dtype=np.int64)) // (w * h))
+    for f in range(1, len(means)):
+        if abs(means[f] - means[f - 1]) > 60:
+            yield doc_id, f, means[f - 1], means[f]
+
+
 @register(
     "multimodal_shot_boundaries",
     oracle="""
@@ -1065,75 +1011,11 @@ def multimodal_phash_thumbnail_match(spark: SparkSession, sf_dir: str) -> DataFr
     "hold when each video is gigabytes.",
 )
 def multimodal_shot_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import re
-
-    def synth_video_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                nf = doc_id % 6 + 4
-                w, h = n_chars % 32 + 8, doc_id % 24 + 8
-                c1, c2 = nf // 3, (2 * nf) // 3
-                frames = []
-                for f in range(nf):
-                    scene = (f >= c1) + (f >= c2)
-                    g = (10 + 60 * scene + np.arange(h, dtype=np.int64)).astype(
-                        np.uint8
-                    )
-                    px = np.empty((h, w, 3), dtype=np.uint8)
-                    px[:, :, 0] = doc_id % 256
-                    px[:, :, 1] = g[:, None]
-                    px[:, :, 2] = (doc_id * 31) % 256
-                    frames.append(f"P6\n{w} {h}\n255\n".encode() + px.tobytes())
-                payloads.append(b"".join(frames))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    def detect_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        hdr = re.compile(rb"P6\s+(\d+)\s+(\d+)\s+255\s")
-        for pdf in batches:
-            out = {
-                "doc_id": [],
-                "cut_frame": [],
-                "mean_before_x2": [],
-                "mean_after_x2": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                pos, means = 0, []
-                while pos < len(payload):
-                    m = hdr.match(payload, pos)
-                    if not m:
-                        raise ValueError(f"doc {doc_id}: bad frame header at {pos}")
-                    w, h = int(m.group(1)), int(m.group(2))
-                    npx = w * h
-                    start, end = m.end(), m.end() + 3 * npx
-                    if end > len(payload):
-                        raise ValueError(f"doc {doc_id}: truncated frame at {pos}")
-                    gray = (
-                        np.frombuffer(payload[start:end], dtype=np.uint8)
-                        .reshape(npx, 3)
-                        .sum(axis=1, dtype=np.int64)
-                    )
-                    means.append(int(2 * int(gray.sum())) // npx)
-                    pos = end
-                for f in range(1, len(means)):
-                    if abs(means[f] - means[f - 1]) > 60:
-                        out["doc_id"].append(doc_id)
-                        out["cut_frame"].append(f)
-                        out["mean_before_x2"].append(means[f - 1])
-                        out["mean_after_x2"].append(means[f])
-            yield pd.DataFrame(out)
-
-    docs = media_docs(spark, sf_dir).select("doc_id", "n_chars")
-    video = docs.mapInPandas(synth_video_batch, schema="doc_id bigint, payload binary")
-    return video.mapInPandas(
-        detect_batch,
-        schema="doc_id bigint, cut_frame int, mean_before_x2 bigint, "
-        "mean_after_x2 bigint",
+    return media_kernel(
+        media_docs(spark, sf_dir),
+        "doc_id bigint, cut_frame int, mean_before_x2 bigint, mean_after_x2 bigint",
+        synthesize_video,
+        detect_shots,
     )
 
 
@@ -1143,81 +1025,59 @@ TIFF_META_SCHEMA = (
 )
 
 
-def synthesize_tiff_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def synthesize_tiff(doc_id, n_chars):
     """Fixture-side encoder: a REAL baseline-TIFF header per row — 'II'
     (little-endian) for even doc_ids, 'MM' (big-endian) for odd, magic 42,
     one IFD of five ascending-tag entries (ImageWidth/ImageLength/
     BitsPerSample/Compression/Orientation).  Mixed endianness across one
     corpus is exactly what real scanned-document collections look like."""
-    import struct
-
-    for pdf in batches:
-        payloads = []
-        for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-            doc_id, n_chars = int(doc_id), int(n_chars)
-            e = "<" if doc_id % 2 == 0 else ">"
-            entries = [
-                (256, doc_id % 200 + 16),   # ImageWidth
-                (257, n_chars % 100 + 8),   # ImageLength
-                (258, 8),                   # BitsPerSample
-                (259, 1),                   # Compression
-                (274, doc_id % 8 + 1),      # Orientation
-            ]
-            ifd = struct.pack(e + "H", len(entries))
-            for tag, val in entries:
-                # type 3 = SHORT, count 1; the value sits LEFT-JUSTIFIED in
-                # the 4-byte value field (first two bytes in BOTH byte
-                # orders) — the classic TIFF-walker gotcha
-                ifd += struct.pack(e + "HHI", tag, 3, 1) + struct.pack(e + "H", val) + b"\x00\x00"
-            ifd += struct.pack(e + "I", 0)  # no next IFD
-            hdr = (b"II" if e == "<" else b"MM") + struct.pack(e + "HI", 42, 8)
-            payloads.append(hdr + ifd)
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    doc_id, n_chars = int(doc_id), int(n_chars)
+    e = "<" if doc_id % 2 == 0 else ">"
+    entries = [
+        (256, doc_id % 200 + 16),   # ImageWidth
+        (257, n_chars % 100 + 8),   # ImageLength
+        (258, 8),                   # BitsPerSample
+        (259, 1),                   # Compression
+        (274, doc_id % 8 + 1),      # Orientation
+    ]
+    ifd = struct.pack(e + "H", len(entries))
+    for tag, val in entries:
+        # type 3 = SHORT, count 1; the value sits LEFT-JUSTIFIED in
+        # the 4-byte value field (first two bytes in BOTH byte
+        # orders) — the classic TIFF-walker gotcha
+        ifd += struct.pack(e + "HHI", tag, 3, 1) + struct.pack(e + "H", val) + b"\x00\x00"
+    ifd += struct.pack(e + "I", 0)  # no next IFD
+    hdr = (b"II" if e == "<" else b"MM") + struct.pack(e + "HI", 42, 8)
+    yield doc_id, hdr + ifd
 
 
-def decode_tiff_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def decode_tiff(doc_id, payload):
     """Endianness-aware IFD walk: byte-order probe, magic check, entry
     iteration with per-entry (tag, type, count, value) decode.  Raises on
     any malformed container rather than emitting garbage."""
-    import struct
-
-    for pdf in batches:
-        out = {k: [] for k in (
-            "doc_id", "byte_order", "n_entries", "width", "height",
-            "bits", "compression", "orientation",
-        )}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            doc_id = int(doc_id)
-            bom = bytes(payload[:2])
-            if bom == b"II":
-                e = "<"
-            elif bom == b"MM":
-                e = ">"
-            else:
-                raise ValueError(f"doc {doc_id}: bad byte-order mark {bom!r}")
-            magic, off = struct.unpack_from(e + "HI", payload, 2)
-            if magic != 42:
-                raise ValueError(f"doc {doc_id}: bad TIFF magic {magic}")
-            (n,) = struct.unpack_from(e + "H", payload, off)
-            tags = {}
-            for i in range(n):
-                tag, typ, cnt = struct.unpack_from(e + "HHI", payload, off + 2 + 12 * i)
-                if typ != 3 or cnt != 1:
-                    raise ValueError(f"doc {doc_id}: unsupported entry {tag}/{typ}/{cnt}")
-                (val,) = struct.unpack_from(e + "H", payload, off + 2 + 12 * i + 8)
-                tags[tag] = val
-            (nxt,) = struct.unpack_from(e + "I", payload, off + 2 + 12 * n)
-            if nxt != 0:
-                raise ValueError(f"doc {doc_id}: chained IFDs unsupported")
-            out["doc_id"].append(doc_id)
-            out["byte_order"].append(bom.decode())
-            out["n_entries"].append(n)
-            out["width"].append(tags[256])
-            out["height"].append(tags[257])
-            out["bits"].append(tags[258])
-            out["compression"].append(tags[259])
-            out["orientation"].append(tags[274])
-        yield pd.DataFrame(out)
+    doc_id = int(doc_id)
+    bom = bytes(payload[:2])
+    if bom == b"II":
+        e = "<"
+    elif bom == b"MM":
+        e = ">"
+    else:
+        raise ValueError(f"doc {doc_id}: bad byte-order mark {bom!r}")
+    magic, off = struct.unpack_from(e + "HI", payload, 2)
+    if magic != 42:
+        raise ValueError(f"doc {doc_id}: bad TIFF magic {magic}")
+    (n,) = struct.unpack_from(e + "H", payload, off)
+    tags = {}
+    for i in range(n):
+        tag, typ, cnt = struct.unpack_from(e + "HHI", payload, off + 2 + 12 * i)
+        if typ != 3 or cnt != 1:
+            raise ValueError(f"doc {doc_id}: unsupported entry {tag}/{typ}/{cnt}")
+        (val,) = struct.unpack_from(e + "H", payload, off + 2 + 12 * i + 8)
+        tags[tag] = val
+    (nxt,) = struct.unpack_from(e + "I", payload, off + 2 + 12 * n)
+    if nxt != 0:
+        raise ValueError(f"doc {doc_id}: chained IFDs unsupported")
+    yield (doc_id, bom.decode(), n, *(tags[t] for t in (256, 257, 258, 259, 274)))
 
 
 @register(
@@ -1237,21 +1097,19 @@ def decode_tiff_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
     doc="REAL TIFF/EXIF-style METADATA WALK, fully oracle-verified: "
     "synthesize a baseline-TIFF header per document — half the corpus "
     "little-endian ('II'), half big-endian ('MM'), the mixed-endianness "
-    "reality of scanned archives — then walk the IFD in a second "
-    "mapInPandas stage: byte-order probe, magic-42 check, 12-byte entry "
+    "reality of scanned archives — then walk the IFD in the same "
+    "mapInPandas crossing: byte-order probe, magic-42 check, 12-byte entry "
     "decode (tag/type/count + the LEFT-JUSTIFIED short-in-value-field "
     "rule that breaks naive walkers on big-endian files).  This is the "
     "structured-binary STRUCT-WALKING pattern (EXIF, BMFF boxes, ID3) "
     "that complements the PPM/WAV SAMPLE decoders: no pixel data, pure "
     "metadata extraction.  All five tags round-trip to DuckDB closed "
-    "forms.  Scale: the two stages fuse into one narrow pass — payloads "
+    "forms.  Scale: the two steps run as one narrow pass — payloads "
     "never shuffle, and at 100 TB the walker reads only the first KB of "
     "each blob (header-range reads against object storage).",
 )
 def multimodal_tiff_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = media_docs(spark, sf_dir).select("doc_id", "n_chars")
-    media = docs.mapInPandas(synthesize_tiff_batch, schema="doc_id bigint, payload binary")
-    return media.mapInPandas(decode_tiff_batch, schema=TIFF_META_SCHEMA)
+    return media_kernel(media_docs(spark, sf_dir), TIFF_META_SCHEMA, synthesize_tiff, decode_tiff)
 
 
 PNG_DECODED_SCHEMA = (
@@ -1261,9 +1119,6 @@ PNG_DECODED_SCHEMA = (
 
 
 def _png_chunk(tag: bytes, body: bytes) -> bytes:
-    import struct
-    import zlib
-
     return (
         struct.pack(">I", len(body))
         + tag
@@ -1272,92 +1127,65 @@ def _png_chunk(tag: bytes, body: bytes) -> bytes:
     )
 
 
-def synthesize_png_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def synthesize_png(doc_id, n_chars):
     """Fixture-side encoder: a REAL grayscale PNG per row — 8-byte
     signature, IHDR, one zlib-DEFLATE-compressed IDAT of filter-0
     scanlines with pixel (x + 3y + doc_id) % 256, IEND; every chunk
     carries its real CRC32."""
-    import struct
-    import zlib
-
-    for pdf in batches:
-        payloads = []
-        for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-            doc_id, n_chars = int(doc_id), int(n_chars)
-            w, h = doc_id % 24 + 4, n_chars % 16 + 4
-            ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
-            raw = b"".join(
-                b"\x00" + bytes((x + 3 * y + doc_id) % 256 for x in range(w))
-                for y in range(h)
-            )
-            png = (
-                b"\x89PNG\r\n\x1a\n"
-                + _png_chunk(b"IHDR", ihdr)
-                + _png_chunk(b"IDAT", zlib.compress(raw, 6))
-                + _png_chunk(b"IEND", b"")
-            )
-            payloads.append(png)
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    doc_id, n_chars = int(doc_id), int(n_chars)
+    w, h = doc_id % 24 + 4, n_chars % 16 + 4
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
+    raw = b"".join(
+        b"\x00" + bytes((x + 3 * y + doc_id) % 256 for x in range(w))
+        for y in range(h)
+    )
+    yield doc_id, (
+        b"\x89PNG\r\n\x1a\n"
+        + _png_chunk(b"IHDR", ihdr)
+        + _png_chunk(b"IDAT", zlib.compress(raw, 6))
+        + _png_chunk(b"IEND", b"")
+    )
 
 
-def decode_png_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def decode_png(doc_id, payload):
     """Chunk walk + INTEGRITY pass: verify the signature and every chunk's
     CRC32, parse IHDR, inflate IDAT, strip filter bytes, sum pixels."""
-    import struct
-    import zlib
-
-    for pdf in batches:
-        out = {k: [] for k in (
-            "doc_id", "width", "height", "bit_depth", "color_type",
-            "n_chunks", "crc_ok", "px_sum",
-        )}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            doc_id = int(doc_id)
-            if bytes(payload[:8]) != b"\x89PNG\r\n\x1a\n":
-                raise ValueError(f"doc {doc_id}: bad PNG signature")
-            pos, n_chunks, crc_ok = 8, 0, True
-            ihdr = idat = None
-            while pos < len(payload):
-                (ln,) = struct.unpack_from(">I", payload, pos)
-                tag = bytes(payload[pos + 4 : pos + 8])
-                body = bytes(payload[pos + 8 : pos + 8 + ln])
-                (crc,) = struct.unpack_from(">I", payload, pos + 8 + ln)
-                crc_ok = crc_ok and (zlib.crc32(tag + body) & 0xFFFFFFFF) == crc
-                if tag == b"IHDR":
-                    ihdr = struct.unpack(">IIBBBBB", body)
-                elif tag == b"IDAT":
-                    idat = body
-                n_chunks += 1
-                pos += 12 + ln
-                if tag == b"IEND":
-                    break
-            if ihdr is None or idat is None:
-                raise ValueError(f"doc {doc_id}: missing IHDR/IDAT")
-            w, h, depth, ctype = ihdr[0], ihdr[1], ihdr[2], ihdr[3]
-            # CRC gates the inflate: a corrupted IDAT must surface as
-            # crc_ok=false, never as a zlib crash mid-job
-            px_sum = None
-            if crc_ok:
-                raw = zlib.decompress(idat)
-                if len(raw) != h * (w + 1):
-                    raise ValueError(
-                        f"doc {doc_id}: inflated size {len(raw)} != {h}x({w}+1)"
-                    )
-                px_sum = 0
-                for y in range(h):
-                    row = raw[y * (w + 1) : (y + 1) * (w + 1)]
-                    if row[0] != 0:
-                        raise ValueError(f"doc {doc_id}: unsupported filter {row[0]}")
-                    px_sum += sum(row[1:])
-            out["doc_id"].append(doc_id)
-            out["width"].append(w)
-            out["height"].append(h)
-            out["bit_depth"].append(depth)
-            out["color_type"].append(ctype)
-            out["n_chunks"].append(n_chunks)
-            out["crc_ok"].append(bool(crc_ok))
-            out["px_sum"].append(px_sum)
-        yield pd.DataFrame(out)
+    doc_id = int(doc_id)
+    if bytes(payload[:8]) != b"\x89PNG\r\n\x1a\n":
+        raise ValueError(f"doc {doc_id}: bad PNG signature")
+    pos, n_chunks, crc_ok = 8, 0, True
+    ihdr = idat = None
+    while pos < len(payload):
+        (ln,) = struct.unpack_from(">I", payload, pos)
+        tag = bytes(payload[pos + 4 : pos + 8])
+        body = bytes(payload[pos + 8 : pos + 8 + ln])
+        (crc,) = struct.unpack_from(">I", payload, pos + 8 + ln)
+        crc_ok = crc_ok and (zlib.crc32(tag + body) & 0xFFFFFFFF) == crc
+        if tag == b"IHDR":
+            ihdr = struct.unpack(">IIBBBBB", body)
+        elif tag == b"IDAT":
+            idat = body
+        n_chunks += 1
+        pos += 12 + ln
+        if tag == b"IEND":
+            break
+    if ihdr is None or idat is None:
+        raise ValueError(f"doc {doc_id}: missing IHDR/IDAT")
+    w, h, depth, ctype = ihdr[0], ihdr[1], ihdr[2], ihdr[3]
+    # CRC gates the inflate: a corrupted IDAT must surface as
+    # crc_ok=false, never as a zlib crash mid-job
+    px_sum = None
+    if crc_ok:
+        raw = zlib.decompress(idat)
+        if len(raw) != h * (w + 1):
+            raise ValueError(f"doc {doc_id}: inflated size {len(raw)} != {h}x({w}+1)")
+        px_sum = 0
+        for y in range(h):
+            row = raw[y * (w + 1) : (y + 1) * (w + 1)]
+            if row[0] != 0:
+                raise ValueError(f"doc {doc_id}: unsupported filter {row[0]}")
+            px_sum += sum(row[1:])
+    yield doc_id, w, h, depth, ctype, n_chunks, bool(crc_ok), px_sum
 
 
 @register(
@@ -1381,7 +1209,7 @@ def decode_png_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     "compressed-container round trip the PPM path (uncompressed) "
     "cannot show: per document a genuine grayscale PNG is built "
     "(signature, IHDR, zlib-DEFLATE IDAT of filter-0 scanlines, IEND, "
-    "REAL CRC32 on every chunk), then a second mapInPandas stage walks "
+    "REAL CRC32 on every chunk), then the same mapInPandas crossing walks "
     "the chunks, re-computes every CRC32, INFLATES the pixel stream, "
     "validates filter bytes and buffer size, and sums pixels — dims "
     "and the pixel-gradient checksum land on DuckDB closed forms "
@@ -1394,67 +1222,53 @@ def decode_png_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     "job aborts.",
 )
 def multimodal_png_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = media_docs(spark, sf_dir).select("doc_id", "n_chars")
-    media = docs.mapInPandas(synthesize_png_batch, schema="doc_id bigint, payload binary")
-    return media.mapInPandas(decode_png_batch, schema=PNG_DECODED_SCHEMA)
+    return media_kernel(media_docs(spark, sf_dir), PNG_DECODED_SCHEMA, synthesize_png, decode_png)
 
 
 BMFF_WALK_SCHEMA = "doc_id bigint, box_path string, box_size bigint, depth int"
 
 
-def synthesize_bmff_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _bmff_box(tag: bytes, body: bytes) -> bytes:
+    return struct.pack(">I", len(body) + 8) + tag + body
+
+
+def synthesize_bmff(doc_id, n_chars):
     """Fixture-side encoder: a minimal ISO BMFF (MP4-style) container per
     row — ftyp, then a NESTED moov(mvhd, trak(tkhd)) tree, then an mdat
     whose payload length is doc-dependent.  Every box is (u32 size,
     4-char type, body), sizes include the 8-byte header."""
-    import struct
-
-    def box(tag: bytes, body: bytes) -> bytes:
-        return struct.pack(">I", len(body) + 8) + tag + body
-
-    for pdf in batches:
-        payloads = []
-        for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-            doc_id, n_chars = int(doc_id), int(n_chars)
-            ftyp = box(b"ftyp", b"isom\x00\x00\x02\x00isomiso2")
-            tkhd = box(b"tkhd", struct.pack(">Q", doc_id))
-            mvhd = box(b"mvhd", struct.pack(">I", n_chars % 100000))
-            trak = box(b"trak", tkhd)
-            moov = box(b"moov", mvhd + trak)
-            mdat = box(b"mdat", bytes([doc_id % 7 + 1]) * (n_chars % 50 + 1))
-            payloads.append(ftyp + moov + mdat)
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    doc_id, n_chars = int(doc_id), int(n_chars)
+    ftyp = _bmff_box(b"ftyp", b"isom\x00\x00\x02\x00isomiso2")
+    tkhd = _bmff_box(b"tkhd", struct.pack(">Q", doc_id))
+    mvhd = _bmff_box(b"mvhd", struct.pack(">I", n_chars % 100000))
+    trak = _bmff_box(b"trak", tkhd)
+    moov = _bmff_box(b"moov", mvhd + trak)
+    mdat = _bmff_box(b"mdat", bytes([doc_id % 7 + 1]) * (n_chars % 50 + 1))
+    yield doc_id, ftyp + moov + mdat
 
 
 _BMFF_CONTAINERS = {b"moov", b"trak"}  # boxes whose body is more boxes
 
 
-def walk_bmff_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def walk_bmff(doc_id, buf, pos=0, end=None, path="", depth=0):
     """Recursive box walk: container boxes (moov, trak) recurse into their
-    body; leaves emit (path, size, depth).  Rejects truncated or
-    misaligned boxes instead of emitting garbage."""
-    import struct
-
-    def walk(doc_id, buf, base, end, path, depth, out):
-        pos = base
-        while pos < end:
-            if end - pos < 8:
-                raise ValueError(f"doc {doc_id}: truncated box header at {pos}")
-            (size,) = struct.unpack_from(">I", buf, pos)
-            tag = bytes(buf[pos + 4 : pos + 8])
-            if size < 8 or pos + size > end:
-                raise ValueError(f"doc {doc_id}: bad box size {size} at {pos}")
-            p = f"{path}/{tag.decode()}"
-            out.append((doc_id, p, size, depth))
-            if tag in _BMFF_CONTAINERS:
-                walk(doc_id, buf, pos + 8, pos + size, p, depth + 1, out)
-            pos += size
-
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            walk(int(doc_id), payload, 0, len(payload), "", 0, rows)
-        yield pd.DataFrame(rows, columns=["doc_id", "box_path", "box_size", "depth"])
+    body; every box emits (doc_id, path, size, depth), parent before
+    children.  Rejects truncated or misaligned boxes instead of emitting
+    garbage."""
+    doc_id = int(doc_id)
+    end = len(buf) if end is None else end
+    while pos < end:
+        if end - pos < 8:
+            raise ValueError(f"doc {doc_id}: truncated box header at {pos}")
+        (size,) = struct.unpack_from(">I", buf, pos)
+        tag = bytes(buf[pos + 4 : pos + 8])
+        if size < 8 or pos + size > end:
+            raise ValueError(f"doc {doc_id}: bad box size {size} at {pos}")
+        p = f"{path}/{tag.decode()}"
+        yield doc_id, p, size, depth
+        if tag in _BMFF_CONTAINERS:
+            yield from walk_bmff(doc_id, buf, pos + 8, pos + size, p, depth + 1)
+        pos += size
 
 
 @register(
@@ -1490,6 +1304,4 @@ def walk_bmff_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     "walker reads box headers only — range requests, not full blobs.",
 )
 def multimodal_bmff_box_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = media_docs(spark, sf_dir).select("doc_id", "n_chars")
-    media = docs.mapInPandas(synthesize_bmff_batch, schema="doc_id bigint, payload binary")
-    return media.mapInPandas(walk_bmff_batch, schema=BMFF_WALK_SCHEMA)
+    return media_kernel(media_docs(spark, sf_dir), BMFF_WALK_SCHEMA, synthesize_bmff, walk_bmff)

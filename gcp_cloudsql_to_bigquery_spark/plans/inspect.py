@@ -304,6 +304,34 @@ def batch_eval_python_count(df: DataFrame) -> int:
     return count_occurrences(df, "BatchEvalPython")
 
 
+_PYTHON_MAP_NODES = ("MapInPandasExec", "MapInArrowExec", "PythonMapInArrowExec")
+
+
+def stacked_python_map_count(df: DataFrame) -> int:
+    """Python map nodes (``mapInPandas`` / ``mapInArrow``) whose child is
+    another Python map node: two Arrow crossings in a row, each with its
+    own worker round trip and serialize/deserialize of the intermediate
+    batch.  Row-local kernel chains belong in ONE crossing
+    (``multimodal.media_kernel`` runs its steps inside one worker), so
+    the registry-wide count is zero."""
+    bad = 0
+
+    def walk(node) -> None:
+        nonlocal bad
+        ch = node.children()
+        for i in range(ch.size()):
+            child = _unwrap_adaptive(ch.apply(i))
+            if (
+                node.getClass().getSimpleName() in _PYTHON_MAP_NODES
+                and child.getClass().getSimpleName() in _PYTHON_MAP_NODES
+            ):
+                bad += 1
+            walk(child)
+
+    walk(_unwrap_adaptive(df._jdf.queryExecution().executedPlan()))
+    return bad
+
+
 def is_cache_substituted(df: DataFrame) -> bool:
     """True if the CacheManager substituted a cached plan into this
     DataFrame (an ``InMemoryTableScan`` in the executed plan).

@@ -25,8 +25,10 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..catalog import load
+from ..ingest.nulls import clean_sentinel_fields, parse_csv_lines
 from ..registry import register
 from .events import (
     _CKPT_DIR,
@@ -90,14 +92,10 @@ def run_streaming_elt(
         spark.readStream.option("maxFilesPerTrigger", 1)
         .text(watch_dir + "/arrival_*")
     )
-    # csv-cleaner stage, CSV-aware form (ingest/nulls.py): sentinel -> empty
-    # field only at field boundaries, then autodetect-off schema parse
-    cleaned = raw.select(
-        F.regexp_replace(F.col("value"), r'(?:(?<=^)|(?<=,))"N(?=,|$)', "").alias("value")
-    )
-    parsed = cleaned.select(
-        F.from_csv(F.col("value"), _ARRIVAL_SCHEMA, {"nullValue": "", "escape": '"'}).alias("r")
-    ).select("r.*")
+    # csv-cleaner stage, CSV-aware form: sentinel -> empty field only at
+    # field boundaries, then autodetect-off schema parse — the same two
+    # transforms as the batch load
+    parsed = parse_csv_lines(clean_sentinel_fields(raw), T.StructType.fromDDL(_ARRIVAL_SCHEMA))
     ckpt = _tmp_stream_dir("ckpt_elt_", _CKPT_DIR)
     q = (
         parsed.writeStream.outputMode("append")

@@ -1,5 +1,5 @@
 """Registry-wide physical-plan audit: build every query's plan and check
-the scale invariants (two introduced in round 6, a third in round 16).
+the six scale invariants listed below.
 
 Plan *building* is lazy for almost every query since round 8: the verify
 barriers in ``dedup_ngram_jaccard`` / ``dedup_minhash_lsh`` /
@@ -47,7 +47,11 @@ Invariants:
    listagg, mode) over fact-grain input — the one-row-per-task
    exchange hides a buffer that holds the task's whole column slice,
    merged on a single reducer (r16 scan: two rewritten onto
-   scale.global_order_stats, two allowlisted below).
+   scale.global_order_stats, two allowlisted below);
+6. no Python map node (``MapInPandas``/``MapInArrow``) fed directly by
+   another — a chain of row-local kernels runs as ONE Arrow crossing
+   (``multimodal.media_kernel``), not one worker round trip per link.
+   No allowlist entry: the count is zero registry-wide.
 
 Known-justified exceptions are allowlisted with reasons (kept in sync
 with tests/test_plans.py, which pins the same invariants in CI).
@@ -123,6 +127,7 @@ def main() -> int:
         pass  # logging backend differs: audit correctness is unaffected
     violations: list[str] = []
     n_checked = 0
+    totals: dict[str, int] = {}
 
     def check(name: str, df) -> None:
         nonlocal n_checked
@@ -136,7 +141,9 @@ def main() -> int:
             ("single_partition", len(single), single),
             ("py_row_udf", inspect.batch_eval_python_count(df), []),
             ("buffer_agg", len(buffers), buffers),
+            ("py_stacked_map", inspect.stacked_python_map_count(df), []),
         ):
+            totals[kind] = totals.get(kind, 0) + count
             expected, _why = ALLOWLIST.get((name, kind), (0, ""))
             if count != expected:
                 hits = f" <- {nodes}" if nodes else ""
@@ -181,6 +188,7 @@ def main() -> int:
             continue
         check(name, df)
     print(f"checked {n_checked} plans")
+    print("invariant totals:", ", ".join(f"{k}={n}" for k, n in totals.items()))
     if violations:
         for v in violations:
             print("VIOLATION:", v)

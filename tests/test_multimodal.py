@@ -1,9 +1,11 @@
 """Multimodal plumbing tests: binary column, metadata struct, mapInPandas
 decode contract (real PPM/WAV kernels), column-pruning behavior."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from gcp_cloudsql_to_bigquery_spark.catalog import load
+from gcp_cloudsql_to_bigquery_spark.operators import multimodal
 from gcp_cloudsql_to_bigquery_spark.operators.multimodal import as_media_table
 from gcp_cloudsql_to_bigquery_spark.workload import queries
 
@@ -53,67 +55,79 @@ def test_decode_projects_payload_away(spark):
 def test_ppm_decode_rejects_corrupt_payloads():
     """The real decoder must fail loudly on malformed headers and on
     truncated pixel buffers — silent garbage means silent wrong features."""
-    import pandas as pd
     import pytest as _pytest
 
-    from gcp_cloudsql_to_bigquery_spark.operators.multimodal import decode_ppm_batch
+    from gcp_cloudsql_to_bigquery_spark.operators.multimodal import decode_ppm
 
-    bad_header = pd.DataFrame({"doc_id": [1], "payload": [b"JFIF\x00\x01garbage"]})
     with _pytest.raises(ValueError, match="not a P6"):
-        list(decode_ppm_batch(iter([bad_header])))
+        list(decode_ppm(1, b"JFIF\x00\x01garbage"))
 
-    truncated = pd.DataFrame({"doc_id": [2], "payload": [b"P6\n4 4\n255\n" + b"\x00" * 10]})
     with _pytest.raises(ValueError, match="pixel buffer"):
-        list(decode_ppm_batch(iter([truncated])))
+        list(decode_ppm(2, b"P6\n4 4\n255\n" + b"\x00" * 10))
 
 
 def test_wav_decode_rejects_corrupt_payloads():
     import struct
 
-    import pandas as pd
     import pytest as _pytest
 
-    from gcp_cloudsql_to_bigquery_spark.operators.multimodal import decode_wav_batch
+    from gcp_cloudsql_to_bigquery_spark.operators.multimodal import decode_wav
 
-    not_riff = pd.DataFrame({"doc_id": [1], "payload": [b"OggS" + b"\x00" * 40]})
     with _pytest.raises(ValueError, match="not a RIFF"):
-        list(decode_wav_batch(iter([not_riff])))
+        list(decode_wav(1, b"OggS" + b"\x00" * 40))
 
     # valid container, no data chunk
     fmt = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
     body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    headless = pd.DataFrame(
-        {"doc_id": [2], "payload": [b"RIFF" + struct.pack("<I", len(body)) + body]}
-    )
     with _pytest.raises(ValueError, match="missing fmt/data"):
-        list(decode_wav_batch(iter([headless])))
+        list(decode_wav(2, b"RIFF" + struct.pack("<I", len(body)) + body))
 
 
 def test_resize_halves_dims_and_preserves_planes():
     """Pure-kernel check: resize(synthesize(x)) decodes to ceil-half dims
     with constant planes invariant and the gradient mean equal to k-1."""
-    import pandas as pd
-
     from gcp_cloudsql_to_bigquery_spark.operators.multimodal import (
-        decode_ppm_batch,
-        resize_ppm_batch,
-        synthesize_ppm_batch,
+        decode_ppm,
+        resize_ppm,
+        run_steps,
+        synthesize_ppm,
     )
 
-    src = pd.DataFrame({"doc_id": [7, 123, 4000], "n_chars": [100, 57, 999]})
-    media = next(synthesize_ppm_batch(iter([src])))
-    small = next(resize_ppm_batch(iter([media])))
-    out = next(decode_ppm_batch(iter([small])))
-    for i, (doc_id, n_chars) in enumerate(zip(src["doc_id"], src["n_chars"])):
+    src = [(7, 100), (123, 57), (4000, 999)]
+    out = run_steps(src, synthesize_ppm, resize_ppm, decode_ppm)
+    assert [row[0] for row in out] == [doc_id for doc_id, _ in src]
+    for (doc_id, n_chars), (_, width, height, _n, mean_r, mean_g, mean_b) in zip(src, out):
         w, h = n_chars % 64 + 8, doc_id % 48 + 8
-        assert out["width"][i] == (w + 1) // 2
-        assert out["height"][i] == (h + 1) // 2
-        assert out["mean_r"][i] == doc_id % 256
-        assert out["mean_b"][i] == (doc_id * 31) % 256
-        assert out["mean_g"][i] == (h + 1) // 2 - 1
+        assert width == (w + 1) // 2
+        assert height == (h + 1) // 2
+        assert mean_r == doc_id % 256
+        assert mean_b == (doc_id * 31) % 256
+        assert mean_g == (h + 1) // 2 - 1
 
     import pytest as _pytest
 
-    bad = pd.DataFrame({"doc_id": [1], "payload": [b"GIF89a..."]})
     with _pytest.raises(ValueError, match="not a P6"):
-        list(resize_ppm_batch(iter([bad])))
+        list(resize_ppm(1, b"GIF89a..."))
+
+
+_GOOD_P6 = b"P6\n2 2\n255\n" + bytes(12)
+_PPM_CONSUMERS = ("decode_ppm", "resize_ppm", "phash_ppm", "ppm_histogram", "detect_shots")
+
+
+@pytest.mark.parametrize(
+    "kernel, payload, message",
+    [(k, b"JFIF\x00\x01garbage", "not a P6") for k in _PPM_CONSUMERS]
+    + [(k, b"P6\n4 4\n255\n" + bytes(10), "pixel buffer") for k in _PPM_CONSUMERS]
+    # a truncated SECOND frame: the multi-frame walk must not stop short
+    + [("detect_shots", _GOOD_P6 + b"P6\n4 4\n255\n" + bytes(10), "pixel buffer")]
+    # single-image consumers: bytes after the pixel buffer are corruption
+    + [(k, _GOOD_P6 + b"\x00", "trailing") for k in _PPM_CONSUMERS[:4]]
+    + [("decimate_wav", b"OggS" + bytes(40), "not a RIFF")],
+)
+def test_media_kernels_reject_corrupt_payloads(kernel, payload, message):
+    """Every PPM consumer shares parse_ppm's header and buffer-length
+    checks, and the WAV resampler shares parse_wav_chunks' container
+    check: each raises on a corrupt payload instead of emitting rows."""
+    step = getattr(multimodal, kernel)
+    with pytest.raises(ValueError, match=message):
+        list(step(1, payload))

@@ -657,3 +657,36 @@ def test_no_unbounded_global_buffer_aggregate_family(spark):
     ):
         df = queries()[q](spark, SF)
         assert inspect.unbounded_global_buffer_aggregates(df) == [], (q, why)
+
+
+def test_media_pipelines_are_one_arrow_crossing(spark):
+    """Sixth plan invariant: no Python map node fed directly by another.
+    Every multimodal kernel query runs its synthesize -> transcode ->
+    decode chain through ``media_kernel`` as ONE MapInPandas node per
+    branch, so no intermediate payload makes a JVM round trip between
+    Python workers.  decode_features has an image and an audio branch;
+    thumbnail_match hashes originals twice (the distinct-hash side and
+    the final per-doc join; no exchange between them to reuse) plus one
+    thumbnail branch."""
+    branches = {
+        "multimodal_decode_features": 2,
+        "multimodal_decode_ppm": 1,
+        "multimodal_decode_wav": 1,
+        "multimodal_resize_ppm": 1,
+        "multimodal_resample_wav": 1,
+        "multimodal_audio_spectral": 1,
+        "multimodal_image_histogram": 1,
+        "multimodal_phash_dedup": 1,
+        "multimodal_phash_thumbnail_match": 3,
+        "multimodal_shot_boundaries": 1,
+        "multimodal_tiff_metadata": 1,
+        "multimodal_png_integrity": 1,
+        "multimodal_bmff_box_walk": 1,
+    }
+    for q, n_branches in branches.items():
+        df = queries()[q](spark, SF)
+        assert inspect.stacked_python_map_count(df) == 0, (q, physical_plan(df))
+        assert inspect.count_occurrences(df, "MapInPandas") == n_branches, (
+            q,
+            physical_plan(df),
+        )

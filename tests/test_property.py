@@ -79,24 +79,23 @@ def test_line_compat_noop_without_sentinel(line):
 )
 @settings(max_examples=50, deadline=None)
 def test_ppm_synth_decode_roundtrip(doc_id, n_chars):
-    """decode_ppm_batch must invert synthesize_ppm_batch for ANY ids: the
+    """decode_ppm must invert synthesize_ppm for ANY ids: the
     closed forms the oracle states (dims, byte size, channel means) hold
     over the whole input domain, not just fixture values."""
-    import pandas as pd
-
     from gcp_cloudsql_to_bigquery_spark.operators.multimodal import (
-        decode_ppm_batch,
-        synthesize_ppm_batch,
+        decode_ppm,
+        run_steps,
+        synthesize_ppm,
     )
 
-    src = pd.DataFrame({"doc_id": [doc_id], "n_chars": [n_chars]})
-    media = next(synthesize_ppm_batch(iter([src])))
-    out = next(decode_ppm_batch(iter([media])))
+    ((_, width, height, _n, mean_r, mean_g, mean_b),) = run_steps(
+        [(doc_id, n_chars)], synthesize_ppm, decode_ppm
+    )
     w, h = n_chars % 64 + 8, doc_id % 48 + 8
-    assert out["width"][0] == w and out["height"][0] == h
-    assert out["mean_r"][0] == doc_id % 256
-    assert out["mean_g"][0] == (h - 1) / 2.0
-    assert out["mean_b"][0] == (doc_id * 31) % 256
+    assert width == w and height == h
+    assert mean_r == doc_id % 256
+    assert mean_g == (h - 1) / 2.0
+    assert mean_b == (doc_id * 31) % 256
 
 
 @given(
@@ -105,21 +104,20 @@ def test_ppm_synth_decode_roundtrip(doc_id, n_chars):
 )
 @settings(max_examples=50, deadline=None)
 def test_wav_synth_decode_roundtrip(doc_id, n_chars):
-    import pandas as pd
-
     from gcp_cloudsql_to_bigquery_spark.operators.multimodal import (
-        decode_wav_batch,
-        synthesize_wav_batch,
+        decode_wav,
+        run_steps,
+        synthesize_wav,
     )
 
-    src = pd.DataFrame({"doc_id": [doc_id], "n_chars": [n_chars]})
-    media = next(synthesize_wav_batch(iter([src])))
-    out = next(decode_wav_batch(iter([media])))
+    ((_, sample_rate, n_channels, n_samples, _dur, rms),) = run_steps(
+        [(doc_id, n_chars)], synthesize_wav, decode_wav
+    )
     n = n_chars % 2000 + 100
-    assert out["n_samples"][0] == n
-    assert out["sample_rate"][0] == 8000 and out["n_channels"][0] == 1
+    assert n_samples == n
+    assert sample_rate == 8000 and n_channels == 1
     # Nyquist square wave of amplitude A has RMS exactly A
-    assert out["rms"][0] == float(doc_id % 1000)
+    assert rms == float(doc_id % 1000)
 
 
 @given(

@@ -230,25 +230,22 @@ def test_winsorize_matches_bruteforce(spark):
 
 
 def test_png_decoder_rejects_corruption(spark):
-    import pandas as pd
-
     from gcp_cloudsql_to_bigquery_spark.operators.multimodal import (
-        decode_png_batch,
-        synthesize_png_batch,
+        decode_png,
+        run_steps,
+        synthesize_png,
     )
 
-    src = pd.DataFrame({"doc_id": [2, 3], "n_chars": [100, 257]})
-    media = next(synthesize_png_batch(iter([src])))
-    ok = next(decode_png_batch(iter([media.copy()])))
-    assert list(ok["crc_ok"]) == [True, True]
-    assert list(ok["n_chunks"]) == [3, 3]
+    media = run_steps([(2, 100), (3, 257)], synthesize_png)
+    ok = run_steps(media, decode_png)
+    assert [row[6] for row in ok] == [True, True]  # crc_ok
+    assert [row[5] for row in ok] == [3, 3]  # n_chunks
     # flip one IDAT byte: CRC must catch it (crc_ok False), not crash
-    tampered = media.copy()
-    b = bytearray(tampered["payload"].iloc[0])
+    doc_id, payload = media[0]
+    b = bytearray(payload)
     b[len(b) - 20] ^= 0xFF  # inside IDAT body, away from IEND
-    tampered.at[0, "payload"] = bytes(b)
-    res = next(decode_png_batch(iter([tampered])))
-    assert not res["crc_ok"].iloc[0]
+    ((*_, crc_ok, _px_sum),) = decode_png(doc_id, bytes(b))
+    assert not crc_ok
 
 
 # ------------------------------------------------------------ SLA subtraction

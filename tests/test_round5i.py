@@ -125,32 +125,27 @@ def test_geo_nn_matches_allpairs(spark):
 
 
 def test_bmff_walk_rejects_bad_sizes(spark):
-    import pandas as pd
-
     from gcp_cloudsql_to_bigquery_spark.operators.multimodal import (
-        synthesize_bmff_batch,
-        walk_bmff_batch,
+        synthesize_bmff,
+        walk_bmff,
     )
 
-    src = pd.DataFrame({"doc_id": [5], "n_chars": [123]})
-    media = next(synthesize_bmff_batch(iter([src])))
-    rows = next(walk_bmff_batch(iter([media.copy()])))
-    assert list(rows["box_path"]) == [
+    ((_, payload),) = synthesize_bmff(5, 123)
+    rows = list(walk_bmff(5, payload))
+    assert [path for _, path, _, _ in rows] == [
         "/ftyp", "/moov", "/moov/mvhd", "/moov/trak", "/moov/trak/tkhd", "/mdat",
     ]
     # nested sizes are consistent: moov = header + children
-    sizes = dict(zip(rows["box_path"], rows["box_size"]))
+    sizes = {path: size for _, path, size, _ in rows}
     assert sizes["/moov"] == 8 + sizes["/moov/mvhd"] + sizes["/moov/trak"]
     assert sizes["/moov/trak"] == 8 + sizes["/moov/trak/tkhd"]
     # corrupt a size field: the walker must refuse, not mis-walk
     import struct
 
-    b = bytearray(media["payload"].iloc[0])
+    b = bytearray(payload)
     struct.pack_into(">I", b, 0, 7)  # ftyp size < 8
-    bad = media.copy()
-    bad.at[0, "payload"] = bytes(b)
     try:
-        next(walk_bmff_batch(iter([bad])))
+        next(walk_bmff(5, bytes(b)))
         raise AssertionError("expected ValueError on bad box size")
     except ValueError:
         pass

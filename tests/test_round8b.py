@@ -6,7 +6,7 @@ Both queries are selfcheck-green against their DuckDB oracles, but the
 oracle only ever sees well-formed fixtures — the integrity machinery
 (CRC gating the inflate, bounds checks rejecting truncated/overflowing
 boxes) is exactly the code that never executes on the happy path.  These
-tests drive the raw Arrow-batch kernels directly with crafted byte
+tests drive the per-row kernels directly with crafted byte
 strings, no Spark session needed, so every documented rejection branch
 fires at least once, and the happy-path outputs are recomputed from first
 principles (pure-Python gradient sum / hand-computed box tree) rather
@@ -16,28 +16,20 @@ than by re-running either engine.
 import struct
 import zlib
 
-import pandas as pd
 import pytest
 
 from gcp_cloudsql_to_bigquery_spark.operators.multimodal import (
     _png_chunk,
-    decode_png_batch,
-    synthesize_png_batch,
-    synthesize_bmff_batch,
-    walk_bmff_batch,
+    decode_png,
+    synthesize_png,
+    synthesize_bmff,
+    walk_bmff,
 )
 
 
-def _one(kernel, doc_id, payload):
-    out = list(kernel(iter([pd.DataFrame({"doc_id": [doc_id], "payload": [payload]})])))
-    assert len(out) == 1
-    return out[0]
-
-
 def _good_png(doc_id=5, n_chars=7):
-    batch = pd.DataFrame({"doc_id": [doc_id], "n_chars": [n_chars]})
-    (encoded,) = list(synthesize_png_batch(iter([batch])))
-    return bytes(encoded["payload"].iloc[0])
+    ((_, png),) = synthesize_png(doc_id, n_chars)
+    return png
 
 
 # --- PNG happy path: decode output == first-principles gradient math ---
@@ -49,11 +41,12 @@ def test_png_roundtrip_matches_pure_python_gradient():
     expected_px = sum(
         (x + 3 * y + doc_id) % 256 for x in range(w) for y in range(h)
     )
-    dec = _one(decode_png_batch, doc_id, _good_png(doc_id, n_chars))
-    row = dec.iloc[0]
-    assert (row["width"], row["height"]) == (w, h)
-    assert (row["bit_depth"], row["color_type"], row["n_chunks"]) == (8, 0, 3)
-    assert bool(row["crc_ok"]) and int(row["px_sum"]) == expected_px
+    ((_, width, height, depth, ctype, n_chunks, crc_ok, px_sum),) = decode_png(
+        doc_id, _good_png(doc_id, n_chars)
+    )
+    assert (width, height) == (w, h)
+    assert (depth, ctype, n_chunks) == (8, 0, 3)
+    assert crc_ok and px_sum == expected_px
 
 
 # --- PNG failure paths: each documented rejection branch fires once ---
@@ -67,22 +60,22 @@ def test_png_corrupt_idat_surfaces_as_crc_false_not_crash():
     # IDAT body starts after 8 sig + 25 IHDR chunk + 8 IDAT header
     idat_body = 8 + (12 + 13) + 8
     png[idat_body + 2] ^= 0xFF
-    dec = _one(decode_png_batch, 5, bytes(png))
-    assert not bool(dec["crc_ok"].iloc[0])
-    assert dec["px_sum"].iloc[0] is None or pd.isna(dec["px_sum"].iloc[0])
+    ((*_, crc_ok, px_sum),) = decode_png(5, bytes(png))
+    assert not crc_ok
+    assert px_sum is None
 
 
 def test_png_bad_signature_raises():
     png = b"\x89PNX" + _good_png()[4:]
     with pytest.raises(ValueError, match="bad PNG signature"):
-        _one(decode_png_batch, 5, png)
+        list(decode_png(5, png))
 
 
 def test_png_missing_idat_raises():
     ihdr = struct.pack(">IIBBBBB", 4, 4, 8, 0, 0, 0, 0)
     png = b"\x89PNG\r\n\x1a\n" + _png_chunk(b"IHDR", ihdr) + _png_chunk(b"IEND", b"")
     with pytest.raises(ValueError, match="missing IHDR/IDAT"):
-        _one(decode_png_batch, 5, png)
+        list(decode_png(5, png))
 
 
 def test_png_inflated_size_mismatch_raises():
@@ -98,7 +91,7 @@ def test_png_inflated_size_mismatch_raises():
         + _png_chunk(b"IEND", b"")
     )
     with pytest.raises(ValueError, match="inflated size"):
-        _one(decode_png_batch, 9, png)
+        list(decode_png(9, png))
 
 
 def test_png_unsupported_filter_byte_raises():
@@ -112,7 +105,7 @@ def test_png_unsupported_filter_byte_raises():
         + _png_chunk(b"IEND", b"")
     )
     with pytest.raises(ValueError, match="unsupported filter 1"):
-        _one(decode_png_batch, 9, png)
+        list(decode_png(9, png))
 
 
 # --- BMFF happy path: walk output == hand-computed box tree ---
@@ -124,12 +117,8 @@ def _bmff_box(tag: bytes, body: bytes) -> bytes:
 
 def test_bmff_walk_matches_hand_computed_tree():
     doc_id, n_chars = 3, 12
-    batch = pd.DataFrame({"doc_id": [doc_id], "n_chars": [n_chars]})
-    (enc,) = list(synthesize_bmff_batch(iter([batch])))
-    walked = _one(walk_bmff_batch, doc_id, enc["payload"].iloc[0])
-    got = list(
-        walked[["box_path", "box_size", "depth"]].itertuples(index=False, name=None)
-    )
+    ((_, payload),) = synthesize_bmff(doc_id, n_chars)
+    got = [row[1:] for row in walk_bmff(doc_id, payload)]
     # sizes derived from the format spec by hand, not from the encoder:
     # ftyp body 16B; tkhd 8B body; mvhd 4B; trak wraps tkhd; moov wraps
     # mvhd+trak; mdat body is n_chars%50+1 bytes
@@ -149,21 +138,21 @@ def test_bmff_walk_matches_hand_computed_tree():
 def test_bmff_truncated_header_raises():
     payload = _bmff_box(b"ftyp", b"isom") + b"\x00\x00\x00"  # 3 trailing bytes
     with pytest.raises(ValueError, match="truncated box header"):
-        _one(walk_bmff_batch, 1, payload)
+        list(walk_bmff(1, payload))
 
 
 def test_bmff_undersized_box_raises():
     # size=4 < 8-byte header: would loop forever or emit garbage if accepted
     payload = struct.pack(">I", 4) + b"free"
     with pytest.raises(ValueError, match="bad box size 4"):
-        _one(walk_bmff_batch, 1, payload)
+        list(walk_bmff(1, payload))
 
 
 def test_bmff_overflowing_box_raises():
     # declared size runs past the end of the buffer
     payload = struct.pack(">I", 64) + b"mdat" + bytes(8)
     with pytest.raises(ValueError, match="bad box size 64"):
-        _one(walk_bmff_batch, 1, payload)
+        list(walk_bmff(1, payload))
 
 
 def test_bmff_overflowing_child_inside_container_raises():
@@ -174,7 +163,7 @@ def test_bmff_overflowing_child_inside_container_raises():
     moov = _bmff_box(b"moov", bad_child)
     payload = moov + _bmff_box(b"free", bytes(32))
     with pytest.raises(ValueError, match="bad box size 48"):
-        _one(walk_bmff_batch, 1, payload)
+        list(walk_bmff(1, payload))
 
 
 # --- fixed-width trailer audit: tamper paths (src_fixed_width_trailer) ---

@@ -21,14 +21,14 @@ import random
 import string
 import struct
 
-import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from gcp_cloudsql_to_bigquery_spark.operators.multimodal import (
-    decode_png_batch,
-    synthesize_png_batch,
-    walk_bmff_batch,
+    decode_png,
+    run_steps,
+    synthesize_png,
+    walk_bmff,
 )
 
 
@@ -39,12 +39,11 @@ from gcp_cloudsql_to_bigquery_spark.operators.multimodal import (
 @given(doc_id=st.integers(0, 10_000), n_chars=st.integers(0, 1_000_000))
 def test_png_gradient_property(doc_id, n_chars):
     w, h = doc_id % 24 + 4, n_chars % 16 + 4
-    batch = pd.DataFrame({"doc_id": [doc_id], "n_chars": [n_chars]})
-    (enc,) = list(synthesize_png_batch(iter([batch])))
-    (dec,) = list(decode_png_batch(iter([enc])))
-    row = dec.iloc[0]
-    assert (row["width"], row["height"], bool(row["crc_ok"])) == (w, h, True)
-    assert int(row["px_sum"]) == sum(
+    ((_, width, height, _depth, _ctype, _n, crc_ok, px_sum),) = run_steps(
+        [(doc_id, n_chars)], synthesize_png, decode_png
+    )
+    assert (width, height, crc_ok) == (w, h, True)
+    assert px_sum == sum(
         (x + 3 * y + doc_id) % 256 for x in range(w) for y in range(h)
     )
 
@@ -85,14 +84,7 @@ def test_bmff_walker_matches_generator_on_random_trees():
     for trial in range(40):
         expected = []
         payload = _random_tree(rng, "", 0, max_depth=4, expected=expected)
-        (out,) = list(
-            walk_bmff_batch(
-                iter([pd.DataFrame({"doc_id": [trial], "payload": [payload]})])
-            )
-        )
-        got = list(
-            out[["box_path", "box_size", "depth"]].itertuples(index=False, name=None)
-        )
+        got = [row[1:] for row in walk_bmff(trial, payload)]
         assert got == expected, f"trial {trial}"
 
 

@@ -304,11 +304,9 @@ def test_png_integrity_seeded_structural_fuzz():
     import struct
     import zlib
 
-    import pandas as pd
-
     from gcp_cloudsql_to_bigquery_spark.operators.multimodal import (
         _png_chunk,
-        decode_png_batch,
+        decode_png,
     )
 
     rng = random.Random(0x916)
@@ -335,17 +333,17 @@ def test_png_integrity_seeded_structural_fuzz():
             start = 8 + sum(len(c) for c in chunks[:ci])
             png[start + len(chunks[ci]) - rng.randint(1, 4)] ^= 0xFF
 
-        batch = pd.DataFrame({"doc_id": [case], "payload": [bytes(png)]})
-        (dec,) = list(decode_png_batch(iter([batch])))
-        row = dec.iloc[0]
-        assert (row["width"], row["height"]) == (w, h), (case, mode)
-        assert row["n_chunks"] == 3 + n_text, (case, mode)
+        ((_, width, height, _depth, _ctype, n_chunks, crc_ok, px_sum),) = decode_png(
+            case, bytes(png)
+        )
+        assert (width, height) == (w, h), (case, mode)
+        assert n_chunks == 3 + n_text, (case, mode)
         if mode == "clean":
-            assert bool(row["crc_ok"]), (case, mode)
-            assert int(row["px_sum"]) == sum(map(sum, pixels)), (case, mode)
+            assert crc_ok, (case, mode)
+            assert px_sum == sum(map(sum, pixels)), (case, mode)
         else:
-            assert not bool(row["crc_ok"]), (case, mode)
-            assert row["px_sum"] is None or pd.isna(row["px_sum"]), (case, mode)
+            assert not crc_ok, (case, mode)
+            assert px_sum is None, (case, mode)
 
 
 # --- 6. BMFF box walker: seeded structural fuzz -----------------------------
@@ -360,10 +358,9 @@ def test_bmff_walker_seeded_structural_fuzz():
     import random
     import struct
 
-    import pandas as pd
     import pytest as _pytest
 
-    from gcp_cloudsql_to_bigquery_spark.operators.multimodal import walk_bmff_batch
+    from gcp_cloudsql_to_bigquery_spark.operators.multimodal import walk_bmff
 
     rng = random.Random(0xB0FF)
     _LEAF_TAGS = [b"ftyp", b"mvhd", b"tkhd", b"mdat", b"free", b"udta"]
@@ -393,17 +390,15 @@ def test_bmff_walker_seeded_structural_fuzz():
             struct.pack_into(">I", payload, 0, rng.randint(0, 7))
         elif mode == "truncate":
             payload = payload[: len(payload) - rng.randint(1, 7)]
-        batch = pd.DataFrame({"doc_id": [case], "payload": [bytes(payload)]})
         if mode == "clean":
-            (out,) = list(walk_bmff_batch(iter([batch])))
-            got = [tuple(r) for r in out.itertuples(index=False)]
+            got = list(walk_bmff(case, bytes(payload)))
             # walker emits parent-before-children depth-first; the generator
             # appends in the same order EXCEPT containers append their
             # children first — compare as multisets plus per-path equality
             assert sorted(got) == sorted(expect), (case, got, expect)
         else:
             with _pytest.raises(ValueError, match="truncated box|bad box size"):
-                list(walk_bmff_batch(iter([batch])))
+                list(walk_bmff(case, bytes(payload)))
 
 
 # --- 7. TIFF IFD walker: seeded structural fuzz -----------------------------
@@ -418,10 +413,9 @@ def test_tiff_walker_seeded_structural_fuzz():
     import random
     import struct
 
-    import pandas as pd
     import pytest as _pytest
 
-    from gcp_cloudsql_to_bigquery_spark.operators.multimodal import decode_tiff_batch
+    from gcp_cloudsql_to_bigquery_spark.operators.multimodal import decode_tiff
 
     rng = random.Random(0x71FF)
     REQUIRED = (256, 257, 258, 259, 274)
@@ -443,17 +437,14 @@ def test_tiff_walker_seeded_structural_fuzz():
         magic = 43 if mode == "bad_magic" else 42
         payload = bom + struct.pack(e + "HI", magic, off) + bytes(gap) + ifd
 
-        batch = pd.DataFrame({"doc_id": [case], "payload": [payload]})
         if mode == "clean":
-            (out,) = list(decode_tiff_batch(iter([batch])))
-            row = out.iloc[0]
-            assert row["byte_order"] == ("II" if e == "<" else "MM"), case
-            assert row["n_entries"] == len(entries), case
-            got = (row["width"], row["height"], row["bits"],
-                   row["compression"], row["orientation"])
-            assert got == tuple(vals[t] for t in REQUIRED), (case, got)
+            ((_, byte_order, n_entries, *got),) = decode_tiff(case, payload)
+            assert byte_order == ("II" if e == "<" else "MM"), case
+            assert n_entries == len(entries), case
+            # (width, height, bits, compression, orientation)
+            assert tuple(got) == tuple(vals[t] for t in REQUIRED), (case, got)
         else:
             pat = {"bad_bom": "byte-order", "bad_magic": "magic",
                    "bad_type": "unsupported entry", "chained": "chained"}[mode]
             with _pytest.raises(ValueError, match=pat):
-                list(decode_tiff_batch(iter([batch])))
+                list(decode_tiff(case, payload))
