@@ -171,6 +171,16 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     "buffer-agg scan's last profile hit).",
 )
 def profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Table profile of ``lineitem``; see the registered ``doc=``.
+
+    Warning: the median walk runs two windows with no PARTITION BY over
+    the per-value table, so Spark moves every row of that table to ONE
+    task (SinglePartition).  That is safe only because ``l_discount`` has
+    a bounded domain (11 values in TPC-H) and the table holds one row per
+    distinct value.  Do not copy the pattern onto a high-cardinality
+    column (keys, prices, timestamps): there the per-value table grows
+    with the data and the single task becomes the whole job.
+    """
     li = load(spark, sf_dir, "lineitem")
     # mixing DISTINCT and plain aggregates in ONE agg forces an Expand of
     # every input column (3× the rows through the hash-agg — measured 3.3 s

@@ -49,6 +49,19 @@ DEFAULT_CONFS: dict[str, str] = {
     # here makes the behavior uniform for every Python source in the session
     # instead of a surprise left behind by whichever read ran first.
     "spark.sql.python.filterPushdown.enabled": "true",
+    # Generated-class cache, one LRU per JVM (Spark default 100 entries).
+    # A warm re-run of a query re-uses its classes only if they are still
+    # cached.  Measured with CodegenMetrics (local[4]): one pass of the
+    # perfbench `batch` workload compiles 189 distinct classes (about 200
+    # counting AQE plan variants), so at 100 entries every warm pass
+    # recompiled ~183 of them at ~10 ms each; running all 375 registry
+    # queries once at sf0.001 compiles about 4,400.  1000 holds the batch set
+    # five times over.  The cache only grows with classes actually
+    # generated (about 36 KB of heap plus metaspace each, measured after
+    # GC), so a small job pays nothing for the headroom.  Static
+    # conf: it takes effect only in sessions get_spark builds (and only
+    # if set before the JVM's first compile); configure_existing skips it.
+    "spark.sql.codegen.cache.maxEntries": "1000",
     # progress bars interleave with stdout in non-interactive runs
     "spark.ui.showConsoleProgress": "false",
 }

@@ -46,7 +46,8 @@ _ARRIVAL_SCHEMA = "c_custkey BIGINT, nation BIGINT, segment_or_null STRING, acct
 def write_arrival_files(spark: SparkSession, sf_dir: str, watch_dir: str, n_files: int = 3) -> None:
     """Simulate the upstream exporter: shard customer into ``n_files``
     MySQL-style raw CSV files (NULL as the ``"N`` sentinel — the exact byte
-    form csv-cleaner receives, ``main.py:21-27``) under ``watch_dir``."""
+    form csv-cleaner receives, ``main.py:21-27``), one per
+    ``watch_dir/arrival=<k>/`` directory."""
     src = load(spark, sf_dir, "customer").select(
         "c_custkey",
         F.col("c_nationkey").alias("nation"),
@@ -68,16 +69,18 @@ def write_arrival_files(spark: SparkSession, sf_dir: str, watch_dir: str, n_file
         F.coalesce(F.col("segment_or_null"), F.lit('"N')),
         F.coalesce(F.col("acctbal").cast("string"), F.lit('"N')),
     ).alias("value")
-    for shard in range(n_files):
-        (
-            src.filter(
-                F.coalesce(F.pmod("c_custkey", F.lit(n_files)), F.lit(0)) == shard
-            )
-            .select(line)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .text(os.path.join(watch_dir, f"arrival_{shard}"))
-        )
+    # One job writes every shard: partitionBy puts shard k in
+    # ``arrival=k/`` and coalesce(1) keeps it one file (one scan of
+    # customer instead of one per shard).  A shard with no rows writes no
+    # file, so it is no micro-batch either.
+    shard = F.coalesce(F.pmod("c_custkey", F.lit(n_files)), F.lit(0)).alias("arrival")
+    (
+        src.select(line, shard)
+        .coalesce(1)
+        .write.mode("overwrite")
+        .partitionBy("arrival")
+        .text(watch_dir)
+    )
 
 
 def run_streaming_elt(
@@ -90,7 +93,7 @@ def run_streaming_elt(
     Returns the number of non-empty micro-batches (== files processed)."""
     raw = (
         spark.readStream.option("maxFilesPerTrigger", 1)
-        .text(watch_dir + "/arrival_*")
+        .text(watch_dir + "/arrival=*")
     )
     # csv-cleaner stage, CSV-aware form: sentinel -> empty field only at
     # field boundaries, then autodetect-off schema parse — the same two

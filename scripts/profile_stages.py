@@ -1,7 +1,8 @@
 """Stage-level attribution for one registry query (guide §1.1 empirical
 loop): run the query under the bench's extended-tier conf, then pull the
 completed stages from the Spark UI REST API and print wall-clock, task
-time, I/O and shuffle bytes per stage, heaviest first.
+time, I/O and shuffle bytes per stage, heaviest first.  Each run also
+prints the generated classes it compiled and their compile milliseconds.
 
 Usage:  python scripts/profile_stages.py <query> [--sf /root/testdata/sf0.1]
         [--width 32] [--runs 1] [--noop]
@@ -42,16 +43,32 @@ def main() -> int:
         },
     )
     qs = queries()
+    # JVM-wide count and time of generated-class compiles (cache misses of
+    # Spark's codegen class cache); a warm run that still compiles shows here
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def compiled() -> tuple[int, float]:
+        # (classes, ms); the histogram keeps a sample, so mean x count
+        # estimates the total milliseconds
+        n = compiles.getCount()
+        return n, compiles.getSnapshot().getMean() * n
+
     for i in range(args.runs):
         spark.catalog.clearCache()
         spark.sparkContext.setJobDescription(f"{args.query} run {i}")
+        n0, ms0 = compiled()
         t0 = time.time()
         df = qs[args.query](spark, args.sf)
         if args.noop:
             df.write.format("noop").mode("overwrite").save()
         else:
             df.toPandas()
-        print(f"run {i}: {time.time() - t0:.3f}s", flush=True)
+        wall = time.time() - t0
+        n1, ms1 = compiled()
+        print(
+            f"run {i}: {wall:.3f}s  codegen: {n1 - n0} classes compiled, {ms1 - ms0:.0f} ms",
+            flush=True,
+        )
 
     ui = spark.sparkContext.uiWebUrl
     apps = json.load(urllib.request.urlopen(f"{ui}/api/v1/applications"))

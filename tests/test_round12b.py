@@ -286,7 +286,7 @@ def test_sentinel_export_every_field_coalesced(spark, hostile_nulls_sf, tmp_path
     import glob
 
     lines = []
-    for f in glob.glob(out + "/arrival_*/part-*"):
+    for f in glob.glob(out + "/arrival=*/part-*"):
         with open(f) as fh:
             lines += [ln.rstrip("\n") for ln in fh if ln.strip()]
     assert lines

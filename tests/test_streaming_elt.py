@@ -2,6 +2,7 @@
 arrivals are processed in separate micro-batches, sentinel NULLs survive
 the trip, and the loaded table matches the pre-export source."""
 
+import glob
 import os
 import tempfile
 
@@ -21,6 +22,9 @@ def test_streaming_elt_chain(spark):
     base = tempfile.mkdtemp(prefix="test_stream_elt_")
     watch, sink = os.path.join(base, "watch"), os.path.join(base, "loaded")
     write_arrival_files(spark, SF, watch, n_files=3)
+    # one job wrote all three shards, still one file each
+    parts = glob.glob(os.path.join(watch, "arrival=*", "part-*"))
+    assert sorted(os.path.basename(os.path.dirname(p)) for p in parts) == [f"arrival={k}" for k in range(3)]
     n_batches = run_streaming_elt(spark, watch, sink)
     # one arrival file per micro-batch — the chain is incremental, not a
     # single batch rewrite
@@ -55,7 +59,7 @@ def test_streaming_elt_resume_is_exactly_once(spark):
     write_arrival_files(spark, SF, watch, n_files=2)
 
     ckpt = os.path.join(base, "ckpt")
-    raw = spark.readStream.option("maxFilesPerTrigger", 1).text(watch + "/arrival_*")
+    raw = spark.readStream.option("maxFilesPerTrigger", 1).text(watch + "/arrival=*")
     parsed = raw.select(
         F.from_csv(
             F.regexp_replace(F.col("value"), r'(?:(?<=^)|(?<=,))"N(?=,|$)', ""),
