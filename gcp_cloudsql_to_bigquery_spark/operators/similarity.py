@@ -145,8 +145,16 @@ def nonzero(e: DataFrame) -> DataFrame:
     return e.filter(F.col("vec_id").isNotNull() & F.exists("v", lambda x: x != 0))
 
 
-def ranked_topk(df: DataFrame, k: int, rank_name: str) -> DataFrame:
-    """Per-query top-k over (query_id, neighbor_id, approx_d2_x1e6).
+def ranked_topk(
+    df: DataFrame,
+    k: int,
+    rank_name: str,
+    score: str = "approx_d2_x1e6",
+    descending: bool = False,
+) -> DataFrame:
+    """Per-query top-k over (query_id, neighbor_id, ``score``): ranked by
+    ascending distance (the default) or ``descending`` similarity, ties to
+    the lowest neighbor_id.  The one rank window of every ANN query.
 
     A single row_number window + rank filter is ALREADY map-side bounded
     in Spark 4: the WindowGroupLimit rule plants a Partial group-limit
@@ -162,10 +170,135 @@ def ranked_topk(df: DataFrame, k: int, rank_name: str) -> DataFrame:
     own batch-local top-k inside _pq_build_kernel so the 10xN pairs never
     cross the Python->JVM boundary at all.
     """
-    w_rank = W.partitionBy("query_id").orderBy("approx_d2_x1e6", "neighbor_id")
+    order = F.col(score).desc() if descending else F.col(score)
+    w_rank = W.partitionBy("query_id").orderBy(order, "neighbor_id")
     return df.withColumn(rank_name, F.row_number().over(w_rank)).filter(
         F.col(rank_name) <= k
     )
+
+
+_TOPK_SCHEMA = "query_id long, neighbor_id long, cosine double, rnk int"
+
+
+def _unit_rows(m):
+    """``m`` with every row divided by its L2 norm."""
+    import numpy as np
+
+    return m / np.linalg.norm(m, axis=1, keepdims=True)
+
+
+def broadcast_query_topk(
+    e: DataFrame, k: int, score: str, rank_name: str, dims: int | None = None
+) -> tuple[list, DataFrame]:
+    """Exact cosine top-k of the query vectors (vec_id < 10) against the
+    corpus ``e`` (vec_id, v), over the first ``dims`` components (all when
+    None).
+
+    The queries are collected once and broadcast; each corpus Arrow batch
+    is one numpy GEMM plus a batch-local top-k (round(cos, 6) DESC,
+    neighbor_id ASC) inside mapInPandas, so the corpus is scanned once and
+    never shuffled.  The global top-k is a subset of the union of the
+    batch-local ones under the same order, so ``ranked_topk`` finishes it
+    over nparts x 10 x k rows.  Returns the sorted (vec_id, v) query rows
+    and the ranked (query_id, neighbor_id, ``score``, ``rank_name``)
+    frame, which is empty when there are no queries.
+    """
+    import numpy as np
+
+    spark = e.sparkSession
+    qrows = sorted(
+        (r["vec_id"], r["v"]) for r in e.filter(F.col("vec_id") < 10).collect()
+    )
+    if not qrows:
+        return qrows, spark.createDataFrame(
+            [], f"query_id long, neighbor_id long, {score} double, {rank_name} int"
+        )
+    q_ids = np.array([i for i, _ in qrows], dtype=np.int64)
+    q_mat = np.stack([np.asarray(v) for _, v in qrows])[:, :dims]
+    q_norm = np.linalg.norm(q_mat, axis=1)
+    bc = spark.sparkContext.broadcast((q_ids, q_mat, q_norm))
+
+    def part_topk(batches):
+        ids_q, mat_q, norm_q = bc.value
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            c_ids = pdf["vec_id"].to_numpy()
+            c_mat = np.stack(pdf["v"].to_numpy())[:, :dims]
+            c_norm = np.linalg.norm(c_mat, axis=1)
+            cos = np.round(mat_q @ c_mat.T / np.outer(norm_q, c_norm), 6)
+            out_q, out_n, out_c = [], [], []
+            for qi in range(len(ids_q)):
+                mask = c_ids != ids_q[qi]
+                cand_ids, cand_cos = c_ids[mask], cos[qi][mask]
+                order = np.lexsort((cand_ids, -cand_cos))[:k]
+                out_q.extend([ids_q[qi]] * len(order))
+                out_n.extend(cand_ids[order])
+                out_c.extend(cand_cos[order])
+            yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n, score: out_c})
+
+    local = e.mapInPandas(
+        part_topk, schema=f"query_id long, neighbor_id long, {score} double"
+    )
+    return qrows, ranked_topk(local, k, rank_name, score, descending=True)
+
+
+def assign_cells(e: DataFrame, cent_unit) -> DataFrame:
+    """``e`` (vec_id, v) plus ``cell``: the row index of the nearest
+    centroid in the unit-normalised ``cent_unit`` by micro-quantized
+    cosine (floor(cos*1e6+0.5), ties to the lowest index).  One broadcast
+    and one pandas_udf GEMM pass, no shuffle.
+
+    Bit parity: callers pass the same unit matrix they probe with
+    (``ivf_probe_topk``), so every quantized decision sees identical
+    doubles."""
+    import numpy as np
+
+    bc = e.sparkSession.sparkContext.broadcast(cent_unit)
+
+    @F.pandas_udf("int")
+    def nearest_cell(vs: pd.Series) -> pd.Series:
+        cm = np.floor(_unit_rows(np.stack(vs.to_numpy())) @ bc.value.T * 1e6 + 0.5)
+        return pd.Series(np.argmax(cm, axis=1).astype("int32"))
+
+    return e.withColumn("cell", nearest_cell("v"))
+
+
+def ivf_probe_topk(assigned: DataFrame, cent_unit, n_probe: int, k: int) -> DataFrame:
+    """IVF probe search over a cell-assigned corpus (vec_id, v, cell): each
+    query (vec_id < 10) probes its ``n_probe`` nearest cells by the same
+    micro-quantized cosine as ``assign_cells``, exact-scores only the
+    vectors in those cells and keeps its top-k by round(cos, 6)."""
+    import numpy as np
+
+    spark = assigned.sparkSession
+    queries_df = assigned.filter(F.col("vec_id") < 10).collect()
+    if not queries_df:
+        return spark.createDataFrame([], _TOPK_SCHEMA)
+    q_ids = np.array([r["vec_id"] for r in queries_df])
+    q_mat = np.stack([np.asarray(r["v"]) for r in queries_df])
+    q_cm = np.floor(_unit_rows(q_mat) @ cent_unit.T * 1e6 + 0.5)
+    # stable sort: equal-cm ties resolve to the lowest cell id, matching
+    # the oracles' ORDER BY cm DESC, cell
+    probe_cells = np.argsort(-q_cm, axis=1, kind="stable")[:, :n_probe]
+    # (query, cell) probe list — broadcast to the cell-partitioned corpus
+    probes = spark.createDataFrame(
+        [
+            (int(q_ids[i]), [float(x) for x in q_mat[i]], int(c))
+            for i in range(len(q_ids))
+            for c in probe_cells[i]
+        ],
+        "query_id long, qv array<double>, cell int",
+    )
+    cand = assigned.join(F.broadcast(probes), "cell").filter(
+        F.col("vec_id") != F.col("query_id")
+    )
+    scored = cand.select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        F.round(cosine(F.col("qv"), F.col("v")), 6).alias("cosine"),
+    )
+    return ranked_topk(scored, k, "rnk", "cosine", descending=True)
 
 
 def broadcast_pairwise_cosine(
@@ -303,51 +436,12 @@ def pairwise_cosine(
     "from corpus and queries (see the nonzero() contract note).",
 )
 def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-
     e = nonzero(
         load(spark, sf_dir, "embeddings").select(
             "vec_id", F.col("embedding").cast("array<double>").alias("v")
         )
     )
-    qrows = sorted(
-        (r["vec_id"], r["v"]) for r in e.filter(F.col("vec_id") < 10).collect()
-    )
-    if not qrows:
-        # empty corpus/query set => empty top-k (schema matches the
-        # non-empty branch's output below)
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double, rnk int"
-        )
-    q_ids = np.array([i for i, _ in qrows], dtype=np.int64)
-    q_mat = np.stack([np.asarray(v) for _, v in qrows])
-    q_norm = np.linalg.norm(q_mat, axis=1)
-    bc = e.sparkSession.sparkContext.broadcast((q_ids, q_mat, q_norm))
-    K = 5
-
-    def part_topk(batches):
-        ids_q, mat_q, norm_q = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            c_ids = pdf["vec_id"].to_numpy()
-            c_mat = np.stack(pdf["v"].to_numpy())
-            c_norm = np.linalg.norm(c_mat, axis=1)
-            cos = np.round(mat_q @ c_mat.T / np.outer(norm_q, c_norm), 6)
-            out_q, out_n, out_c = [], [], []
-            for qi in range(len(ids_q)):
-                mask = c_ids != ids_q[qi]
-                cand_ids, cand_cos = c_ids[mask], cos[qi][mask]
-                order = np.lexsort((cand_ids, -cand_cos))[:K]
-                out_q.extend([ids_q[qi]] * len(order))
-                out_n.extend(cand_ids[order])
-                out_c.extend(cand_cos[order])
-            yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n, "cosine": out_c})
-
-    local = e.mapInPandas(part_topk, schema="query_id long, neighbor_id long, cosine double")
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return local.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= K)
+    return broadcast_query_topk(e, 5, "cosine", "rnk")[1]
 
 
 _IVF_ORACLE = f"""
@@ -422,54 +516,9 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if not anchors:
         # empty corpus: no cells, no probes, empty top-k
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double, rnk int"
-        )
-    cent = np.stack([v for _, v in anchors])
-    cent_unit = cent / np.linalg.norm(cent, axis=1, keepdims=True)
-    bc = e.sparkSession.sparkContext.broadcast(cent_unit)
-
-    @F.pandas_udf("int")
-    def nearest_cell(vs: pd.Series) -> pd.Series:
-        m = np.stack(vs.to_numpy())
-        m = m / np.linalg.norm(m, axis=1, keepdims=True)
-        cm = np.floor(m @ bc.value.T * 1e6 + 0.5)
-        return pd.Series(np.argmax(cm, axis=1).astype("int32"))
-
-    assigned = e.withColumn("cell", nearest_cell("v"))
-    queries_df = assigned.filter(F.col("vec_id") < 10).collect()
-    if not queries_df:
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double, rnk int"
-        )
-    q_ids = np.array([r["vec_id"] for r in queries_df])
-    q_mat = np.stack([np.asarray(r["v"]) for r in queries_df])
-    q_unit = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
-    q_cm = np.floor(q_unit @ cent_unit.T * 1e6 + 0.5)
-    # stable sort: equal-cm ties resolve to the lowest anchor id, matching
-    # the oracle's ORDER BY cm DESC, aid
-    probe_cells = np.argsort(-q_cm, axis=1, kind="stable")[:, :N_PROBE]
-    # (query, cell) probe list — broadcast to the cell-partitioned corpus
-    probes = e.sparkSession.createDataFrame(
-        [
-            (int(q_ids[i]), [float(x) for x in q_mat[i]], int(c))
-            for i in range(len(q_ids))
-            for c in probe_cells[i]
-        ],
-        "query_id long, qv array<double>, cell int",
-    )
-    cand = assigned.join(F.broadcast(probes), "cell").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    from .similarity import cosine as _cos  # self-import safe at runtime
-
-    scored = cand.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(_cos(F.col("qv"), F.col("v")), 6).alias("cosine"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= K)
+        return spark.createDataFrame([], _TOPK_SCHEMA)
+    cent_unit = _unit_rows(np.stack([v for _, v in anchors]))
+    return ivf_probe_topk(assign_cells(e, cent_unit), cent_unit, N_PROBE, K)
 
 
 N_ANCHORS = 8  # 8 sign bits → 256 buckets
@@ -557,8 +606,9 @@ def kmeans_train(e: DataFrame, k: int = 16, iters: int = 3):
 
     Deterministic init (first k vectors by vec_id).  Per iteration:
 
-    - **assign**: broadcast the k×d centroid matrix, one ``pandas_udf``
-      argmin pass over the corpus (numpy GEMM — no shuffle);
+    - **assign**: ``assign_cells`` — broadcast the k×d centroid matrix,
+      one ``pandas_udf`` argmax pass over the corpus (numpy GEMM — no
+      shuffle);
     - **recompute**: ``posexplode`` the vectors to (cell, dim, val), one
       partial-aggregated shuffle of k·d running means, collect k·d doubles
       to the driver (centroids, never data rows).
@@ -578,8 +628,7 @@ def kmeans_train(e: DataFrame, k: int = 16, iters: int = 3):
     import numpy as np
 
     def unit_quant(m: "np.ndarray") -> "np.ndarray":
-        u = m / np.linalg.norm(m, axis=1, keepdims=True)
-        return np.floor(u * 1e6 + 0.5) / 1e6
+        return np.floor(_unit_rows(m) * 1e6 + 0.5) / 1e6
 
     init = sorted(
         (r["vec_id"], np.asarray(r["v"]))
@@ -590,24 +639,11 @@ def kmeans_train(e: DataFrame, k: int = 16, iters: int = 3):
         # map this to an empty result (day-one-pipeline contract)
         return None, e.withColumn("cell", F.lit(None).cast("int"))
     cent = unit_quant(np.stack([v for _, v in init]))
-    sc = e.sparkSession.sparkContext
-
-    def assign(centroids):
-        bc = sc.broadcast(centroids)
-
-        @F.pandas_udf("int")
-        def nearest(vs: pd.Series) -> pd.Series:
-            m = np.stack(vs.to_numpy())
-            m = m / np.linalg.norm(m, axis=1, keepdims=True)
-            cu = bc.value / np.linalg.norm(bc.value, axis=1, keepdims=True)
-            cm = np.floor(m @ cu.T * 1e6 + 0.5)
-            return pd.Series(np.argmax(cm, axis=1).astype("int32"))
-
-        return e.withColumn("cell", nearest("v"))
 
     for _ in range(iters):
         means = (
-            assign(cent)
+            # quantized centroids are re-normalized before the cosine
+            assign_cells(e, _unit_rows(cent))
             .select("cell", F.posexplode("v").alias("dim", "val"))
             .groupBy("cell", "dim")
             .agg(F.avg("val").alias("m"))
@@ -624,7 +660,7 @@ def kmeans_train(e: DataFrame, k: int = 16, iters: int = 3):
                 new[c] = unit_quant(vec[None, :])[0]
         cent = new
     # assignment under the FINAL centroids (one extra narrow pass)
-    return cent, assign(cent)
+    return cent, assign_cells(e, _unit_rows(cent))
 
 
 def _kmeans_cte_prefix(k: int = 16, iters: int = 3, dim: int = 64) -> list[str]:
@@ -729,8 +765,6 @@ def _ivf_kmeans_oracle(k: int = 16, iters: int = 3, dim: int = 64) -> str:
     "equal recall.",
 )
 def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-
     N_CELLS, N_PROBE, K = 16, 4, 5
     e = nonzero(
         load(spark, sf_dir, "embeddings").select(
@@ -738,36 +772,10 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     cent, assigned = kmeans_train(e, k=N_CELLS, iters=3)
-    queries_df = [] if cent is None else assigned.filter(F.col("vec_id") < 10).collect()
-    if not queries_df:
-        # empty corpus (kmeans_train returned no centroids) or no queries
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double, rnk int"
-        )
-    cent_unit = cent / np.linalg.norm(cent, axis=1, keepdims=True)
-    q_ids = np.array([r["vec_id"] for r in queries_df])
-    q_mat = np.stack([np.asarray(r["v"]) for r in queries_df])
-    q_unit = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
-    q_cm = np.floor(q_unit @ cent_unit.T * 1e6 + 0.5)
-    probe_cells = np.argsort(-q_cm, axis=1, kind="stable")[:, :N_PROBE]
-    probes = spark.createDataFrame(
-        [
-            (int(q_ids[i]), [float(x) for x in q_mat[i]], int(c))
-            for i in range(len(q_ids))
-            for c in probe_cells[i]
-        ],
-        "query_id long, qv array<double>, cell int",
-    )
-    cand = assigned.join(F.broadcast(probes), "cell").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    scored = cand.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(cosine(F.col("qv"), F.col("v")), 6).alias("cosine"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= K)
+    if cent is None:
+        # empty corpus: kmeans_train returned no centroids
+        return spark.createDataFrame([], _TOPK_SCHEMA)
+    return ivf_probe_topk(assigned, _unit_rows(cent), N_PROBE, K)
 
 
 @register(
@@ -899,8 +907,8 @@ _PQ_ORACLE = (
     f"offline-trained centroids), so a 64-dim float vector compresses to "
     f"{_PQ_M} bytes of codes.  Queries never decode: each query builds a "
     f"{_PQ_M}x{_PQ_K} distance table and a candidate's approximate "
-    f"distance is {_PQ_M} TABLE LOOKUPS summed — here a broadcast join of "
-    f"the table against the code column.  Every per-subspace distance is "
+    f"distance is {_PQ_M} TABLE LOOKUPS summed — here inside the "
+    f"scan-local Arrow kernel.  Every per-subspace distance is "
     f"micro-quantized to an INTEGER (floor(d2*1e6+0.5)) before the "
     f"table/argmin, so codes, ADC sums, and ranks are all exact integer "
     f"arithmetic and the oracle replays the whole pipeline.  Squared-L2 "
@@ -920,9 +928,13 @@ _PQ_ORACLE = (
     f"window: 18 scheduled jobs at sf0.1 where the data needs ~3.",
 )
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    return _pq_topk(spark, sf_dir, _PQ_TOPK, "rnk")
+
+
+def _pq_topk(spark: SparkSession, sf_dir: str, k: int, rank_name: str) -> DataFrame:
+    """The one PQ ADC top-k pipeline — ``ann_pq_topk`` (k=5) and the
+    coarse stage of ``ann_pq_rerank`` (``ann_pq_topk_candidates``) both
+    run it: (query_id, neighbor_id, approx_d2_x1e6, ``rank_name``)."""
     # Codebook/query head via a DRIVER-SIDE pruned parquet read (the
     # parquet_corpus_hint convention, VERDICT r15 item 2): vec_id < _PQ_K
     # is a fixed 16-row slice, and reading it through pyarrow with
@@ -931,27 +943,24 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the query now runs in 2 jobs (kernel scan + windowed result), not 3.
     # vec_id < k implies vec_id IS NOT NULL on every engine (NULL < k is
     # NULL), and pyarrow's compute.less gives null -> dropped, matching.
-    head = _pq_head_from_parquet(sf_dir)
-    kernel = _pq_build_kernel(head)
+    kernel = _pq_build_kernel(_pq_head_from_parquet(sf_dir), topk=k)
     if kernel is None:
         # no codewords or no queries -> the oracle's adc CTE is empty
         return spark.createDataFrame(
-            [], "query_id bigint, neighbor_id bigint, approx_d2_x1e6 bigint, rnk int"
+            [],
+            f"query_id bigint, neighbor_id bigint, approx_d2_x1e6 bigint, {rank_name} int",
         )
     # NULL-vec_id corpus rows are neither queries nor neighbors (the
     # oracle's <> / < predicates drop them); one explicit filter here.
     # The kernel already emits only the batch-local top-k per query, so
     # the rank window's input is <= 10*k rows per Arrow batch, not 10*N.
-    pairs = e.filter(F.col("vec_id").isNotNull()).mapInArrow(
-        kernel,
-        schema="query_id long, neighbor_id long, approx_d2_x1e6 long",
+    pairs = (
+        load(spark, sf_dir, "embeddings")
+        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+        .filter(F.col("vec_id").isNotNull())
+        .mapInArrow(kernel, schema="query_id long, neighbor_id long, approx_d2_x1e6 long")
     )
-    w_rank = W.partitionBy("query_id").orderBy("approx_d2_x1e6", "neighbor_id")
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w_rank))
-        .filter(F.col("rnk") <= _PQ_TOPK)
-        .select("query_id", "neighbor_id", "approx_d2_x1e6", "rnk")
-    )
+    return ranked_topk(pairs, k, rank_name)
 
 
 def _pq_head_from_parquet(sf_dir: str, k: int = _PQ_K) -> dict:
@@ -1376,7 +1385,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # qprobe/assign and enc/tbl are same-origin subtrees (both pairs derive
     # from cellscore / d2) — join through explicit plan aliases, not
-    # attribute disambiguation (see ann_pq_topk).
+    # attribute disambiguation.
     cand = (
         qprobe.alias("qp")
         .join(assign.alias("asg"), F.col("qp.cell") == F.col("asg.cell"))
@@ -1605,66 +1614,15 @@ def ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(cosine(F.col("qv"), F.col("nv")), 6).alias("cosine"),
         )
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    return (
-        reranked.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _PQ_TOPK)
-        .select("query_id", "neighbor_id", "cosine", "coarse_rank", "rnk")
+    return ranked_topk(reranked, _PQ_TOPK, "rnk", "cosine", descending=True).select(
+        "query_id", "neighbor_id", "cosine", "coarse_rank", "rnk"
     )
 
 
 def ann_pq_topk_candidates(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
-    """PQ ADC candidate retrieval (stage 1 of ann_pq_rerank): identical
-    kernel to ann_pq_topk but parameterized top-k and exposing the coarse
-    rank."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    ms = F.explode(F.array(*[F.lit(m) for m in range(_PQ_M)])).alias("m")
-    subs = e.select("vec_id", "v", ms).select(
-        "vec_id",
-        "m",
-        F.expr(f"slice(v, m * {_PQ_SUB} + 1, {_PQ_SUB})").alias("sub"),
-    )
-    cb = subs.filter(F.col("vec_id") < _PQ_K).select(
-        "m", F.col("vec_id").alias("j"), F.col("sub").alias("cw")
-    )
-    d2_expr = (
-        dot(F.col("sub"), F.col("sub"))
-        - 2 * dot(F.col("sub"), F.col("cw"))
-        + dot(F.col("cw"), F.col("cw"))
-    )
-    d2 = subs.join(F.broadcast(cb), "m").select(
-        "vec_id",
-        "m",
-        "j",
-        F.floor(d2_expr * 1e6 + 0.5).cast("bigint").alias("q"),
-    )
-    w_enc = W.partitionBy("vec_id", "m").orderBy("q", "j")
-    enc = (
-        d2.withColumn("rn", F.row_number().over(w_enc))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "m", F.col("j").alias("code"))
-    )
-    tbl = d2.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "m", "j", "q"
-    )
-    # same-origin subtrees — explicit plan aliases (see ann_pq_topk)
-    adc = (
-        enc.alias("enc")
-        .join(
-            F.broadcast(tbl.alias("tbl")),
-            (F.col("enc.m") == F.col("tbl.m"))
-            & (F.col("enc.code") == F.col("tbl.j"))
-            & (F.col("enc.vec_id") != F.col("tbl.query_id")),
-        )
-        .groupBy(
-            F.col("tbl.query_id").alias("query_id"),
-            F.col("enc.vec_id").alias("neighbor_id"),
-        )
-        .agg(F.sum(F.col("tbl.q")).cast("bigint").alias("approx_d2_x1e6"))
-    )
-    return ranked_topk(adc, k, "coarse_rank").select(
+    """PQ ADC candidate retrieval (stage 1 of ann_pq_rerank): ann_pq_topk's
+    pipeline at top-``k``, exposing the rank as ``coarse_rank``."""
+    return _pq_topk(spark, sf_dir, k, "coarse_rank").select(
         "query_id", "neighbor_id", "coarse_rank"
     )
 
@@ -1732,9 +1690,6 @@ _MRL_K = 5  # final top-k
     "cost with C*Q — both knobs explicit.",
 )
 def ann_matryoshka_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-
     # prefix-nonzero contract (implies full-norm nonzero) + non-NULL id
     # (the numpy coarse kernel would otherwise keep a NaN-id candidate a
     # SQL <> predicate drops) — see the oracle
@@ -1744,80 +1699,21 @@ def ann_matryoshka_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").isNotNull()
         & F.exists(F.slice("v", 1, _MRL_D0), lambda x: x != 0)
     )
-    qrows = sorted(
-        (r["vec_id"], r["v"]) for r in e.filter(F.col("vec_id") < 10).collect()
-    )
-    if not qrows:
-        # empty corpus/query set => empty rerank output
-        return spark.createDataFrame(
-            [],
-            "query_id long, neighbor_id long, coarse_rnk int, cosine double, rnk int",
-        )
-    q_ids = np.array([i for i, _ in qrows], dtype=np.int64)
-    q_mat = np.stack([np.asarray(v) for _, v in qrows])[:, :_MRL_D0]
-    q_norm = np.linalg.norm(q_mat, axis=1)
-    bc = e.sparkSession.sparkContext.broadcast((q_ids, q_mat, q_norm))
-
-    def part_coarse(batches):
-        ids_q, mat_q, norm_q = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            c_ids = pdf["vec_id"].to_numpy()
-            c_mat = np.stack(pdf["v"].to_numpy())[:, :_MRL_D0]
-            c_norm = np.linalg.norm(c_mat, axis=1)
-            cos = np.round(mat_q @ c_mat.T / np.outer(norm_q, c_norm), 6)
-            out_q, out_n, out_c = [], [], []
-            for qi in range(len(ids_q)):
-                mask = c_ids != ids_q[qi]
-                cand_ids, cand_cos = c_ids[mask], cos[qi][mask]
-                order = np.lexsort((cand_ids, -cand_cos))[:_MRL_C]
-                out_q.extend([ids_q[qi]] * len(order))
-                out_n.extend(cand_ids[order])
-                out_c.extend(cand_cos[order])
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "ccos": out_c}
-            )
-
-    local = e.mapInPandas(
-        part_coarse, schema="query_id long, neighbor_id long, ccos double"
-    )
-    wc = W.partitionBy("query_id").orderBy(
-        F.col("ccos").desc(), F.col("neighbor_id")
-    )
-    cand = (
-        local.withColumn("crnk", F.row_number().over(wc))
-        .filter(F.col("crnk") <= _MRL_C)
-        .select("query_id", "neighbor_id", F.col("crnk").cast("int").alias("coarse_rnk"))
-    )
-
+    qrows, coarse = broadcast_query_topk(e, _MRL_C, "ccos", "coarse_rnk", dims=_MRL_D0)
+    cand = coarse.select("query_id", "neighbor_id", "coarse_rnk")
+    # an empty query set flows through as empty frames: the joins below
+    # fold to an empty relation with the output schema
     qv = spark.createDataFrame(
         [(int(i), [float(x) for x in v]) for i, v in qrows], "query_id long, qv array<double>"
     )
-
-    def dot(a: str, b: str):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     rer = (
         F.broadcast(cand)
         .join(e.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
         .join(F.broadcast(qv), "query_id")
+        .withColumn("cosine", F.round(cosine(F.col("qv"), F.col("v")), 6))
     )
-    cosine = F.round(
-        dot("qv", "v") / (F.sqrt(dot("qv", "qv")) * F.sqrt(dot("v", "v"))), 6
-    )
-    wr = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        rer.withColumn("cosine", cosine)
-        .withColumn("rnk", F.row_number().over(wr).cast("int"))
-        .filter(F.col("rnk") <= _MRL_K)
-        .select("query_id", "neighbor_id", "coarse_rnk", "cosine", "rnk")
+    return ranked_topk(rer, _MRL_K, "rnk", "cosine", descending=True).select(
+        "query_id", "neighbor_id", "coarse_rnk", "cosine", "rnk"
     )
 
 
@@ -1994,9 +1890,7 @@ def _recall_report_oracle() -> str:
     "one-row fold.  The plan inherits ann_ivfpq_topk's two allowlisted "
     "bounded cartesians (16-anchor broadcast cellscore) by composition.",
 )
-def ann_recall_report(
-    spark: SparkSession, sf_dir: str, barrier: bool = True
-) -> DataFrame:
+def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from functools import reduce
 
     fns = {
@@ -2009,16 +1903,18 @@ def ann_recall_report(
     }
     from pyspark import StorageLevel
 
-    # persist fence (the dedup/curation barrier pattern, same opt-out
-    # flag): exact top-5 is the most expensive component and every one of
-    # the six union branches joins against it — without the fence the
-    # brute-force corpus pass would re-execute per branch (review r10).
-    # 50 rows cached.  Like every fence, it registers the subtree with the
+    # persist fence (the dedup/curation barrier pattern): exact top-5 is
+    # the most expensive component and every one of the six union
+    # branches joins against it — without the fence the brute-force
+    # corpus pass would re-execute per branch (review r10).  50 rows
+    # cached.  Like every fence, it registers the subtree with the
     # CacheManager at construction: plan inspectors must clearCache first
-    # (plan_audit.py does, per build) or pass barrier=False.
-    exact = ann_bruteforce_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    if barrier:
-        exact = exact.persist(StorageLevel.MEMORY_AND_DISK)
+    # (plan_audit.py does, per build).
+    exact = (
+        ann_bruteforce_topk(spark, sf_dir)
+        .select("query_id", "neighbor_id")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     parts = []
     for m in _RECALL_METHODS:
         approx = (

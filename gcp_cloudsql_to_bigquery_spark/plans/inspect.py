@@ -56,9 +56,8 @@ def sort_merge_join_count(df: DataFrame) -> int:
 
 def exchange_count(df: DataFrame) -> int:
     """Number of shuffle exchanges (each is a full materialization barrier)."""
-    return physical_plan(df).count("Exchange hashpartitioning") + physical_plan(df).count(
-        "Exchange rangepartitioning"
-    )
+    plan = physical_plan(df)
+    return plan.count("Exchange hashpartitioning") + plan.count("Exchange rangepartitioning")
 
 
 def broadcast_hint_count(df: DataFrame) -> int:
@@ -98,6 +97,22 @@ def _unwrap_adaptive(node):
     return node
 
 
+def _children(node) -> list:
+    ch = node.children()
+    return [_unwrap_adaptive(ch.apply(i)) for i in range(ch.size())]
+
+
+def _plan_nodes(df: DataFrame):
+    """Every node of the executed physical plan, pre-order, looking
+    through AdaptiveSparkPlanExec wrappers — the one walk the invariant
+    detectors below share."""
+    todo = [_unwrap_adaptive(df._jdf.queryExecution().executedPlan())]
+    while todo:
+        node = todo.pop()
+        yield node
+        todo.extend(reversed(_children(node)))
+
+
 def _reaches_scan_without_agg(node) -> bool:
     """True if this subtree reaches a datasource scan with no intervening
     aggregation / limit / group-limit — i.e. its row count is fact-grain,
@@ -119,11 +134,7 @@ def _reaches_scan_without_agg(node) -> bool:
         return False
     if "Scan" in cls:  # FileSourceScanExec / BatchScanExec / RowDataSourceScanExec
         return True
-    ch = node.children()
-    return any(
-        _reaches_scan_without_agg(_unwrap_adaptive(ch.apply(i)))
-        for i in range(ch.size())
-    )
+    return any(_reaches_scan_without_agg(c) for c in _children(node))
 
 
 def unpartitioned_fact_window_count(df: DataFrame) -> int:
@@ -134,26 +145,13 @@ def unpartitioned_fact_window_count(df: DataFrame) -> int:
     windows over already-aggregated or limited (bounded) inputs are the
     legitimate bounded-rollup case and are NOT counted.  Keeping this at
     zero is the no-one-task-sort invariant from VERDICT r5 item 3."""
-
-    reaches_scan_without_agg = _reaches_scan_without_agg
-    bad = 0
-
-    def walk(node) -> None:
-        nonlocal bad
-        cls = node.getClass().getSimpleName()
-        if cls in ("WindowExec", "WindowInPandasExec") and node.partitionSpec().size() == 0:
-            ch = node.children()
-            if any(
-                reaches_scan_without_agg(_unwrap_adaptive(ch.apply(i)))
-                for i in range(ch.size())
-            ):
-                bad += 1
-        ch = node.children()
-        for i in range(ch.size()):
-            walk(_unwrap_adaptive(ch.apply(i)))
-
-    walk(_unwrap_adaptive(df._jdf.queryExecution().executedPlan()))
-    return bad
+    return sum(
+        1
+        for node in _plan_nodes(df)
+        if node.getClass().getSimpleName() in ("WindowExec", "WindowInPandasExec")
+        and node.partitionSpec().size() == 0
+        and any(_reaches_scan_without_agg(c) for c in _children(node))
+    )
 
 
 def fact_cartesian_count(df: DataFrame) -> int:
@@ -164,24 +162,15 @@ def fact_cartesian_count(df: DataFrame) -> int:
     have an aggregate/LocalRelation on one side and are NOT counted.
     Keeping this at zero registry-wide pins the claim that every crossJoin
     in the engine is a bounded broadcast bind."""
-
-    reaches_scan_without_agg = _reaches_scan_without_agg
     bad = 0
-
-    def walk(node) -> None:
-        nonlocal bad
-        cls = node.getClass().getSimpleName()
-        if cls in ("CartesianProductExec", "BroadcastNestedLoopJoinExec"):
-            ch = node.children()
-            if ch.size() == 2 and all(
-                reaches_scan_without_agg(_unwrap_adaptive(ch.apply(i))) for i in range(2)
-            ):
+    for node in _plan_nodes(df):
+        if node.getClass().getSimpleName() in (
+            "CartesianProductExec",
+            "BroadcastNestedLoopJoinExec",
+        ):
+            ch = _children(node)
+            if len(ch) == 2 and all(_reaches_scan_without_agg(c) for c in ch):
                 bad += 1
-        ch = node.children()
-        for i in range(ch.size()):
-            walk(_unwrap_adaptive(ch.apply(i)))
-
-    walk(_unwrap_adaptive(df._jdf.queryExecution().executedPlan()))
     return bad
 
 
@@ -199,24 +188,14 @@ def unbounded_single_partition_exchanges(df: DataFrame) -> list[str]:
 
     Registry-wide scan methodology from round 15 (WindowGroupLimit scan,
     VERDICT r15 item 3)."""
-    out: list[str] = []
-
-    def walk(node) -> None:
-        cls = node.getClass().getSimpleName()
-        if cls == "ShuffleExchangeExec" and "SinglePartition" in str(
-            node.outputPartitioning()
-        ):
-            ch = node.children()
-            for i in range(ch.size()):
-                child = _unwrap_adaptive(ch.apply(i))
-                if _reaches_scan_without_agg(child):
-                    out.append(child.getClass().getSimpleName())
-        ch = node.children()
-        for i in range(ch.size()):
-            walk(_unwrap_adaptive(ch.apply(i)))
-
-    walk(_unwrap_adaptive(df._jdf.queryExecution().executedPlan()))
-    return out
+    return [
+        child.getClass().getSimpleName()
+        for node in _plan_nodes(df)
+        if node.getClass().getSimpleName() == "ShuffleExchangeExec"
+        and "SinglePartition" in str(node.outputPartitioning())
+        for child in _children(node)
+        if _reaches_scan_without_agg(child)
+    ]
 
 
 #: aggregate functions whose buffer COLLECTS values (size ~ input, or
@@ -261,35 +240,24 @@ def unbounded_global_buffer_aggregates(df: DataFrame) -> list[str]:
     the registry-wide count is now ZERO and the plan_audit allowlist
     carries no buffer_agg entries."""
     out: list[str] = []
-
-    def walk(node) -> None:
-        cls = node.getClass().getSimpleName()
-        if cls in (
+    for node in _plan_nodes(df):
+        if node.getClass().getSimpleName() not in (
             "HashAggregateExec",
             "ObjectHashAggregateExec",
             "SortAggregateExec",
         ):
-            try:
-                n_keys = node.groupingExpressions().size()
-                fns = node.aggregateExpressions().toString()
-            except Exception:
-                n_keys, fns = -1, ""
-            if n_keys == 0 and any(f in fns for f in _BUFFER_AGG_FNS):
-                ch = node.children()
-                if any(
-                    _reaches_scan_without_agg(_unwrap_adaptive(ch.apply(i)))
-                    for i in range(ch.size())
-                ):
-                    out.append(
-                        "+".join(
-                            f.rstrip("(") for f in _BUFFER_AGG_FNS if f in fns
-                        )
-                    )
-        ch = node.children()
-        for i in range(ch.size()):
-            walk(_unwrap_adaptive(ch.apply(i)))
-
-    walk(_unwrap_adaptive(df._jdf.queryExecution().executedPlan()))
+            continue
+        try:
+            n_keys = node.groupingExpressions().size()
+            fns = node.aggregateExpressions().toString()
+        except Exception:
+            n_keys, fns = -1, ""
+        if (
+            n_keys == 0
+            and any(f in fns for f in _BUFFER_AGG_FNS)
+            and any(_reaches_scan_without_agg(c) for c in _children(node))
+        ):
+            out.append("+".join(f.rstrip("(") for f in _BUFFER_AGG_FNS if f in fns))
     return out
 
 
@@ -314,22 +282,13 @@ def stacked_python_map_count(df: DataFrame) -> int:
     batch.  Row-local kernel chains belong in ONE crossing
     (``multimodal.media_kernel`` runs its steps inside one worker), so
     the registry-wide count is zero."""
-    bad = 0
-
-    def walk(node) -> None:
-        nonlocal bad
-        ch = node.children()
-        for i in range(ch.size()):
-            child = _unwrap_adaptive(ch.apply(i))
-            if (
-                node.getClass().getSimpleName() in _PYTHON_MAP_NODES
-                and child.getClass().getSimpleName() in _PYTHON_MAP_NODES
-            ):
-                bad += 1
-            walk(child)
-
-    walk(_unwrap_adaptive(df._jdf.queryExecution().executedPlan()))
-    return bad
+    return sum(
+        1
+        for node in _plan_nodes(df)
+        if node.getClass().getSimpleName() in _PYTHON_MAP_NODES
+        for child in _children(node)
+        if child.getClass().getSimpleName() in _PYTHON_MAP_NODES
+    )
 
 
 def is_cache_substituted(df: DataFrame) -> bool:

@@ -32,7 +32,6 @@ from ..ingest.nulls import clean_sentinel_fields, parse_csv_lines
 from ..registry import register
 from .events import (
     _CKPT_DIR,
-    _STREAM_TMP_BASES,
     _remove_stream_tmp,
     _tmp_stream_dir,
 )
@@ -632,9 +631,6 @@ def _banded_buckets(docs: DataFrame) -> DataFrame:
 
 from ..operators.dedup import _DUCK_JACPAIRS as _JACPAIRS_CTE  # noqa: E402
 
-# (the shared tmp-base atexit registry _STREAM_TMP_BASES lives in
-# streaming/events.py, imported above)
-
 
 def _write_id_ordered_shards(docs: DataFrame, feed_dir: str) -> str:
     """Write the documents table as THREE non-empty, contiguous, id-ordered
@@ -878,7 +874,7 @@ def stream_lsh_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reads only cand_b*; the feed shards, the surviving index versions, and
     # the per-invocation checkpoint are dead weight once the stream drains.
     # The base itself (candidate dirs) is removed at interpreter exit via
-    # _STREAM_TMP_BASES.
+    # the tmp-base registry (tmputil._TMP_BASES).
     shutil.rmtree(feed_dir, ignore_errors=True)
     for d in idx_dirs:
         shutil.rmtree(d, ignore_errors=True)

@@ -34,10 +34,9 @@ _CKPT_DIR = "/dev/shm" if os.path.isdir("/dev/shm") else None
 # drains); paths a RETURNED DataFrame still reads lazily (a parquet sink,
 # the final v{N} snapshot, accumulated candidate dirs) stay until the
 # atexit hook runs.  Historical names kept as aliases — the streaming
-# modules and the round-11 witness tests address the registry through
-# them.
+# modules and the round-11 witness tests call the helpers through them;
+# the registry itself is ``tmputil._TMP_BASES``.
 from ..tmputil import (  # noqa: E402
-    _TMP_BASES as _STREAM_TMP_BASES,
     _cleanup_tmp_bases as _cleanup_stream_tmp_bases,
     remove_tmp as _remove_stream_tmp,
     tmp_dir as _tmp_stream_dir,

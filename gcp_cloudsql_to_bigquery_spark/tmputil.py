@@ -38,8 +38,7 @@ import os
 import shutil
 import tempfile
 
-# Single shared registry — streaming/events.py re-exports this list object
-# under its historical name ``_STREAM_TMP_BASES``.
+# Single shared registry of every tmp base, batch and streaming alike.
 _TMP_BASES: list[str] = []
 
 _LEDGER_DIR = os.path.join(tempfile.gettempdir(), "spark_graft_tmp_ledger")

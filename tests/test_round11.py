@@ -32,13 +32,13 @@ def _bases_added_during(prefix, fn):
     call that were registered during it, basename-prefix filtered).  Set
     diff, not index slicing: eager removal now prunes the registry mid-call
     (round 12), so positions are not stable."""
-    from gcp_cloudsql_to_bigquery_spark.streaming.events import _STREAM_TMP_BASES
+    from gcp_cloudsql_to_bigquery_spark.tmputil import _TMP_BASES
 
-    before = set(_STREAM_TMP_BASES)
+    before = set(_TMP_BASES)
     result = fn()
     added = [
         p
-        for p in _STREAM_TMP_BASES
+        for p in _TMP_BASES
         if p not in before and os.path.basename(p).startswith(prefix)
     ]
     return result, added
@@ -162,10 +162,10 @@ def test_lshttl_post_drain_cleanup_and_atexit_hook(spark):
     returned DataFrame still reads (feed, all idx versions, and the
     checkpoint are gone); the atexit hook then removes the base itself."""
     from gcp_cloudsql_to_bigquery_spark.streaming.elt import (
-        _STREAM_TMP_BASES,
         _remove_stream_tmp,
         stream_lsh_dedup_ttl,
     )
+    from gcp_cloudsql_to_bigquery_spark.tmputil import _TMP_BASES
 
     df, bases = _bases_added_during("lshttl_", lambda: stream_lsh_dedup_ttl(spark, SF))
     (base,) = bases
@@ -177,9 +177,9 @@ def test_lshttl_post_drain_cleanup_and_atexit_hook(spark):
     # registry here would rmtree live trees other tests in the same session
     # still read lazily); _remove_stream_tmp is exactly the per-entry step
     # the atexit sweep's pop loop performs
-    assert base in _STREAM_TMP_BASES
+    assert base in _TMP_BASES
     _remove_stream_tmp(base)
-    assert base not in _STREAM_TMP_BASES
+    assert base not in _TMP_BASES
     assert not os.path.exists(base)
 
 
@@ -393,7 +393,7 @@ def test_memory_sink_checkpoint_removed_after_termination(spark, qname):
     returned DataFrame must still be fully consumable afterwards."""
     from gcp_cloudsql_to_bigquery_spark.registry import REGISTRY
 
-    from gcp_cloudsql_to_bigquery_spark.streaming.events import _STREAM_TMP_BASES
+    from gcp_cloudsql_to_bigquery_spark.tmputil import _TMP_BASES
 
     df, ckpts = _tmp_dirs_created_during(
         "ckpt_", lambda: REGISTRY[qname].fn(spark, SF)
@@ -402,7 +402,7 @@ def test_memory_sink_checkpoint_removed_after_termination(spark, qname):
     assert not any(os.path.exists(c) for c in ckpts), ckpts
     # eager removal also deregisters (ADVICE r11 item 3): the registry holds
     # only live trees, so a long-lived process doesn't accumulate dead paths
-    assert not any(c in _STREAM_TMP_BASES for c in ckpts), ckpts
+    assert not any(c in _TMP_BASES for c in ckpts), ckpts
     assert df.count() > 0  # memory sink independent of the checkpoint
 
 
@@ -423,7 +423,7 @@ def test_checkpoint_resume_keeps_only_the_lazy_sink(spark):
     survives until the atexit sweep."""
     from gcp_cloudsql_to_bigquery_spark.registry import REGISTRY
 
-    from gcp_cloudsql_to_bigquery_spark.streaming.events import _STREAM_TMP_BASES
+    from gcp_cloudsql_to_bigquery_spark.tmputil import _TMP_BASES
 
     df, paths = _tmp_dirs_created_during(
         "resume_", lambda: REGISTRY["stream_checkpoint_resume"].fn(spark, SF)
@@ -434,9 +434,9 @@ def test_checkpoint_resume_keeps_only_the_lazy_sink(spark):
     assert not os.path.exists(by_kind["ckpt"])
     assert os.path.exists(by_kind["sink"])
     # only the lazily-read sink stays registered for the atexit sweep
-    assert by_kind["sink"] in _STREAM_TMP_BASES
-    assert by_kind["watch"] not in _STREAM_TMP_BASES
-    assert by_kind["ckpt"] not in _STREAM_TMP_BASES
+    assert by_kind["sink"] in _TMP_BASES
+    assert by_kind["watch"] not in _TMP_BASES
+    assert by_kind["ckpt"] not in _TMP_BASES
     assert df.count() > 0
 
 
@@ -466,9 +466,9 @@ def test_finish_versioned_stream_fold_count_from_disk(spark, tmp_path):
     """The >=min_folds assertion reads the version from DISK — the property
     that survives a crash-resume where any driver counter restarts at 0."""
     from gcp_cloudsql_to_bigquery_spark.streaming.elt import (
-        _STREAM_TMP_BASES,
         _finish_versioned_stream,
     )
+    from gcp_cloudsql_to_bigquery_spark.tmputil import _TMP_BASES
 
     base = str(tmp_path / "b")
     for v in (1, 2):
@@ -477,13 +477,13 @@ def test_finish_versioned_stream_fold_count_from_disk(spark, tmp_path):
         _finish_versioned_stream(spark, base, str(tmp_path / "c"), 3, "t")
 
     spark.range(5).write.parquet(os.path.join(base, "v3"))
-    n_before = len(_STREAM_TMP_BASES)
+    n_before = len(_TMP_BASES)
     out = _finish_versioned_stream(spark, base, str(tmp_path / "c"), 3, "t")
     assert out.count() == 5
     assert os.listdir(base) == ["v3"]  # superseded versions removed
     # atexit registration happens at mkdtemp time in the query functions
     # (error paths stay covered), NOT in the epilogue (review r11 pass 2)
-    assert len(_STREAM_TMP_BASES) == n_before
+    assert len(_TMP_BASES) == n_before
 
 
 @pytest.mark.parametrize("seed", [11, 22, 33])

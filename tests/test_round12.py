@@ -5,7 +5,7 @@
    stream_processing_time_trigger: an allocator failure (/dev/shm full)
    can no longer leak the override past the call.
 2. ADVICE r11 item 3 — eager tmp removal also DEREGISTERS the path
-   (``_remove_stream_tmp``), so ``_STREAM_TMP_BASES`` stays an inventory
+   (``_remove_stream_tmp``), so ``tmputil._TMP_BASES`` stays an inventory
    of genuinely live trees instead of growing unboundedly across a
    long-lived process (a full registry build allocates hundreds).
    (ADVICE r11 item 2 — the r11 cleanup test no longer drains the global
@@ -69,16 +69,16 @@ def test_remove_stream_tmp_unregistered_path_is_noop(tmp_path):
     """Removing a path that was never registered (or already deregistered)
     still clears the disk and must not raise or disturb the registry."""
     from gcp_cloudsql_to_bigquery_spark.streaming.events import (
-        _STREAM_TMP_BASES,
         _remove_stream_tmp,
     )
+    from gcp_cloudsql_to_bigquery_spark.tmputil import _TMP_BASES
 
     p = str(tmp_path / "never_registered")
     os.makedirs(p)
-    before = list(_STREAM_TMP_BASES)
+    before = list(_TMP_BASES)
     _remove_stream_tmp(p)
     assert not os.path.exists(p)
-    assert _STREAM_TMP_BASES == before
+    assert _TMP_BASES == before
 
 
 # --- VERDICT r11 item 2: batch-side mkdtemp trees registered ------------------
@@ -186,12 +186,12 @@ def test_registry_net_growth_zero_for_fully_cleaned_query(spark):
     growth per invocation — the property that keeps the atexit list
     bounded over a 375-query registry build."""
     from gcp_cloudsql_to_bigquery_spark.registry import REGISTRY
-    from gcp_cloudsql_to_bigquery_spark.streaming.events import _STREAM_TMP_BASES
+    from gcp_cloudsql_to_bigquery_spark.tmputil import _TMP_BASES
 
-    before = set(_STREAM_TMP_BASES)
+    before = set(_TMP_BASES)
     df = REGISTRY["stream_tumbling_window"].fn(spark, SF)
     assert df.count() > 0
-    assert [p for p in _STREAM_TMP_BASES if p not in before] == []
+    assert [p for p in _TMP_BASES if p not in before] == []
 
 
 # --- property net: the registry is exactly the live allocations ---------------

@@ -253,3 +253,34 @@ def test_pq_rerank_improves_or_matches_recall(spark):
         return hits / (5 * len(exact))
 
     assert recall("ann_pq_rerank") >= recall("ann_pq_topk") - 1e-9
+
+
+def test_pq_rerank_coarse_stage_runs_the_pq_kernel(spark):
+    """ann_pq_rerank's coarse stage is ann_pq_topk's pipeline: exactly one
+    MapInArrow node (the scan-local encode + ADC kernel) and no join keyed
+    on the PQ subspace column ``m`` (a declarative encode joins subvectors
+    to the codebook on it)."""
+    import re
+
+    from gcp_cloudsql_to_bigquery_spark.plans.inspect import physical_plan
+
+    plan = physical_plan(queries()["ann_pq_rerank"](spark, SF))
+    assert len(re.findall(r"\bMapInArrow ", plan)) == 1, plan
+    assert not re.search(r"Join \[[^\]]*\bm#\d+", plan), plan
+
+
+def test_pq_candidates_match_pq_topk(spark):
+    """One PQ pipeline: the rerank's candidate retrieval at k=5 returns
+    exactly ann_pq_topk's ranked rows."""
+    from gcp_cloudsql_to_bigquery_spark.operators.similarity import (
+        ann_pq_topk_candidates,
+    )
+
+    cand = ann_pq_topk_candidates(spark, SF, k=5)
+    top = queries()["ann_pq_topk"](spark, SF)
+    got = sorted(
+        (r.query_id, r.neighbor_id, r.coarse_rank) for r in cand.collect()
+    )
+    want = sorted((r.query_id, r.neighbor_id, r.rnk) for r in top.collect())
+    assert len(want) == 50
+    assert got == want
