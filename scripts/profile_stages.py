@@ -2,7 +2,9 @@
 loop): run the query under the bench's extended-tier conf, then pull the
 completed stages from the Spark UI REST API and print wall-clock, task
 time, I/O and shuffle bytes per stage, heaviest first.  Each run also
-prints the generated classes it compiled and their compile milliseconds.
+prints the generated classes it compiled and their compile milliseconds,
+and the tasks that ran a Python node with their summed ``pythonTotalTime``
+(JVM task start to Python finish) per task.
 
 Usage:  python scripts/profile_stages.py <query> [--sf /root/testdata/sf0.1]
         [--width 32] [--runs 1] [--noop]
@@ -13,11 +15,60 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
 import time
 import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from perfbench.records import KERNEL_MARKERS  # noqa: E402
+
+# the total of a SQL-UI timing metric: "1.2 s", or with more than one task
+# "total (min, med, max (stageId: taskId))\n1.2 s (300 ms, ...)"
+_TOTAL = re.compile(r"(?:^|\n)([\d.]+) (ms|s|m|h)\b")
+_UNIT_S = {"ms": 1e-3, "s": 1.0, "m": 60.0, "h": 3600.0}
+
+
+def _runs_python(cluster) -> bool:
+    """Whether an RDD operation-graph cluster (one per plan node that built
+    the stage's RDDs) or one nested in it is a Python node."""
+    if any(k in cluster.name() for k in KERNEL_MARKERS):
+        return True
+    children = cluster.childClusters()
+    return any(_runs_python(children.apply(i)) for i in range(children.size()))
+
+
+def python_tasks(spark, rest, group: str, timeout: float = 10.0) -> tuple[int, float]:
+    """(tasks, seconds): the tasks of job group ``group``'s stages that ran
+    a Python node, and the Python nodes' summed ``pythonTotalTime`` ("time
+    to run Python workers": JVM task start to Python finish)."""
+    deadline = time.time() + timeout
+    while True:  # the UI store is fed by an asynchronous listener bus
+        runs = [e for e in rest("sql?details=true&planDescription=false")
+                if e["description"] == group]
+        if (runs and all(e["status"] != "RUNNING" for e in runs)) or time.time() > deadline:
+            break
+        time.sleep(0.05)
+    total = 0.0
+    for e in runs:
+        for node in e["nodes"]:
+            if any(k in node["nodeName"] for k in KERNEL_MARKERS):
+                for m in node["metrics"]:
+                    hit = m["name"] == "time to run Python workers" and _TOTAL.search(m["value"])
+                    if hit:
+                        total += float(hit[1]) * _UNIT_S[hit[2]]
+    tracker = spark.sparkContext.statusTracker()
+    store = spark.sparkContext._jsc.sc().statusStore()
+    tasks = 0
+    for jid in tracker.getJobIdsForGroup(group):
+        for sid in tracker.getJobInfo(jid).stageIds:
+            info = tracker.getStageInfo(sid)
+            if info and info.numCompletedTasks and _runs_python(
+                store.operationGraphForStage(sid).rootCluster()
+            ):
+                tasks += info.numCompletedTasks
+    return tasks, total
 
 
 def main() -> int:
@@ -53,9 +104,16 @@ def main() -> int:
         n = compiles.getCount()
         return n, compiles.getSnapshot().getMean() * n
 
+    ui = spark.sparkContext.uiWebUrl
+    app_id = json.load(urllib.request.urlopen(f"{ui}/api/v1/applications"))[0]["id"]
+
+    def rest(path: str):
+        return json.load(urllib.request.urlopen(f"{ui}/api/v1/applications/{app_id}/{path}"))
+
     for i in range(args.runs):
         spark.catalog.clearCache()
-        spark.sparkContext.setJobDescription(f"{args.query} run {i}")
+        group = f"{args.query} run {i}"
+        spark.sparkContext.setJobGroup(group, group)
         n0, ms0 = compiled()
         t0 = time.time()
         df = qs[args.query](spark, args.sf)
@@ -69,15 +127,11 @@ def main() -> int:
             f"run {i}: {wall:.3f}s  codegen: {n1 - n0} classes compiled, {ms1 - ms0:.0f} ms",
             flush=True,
         )
+        tasks, py_s = python_tasks(spark, rest, group)
+        per_task = f"{1000 * py_s / tasks:.0f} ms" if tasks else "-"
+        print(f"run {i}: python: {tasks} tasks, pythonTotalTime {per_task} per task", flush=True)
 
-    ui = spark.sparkContext.uiWebUrl
-    apps = json.load(urllib.request.urlopen(f"{ui}/api/v1/applications"))
-    app_id = apps[0]["id"]
-    stages = json.load(
-        urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{app_id}/stages?status=complete"
-        )
-    )
+    stages = rest("stages?status=complete")
     rows = []
     for s in stages:
         sub = s.get("firstTaskLaunchedTime") or s.get("submissionTime")
