@@ -1262,7 +1262,7 @@ def fn_business_days(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(is_biz, 1).otherwise(0))
         .over(W.orderBy("d").rowsBetween(W.unboundedPreceding, 0))
         .alias("bix"),
-    ).localCheckpoint()
+    )
     o = (
         load(spark, sf_dir, "orders")
         .filter(

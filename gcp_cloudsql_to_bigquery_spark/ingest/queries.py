@@ -453,12 +453,8 @@ def elt_right_to_erasure(spark, sf_dir):
 
     ev = load(spark, sf_dir, "events")
     orders = load(spark, sf_dir, "orders")
-    # the tombstone set feeds both anti-joins and the request count —
-    # truncate once (tiny) so the events scan is not re-expanded per use
-    requests = (
-        ev.filter(F.col("user_id") % 13 == 0).select("user_id").distinct()
-        .localCheckpoint()
-    )
+    # the tombstone set feeds both anti-joins and the request count
+    requests = ev.filter(F.col("user_id") % 13 == 0).select("user_id").distinct()
     ev_after = ev.join(F.broadcast(requests), "user_id", "left_anti")
     ord_after = orders.join(
         F.broadcast(requests.withColumnRenamed("user_id", "o_custkey")),
@@ -689,8 +685,7 @@ def elt_storage_tiering_plan(spark, sf_dir):
     "percentile aggregate's value->count buffer IS the table, merged on "
     "one reducer; the rank form is the same smallest-value-with-"
     "cume_dist>=p semantics as an exact integer comparison (rank*10 >= "
-    "n*6), shuffle-distributed, and the 1-row mark is checkpointed so "
-    "the audit branches stop re-planning the percentile 6x.",
+    "n*6), shuffle-distributed.",
 )
 def elt_incremental_bookmark_extract(spark, sf_dir):
     from pyspark.sql import functions as F
@@ -704,8 +699,9 @@ def elt_incremental_bookmark_extract(spark, sf_dir):
     # ignores them); integer cross-multiplication avoids the double
     # comparison entirely.  min() over the qualifying 40% is a partial-
     # aggregated scan of the checkpointed rank table, never a value-
-    # buffering aggregate.  Eager 1-row checkpoint: every audit branch
-    # broadcasts the mark without re-running the rank machinery.
+    # buffering aggregate.  Each audit branch broadcasts the 1-row mark;
+    # the range-partitioned keys behind it are materialized once, at
+    # global_order_stats' fence, and every branch reads that one copy.
     ranked = global_order_stats(
         o.select("o_orderkey").filter(F.col("o_orderkey").isNotNull()),
         ["o_orderkey"],
@@ -713,7 +709,6 @@ def elt_incremental_bookmark_extract(spark, sf_dir):
     hwm_df = (
         ranked.filter(F.col("_rn") * 10 >= F.col("_n_total") * 6)
         .agg(F.min("o_orderkey").alias("hwm"))
-        .localCheckpoint(eager=True)
     )
     pull1 = o.crossJoin(F.broadcast(hwm_df)).filter(F.col("o_orderkey") <= F.col("hwm"))
     pull2 = o.crossJoin(F.broadcast(hwm_df)).filter(F.col("o_orderkey") > F.col("hwm"))

@@ -1612,7 +1612,6 @@ def agg_kmv_theta_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         hashed.withColumn("rn", F.row_number().over(W.partitionBy("seg").orderBy("u")))
         .filter(F.col("rn") <= _KMV_K)
         .select("seg", "u")
-        .localCheckpoint()
     )
 
     # bigint `div`, never float `/`: (k-1)*M ≈ 1.77e16 exceeds 2^53, so

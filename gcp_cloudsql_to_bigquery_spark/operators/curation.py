@@ -788,10 +788,8 @@ def curation_temperature_sampling(spark: SparkSession, sf_dir: str) -> DataFrame
             .cast("bigint")
             .alias("keep_ppm"),
         )
-        # 20-row plan table feeds the keep join AND the final report —
-        # truncate so the aggregate chain is computed once
-        .localCheckpoint()
     )
+    # the 20-row plan table feeds the keep join AND the final report
     bucket = (
         F.conv(F.substring(F.md5(F.concat(F.lit("temp:"), F.col("doc_id").cast("string"))), 1, 5), 16, 10)
         .cast("bigint")

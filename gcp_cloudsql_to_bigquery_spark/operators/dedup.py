@@ -265,13 +265,11 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ngram_jaccard_scored(spark, sf_dir).filter(F.col("jaccard") >= 0.65)
 
 
-def _ngram_jaccard_scored(
-    spark: SparkSession, sf_dir: str, barrier: bool = True
-) -> DataFrame:
+def _ngram_jaccard_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, jaccard) for every prefix-filtered candidate pair.
 
-    Scores in ONE projection, then (by default) a checkpoint BARRIER
-    before the caller's threshold filter: without it Catalyst pushes
+    Scores in ONE projection, then a checkpoint BARRIER before the
+    caller's threshold filter: without it Catalyst pushes
     ``jaccard >= t`` down into the join condition, inlining the alias so
     array_intersect (a per-row hash-set build) is evaluated both in the
     join condition and in the output projection — measured 67 s → ~57 s
@@ -280,9 +278,6 @@ def _ngram_jaccard_scored(
     elimination handles the two references inside the single
     projection).  The checkpointed relation is the small (doc_a, doc_b,
     jaccard) triple per candidate, never the joined arrays.
-    ``barrier=False`` exists for the plan-invariant sweeps: checkpoints
-    truncate lineage, so the audited plan would otherwise never show
-    this subtree (see :func:`audit_subplans`).
 
     r8: the barrier is ``persist(MEMORY_AND_DISK)``, not an eager
     ``localCheckpoint`` (ADVICE r7).  The CacheManager substitutes an
@@ -329,7 +324,7 @@ def _ngram_jaccard_scored(
         .join(sb, "doc_b")
         .select("doc_a", "doc_b", jac.alias("jaccard"))
     )
-    return scored.persist(StorageLevel.MEMORY_AND_DISK) if barrier else scored
+    return scored.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 # --- MinHash + LSH --------------------------------------------------------
@@ -491,9 +486,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _minhash_lsh_scored(spark, sf_dir).filter(F.col("jaccard") >= LSH_JACCARD)
 
 
-def _minhash_lsh_scored(
-    spark: SparkSession, sf_dir: str, barrier: bool = True
-) -> DataFrame:
+def _minhash_lsh_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, jaccard) for every LSH candidate pair.
 
     Exact verification on 64-bit-hashed shingle sets: integer intersects
@@ -504,8 +497,7 @@ def _minhash_lsh_scored(
     shuffled equi-joins on doc_a/doc_b (each keyed on a high-cardinality
     doc id) attach the shingle sets with bounded per-task memory at any
     scale.  Same barrier rationale (and same r8 lazy cache-fence
-    semantics) as :func:`_ngram_jaccard_scored`; ``barrier=False`` keeps
-    the plan auditable (see :func:`audit_subplans`).
+    semantics) as :func:`_ngram_jaccard_scored`.
 
     r16: documents through ``load_spread`` — the single-row-group bench
     layout serialized the signature build (shingle explode + 64 aggregated
@@ -543,28 +535,7 @@ def _minhash_lsh_scored(
         .join(b, "doc_b")
         .select("doc_a", "doc_b", jac.alias("jaccard"))
     )
-    return scored.persist(StorageLevel.MEMORY_AND_DISK) if barrier else scored
-
-
-def audit_subplans(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Pre-barrier plans for the plan-invariant sweeps.
-
-    The verify barriers (r7 eager ``localCheckpoint``, r8 ``persist``
-    cache fence) hide the candidate/verify subtrees behind the fence
-    node, so the audited plan of ``dedup_ngram_jaccard`` /
-    ``dedup_minhash_lsh`` (and their consumers) would otherwise show only
-    the fenced relation — an invariant violation inside the candidate-
-    generation or verify subtrees would be invisible.
-    ``scripts/plan_audit.py`` and ``tests/test_plans.py`` audit these
-    un-fenced builders in addition to the registry plans."""
-    return {
-        "dedup_ngram_jaccard.pre_barrier": _ngram_jaccard_scored(
-            spark, sf_dir, barrier=False
-        ),
-        "dedup_minhash_lsh.pre_barrier": _minhash_lsh_scored(
-            spark, sf_dir, barrier=False
-        ),
-    }
+    return scored.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 # --- near-dup clustering ----------------------------------------------------
@@ -733,7 +704,9 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would hand the kernel a None token list
     # r17: load_spread — the Arrow-batched simhash kernel (per-doc token
     # hash + 64-lane majority vote) otherwise runs on the single-row-group
-    # scan's ONE task (guide §2.5); measured 6.4 s -> see OPTIMIZATION_r17
+    # scan's ONE task (guide §2.5, measured 6.4 s there); spreading the
+    # documents over the shuffle width runs the kernel in parallel, and on
+    # a multi-row-group corpus the spread is a footer-driven no-op
     d = (
         load_spread(spark, sf_dir, "documents", "doc_id")
         .filter(F.col("text").isNotNull())
@@ -1154,9 +1127,8 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = d.select("doc_id", F.explode_outer(grams).alias("s"))
     sz = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     freq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df")).filter(F.col("df") <= 100)
-    # the df-capped posting list feeds both sides of the pair join —
-    # materialize it once (the classic inverted-index build step)
-    idx = sh.join(freq.select("s"), "s").localCheckpoint()
+    # the df-capped posting list feeds both sides of the pair join
+    idx = sh.join(freq.select("s"), "s")
     a, b = idx.alias("a"), idx.alias("b")
     inter = (
         a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") != F.col("b.doc_id")))

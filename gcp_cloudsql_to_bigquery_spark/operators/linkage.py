@@ -512,7 +512,7 @@ def join_geo_nearest_neighbor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pts = c.select(
         F.col("c_custkey").alias("k"), axis("x").alias("x"), axis("y").alias("y")
-    ).localCheckpoint()
+    )
     cells = pts.select(
         "k", "x", "y",
         F.expr(f"x div {_GEO_R}").alias("cx"),

@@ -108,8 +108,10 @@ def global_order_stats(
     # than the rows being ranked, and ranks interleave silently (observed:
     # every partition's count differed between branches at sf0.1 volume;
     # ranks off by up to 16 inside tie bands).  localCheckpoint pins ONE
-    # physical layout that both branches read; the checkpointed input is
-    # group-grain (the df being ranked), never the fact table.
+    # physical layout that both branches read.  It holds every row of the
+    # df being ranked, at that df's grain: fact-grain when a caller ranks
+    # a fact column (elt_incremental_bookmark_extract ranks every non-null
+    # orders key), so callers project to the columns they need first.
     part = part.localCheckpoint(eager=True)
     aggs = [F.count(F.lit(1)).alias("_c")]
     if val_col is not None:

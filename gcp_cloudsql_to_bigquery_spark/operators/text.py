@@ -838,9 +838,13 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE token pass: group by (w, nxt) keeping null/empty next markers,
     # then derive the unigram counts by re-aggregating the (vocab^2-bounded)
     # bigram table instead of scanning tokens again
-    # the vocab^2-bounded bigram table feeds uni, bi, and (via blp) the
-    # scoring join — truncate once so the token explode isn't re-expanded
-    bi_all = tok.groupBy("w", "nxt").agg(F.count(F.lit(1)).alias("cb")).localCheckpoint()
+    # the vocab^2-bounded bigram table feeds uni, bi and (via uni) the
+    # vocabulary count.  The pushed-down nxt filter and the count's column
+    # pruning give the three copies different shapes, so each re-runs the
+    # token explode over the one spread exchange (~0.1 s at sf0.01).  A
+    # fence would save that but run jobs at plan build, and a persist()
+    # measured slower still
+    bi_all = tok.groupBy("w", "nxt").agg(F.count(F.lit(1)).alias("cb"))
     uni = bi_all.groupBy("w").agg(F.sum("cb").alias("cu"))
     bi = bi_all.filter(F.col("nxt").isNotNull() & (F.col("nxt") != ""))
     vocab = uni.agg(F.count(F.lit(1)).alias("v"))

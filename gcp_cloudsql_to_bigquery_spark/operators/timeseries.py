@@ -473,10 +473,11 @@ def ts_m4_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ts_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE fact scan: collapse to the per-(series, value) DISTRIBUTION
-    # (value-cardinality-sized, checkpointed), then both medians become
-    # weighted medians over the collapsed table via cumulative walks —
-    # the plan-audit fix over median-on-raw-rows, which re-expanded the
-    # fact scan per consumer (5 scans -> 1).  Interpolated-median
+    # (value-cardinality-sized; its consumers read the one aggregate
+    # exchange back), then both medians become weighted medians over the
+    # collapsed table via cumulative walks — the plan-audit fix over
+    # median-on-raw-rows, which re-expanded the fact scan per consumer
+    # (5 scans -> 1).  Interpolated-median
     # parity: med2 = rank-ceil(n/2) value + rank-(floor(n/2)+1) value.
     pts = _events_on_axis(spark, sf_dir).select(
         "event_type", F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("cents")
@@ -484,7 +485,6 @@ def ts_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     dist = (
         pts.groupBy("event_type", "cents")
         .agg(F.count(F.lit(1)).alias("w"))
-        .localCheckpoint()
     )
 
     def weighted_med2(df: DataFrame, valcol: str) -> DataFrame:
@@ -910,15 +910,15 @@ def ts_anomaly_seasonal_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cents").over(w).alias("wsum"),
         F.count(F.lit(1)).over(w).alias("wn"),
     ).filter(F.col("wn") == 25)
-    # resid feeds THREE consumers (rmad -> dev -> dmad -> final filter);
-    # without truncation Catalyst re-expands the scan+regrain+window
-    # subtree once per consumer (4 windows in the physical plan).  The
-    # residual table is hourly-sized — checkpoint it once.
+    # resid feeds THREE consumers (rmad -> dev -> dmad -> final filter).
+    # The scan + hourly regrain runs once: every consumer reads its
+    # exchange back (ReusedExchange), and only the window over the
+    # hourly-sized table is repeated per consumer.
     resid = trend.select(
         "event_type",
         "h",
         (F.col("cents") - F.expr("(2 * wsum + wn) div (2 * wn)")).alias("r"),
-    ).localCheckpoint()
+    )
     rmad = resid.groupBy("event_type").agg(
         (2 * F.median("r")).cast("bigint").alias("rmed2")
     )

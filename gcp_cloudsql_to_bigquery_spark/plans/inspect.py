@@ -98,14 +98,26 @@ def _unwrap_adaptive(node):
 
 
 def _children(node) -> list:
+    """A node's children, looking through AdaptiveSparkPlanExec wrappers
+    and into the cached plan behind an ``InMemoryTableScanExec`` (a
+    ``persist()`` fence): the fenced subtree runs as part of the query,
+    so the walk audits it in place."""
+    if node.getClass().getSimpleName() == "InMemoryTableScanExec":
+        return [_unwrap_adaptive(node.relation().cachedPlan())]
     ch = node.children()
     return [_unwrap_adaptive(ch.apply(i)) for i in range(ch.size())]
 
 
+def _is_checkpoint_scan(node) -> bool:
+    """An ``RDDScanExec`` over a checkpointed RDD — a ``localCheckpoint``
+    fence, whose lineage the plan no longer shows."""
+    return node.getClass().getSimpleName() == "RDDScanExec" and node.rdd().isCheckpointed()
+
+
 def _plan_nodes(df: DataFrame):
-    """Every node of the executed physical plan, pre-order, looking
-    through AdaptiveSparkPlanExec wrappers — the one walk the invariant
-    detectors below share."""
+    """Every node of the executed physical plan, pre-order, through
+    AdaptiveSparkPlanExec wrappers and cached plans — the one walk the
+    invariant detectors below share."""
     todo = [_unwrap_adaptive(df._jdf.queryExecution().executedPlan())]
     while todo:
         node = todo.pop()
@@ -119,7 +131,9 @@ def _reaches_scan_without_agg(node) -> bool:
     not bounded by a reduction.  Shared by the three scale invariants
     (unpartitioned window, fact cartesian, single-partition barrier):
     LocalTableScan/RDDScan literals are driver-local and bounded;
-    FileSourceScan/BatchScan/RowDataSourceScan are the unbounded bases."""
+    FileSourceScan/BatchScan/RowDataSourceScan are the unbounded bases,
+    and so is a checkpointed RDD scan, whose size the plan cannot show.
+    An InMemoryTableScan is neither: the walk enters its cached plan."""
     cls = node.getClass().getSimpleName()
     if (
         "Aggregate" in cls
@@ -129,10 +143,12 @@ def _reaches_scan_without_agg(node) -> bool:
     ):
         return False
     if cls in ("LocalTableScanExec", "RDDScanExec"):
-        # createDataFrame literals (LocalTableScan, or ExistingRDD when
-        # the conversion takes the RDD path) — driver-local, bounded
-        return False
-    if "Scan" in cls:  # FileSourceScanExec / BatchScanExec / RowDataSourceScanExec
+        # createDataFrame literals (LocalTableScan, or ExistingRDD when the
+        # conversion takes the RDD path) are driver-local and bounded; a
+        # checkpointed RDD is opaque
+        return _is_checkpoint_scan(node)
+    if "Scan" in cls and cls != "InMemoryTableScanExec":
+        # FileSourceScanExec / BatchScanExec / RowDataSourceScanExec
         return True
     return any(_reaches_scan_without_agg(c) for c in _children(node))
 
@@ -291,19 +307,12 @@ def stacked_python_map_count(df: DataFrame) -> int:
     )
 
 
-def is_cache_substituted(df: DataFrame) -> bool:
-    """True if the CacheManager substituted a cached plan into this
-    DataFrame (an ``InMemoryTableScan`` in the executed plan).
-
-    The audit contract for ``dedup.audit_subplans`` is that its plans are
-    UN-fenced: if a canonically-equal registry query was persist()ed
-    first, ``withCachedData`` collapses the candidate/verify subtrees to
-    a single InMemoryTableScan at executedPlan time and any invariant
-    check passes vacuously.  Every consumer of pre-barrier plans must
-    call this at INSPECTION time (substitution happens when the executed
-    plan is computed, not when the DataFrame is built — so the guard
-    cannot live inside audit_subplans itself)."""
-    return "InMemoryTableScan" in physical_plan(df)
+def opaque_fence_count(df: DataFrame) -> int:
+    """Checkpointed RDD scans (eager ``localCheckpoint`` fences) in the
+    plan: subtrees the walk cannot enter, which the boundedness checks
+    treat as unbounded.  Unlike a lazy ``persist()`` fence they also run
+    their jobs when the DataFrame is built."""
+    return sum(1 for node in _plan_nodes(df) if _is_checkpoint_scan(node))
 
 
 def final_plan_tree(df: DataFrame) -> str:

@@ -1,31 +1,19 @@
 """Registry-wide physical-plan audit: build every query's plan and check
 the six scale invariants listed below.
 
-Plan *building* is lazy for almost every query since round 8: the verify
-barriers in ``dedup_ngram_jaccard`` / ``dedup_minhash_lsh`` /
-``curation_dedup_pipeline`` are ``persist(MEMORY_AND_DISK)`` cache
-fences — the CacheManager substitutes an ``InMemoryRelation`` at
-analysis time (the optimizer fence), so the audited plan shows an
-``InMemoryTableScan`` fence node and building the plan runs zero jobs.
-The remaining construction-time execution: the iterative
-connected-components family (driver-side convergence counts, inherent
-to the algorithm) plus two small single-job eager checkpoints left
-deliberately in place (``dedup_containment``'s df-capped posting list,
-the 20-row ``curation_temperature_sampling`` plan table — both
-r7-witnessed, and re-witnessing them for a construction-latency nicety
-isn't worth the gate slots).  A full audit runs in ~3 minutes,
-dominated by the CC loops.
-
-Audit-order hazard (ADVICE r8, fixed r9): building a registry dedup
-query calls ``.persist()``, registering its plan with the CacheManager;
-any canonically-equal DataFrame whose ``executedPlan`` is computed
-AFTERWARDS gets the cached plan substituted in (``withCachedData``),
-collapsing the un-fenced candidate/verify subtrees to a single
-``InMemoryTableScan`` — the invariant checks would pass vacuously on
-exactly the plans ``audit_subplans`` exists to expose.  So the
-pre-barrier plans are inspected FIRST, before any registry plan is
-built, with a guard asserting no ``InMemoryTableScan`` leaked into
-them.
+Every check reads one walk (``plans.inspect._plan_nodes``) that sees the
+whole executed plan: it looks through AdaptiveSparkPlanExec wrappers and
+enters the cached plan behind each ``InMemoryTableScan``, so a
+``persist()`` fence (the dedup verify barriers, the curation pipeline,
+the hypertable rollup) is audited in place, whatever order the plans are
+built in.  An eager ``localCheckpoint`` fence is the one subtree the walk
+cannot enter; it counts as unbounded, and the totals line reports how many
+are left as ``opaque_fence=N`` so a new eager fence shows up as a count
+diff.  Those left are the iterative fixpoints (graph, connected
+components, PCA, IVF k-means), whose driver-side convergence checks run
+jobs while the plan is built, and ``scale.global_order_stats``'s
+determinism fence.  A full audit takes about 2 minutes (117 s on a
+4-core VM), dominated by those build-time jobs.
 
 Invariants:
 
@@ -107,11 +95,9 @@ def main() -> int:
     from gcp_cloudsql_to_bigquery_spark.session import get_spark
     from gcp_cloudsql_to_bigquery_spark.workload import queries
 
-    from gcp_cloudsql_to_bigquery_spark.operators.dedup import audit_subplans
-
     spark = get_spark(app_name="plan_audit", master="local[8]", shuffle_partitions=8)
     # Silence WindowExec's "No Partition Defined" WARN for THIS audit only
-    # (VERDICT r15 item 7): building 377 plans emits it for every bounded
+    # (VERDICT r15 item 7): building 375 plans emits it for every bounded
     # post-limit/dim window (e.g. the 20-row rank in analytics.py) and the
     # spam buries any real warning in plan_audit_warn.log.  Safe to drop
     # here because invariant 1 below is the STRONGER check — it fails the
@@ -128,9 +114,15 @@ def main() -> int:
     violations: list[str] = []
     n_checked = 0
     totals: dict[str, int] = {}
-
-    def check(name: str, df) -> None:
-        nonlocal n_checked
+    for name, fn in queries().items():
+        # drop the previous build's cache entries and any blocks its
+        # build-time jobs filled, so memory stays flat across the registry
+        spark.catalog.clearCache()
+        try:
+            df = fn(spark, args.sf)
+        except Exception as e:  # plan construction itself failed
+            violations.append(f"{name}: plan build error: {e}")
+            continue
         n_checked += 1
         single = inspect.unbounded_single_partition_exchanges(df)
         buffers = inspect.unbounded_global_buffer_aggregates(df)
@@ -148,45 +140,8 @@ def main() -> int:
             if count != expected:
                 hits = f" <- {nodes}" if nodes else ""
                 violations.append(f"{name}: {kind}={count} (expected {expected}){hits}")
-
-    # pre-barrier builders FIRST: the verify barriers fence the candidate/
-    # verify subtrees out of the registered queries' plans, so the audit
-    # would otherwise never see them — and they must be inspected BEFORE
-    # any registry plan is built, or the CacheManager substitutes the
-    # fenced (persisted) plan into these canonically-equal DataFrames and
-    # the checks pass vacuously (see module docstring).  A failure building
-    # the pre-barrier DataFrames is recorded as a violation (the whole
-    # pre-barrier set aborts — audit_subplans constructs both builders in
-    # one call) rather than aborting the registry audit below.
-    try:
-        pre = audit_subplans(spark, args.sf)
-    except Exception as e:
-        violations.append(f"audit_subplans: plan build error: {e}")
-        pre = {}
-    for name, df in pre.items():
-        if inspect.is_cache_substituted(df):
-            violations.append(
-                f"{name}: pre-barrier plan contains InMemoryTableScan — "
-                "cache substitution collapsed the subtree; the invariant "
-                "check would be vacuous (audit-order bug)"
-            )
-            continue
-        check(name, df)
-    for name, fn in queries().items():
-        # cold CacheManager per build (ADVICE r9): constructing a dedup/
-        # curation query calls .persist() on its fence subtrees, so WITHIN
-        # this loop a later canonically-equal plan would be cache-
-        # substituted and its invariant checks would pass vacuously — the
-        # residual registry-pass form of the pre-barrier ordering hazard
-        # guarded above.  Clearing before every build means each query's
-        # plan can only ever contain its OWN intentional fences.
-        spark.catalog.clearCache()
-        try:
-            df = fn(spark, args.sf)
-        except Exception as e:  # plan construction itself failed
-            violations.append(f"{name}: plan build error: {e}")
-            continue
-        check(name, df)
+        # not an invariant: the eager fences left, reported as a count
+        totals["opaque_fence"] = totals.get("opaque_fence", 0) + inspect.opaque_fence_count(df)
     print(f"checked {n_checked} plans")
     print("invariant totals:", ", ".join(f"{k}={n}" for k, n in totals.items()))
     if violations:

@@ -92,12 +92,10 @@ def test_minhash_verify_no_forced_broadcast(spark):
     # WHOLE corpus) to the LSH candidates — it must be a plain size-gated
     # equi-join, never a hint-forced broadcast that OOMs the build side at
     # scale.  (The optimizer may still pick BHJ at sf0.001 — that's fine,
-    # it is size-gated; the hint is what's forbidden.)  Inspected on the
-    # PRE-BARRIER plan: the r7 verify checkpoint truncates lineage, so the
-    # registered query's plan no longer shows these joins.
-    from gcp_cloudsql_to_bigquery_spark.operators.dedup import _minhash_lsh_scored
-
-    df = _minhash_lsh_scored(spark, SF, barrier=False)
+    # it is size-gated; the hint is what's forbidden.)  The analyzed plan
+    # carries the whole lineage: the persist() verify fence is substituted
+    # only after analysis.
+    df = queries()["dedup_minhash_lsh"](spark, SF)
     assert inspect.broadcast_hint_count(df) == 0
 
 
@@ -107,18 +105,18 @@ def test_minhash_signature_aggregate_is_shared(spark):
     # ReusedExchange (lsh_candidate_pairs selects n_sh on the re-attach
     # sides so their column-pruned aggregates stay plan-equal).  Pinned on
     # the static plan: AQE plans its stages one by one and shows the reuse
-    # only at run time.
+    # only at run time.  The formatted plan lists the verify fence's
+    # cached plan, where the signature work runs.
     import re
-
-    from gcp_cloudsql_to_bigquery_spark.operators.dedup import audit_subplans
 
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         spark.catalog.clearCache()
-        df = audit_subplans(spark, SF)["dedup_minhash_lsh.pre_barrier"]
+        df = queries()["dedup_minhash_lsh"](spark, SF)
         plan = inspect.formatted_plan(df)
     finally:
+        spark.catalog.clearCache()
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
     # one map-side signature aggregate of any width (a pruned copy would
     # be 64 wide), and it is count(1) + 64 mins
@@ -147,37 +145,39 @@ def test_anchor_lsh_bucket_shuffle_carries_ids_only(spark):
 
 
 def test_ngram_jaccard_no_forced_broadcast(spark):
-    # per-doc size table is corpus-sized — same rule as the minhash verify;
-    # pre-barrier plan for the same reason as above.
-    from gcp_cloudsql_to_bigquery_spark.operators.dedup import _ngram_jaccard_scored
-
-    df = _ngram_jaccard_scored(spark, SF, barrier=False)
+    # per-doc size table is corpus-sized — same rule as the minhash verify
+    df = queries()["dedup_ngram_jaccard"](spark, SF)
     assert inspect.broadcast_hint_count(df) == 0
 
 
-def test_dedup_pre_barrier_subplans_hold_invariants(spark):
-    """The verify barriers hide the candidate/verify subtrees from the
-    registered queries' plans; audit_subplans() re-exposes them, and both
-    scale invariants (plus the no-hint rule) must hold there too —
-    closing the audit hole the barrier opened.
+def test_plan_walk_enters_cached_plans(spark):
+    """The invariant walk descends from an InMemoryTableScan into its
+    cached plan: dedup_ngram_jaccard's persist() verify fence hides the
+    whole candidate/verify pipeline, and the walk must still reach the
+    parquet scan under it."""
+    df = queries()["dedup_ngram_jaccard"](spark, SF)
+    classes = [n.getClass().getSimpleName() for n in inspect._plan_nodes(df)]
+    assert "InMemoryTableScanExec" in classes, classes
+    assert "FileSourceScanExec" in classes, classes
 
-    Cache hazard (ADVICE r8): under the session-scoped fixture an earlier
-    test may have built a registered dedup query, whose ``.persist()``
-    fence would be substituted into these canonically-equal plans
-    (``withCachedData``), collapsing the subtrees to one
-    ``InMemoryTableScan`` and making the checks vacuous.  Clear the cache
-    first, then assert the inspected plans really are un-fenced."""
-    from gcp_cloudsql_to_bigquery_spark.operators.dedup import audit_subplans
 
-    spark.catalog.clearCache()
-    for name, df in audit_subplans(spark, SF).items():
-        assert not inspect.is_cache_substituted(df), (
-            name,
-            "pre-barrier plan was cache-substituted; audit would be vacuous",
-        )
-        assert inspect.unpartitioned_fact_window_count(df) == 0, name
-        assert inspect.fact_cartesian_count(df) == 0, name
-        assert inspect.broadcast_hint_count(df) == 0, name
+def test_checkpoint_scan_counts_as_unbounded(spark):
+    """A localCheckpoint fence plans as an RDD scan, like a
+    createDataFrame literal, but its size is whatever was checkpointed:
+    the boundedness walk must treat it as opaque (fact-grain), while an
+    RDD-path literal stays bounded."""
+    from gcp_cloudsql_to_bigquery_spark.catalog import load
+
+    keys = load(spark, SF, "orders").select("o_orderkey")
+    a = keys.localCheckpoint()
+    b = keys.withColumnRenamed("o_orderkey", "k").localCheckpoint()
+    assert inspect.fact_cartesian_count(a.crossJoin(b)) == 1
+    assert inspect.opaque_fence_count(a.crossJoin(b)) == 2
+    rows = spark.sparkContext.parallelize([(1,), (2,)])
+    lit_a = spark.createDataFrame(rows, ["x"])
+    lit_b = spark.createDataFrame(rows, ["y"])
+    assert inspect.fact_cartesian_count(lit_a.crossJoin(lit_b)) == 0
+    assert inspect.opaque_fence_count(lit_a.crossJoin(lit_b)) == 0
 
 
 def test_q1_aggregation_is_partial_before_shuffle(spark):
@@ -472,15 +472,20 @@ def test_skipgram_window_join_not_cartesian(spark):
 
 
 def test_seasonal_residual_computes_residuals_once(spark):
-    """The residual table feeds three consumers; it must be truncated
-    (checkpointed) so the scan+regrain+window subtree is NOT re-expanded
-    per consumer — the final plan reads the materialized hourly-sized
-    table and contains zero windows and zero file scans."""
-    df = queries()["ts_anomaly_seasonal_residual"](spark, "/root/testdata/sf0.001")
-    plan = physical_plan(df)
-    assert plan.count("Window") == 0, plan
-    assert plan.count("FileScan") == 0, plan
-    assert "ExistingRDD" in plan, plan
+    """The residual table feeds three consumers.  Its scan + hourly
+    regrain runs once and every other consumer reads that exchange back
+    (ReusedExchange), with no fence: the static plan (AQE off, which
+    shows the reuse before run time) walks exactly one file scan."""
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        df = queries()["ts_anomaly_seasonal_residual"](spark, SF)
+        classes = [n.getClass().getSimpleName() for n in inspect._plan_nodes(df)]
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert classes.count("FileSourceScanExec") == 1, classes
+    assert classes.count("ReusedExchangeExec") >= 3, classes
+    assert inspect.opaque_fence_count(df) == 0
 
 
 def test_no_unpartitioned_window_over_fact_grain_family(spark):
@@ -489,6 +494,8 @@ def test_no_unpartitioned_window_over_fact_grain_family(spark):
     datasource scan.  Unpartitioned windows over bounded aggregates (the
     32-row offsets table, customer-grain rollups) are exempt by design."""
     for q in (
+        "dedup_ngram_jaccard",
+        "dedup_minhash_lsh",
         "analytics_equidepth_histogram",
         "agg_percentile_exact_grouped",
         "curation_importance_resampling",
@@ -534,6 +541,7 @@ def test_no_fact_by_fact_cartesian_registry_claim(spark):
     unaggregated datasource scans.  Full-registry sweep (round 6) found
     only the two allowlisted below."""
     for q in (
+        "dedup_ngram_jaccard",
         "curation_dedup_pipeline",
         "dedup_minhash_lsh",
         "join_salted_skew",

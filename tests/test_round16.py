@@ -261,17 +261,22 @@ def test_rank_selection_matches_percentile_disc(spark, values):
 
 def test_bookmark_plan_has_no_percentile_and_one_rank_pass(spark):
     """The rewritten bookmark query must carry ZERO percentile aggregates
-    (the buffer-agg class it left) and read its high-water mark from the
-    eager 1-row checkpoint (Scan ExistingRDD) — re-planning the quantile
-    6x across the audit branches was the other half of the r16 finding."""
+    (the buffer-agg class it left), and its ranks come from ONE
+    materialization: every audit branch's copy of the high-water mark
+    reads the same global_order_stats checkpoint, with no fence of its
+    own — so the walk sees the 1-row mark's aggregate and the broadcast
+    crosses stay bounded binds."""
     from gcp_cloudsql_to_bigquery_spark.plans import inspect
     from gcp_cloudsql_to_bigquery_spark.workload import queries
 
     df = queries()["elt_incremental_bookmark_extract"](spark, SFD)
     plan = inspect.physical_plan(df)
     assert "percentile" not in plan, plan
-    assert "Scan ExistingRDD" in plan, plan
     assert inspect.unbounded_global_buffer_aggregates(df) == []
+    fences = [n for n in inspect._plan_nodes(df) if inspect._is_checkpoint_scan(n)]
+    assert len(fences) >= 2, plan
+    assert len({n.rdd().id() for n in fences}) == 1, plan
+    assert inspect.fact_cartesian_count(df) == 0
 
 
 # ---------------------------------------------------------------------------
