@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from .tmputil import short_tmp_dir
+
 # the directory holding this package: on every Python worker's path, so the
 # daemon module imports whatever the working directory
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -81,9 +83,39 @@ DEFAULT_CONFS: dict[str, str] = {
     # Static conf, read when the SparkContext starts: configure_existing
     # skips it, so a session built elsewhere keeps Spark's daemon.
     "spark.python.daemon.module": "gcp_cloudsql_to_bigquery_spark.pyworker",
+    # JVM<->Python channels over Unix sockets instead of loopback TCP: the
+    # worker daemon and its workers, the Arrow collect and createDataFrame
+    # servers, the accumulator server.  Over TCP every small Python task
+    # stalled ~40 ms on the JVM's writes (the delayed-ACK timer): a warm
+    # identity mapInPandas over 500 rows (local[4]) spent 41-45 ms in the
+    # worker's Arrow-in -> function -> Arrow-out phase, 3.3-4.2 ms over a
+    # Unix socket; TCP_NODELAY on the Python side left it at 40-42 ms.  This
+    # mode drops Spark's per-app secret and relies on file permissions, so
+    # get_spark puts the sockets of a local master in a private 0700
+    # directory (python_socket_dir).  Static conf: configure_existing skips
+    # it, so a session built elsewhere keeps TCP.
+    "spark.python.unix.domain.socket.enabled": "true",
     # progress bars interleave with stdout in non-interactive runs
     "spark.ui.showConsoleProgress": "false",
 }
+
+
+# Spark binds each Python-channel socket at <dir>/.<uuid4>.sock, and an
+# AF_UNIX path holds at most 107 bytes
+_SOCKET_DIR_MAX_LEN = 107 - len("/.") - 36 - len(".sock")
+_socket_dir: str | None = None
+
+
+def python_socket_dir() -> str:
+    """This process's private (0700) directory for the Python-channel sockets
+    of local sessions, allocated once through ``tmputil.short_tmp_dir``
+    (removed at exit or by the crash ledger; under ``/tmp`` when a socket
+    path under the temp root would exceed the AF_UNIX limit)."""
+    global _socket_dir
+    if _socket_dir is None:
+        _socket_dir = short_tmp_dir("spark_graft_pysock_", _SOCKET_DIR_MAX_LEN)
+        os.chmod(_socket_dir, 0o700)  # mkdtemp's mode is already 0700 less the umask
+    return _socket_dir
 
 
 def _default_driver_memory() -> str:
@@ -144,6 +176,12 @@ def get_spark(
     conf["spark.executorEnv.PYTHONPATH"] = (
         f"{worker_path}{os.pathsep}{_PACKAGE_ROOT}" if worker_path else _PACKAGE_ROOT
     )
+    # A local master's workers run on this host, so their sockets go in a
+    # directory only this user can enter.  A cluster keeps Spark's default,
+    # each executor's own java.io.tmpdir: a driver-local path does not exist
+    # on executor hosts.
+    if master is not None and master.startswith("local"):
+        conf.setdefault("spark.python.unix.domain.socket.dir", python_socket_dir())
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

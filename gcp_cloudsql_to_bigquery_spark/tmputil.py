@@ -43,11 +43,22 @@ _TMP_BASES: list[str] = []
 
 _LEDGER_DIR = os.path.join(tempfile.gettempdir(), "spark_graft_tmp_ledger")
 
+# where short_tmp_dir allocates when the temp root's path is too long.  Those
+# trees are listed in a ledger under this root, so that any later engine
+# process reaps them, whatever its TMPDIR (a run that gives each process its
+# own temp root deletes the ledger beside it)
+_SHORT_ROOT = "/tmp"
+_SHORT_LEDGER_DIR = os.path.join(_SHORT_ROOT, "spark_graft_tmp_ledger")
 
-def _ledger_path() -> str:
+
+def _ledger_dirs() -> list[str]:
+    return list(dict.fromkeys((_LEDGER_DIR, _SHORT_LEDGER_DIR)))
+
+
+def _ledger_path(ledger_dir: str | None = None) -> str:
     # computed per call, not at import: a forked child must append to (and
     # at exit unlink) ITS OWN ledger, never the parent's
-    return os.path.join(_LEDGER_DIR, f"{os.getpid()}.lst")
+    return os.path.join(ledger_dir or _LEDGER_DIR, f"{os.getpid()}.lst")
 
 
 def _pid_alive(pid: int) -> bool:
@@ -71,7 +82,7 @@ _LINE_END = "\t#"
 
 
 def _reap_roots() -> tuple[str, ...]:
-    roots = [os.path.realpath(tempfile.gettempdir())]
+    roots = [os.path.realpath(tempfile.gettempdir()), os.path.realpath(_SHORT_ROOT)]
     if os.path.isdir("/dev/shm"):
         roots.append(os.path.realpath("/dev/shm"))
     return tuple(roots)
@@ -86,19 +97,20 @@ def reap_stale_tmp() -> list[str]:
     children of a known tmp root — a corrupt ledger can leak a tree but
     never delete outside the allocation roots."""
     removed: list[str] = []
-    try:
-        entries = os.listdir(_LEDGER_DIR)
-    except FileNotFoundError:
-        return removed
     roots = _reap_roots()
-    for name in entries:
-        stem, ext = os.path.splitext(name)
+    ledgers = []
+    for ledger_dir in _ledger_dirs():
+        try:
+            ledgers += [os.path.join(ledger_dir, name) for name in os.listdir(ledger_dir)]
+        except FileNotFoundError:
+            pass
+    for ledger in ledgers:
+        stem, ext = os.path.splitext(os.path.basename(ledger))
         if ext != ".lst" or not stem.isdigit():
             continue
         pid = int(stem)
         if pid == os.getpid() or _pid_alive(pid):
             continue
-        ledger = os.path.join(_LEDGER_DIR, name)
         try:
             with open(ledger) as fh:
                 lines = fh.read().splitlines()
@@ -120,13 +132,13 @@ def reap_stale_tmp() -> list[str]:
     return removed
 
 
-def _ledger_append(path: str) -> None:
+def _ledger_append(path: str, ledger_dir: str) -> None:
     # write-through, flushed per allocation: the ledger must be complete at
     # the instant a SIGKILL lands.  Best-effort — a full disk must not turn
     # tmp allocation into a hard failure (the allocation itself succeeded).
     try:
-        os.makedirs(_LEDGER_DIR, exist_ok=True)
-        with open(_ledger_path(), "a") as fh:
+        os.makedirs(ledger_dir, exist_ok=True)
+        with open(_ledger_path(ledger_dir), "a") as fh:
             fh.write(path + _LINE_END + "\n")
     except OSError:
         pass
@@ -135,10 +147,11 @@ def _ledger_append(path: str) -> None:
 def _cleanup_tmp_bases() -> None:
     while _TMP_BASES:
         shutil.rmtree(_TMP_BASES.pop(), ignore_errors=True)
-    try:
-        os.unlink(_ledger_path())  # clean exit: nothing left to crash-reap
-    except OSError:
-        pass
+    for ledger_dir in _ledger_dirs():
+        try:
+            os.unlink(_ledger_path(ledger_dir))  # clean exit: nothing left to crash-reap
+        except OSError:
+            pass
 
 
 atexit.register(_cleanup_tmp_bases)
@@ -148,9 +161,23 @@ def tmp_dir(prefix: str, parent: str | None = None) -> str:
     """``mkdtemp`` + registration in the shared atexit registry + a
     write-through crash-ledger entry — the only way package code should
     allocate a tmp dir."""
-    path = tempfile.mkdtemp(prefix=prefix, dir=parent)
+    return _registered(tempfile.mkdtemp(prefix=prefix, dir=parent), _LEDGER_DIR)
+
+
+def short_tmp_dir(prefix: str, max_len: int) -> str:
+    """:func:`tmp_dir` whose path is at most ``max_len`` bytes long: under
+    the temp root when ``mkdtemp``'s name there fits, else under ``/tmp``
+    (for paths with a length limit, such as AF_UNIX sockets)."""
+    # mkdtemp appends 8 characters to the prefix
+    longest = os.path.join(tempfile.gettempdir(), prefix + "x" * 8)
+    if len(os.fsencode(longest)) <= max_len:
+        return tmp_dir(prefix)
+    return _registered(tempfile.mkdtemp(prefix=prefix, dir=_SHORT_ROOT), _SHORT_LEDGER_DIR)
+
+
+def _registered(path: str, ledger_dir: str) -> str:
     _TMP_BASES.append(path)
-    _ledger_append(path)
+    _ledger_append(path, ledger_dir)
     return path
 
 

@@ -4,7 +4,8 @@ completed stages from the Spark UI REST API and print wall-clock, task
 time, I/O and shuffle bytes per stage, heaviest first.  Each run also
 prints the generated classes it compiled and their compile milliseconds,
 and the tasks that ran a Python node with their summed ``pythonTotalTime``
-(JVM task start to Python finish) per task.
+(JVM task start to Python finish) per task and the JVM<->Python transport
+(``unix`` or ``tcp``, from the session conf).
 
 Usage:  python scripts/profile_stages.py <query> [--sf /root/testdata/sf0.1]
         [--width 32] [--runs 1] [--noop]
@@ -110,6 +111,10 @@ def main() -> int:
     def rest(path: str):
         return json.load(urllib.request.urlopen(f"{ui}/api/v1/applications/{app_id}/{path}"))
 
+    # JVM<->Python channel: Unix socket or loopback TCP (the ~40 ms stall)
+    unix = spark.sparkContext.getConf().get("spark.python.unix.domain.socket.enabled", "false")
+    transport = "unix" if unix.lower() == "true" else "tcp"
+
     for i in range(args.runs):
         spark.catalog.clearCache()
         group = f"{args.query} run {i}"
@@ -129,7 +134,11 @@ def main() -> int:
         )
         tasks, py_s = python_tasks(spark, rest, group)
         per_task = f"{1000 * py_s / tasks:.0f} ms" if tasks else "-"
-        print(f"run {i}: python: {tasks} tasks, pythonTotalTime {per_task} per task", flush=True)
+        print(
+            f"run {i}: python: {tasks} tasks, pythonTotalTime {per_task} per task"
+            f" ({transport})",
+            flush=True,
+        )
 
     stages = rest("stages?status=complete")
     rows = []

@@ -1,8 +1,10 @@
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout these tests live in, not whichever copy is installed elsewhere
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from gcp_cloudsql_to_bigquery_spark.session import get_spark  # noqa: E402
 

@@ -1,5 +1,7 @@
 """Engine session defaults that a measured cost depends on."""
 
+import pytest
+
 # Spark's own default for spark.sql.codegen.cache.maxEntries
 _SPARK_DEFAULT_CLASS_CACHE = 100
 
@@ -112,10 +114,11 @@ def test_rewritten_zip_is_reread_on_invalidate(spark):
     assert _in_one_task(spark, rewrite_and_import) == ["2"]
 
 
-def test_python_tasks_run_from_a_foreign_working_directory(tmp_path):
-    """The daemon module is imported by every Python worker, so a session
-    built by ``get_spark`` must run Python tasks whatever the working
-    directory and with no PYTHONPATH."""
+def _double_in_subprocess(cwd, hard_exit: bool = False, **env) -> tuple[str, str]:
+    """Run ``mapInPandas(double)`` over ``range(3)`` in a fresh process with
+    no PYTHONPATH, from ``cwd``; return the session's socket dir and the
+    result, as printed.  ``hard_exit`` ends the process with ``os._exit``
+    after ``spark.stop()``, so no atexit hook runs."""
     import os
     import subprocess
     import sys
@@ -128,16 +131,96 @@ def test_python_tasks_run_from_a_foreign_working_directory(tmp_path):
         "from gcp_cloudsql_to_bigquery_spark.session import get_spark\n"
         "spark = get_spark(master='local[2]', shuffle_partitions=2,\n"
         "                  extra_conf={'spark.driver.memory': '1g'})\n"
+        "print(spark.sparkContext.getConf().get('spark.python.unix.domain.socket.dir'))\n"
         "def double(batches):\n"
         "    for b in batches:\n"
         "        yield b * 2\n"
         "print(sorted(r.id for r in spark.range(3).mapInPandas(double, 'id long').collect()))\n"
         "spark.stop()\n"
+        + ("import os; os._exit(0)\n" if hard_exit else "")
     )
-    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env = {**{k: v for k, v in os.environ.items() if k != "PYTHONPATH"}, **env}
     out = subprocess.run(
-        [sys.executable, "-c", script], cwd=str(tmp_path), env=env,
+        [sys.executable, "-c", script], cwd=str(cwd), env=env,
         capture_output=True, text=True, timeout=300,
     )
     assert out.returncode == 0, out.stderr[-2000:]
-    assert out.stdout.strip().splitlines()[-1] == "[0, 2, 4]"
+    sock_dir, result = out.stdout.strip().splitlines()[-2:]
+    return sock_dir, result
+
+
+def test_python_tasks_run_from_a_foreign_working_directory(tmp_path):
+    """The daemon module is imported by every Python worker, so a session
+    built by ``get_spark`` must run Python tasks whatever the working
+    directory and with no PYTHONPATH."""
+    assert _double_in_subprocess(tmp_path)[1] == "[0, 2, 4]"
+
+
+def test_python_tasks_talk_to_the_jvm_over_unix_sockets(spark):
+    """Over loopback TCP every small Python task stalled ~40 ms on the JVM's
+    writes (the delayed-ACK timer).  ``session.DEFAULT_CONFS`` enables
+    Spark's Unix-socket mode, so inside a warm task every socket the worker
+    holds is ``AF_UNIX``, and their directory is private to this user."""
+    import ast
+    import os
+    import socket
+    import stat
+
+    def socket_families() -> list:
+        import os
+        import socket
+
+        families = []
+        for fd in os.listdir("/proc/self/fd"):
+            try:
+                sock = socket.socket(fileno=int(fd))
+            except OSError:
+                continue  # not a socket
+            families.append(int(sock.family))
+            sock.detach()
+        return sorted(families)
+
+    _in_one_task(spark, lambda: None)  # warm the worker
+    families = ast.literal_eval(_in_one_task(spark, socket_families)[0])
+    assert families and set(families) == {int(socket.AF_UNIX)}, families
+
+    sock_dir = spark.sparkContext.getConf().get("spark.python.unix.domain.socket.dir")
+    st = os.stat(sock_dir)
+    assert stat.S_IMODE(st.st_mode) == 0o700
+    assert st.st_uid == os.getuid()
+
+
+@pytest.mark.parametrize("hard_exit", [False, True], ids=["atexit", "os_exit"])
+def test_long_temp_root_falls_back_to_a_short_socket_dir(tmp_path, hard_exit):
+    """An AF_UNIX path holds at most 107 bytes, and Spark names its sockets
+    ``.<uuid4>.sock``.  Under a temp root too long for that, the socket dir
+    goes under ``/tmp``; Python tasks still run, and afterwards neither root
+    keeps a socket dir or a socket file.  A clean exit removes the dir; after
+    ``os._exit`` the next engine process reaps it from the crash ledger, even
+    under a temp root of its own."""
+    import glob
+    import os
+    import subprocess
+    import sys
+
+    import gcp_cloudsql_to_bigquery_spark as pkg
+
+    long_tmp = tmp_path / ("t" * 80)
+    long_tmp.mkdir()
+    socks_before = set(glob.glob("/tmp/.*.sock"))
+    sock_dir, result = _double_in_subprocess(tmp_path, hard_exit, TMPDIR=str(long_tmp))
+    assert result == "[0, 2, 4]"
+    assert os.path.dirname(sock_dir) == "/tmp"
+    if hard_exit:
+        other_tmp = tmp_path / "other"
+        other_tmp.mkdir()
+        reaper = subprocess.run(
+            [sys.executable, "-c", "import gcp_cloudsql_to_bigquery_spark.tmputil"],
+            cwd=os.path.dirname(os.path.dirname(os.path.abspath(pkg.__file__))),
+            env={**os.environ, "TMPDIR": str(other_tmp)}, timeout=120,
+        )
+        assert reaper.returncode == 0
+    assert not os.path.exists(sock_dir)
+    assert [f for _, _, files in os.walk(long_tmp) for f in files if f.endswith(".sock")] == []
+    assert not any("pysock" in name for name in os.listdir(long_tmp))
+    assert set(glob.glob("/tmp/.*.sock")) <= socks_before
