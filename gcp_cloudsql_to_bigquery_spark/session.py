@@ -83,18 +83,6 @@ DEFAULT_CONFS: dict[str, str] = {
     # Static conf, read when the SparkContext starts: configure_existing
     # skips it, so a session built elsewhere keeps Spark's daemon.
     "spark.python.daemon.module": "gcp_cloudsql_to_bigquery_spark.pyworker",
-    # JVM<->Python channels over Unix sockets instead of loopback TCP: the
-    # worker daemon and its workers, the Arrow collect and createDataFrame
-    # servers, the accumulator server.  Over TCP every small Python task
-    # stalled ~40 ms on the JVM's writes (the delayed-ACK timer): a warm
-    # identity mapInPandas over 500 rows (local[4]) spent 41-45 ms in the
-    # worker's Arrow-in -> function -> Arrow-out phase, 3.3-4.2 ms over a
-    # Unix socket; TCP_NODELAY on the Python side left it at 40-42 ms.  This
-    # mode drops Spark's per-app secret and relies on file permissions, so
-    # get_spark puts the sockets of a local master in a private 0700
-    # directory (python_socket_dir).  Static conf: configure_existing skips
-    # it, so a session built elsewhere keeps TCP.
-    "spark.python.unix.domain.socket.enabled": "true",
     # progress bars interleave with stdout in non-interactive runs
     "spark.ui.showConsoleProgress": "false",
 }
@@ -113,7 +101,7 @@ def python_socket_dir() -> str:
     path under the temp root would exceed the AF_UNIX limit)."""
     global _socket_dir
     if _socket_dir is None:
-        _socket_dir = short_tmp_dir("spark_graft_pysock_", _SOCKET_DIR_MAX_LEN)
+        _socket_dir = short_tmp_dir("pysock_", _SOCKET_DIR_MAX_LEN)
         os.chmod(_socket_dir, 0o700)  # mkdtemp's mode is already 0700 less the umask
     return _socket_dir
 
@@ -129,6 +117,61 @@ def _default_driver_memory() -> str:
     except OSError:
         pass
     return "16g"
+
+
+def _session_conf(
+    master: str | None,
+    shuffle_partitions: int | None,
+    extra_conf: dict[str, str] | None,
+) -> dict[str, str]:
+    """Every conf :func:`get_spark` sets on its builder; ``extra_conf``
+    overrides the defaults."""
+    if shuffle_partitions is None:
+        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    conf = {"spark.sql.shuffle.partitions": str(shuffle_partitions)}
+    # Size the single local JVM like a real executor.  Unset, pyspark's
+    # gateway launches the driver with a 1 GiB heap — measured in r16:
+    # with local[32] every concurrent task gets ~17 MB of execution
+    # memory, the dedup/pack hash stages spill or OOM outright, and the
+    # sf0.1 curation pipeline ran 2.7x slower than the same plan with a
+    # right-sized heap (53.9 s -> 19.9 s).  On a cluster this knob is the
+    # deploy's executor sizing and this default is inert (spark-submit /
+    # cluster managers set driver+executor memory explicitly; a builder
+    # conf cannot retro-size an already-running JVM).  Max-heap only —
+    # the JVM commits pages as needed, so small tests stay small.
+    # Capped at half the host's RAM: concurrent sessions on a 16 GB box
+    # (tier-1 tests, plan_audit, selfcheck) each claiming a 16g heap lost
+    # their JVMs mid-run.
+    conf["spark.driver.memory"] = os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()
+    )
+    conf.update(DEFAULT_CONFS)
+    conf.update(extra_conf or {})
+    worker_path = (extra_conf or {}).get("spark.executorEnv.PYTHONPATH")
+    conf["spark.executorEnv.PYTHONPATH"] = (
+        f"{worker_path}{os.pathsep}{_PACKAGE_ROOT}" if worker_path else _PACKAGE_ROOT
+    )
+    # A local master's JVM<->Python channels run over Unix sockets instead
+    # of loopback TCP: the worker daemon and its workers, the Arrow collect
+    # and createDataFrame servers, the accumulator server.  Over TCP every
+    # small Python task stalled ~40 ms on the JVM's writes (the delayed-ACK
+    # timer): a warm identity mapInPandas over 500 rows (local[4]) spent
+    # 41-45 ms in the worker's Arrow-in -> function -> Arrow-out phase,
+    # 3.3-4.2 ms over a Unix socket; TCP_NODELAY on the Python side left it
+    # at 40-42 ms.  This mode drops Spark's per-app secret and relies on
+    # file permissions, so the sockets go in a directory only this user can
+    # enter (python_socket_dir).  Other masters keep loopback TCP until
+    # measured there: each executor would bind in its own java.io.tmpdir,
+    # which this process can neither see nor length-check (a YARN
+    # container's tmp dir alone can come near the 107-byte AF_UNIX limit),
+    # and a driver-local directory does not exist on executor hosts.  Static
+    # confs that configure_existing never sets: a session built elsewhere
+    # keeps TCP.
+    if master is not None and master.startswith("local"):
+        conf.setdefault("spark.python.unix.domain.socket.enabled", "true")
+        if "spark.python.unix.domain.socket.dir" not in conf:
+            conf["spark.python.unix.domain.socket.dir"] = python_socket_dir()
+    return conf
 
 
 def get_spark(
@@ -148,41 +191,7 @@ def get_spark(
     builder = SparkSession.builder.appName(app_name)
     if master is not None:
         builder = builder.master(master)
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    # Size the single local JVM like a real executor.  Unset, pyspark's
-    # gateway launches the driver with a 1 GiB heap — measured in r16:
-    # with local[32] every concurrent task gets ~17 MB of execution
-    # memory, the dedup/pack hash stages spill or OOM outright, and the
-    # sf0.1 curation pipeline ran 2.7x slower than the same plan with a
-    # right-sized heap (53.9 s -> 19.9 s).  On a cluster this knob is the
-    # deploy's executor sizing and this default is inert (spark-submit /
-    # cluster managers set driver+executor memory explicitly; a builder
-    # conf cannot retro-size an already-running JVM).  Max-heap only —
-    # the JVM commits pages as needed, so small tests stay small.
-    # Capped at half the host's RAM: concurrent sessions on a 16 GB box
-    # (tier-1 tests, plan_audit, selfcheck) each claiming a 16g heap lost
-    # their JVMs mid-run.
-    if "spark.driver.memory" not in (extra_conf or {}):
-        builder = builder.config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
-        )
-    for k, v in DEFAULT_CONFS.items():
-        builder = builder.config(k, v)
-    conf = dict(extra_conf or {})
-    worker_path = conf.get("spark.executorEnv.PYTHONPATH")
-    conf["spark.executorEnv.PYTHONPATH"] = (
-        f"{worker_path}{os.pathsep}{_PACKAGE_ROOT}" if worker_path else _PACKAGE_ROOT
-    )
-    # A local master's workers run on this host, so their sockets go in a
-    # directory only this user can enter.  A cluster keeps Spark's default,
-    # each executor's own java.io.tmpdir: a driver-local path does not exist
-    # on executor hosts.
-    if master is not None and master.startswith("local"):
-        conf.setdefault("spark.python.unix.domain.socket.dir", python_socket_dir())
-    for k, v in conf.items():
+    for k, v in _session_conf(master, shuffle_partitions, extra_conf).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -36,6 +36,7 @@ from __future__ import annotations
 import atexit
 import os
 import shutil
+import stat
 import tempfile
 
 # Single shared registry of every tmp base, batch and streaming alike.
@@ -43,22 +44,27 @@ _TMP_BASES: list[str] = []
 
 _LEDGER_DIR = os.path.join(tempfile.gettempdir(), "spark_graft_tmp_ledger")
 
-# where short_tmp_dir allocates when the temp root's path is too long.  Those
-# trees are listed in a ledger under this root, so that any later engine
-# process reaps them, whatever its TMPDIR (a run that gives each process its
-# own temp root deletes the ledger beside it)
+# where short_tmp_dir allocates when the temp root's path is too long; a
+# reap root besides the temp root, for the trees the ledger lists there
 _SHORT_ROOT = "/tmp"
-_SHORT_LEDGER_DIR = os.path.join(_SHORT_ROOT, "spark_graft_tmp_ledger")
 
 
-def _ledger_dirs() -> list[str]:
-    return list(dict.fromkeys((_LEDGER_DIR, _SHORT_LEDGER_DIR)))
-
-
-def _ledger_path(ledger_dir: str | None = None) -> str:
+def _ledger_path() -> str:
     # computed per call, not at import: a forked child must append to (and
     # at exit unlink) ITS OWN ledger, never the parent's
-    return os.path.join(ledger_dir or _LEDGER_DIR, f"{os.getpid()}.lst")
+    return os.path.join(_LEDGER_DIR, f"{os.getpid()}.lst")
+
+
+def _ledger_dir_is_private() -> bool:
+    """The ledger dir is a real directory of this user's that no one else
+    can write to.  Under a shared temp root another user could create it
+    and plant a dead PID's ledger naming any tree under a reap root, so a
+    ledger dir failing this is neither read nor written."""
+    try:
+        st = os.lstat(_LEDGER_DIR)
+    except OSError:
+        return False
+    return stat.S_ISDIR(st.st_mode) and st.st_uid == os.getuid() and not st.st_mode & 0o022
 
 
 def _pid_alive(pid: int) -> bool:
@@ -97,20 +103,17 @@ def reap_stale_tmp() -> list[str]:
     children of a known tmp root — a corrupt ledger can leak a tree but
     never delete outside the allocation roots."""
     removed: list[str] = []
+    if not _ledger_dir_is_private():
+        return removed
     roots = _reap_roots()
-    ledgers = []
-    for ledger_dir in _ledger_dirs():
-        try:
-            ledgers += [os.path.join(ledger_dir, name) for name in os.listdir(ledger_dir)]
-        except FileNotFoundError:
-            pass
-    for ledger in ledgers:
-        stem, ext = os.path.splitext(os.path.basename(ledger))
+    for name in os.listdir(_LEDGER_DIR):
+        stem, ext = os.path.splitext(name)
         if ext != ".lst" or not stem.isdigit():
             continue
         pid = int(stem)
         if pid == os.getpid() or _pid_alive(pid):
             continue
+        ledger = os.path.join(_LEDGER_DIR, name)
         try:
             with open(ledger) as fh:
                 lines = fh.read().splitlines()
@@ -132,13 +135,15 @@ def reap_stale_tmp() -> list[str]:
     return removed
 
 
-def _ledger_append(path: str, ledger_dir: str) -> None:
+def _ledger_append(path: str) -> None:
     # write-through, flushed per allocation: the ledger must be complete at
     # the instant a SIGKILL lands.  Best-effort — a full disk must not turn
     # tmp allocation into a hard failure (the allocation itself succeeded).
     try:
-        os.makedirs(ledger_dir, exist_ok=True)
-        with open(_ledger_path(ledger_dir), "a") as fh:
+        os.makedirs(_LEDGER_DIR, mode=0o700, exist_ok=True)
+        if not _ledger_dir_is_private():
+            return
+        with open(_ledger_path(), "a") as fh:
             fh.write(path + _LINE_END + "\n")
     except OSError:
         pass
@@ -147,11 +152,10 @@ def _ledger_append(path: str, ledger_dir: str) -> None:
 def _cleanup_tmp_bases() -> None:
     while _TMP_BASES:
         shutil.rmtree(_TMP_BASES.pop(), ignore_errors=True)
-    for ledger_dir in _ledger_dirs():
-        try:
-            os.unlink(_ledger_path(ledger_dir))  # clean exit: nothing left to crash-reap
-        except OSError:
-            pass
+    try:
+        os.unlink(_ledger_path())  # clean exit: nothing left to crash-reap
+    except OSError:
+        pass
 
 
 atexit.register(_cleanup_tmp_bases)
@@ -161,7 +165,10 @@ def tmp_dir(prefix: str, parent: str | None = None) -> str:
     """``mkdtemp`` + registration in the shared atexit registry + a
     write-through crash-ledger entry — the only way package code should
     allocate a tmp dir."""
-    return _registered(tempfile.mkdtemp(prefix=prefix, dir=parent), _LEDGER_DIR)
+    path = tempfile.mkdtemp(prefix=prefix, dir=parent)
+    _TMP_BASES.append(path)
+    _ledger_append(path)
+    return path
 
 
 def short_tmp_dir(prefix: str, max_len: int) -> str:
@@ -170,15 +177,7 @@ def short_tmp_dir(prefix: str, max_len: int) -> str:
     (for paths with a length limit, such as AF_UNIX sockets)."""
     # mkdtemp appends 8 characters to the prefix
     longest = os.path.join(tempfile.gettempdir(), prefix + "x" * 8)
-    if len(os.fsencode(longest)) <= max_len:
-        return tmp_dir(prefix)
-    return _registered(tempfile.mkdtemp(prefix=prefix, dir=_SHORT_ROOT), _SHORT_LEDGER_DIR)
-
-
-def _registered(path: str, ledger_dir: str) -> str:
-    _TMP_BASES.append(path)
-    _ledger_append(path, ledger_dir)
-    return path
+    return tmp_dir(prefix, None if len(os.fsencode(longest)) <= max_len else _SHORT_ROOT)
 
 
 def remove_tmp(path: str) -> None:

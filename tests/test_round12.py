@@ -273,6 +273,42 @@ def test_reap_removes_dead_pid_ledger_trees():
         shutil.rmtree(decoy, ignore_errors=True)
 
 
+@pytest.mark.parametrize("foreign", ["other_writable", "other_owner"])
+def test_ledger_dir_others_can_write_is_ignored(tmp_path, monkeypatch, foreign):
+    """Under a shared temp root another user could create the ledger dir
+    and plant a dead PID's ledger naming any tree under a reap root.  A
+    ledger dir that is not this user's, or that others can write to, is
+    neither reaped from nor appended to; the same ledger in a private dir
+    is reaped (the control)."""
+    from gcp_cloudsql_to_bigquery_spark import tmputil
+
+    if foreign == "other_owner" and os.getuid() != 0:
+        pytest.skip("chown to another user needs root")
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    ledger_dir = tmp_path / "spark_graft_tmp_ledger"
+    ledger_dir.mkdir()
+    monkeypatch.setattr(tmputil, "_LEDGER_DIR", str(ledger_dir))
+    victim = tmp_path / "victim"
+    victim.mkdir()
+    # PID 2**22+1 exceeds the default pid_max and can never be alive
+    (ledger_dir / f"{2**22 + 1}.lst").write_text(str(victim) + tmputil._LINE_END + "\n")
+    if foreign == "other_writable":
+        os.chmod(ledger_dir, 0o777)
+    else:
+        os.chown(ledger_dir, 65534, 65534)
+    mine = tmputil.tmp_dir("ledger_foreign_")
+    try:
+        assert tmputil.reap_stale_tmp() == []
+        assert victim.is_dir()
+        assert not os.path.exists(tmputil._ledger_path())
+    finally:
+        tmputil.remove_tmp(mine)
+    os.chown(ledger_dir, os.getuid(), os.getgid())
+    os.chmod(ledger_dir, 0o700)
+    assert tmputil.reap_stale_tmp() == [str(victim)]
+    assert not victim.exists()
+
+
 def test_reap_never_touches_live_pid_ledger(tmp_path):
     """Our own (live) ledger — and any live process's — is never reaped."""
     from gcp_cloudsql_to_bigquery_spark import tmputil

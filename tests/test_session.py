@@ -114,11 +114,10 @@ def test_rewritten_zip_is_reread_on_invalidate(spark):
     assert _in_one_task(spark, rewrite_and_import) == ["2"]
 
 
-def _double_in_subprocess(cwd, hard_exit: bool = False, **env) -> tuple[str, str]:
+def _double_in_subprocess(cwd, **env) -> tuple[str, str]:
     """Run ``mapInPandas(double)`` over ``range(3)`` in a fresh process with
     no PYTHONPATH, from ``cwd``; return the session's socket dir and the
-    result, as printed.  ``hard_exit`` ends the process with ``os._exit``
-    after ``spark.stop()``, so no atexit hook runs."""
+    result, as printed."""
     import os
     import subprocess
     import sys
@@ -137,7 +136,6 @@ def _double_in_subprocess(cwd, hard_exit: bool = False, **env) -> tuple[str, str
         "        yield b * 2\n"
         "print(sorted(r.id for r in spark.range(3).mapInPandas(double, 'id long').collect()))\n"
         "spark.stop()\n"
-        + ("import os; os._exit(0)\n" if hard_exit else "")
     )
     env = {**{k: v for k, v in os.environ.items() if k != "PYTHONPATH"}, **env}
     out = subprocess.run(
@@ -158,9 +156,10 @@ def test_python_tasks_run_from_a_foreign_working_directory(tmp_path):
 
 def test_python_tasks_talk_to_the_jvm_over_unix_sockets(spark):
     """Over loopback TCP every small Python task stalled ~40 ms on the JVM's
-    writes (the delayed-ACK timer).  ``session.DEFAULT_CONFS`` enables
-    Spark's Unix-socket mode, so inside a warm task every socket the worker
-    holds is ``AF_UNIX``, and their directory is private to this user."""
+    writes (the delayed-ACK timer).  ``get_spark`` enables Spark's
+    Unix-socket mode for a local master, so inside a warm task every socket
+    the worker holds is ``AF_UNIX``, and their directory is private to this
+    user."""
     import ast
     import os
     import socket
@@ -190,37 +189,75 @@ def test_python_tasks_talk_to_the_jvm_over_unix_sockets(spark):
     assert st.st_uid == os.getuid()
 
 
-@pytest.mark.parametrize("hard_exit", [False, True], ids=["atexit", "os_exit"])
-def test_long_temp_root_falls_back_to_a_short_socket_dir(tmp_path, hard_exit):
+@pytest.mark.parametrize("master", [None, "yarn", "spark://host:7077", "k8s://https://host:443"])
+def test_only_a_local_master_gets_unix_sockets(master):
+    """An executor on another host binds its sockets in its own
+    ``java.io.tmpdir``, whose length this process cannot check, so only a
+    local master gets the Unix-socket mode and the private socket dir; every
+    other master (and ``None``, a master chosen by the deploy) keeps
+    loopback TCP.  Checked on the builder confs, without starting a
+    session."""
+    from gcp_cloudsql_to_bigquery_spark.session import _session_conf, python_socket_dir
+
+    keys = ("spark.python.unix.domain.socket.enabled", "spark.python.unix.domain.socket.dir")
+    assert not set(keys) & set(_session_conf(master, 2, None))
+    local = _session_conf("local[2]", 2, None)
+    assert [local[k] for k in keys] == ["true", python_socket_dir()]
+
+
+def test_long_temp_root_falls_back_to_a_short_socket_dir(tmp_path):
     """An AF_UNIX path holds at most 107 bytes, and Spark names its sockets
     ``.<uuid4>.sock``.  Under a temp root too long for that, the socket dir
     goes under ``/tmp``; Python tasks still run, and afterwards neither root
-    keeps a socket dir or a socket file.  A clean exit removes the dir; after
-    ``os._exit`` the next engine process reaps it from the crash ledger, even
-    under a temp root of its own."""
+    keeps a socket dir or a socket file."""
     import glob
     import os
+
+    long_tmp = tmp_path / ("t" * 80)
+    long_tmp.mkdir()
+    socks_before = set(glob.glob("/tmp/.*.sock"))
+    sock_dir, result = _double_in_subprocess(tmp_path, TMPDIR=str(long_tmp))
+    assert result == "[0, 2, 4]"
+    assert os.path.dirname(sock_dir) == "/tmp"
+    assert not os.path.exists(sock_dir)
+    assert [f for _, _, files in os.walk(long_tmp) for f in files if f.endswith(".sock")] == []
+    assert not any("pysock" in name for name in os.listdir(long_tmp))
+    assert set(glob.glob("/tmp/.*.sock")) <= socks_before
+
+
+def test_short_socket_dir_is_reaped_after_a_hard_exit(tmp_path):
+    """A socket dir that fell back to ``/tmp`` is listed in the crash ledger
+    under the temp root like any other tree: after ``os._exit`` (no atexit
+    hook runs) the next engine process under that temp root removes it."""
+    import os
+    import shutil
     import subprocess
     import sys
 
     import gcp_cloudsql_to_bigquery_spark as pkg
 
+    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(pkg.__file__)))
     long_tmp = tmp_path / ("t" * 80)
     long_tmp.mkdir()
-    socks_before = set(glob.glob("/tmp/.*.sock"))
-    sock_dir, result = _double_in_subprocess(tmp_path, hard_exit, TMPDIR=str(long_tmp))
-    assert result == "[0, 2, 4]"
-    assert os.path.dirname(sock_dir) == "/tmp"
-    if hard_exit:
-        other_tmp = tmp_path / "other"
-        other_tmp.mkdir()
-        reaper = subprocess.run(
-            [sys.executable, "-c", "import gcp_cloudsql_to_bigquery_spark.tmputil"],
-            cwd=os.path.dirname(os.path.dirname(os.path.abspath(pkg.__file__))),
-            env={**os.environ, "TMPDIR": str(other_tmp)}, timeout=120,
+    env = {**os.environ, "TMPDIR": str(long_tmp)}
+
+    def run(code: str) -> str:
+        script = f"import sys; sys.path.insert(0, {repo_root!r})\n" + code
+        out = subprocess.run(
+            [sys.executable, "-c", script], env=env,
+            capture_output=True, text=True, timeout=120,
         )
-        assert reaper.returncode == 0
-    assert not os.path.exists(sock_dir)
-    assert [f for _, _, files in os.walk(long_tmp) for f in files if f.endswith(".sock")] == []
-    assert not any("pysock" in name for name in os.listdir(long_tmp))
-    assert set(glob.glob("/tmp/.*.sock")) <= socks_before
+        assert out.returncode == 0, out.stderr[-2000:]
+        return out.stdout.strip()
+
+    sock_dir = run(
+        "from gcp_cloudsql_to_bigquery_spark.session import python_socket_dir\n"
+        "import os; print(python_socket_dir(), flush=True); os._exit(0)\n"
+    )
+    try:
+        assert os.path.dirname(sock_dir) == "/tmp"
+        assert os.path.isdir(sock_dir), "os._exit must leave the dir (no atexit)"
+        run("import gcp_cloudsql_to_bigquery_spark.tmputil\n")
+        assert not os.path.exists(sock_dir)
+    finally:
+        shutil.rmtree(sock_dir, ignore_errors=True)
