@@ -51,13 +51,15 @@ def export_table(
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    cols = [
-        F.to_json(f.name).alias(f.name)
-        if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType))
-        else F.col(f.name)
+    complex_names = {
+        f.name
         for f in df.schema.fields
-    ]
-    df = df.select(cols)
+        if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType))
+    }
+    if complex_names:  # projected only then: each column costs py4j calls
+        df = df.select(
+            [F.to_json(c).alias(c) if c in complex_names else F.col(c) for c in df.columns]
+        )
     df.write.mode("overwrite").options(header=False, emptyValue='""').csv(data_path)
     os.makedirs(os.path.dirname(schema_path), exist_ok=True)
     import json

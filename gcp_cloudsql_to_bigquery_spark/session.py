@@ -83,14 +83,29 @@ DEFAULT_CONFS: dict[str, str] = {
     # Static conf, read when the SparkContext starts: configure_existing
     # skips it, so a session built elsewhere keeps Spark's daemon.
     "spark.python.daemon.module": "gcp_cloudsql_to_bigquery_spark.pyworker",
+    # Split floor for file scans: under Spark's 4 MiB default a file of up
+    # to about 8 MB scans as ONE task, so a single-file CSV export of a few
+    # MB loaded on one core out of four.  A 1 MiB text split carries about
+    # 80 ms of work (clean, parse and parquet write ran at about 76 ms/MB
+    # in one task), so lineitem's 3.7 MB export now spreads over all four
+    # cores (its perfbench load went 413 -> 305 ms, local[4] on a 4-CPU
+    # Xeon VM).  A parquet file of 1 MiB or less still scans as one split:
+    # its row group cannot be split, so more splits would be empty tasks.
+    # A floor of 0 did exactly that to the catalog's single-row-group
+    # parquet files, empty Python tasks included: the perfbench batch pass
+    # took 8-15 % longer (4 of 4 pairs).
+    "spark.sql.files.openCostInBytes": str(1024 * 1024),
     # progress bars interleave with stdout in non-interactive runs
     "spark.ui.showConsoleProgress": "false",
 }
 
 
 # Spark binds each Python-channel socket at <dir>/.<uuid4>.sock, and an
-# AF_UNIX path holds at most 107 bytes
-_SOCKET_DIR_MAX_LEN = 107 - len("/.") - 36 - len(".sock")
+# AF_UNIX path holds at most 107 bytes; Spark itself refuses a socket dir
+# longer than 61 characters (the `spark.python.unix.domain.socket.dir`
+# check in org.apache.spark.internal.config.Python: "The directory path
+# should be lower than 61"), and then fails every query of the session
+_SOCKET_DIR_MAX_LEN = min(61, 107 - len("/.") - 36 - len(".sock"))
 _socket_dir: str | None = None
 
 

@@ -1,5 +1,5 @@
 """Stage-level attribution for one registry query (guide §1.1 empirical
-loop): run the query under the bench's extended-tier conf, then pull the
+loop): run the query with the engine's session defaults, then pull the
 completed stages from the Spark UI REST API and print wall-clock, task
 time, I/O and shuffle bytes per stage, heaviest first.  Each run also
 prints the generated classes it compiled and their compile milliseconds,
@@ -89,10 +89,6 @@ def main() -> int:
         app_name=f"profile_{args.query}",
         master=f"local[{cpus}]",
         shuffle_partitions=int(args.width),
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": "2m",
-            "spark.sql.adaptive.enabled": "false",
-        },
     )
     qs = queries()
     # JVM-wide count and time of generated-class compiles (cache misses of

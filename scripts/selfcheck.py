@@ -12,10 +12,11 @@ from __future__ import annotations
 
 import argparse
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def canon(v):

@@ -184,3 +184,52 @@ def test_load_table_observed_single_pass_qa(spark, sf_dir):
         F.col("status_or_null").isNull()
     ).count()
     assert got["nulls_o_orderkey"] == 0
+
+
+def test_single_file_export_loads_on_several_cores(spark, tmp_path):
+    """A table arrives as ONE CSV file.  Under Spark's 4 MiB
+    ``openCostInBytes`` a file of up to about 8 MB scans as one task;
+    the session's 1 MiB floor splits a 3 MB sentinel export over several
+    tasks, and every row and sentinel still loads."""
+    import json
+
+    from pyspark.sql import types as T
+
+    from gcp_cloudsql_to_bigquery_spark.ingest.schema_io import struct_to_bq_schema
+
+    data = tmp_path / "export.csv"
+    n = 50_000
+    with open(data, "w") as fh:
+        for i in range(n):
+            fh.write(f'{i},"N,name-{i:08d}-{"x" * 90}\n' if i % 2 else f"{i},{i},\"N\n")
+    assert data.stat().st_size >= 3 * 1024 * 1024
+    schema = tmp_path / "export.schema.json"
+    struct = T.StructType(
+        [
+            T.StructField("id", T.LongType()),
+            T.StructField("v", T.LongType()),
+            T.StructField("name", T.StringType()),
+        ]
+    )
+    schema.write_text(json.dumps(struct_to_bq_schema(struct)))
+    df = load_table(spark, str(data), str(schema))
+    assert df.rdd.getNumPartitions() >= 2
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count("v").alias("v"),
+        F.count("name").alias("name"),
+    ).first()
+    assert (row.n, row.v, row.name) == (n, n // 2, n // 2)
+
+
+def test_small_parquet_file_scans_as_one_split(spark):
+    """A parquet file of 1 MiB or less (here one row group, 1,042,463
+    bytes) keeps one split under the 1 MiB floor: its row group cannot be
+    split, so more splits would be empty tasks."""
+    import os
+
+    from tests.conftest import SF001
+
+    path = os.path.join(SF001, "lineitem.parquet")
+    assert os.path.getsize(path) <= 1024 * 1024
+    assert spark.read.parquet(path).rdd.getNumPartitions() == 1

@@ -70,6 +70,31 @@ def test_line_compat_noop_without_sentinel(line):
     assert clean_line_compat_str(line) == line
 
 
+# lines over the characters '"', 'N', ',', 'a', '\r', with '"N' as one more
+# token so that most examples hold a sentinel at each position
+_SENTINEL_LINES = st.lists(
+    st.lists(st.sampled_from(['"N', '"', "N", ",", "a", "\r"]), max_size=10).map("".join),
+    min_size=20,
+    max_size=60,
+)
+
+
+@settings(max_examples=25, deadline=None)
+@given(_SENTINEL_LINES)
+def test_sentinel_capture_form_matches_lookbehind_form(spark, lines):
+    """The cleaner's ``(^|,)"N(?=,|$)`` -> ``$1`` rewrites exactly the
+    fields the lookbehind form ``(?:(?<=^)|(?<=,))"N(?=,|$)`` -> ``""``
+    does, carriage returns included, both as Spark's own regexp_replace."""
+    from pyspark.sql import functions as F
+
+    from gcp_cloudsql_to_bigquery_spark.ingest.nulls import clean_sentinel_fields
+
+    df = spark.createDataFrame([(line,) for line in lines], "value string")
+    new = [r.value for r in clean_sentinel_fields(df).collect()]
+    old = df.select(F.regexp_replace("value", r'(?:(?<=^)|(?<=,))"N(?=,|$)', "").alias("value"))
+    assert new == [r.value for r in old.collect()]
+
+
 # --- round-5 kernels: decode round-trips and sizing laws -------------------
 
 

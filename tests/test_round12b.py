@@ -16,17 +16,19 @@ zero-vector exclusion, short-doc n-gram guard).
 from __future__ import annotations
 
 import importlib.util
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 from gcp_cloudsql_to_bigquery_spark.catalog import TABLES  # noqa: E402
 
 
 def _load_script(name: str):
-    spec = importlib.util.spec_from_file_location(name, f"/root/repo/scripts/{name}.py")
+    spec = importlib.util.spec_from_file_location(name, os.path.join(_ROOT, "scripts", f"{name}.py"))
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod

@@ -13,13 +13,15 @@ Wave 1: the ADVICE r12 closures —
 
 from __future__ import annotations
 
+import os
 import shutil
 import sys
 
 import pandas as pd
 import pytest
 
-sys.path.insert(0, "/root/repo")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -236,7 +238,7 @@ def hostile_nullkeys_sf(tmp_path_factory):
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "make_hostile_sf", "/root/repo/scripts/make_hostile_sf.py"
+        "make_hostile_sf", os.path.join(_ROOT, "scripts", "make_hostile_sf.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -341,7 +343,7 @@ def test_nullkeys_fixed_query_matches_oracle(
     import __spark_entry__ as entry
 
     spec = importlib.util.spec_from_file_location(
-        "selfcheck", "/root/repo/scripts/selfcheck.py"
+        "selfcheck", os.path.join(_ROOT, "scripts", "selfcheck.py")
     )
     selfcheck = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(selfcheck)

@@ -17,13 +17,15 @@
 
 from __future__ import annotations
 
+import os
 import shutil
 import sys
 
 import pandas as pd
 import pytest
 
-sys.path.insert(0, "/root/repo")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -79,7 +81,7 @@ def _match(spark, sf_dir, name):
     import __spark_entry__ as entry
 
     spec = importlib.util.spec_from_file_location(
-        "selfcheck", "/root/repo/scripts/selfcheck.py"
+        "selfcheck", os.path.join(_ROOT, "scripts", "selfcheck.py")
     )
     selfcheck = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(selfcheck)
@@ -310,7 +312,7 @@ def skewed_sf(tmp_path_factory):
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "make_skewed_sf", "/root/repo/scripts/make_skewed_sf.py"
+        "make_skewed_sf", os.path.join(_ROOT, "scripts", "make_skewed_sf.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

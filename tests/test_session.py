@@ -225,6 +225,28 @@ def test_long_temp_root_falls_back_to_a_short_socket_dir(tmp_path):
     assert set(glob.glob("/tmp/.*.sock")) <= socks_before
 
 
+@pytest.mark.parametrize("dir_len", [62, 64])
+def test_socket_dir_over_sparks_61_char_limit_falls_back(tmp_path, dir_len):
+    """Spark refuses a ``spark.python.unix.domain.socket.dir`` longer than
+    61 characters and then fails every query of the session, SQL-only ones
+    included.  A temp root that puts the dir at 62-64 characters (short
+    enough for the 107-byte socket path) sends it to ``/tmp`` instead."""
+    import os
+    import shutil
+    import tempfile
+
+    base = tempfile.mkdtemp(prefix="sk", dir="/tmp")
+    try:
+        # the dir is <temp root>/pysock_ plus 8 characters
+        root = os.path.join(base, "t" * (dir_len - len("/pysock_") - 8 - len(base) - 1))
+        os.mkdir(root)
+        sock_dir, result = _double_in_subprocess(tmp_path, TMPDIR=root)
+        assert result == "[0, 2, 4]"
+        assert os.path.dirname(sock_dir) == "/tmp"
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
 def test_short_socket_dir_is_reaped_after_a_hard_exit(tmp_path):
     """A socket dir that fell back to ``/tmp`` is listed in the crash ledger
     under the temp root like any other tree: after ``os._exit`` (no atexit
