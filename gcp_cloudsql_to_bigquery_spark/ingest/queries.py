@@ -31,7 +31,7 @@ from .pipeline import roundtrip
 )
 def elt_roundtrip_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = load(spark, sf_dir, "nation")
-    tmp = tmp_dir("elt_nation_")  # lives past return; /tmp GC'd by OS
+    tmp = tmp_dir("elt_nation_")  # lives past return; removed at exit
     return roundtrip(spark, src, tmp, "nation")
 
 

@@ -13,7 +13,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-from .tmputil import short_tmp_dir
+from .tmputil import _SHORT_ROOT, home
 
 # the directory holding this package: on every Python worker's path, so the
 # daemon module imports whatever the working directory
@@ -106,19 +106,14 @@ DEFAULT_CONFS: dict[str, str] = {
 # check in org.apache.spark.internal.config.Python: "The directory path
 # should be lower than 61"), and then fails every query of the session
 _SOCKET_DIR_MAX_LEN = min(61, 107 - len("/.") - 36 - len(".sock"))
-_socket_dir: str | None = None
 
 
 def python_socket_dir() -> str:
-    """This process's private (0700) directory for the Python-channel sockets
-    of local sessions, allocated once through ``tmputil.short_tmp_dir``
-    (removed at exit or by the crash ledger; under ``/tmp`` when a socket
-    path under the temp root would exceed the AF_UNIX limit)."""
-    global _socket_dir
-    if _socket_dir is None:
-        _socket_dir = short_tmp_dir("pysock_", _SOCKET_DIR_MAX_LEN)
-        os.chmod(_socket_dir, 0o700)  # mkdtemp's mode is already 0700 less the umask
-    return _socket_dir
+    """The private (0700) directory for the Python-channel sockets of local
+    sessions: this process's temp home (``tmputil.home``), under ``/tmp``
+    when the one under the temp root is too long for a socket dir."""
+    d = home()
+    return d if len(os.fsencode(d)) <= _SOCKET_DIR_MAX_LEN else home(_SHORT_ROOT)
 
 
 def _default_driver_memory() -> str:

@@ -234,11 +234,11 @@ def read_sentinel_csv_source(spark: SparkSession, path: str) -> DataFrame:
 def src_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.elt import write_arrival_files
 
-    from ..streaming.events import _tmp_stream_dir
+    from ..tmputil import tmp_dir
 
-    # lazy-read tree (the returned DataFrame scans these exports):
-    # registered at creation, swept at interpreter exit (round 11)
-    watch = os.path.join(_tmp_stream_dir("pyds_"), "exports")
+    # lazy-read tree (the returned DataFrame scans these exports): removed
+    # at interpreter exit with the temp home
+    watch = os.path.join(tmp_dir("pyds_"), "exports")
     write_arrival_files(spark, sf_dir, watch, n_files=4)
     df = read_sentinel_csv_source(spark, watch).filter(F.col("nation") < 10)
     return df.groupBy("nation").agg(
@@ -274,11 +274,11 @@ def src_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 def src_python_datasource_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import load
 
-    from ..streaming.events import _tmp_stream_dir
+    from ..tmputil import tmp_dir
 
     # lazy-read tree (the returned DataFrame scans the round-tripped
-    # exports): registered at creation, swept at interpreter exit
-    out = os.path.join(_tmp_stream_dir("pyds_w_"), "exports")
+    # exports): removed at interpreter exit with the temp home
+    out = os.path.join(tmp_dir("pyds_w_"), "exports")
     spark.dataSource.register(SentinelCsvDataSource)
     src = (
         load(spark, sf_dir, "customer")
@@ -411,14 +411,15 @@ def src_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # for a simple reader), so drive the queue with a tight processingTime
     # trigger and stop once two consecutive micro-batches pop nothing —
     # the empty-batch idle detection a real queue consumer uses
-    from ..streaming.events import _CKPT_DIR, _MEMSINK_SEQ  # noqa: F401
+    import shutil
     import time
 
     from ..streaming import events as _ev
+    from ..tmputil import tmp_dir
 
     _ev._MEMSINK_SEQ += 1
     name = f"pyds_stream_{_ev._MEMSINK_SEQ}"
-    ckpt = _ev._tmp_stream_dir("ckpt_pyds_", _CKPT_DIR)
+    ckpt = tmp_dir("ckpt_pyds_", _ev._CKPT_DIR)
     q = (
         stream.writeStream.outputMode("append")
         .format("memory")
@@ -439,5 +440,5 @@ def src_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         q.stop()
         q.awaitTermination()
-    _ev._remove_stream_tmp(ckpt)  # memory sink holds the rows
+    shutil.rmtree(ckpt, ignore_errors=True)  # memory sink holds the rows
     return spark.table(name)

@@ -30,11 +30,8 @@ from pyspark.sql import types as T
 from ..catalog import load
 from ..ingest.nulls import clean_sentinel_fields, parse_csv_lines
 from ..registry import register
-from .events import (
-    _CKPT_DIR,
-    _remove_stream_tmp,
-    _tmp_stream_dir,
-)
+from ..tmputil import tmp_dir
+from .events import _CKPT_DIR
 
 # Schema the arriving exports are loaded under (op #20, schema-applied load:
 # autodetect off, exactly these types — the reference's five-type system
@@ -98,7 +95,7 @@ def run_streaming_elt(
     # field boundaries, then autodetect-off schema parse — the same two
     # transforms as the batch load
     parsed = parse_csv_lines(clean_sentinel_fields(raw), T.StructType.fromDDL(_ARRIVAL_SCHEMA))
-    ckpt = _tmp_stream_dir("ckpt_elt_", _CKPT_DIR)
+    ckpt = tmp_dir("ckpt_elt_", _CKPT_DIR)
     q = (
         parsed.writeStream.outputMode("append")
         .format("parquet")
@@ -110,7 +107,7 @@ def run_streaming_elt(
     q.awaitTermination()
     # per-invocation fresh checkpoint (availableNow drained it fully) —
     # remove it instead of leaking /dev/shm space (ADVICE r10 item 1 class)
-    _remove_stream_tmp(ckpt)
+    shutil.rmtree(ckpt, ignore_errors=True)
     return sum(1 for p in (q.recentProgress or []) if p["numInputRows"] > 0)
 
 
@@ -137,15 +134,14 @@ def run_streaming_elt(
     "NULLs, counted against the oracle's pre-export ground truth.",
 )
 def stream_elt_file_arrival(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _tmp_stream_dir("stream_elt_")
+    base = tmp_dir("stream_elt_")
     watch_dir = os.path.join(base, "watch")
     sink_dir = os.path.join(base, "loaded")
     write_arrival_files(spark, sf_dir, watch_dir, n_files=3)
     run_streaming_elt(spark, watch_dir, sink_dir)
     # post-drain cleanup (ADVICE r10 item 1 class): the returned DataFrame
     # lazily reads only the sink; the watch-dir arrivals are dead weight.
-    # The base (sink) is swept at interpreter exit (creation-time
-    # registration).
+    # The base (sink) stays in the temp home until interpreter exit.
     shutil.rmtree(watch_dir, ignore_errors=True)
     loaded = spark.read.schema(_ARRIVAL_SCHEMA).parquet(sink_dir)
     return loaded.groupBy("nation").agg(
@@ -157,10 +153,9 @@ def stream_elt_file_arrival(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- shared machinery for the incremental-materialization streams -----------
 #
-# The tmp-base registry (creation-time registration + atexit sweep) lives
-# in streaming/events.py next to _CKPT_DIR; everything a RETURNED
-# DataFrame does not read lazily is ALSO removed eagerly, in-fold and
-# post-drain (ADVICE r10 item 1, applied family-wide in round 11).
+# Every base and checkpoint lives in this process's temp home (tmputil),
+# removed at exit; everything a RETURNED DataFrame does not read lazily is
+# ALSO removed eagerly, in-fold and post-drain.
 
 
 def _run_versioned_fold_stream(
@@ -221,7 +216,7 @@ def _finish_versioned_stream(
     counter — it must survive a crash-resume), remove everything the
     returned DataFrame does not lazily read (feed, checkpoint, non-final
     snapshot versions — ADVICE r10 item 1) and return the final snapshot
-    (the base itself was registered for atexit removal at creation)."""
+    (the base itself stays in the temp home until exit)."""
     import glob as _glob
 
     vdirs = _glob.glob(os.path.join(base, "v[0-9]*"))
@@ -232,14 +227,10 @@ def _finish_versioned_stream(
         )
     final = os.path.join(base, f"v{top}")
     shutil.rmtree(os.path.join(base, "feed"), ignore_errors=True)
-    _remove_stream_tmp(ckpt)
+    shutil.rmtree(ckpt, ignore_errors=True)
     for d in vdirs:
         if d != final:
             shutil.rmtree(d, ignore_errors=True)
-    # base registration for atexit removal happens at mkdtemp time in the
-    # query functions (NOT here), so an error raised mid-stream still
-    # leaves the tree registered for cleanup — same pattern as
-    # stream_lsh_dedup_ttl (review r11, second pass)
     return spark.read.parquet(final)
 
 
@@ -324,10 +315,10 @@ def _cdc_fold_body(base: str):
     "max(struct), i.e. partial-aggregable.",
 )
 def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _tmp_stream_dir("cdc_")  # registered at creation: error paths covered
+    base = tmp_dir("cdc_")  # in the temp home: error paths covered
     feed_dir = os.path.join(base, "feed")
     schema = _write_cdc_feed(spark, sf_dir, feed_dir)
-    ckpt = _tmp_stream_dir("ckpt_cdc_", _CKPT_DIR)
+    ckpt = tmp_dir("ckpt_cdc_", _CKPT_DIR)
     _run_versioned_fold_stream(
         spark, schema, base, feed_dir + "/chg_*", ckpt, _cdc_fold_body(base)
     )
@@ -362,10 +353,10 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     "state).",
 )
 def stream_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _tmp_stream_dir("topk_")  # registered at creation: error paths covered
+    base = tmp_dir("topk_")  # in the temp home: error paths covered
     feed_dir = os.path.join(base, "feed")
     schema = _write_topk_feed(spark, sf_dir, feed_dir)
-    ckpt = _tmp_stream_dir("ckpt_topk_", _CKPT_DIR)
+    ckpt = tmp_dir("ckpt_topk_", _CKPT_DIR)
     _run_versioned_fold_stream(
         spark, schema, base, feed_dir + "/arr_*", ckpt, _topk_fold_body(base)
     )
@@ -461,10 +452,10 @@ def _topk_fold_body(base: str, k: int = 20):
     "kill-and-resume test.  Integer micros/cents.",
 )
 def stream_incremental_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _tmp_stream_dir("isess_")  # registered at creation: error paths covered
+    base = tmp_dir("isess_")  # in the temp home: error paths covered
     feed_dir = os.path.join(base, "feed")
     _write_isess_feed(spark, sf_dir, feed_dir)
-    ckpt = _tmp_stream_dir("ckpt_isess_", _CKPT_DIR)
+    ckpt = tmp_dir("ckpt_isess_", _CKPT_DIR)
     _run_versioned_fold_stream(
         spark,
         "user_id bigint, t_us bigint, cents bigint",
@@ -854,17 +845,17 @@ def stream_lsh_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
     from ..operators.dedup import with_shingles
 
-    base = _tmp_stream_dir("lshttl_")  # cand_b* is read lazily — atexit removal
+    base = tmp_dir("lshttl_")  # cand_b* is read lazily — removed at exit
     feed_dir = os.path.join(base, "feed")
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     if docs.limit(1).count() == 0:
         # day-one pipeline: an empty corpus streams to an empty index and
         # zero candidate pairs (the shard writer's loud empty-table error
         # is for the NON-degenerate path, where emptiness means a feed bug)
-        _remove_stream_tmp(base)
+        shutil.rmtree(base, ignore_errors=True)
         return spark.createDataFrame([], "doc_a long, doc_b long, jaccard double")
     _write_id_ordered_shards(docs, feed_dir)
-    ckpt = _tmp_stream_dir("ckpt_lshttl_", _CKPT_DIR)
+    ckpt = tmp_dir("ckpt_lshttl_", _CKPT_DIR)
     _run_lsh_ttl_stream(spark, docs.schema, base, ckpt)
     idx_dirs = _glob.glob(os.path.join(base, "idx_v*"))
     top = max((int(os.path.basename(d)[5:]) for d in idx_dirs), default=0)
@@ -873,12 +864,12 @@ def stream_lsh_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     # post-drain cleanup (ADVICE r10 item 1): the RETURNED DataFrame lazily
     # reads only cand_b*; the feed shards, the surviving index versions, and
     # the per-invocation checkpoint are dead weight once the stream drains.
-    # The base itself (candidate dirs) is removed at interpreter exit via
-    # the tmp-base registry (tmputil._TMP_BASES).
+    # The base itself (candidate dirs) is removed at interpreter exit with
+    # this process's temp home.
     shutil.rmtree(feed_dir, ignore_errors=True)
     for d in idx_dirs:
         shutil.rmtree(d, ignore_errors=True)
-    _remove_stream_tmp(ckpt)
+    shutil.rmtree(ckpt, ignore_errors=True)
 
     # exact-Jaccard verify on the accumulated candidates (batch side, after
     # the stream drains) — identical kernel to dedup_minhash_lsh's verify.

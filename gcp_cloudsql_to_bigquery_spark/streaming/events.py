@@ -16,6 +16,7 @@ runs a genuine StreamingQuery (incremental state, not a batch rewrite).
 from __future__ import annotations
 
 import os
+import shutil
 
 # Checkpoint root is a deployment parameter: durable storage (HDFS/S3) on a
 # real cluster, memory-backed tmpfs for local runs — the state store writes
@@ -23,30 +24,12 @@ import os
 # throwaway local checkpoint on spinning /tmp just benchmarks the disk.
 _CKPT_DIR = "/dev/shm" if os.path.isdir("/dev/shm") else None
 
-# Every streaming tmp path (checkpoints, watch dirs, snapshot bases) is
-# registered AT CREATION TIME in the package-wide registry (tmputil.py,
-# shared with the batch-side staging trees since round 12) and swept at
-# interpreter exit — so error paths, injected-crash tests, and
-# post-termination state-store stragglers never leak the tree (ADVICE r10
-# item 1, applied repo-wide in round 11).  Call sites ADDITIONALLY remove
-# paths eagerly as soon as they are provably unneeded (a memory-sink
-# query's checkpoint after termination, a feed dir after the stream
-# drains); paths a RETURNED DataFrame still reads lazily (a parquet sink,
-# the final v{N} snapshot, accumulated candidate dirs) stay until the
-# atexit hook runs.  Historical names kept as aliases — the streaming
-# modules and the round-11 witness tests call the helpers through them;
-# the registry itself is ``tmputil._TMP_BASES``.
-from ..tmputil import (  # noqa: E402
-    _cleanup_tmp_bases as _cleanup_stream_tmp_bases,
-    remove_tmp as _remove_stream_tmp,
-    tmp_dir as _tmp_stream_dir,
-)
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import events_physical_schema, normalize_events_ts
 from ..registry import register
+from ..tmputil import tmp_dir
 
 _MEMSINK_SEQ = 0
 
@@ -98,7 +81,7 @@ def run_to_completion(
     # raises (e.g. /dev/shm full) the shuffle-partition override must not
     # leak past this call — conf.set only happens once there is a matching
     # finally to restore it
-    ckpt = _tmp_stream_dir("ckpt_", _CKPT_DIR)
+    ckpt = tmp_dir("ckpt_", _CKPT_DIR)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     # COMPLETE-mode drains skip the trailing no-data micro-batch (r16):
@@ -129,8 +112,8 @@ def run_to_completion(
     # + per-partition state store) is dead weight once the query terminates
     # — remove it instead of leaking RAM-backed /dev/shm per invocation
     # (round 11; ignore_errors covers a straggling state-store maintenance
-    # write; the eager removal also drops the path from the atexit registry)
-    _remove_stream_tmp(ckpt)
+    # write)
+    shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 
 
@@ -318,7 +301,7 @@ def stream_processing_time_trigger(spark: SparkSession, sf_dir: str) -> DataFram
     _MEMSINK_SEQ += 1
     name = f"stream_out_{_MEMSINK_SEQ}"
     # mkdtemp before conf.set — same conf-leak guard as run_to_completion
-    ckpt = _tmp_stream_dir("ckpt_", _CKPT_DIR)
+    ckpt = tmp_dir("ckpt_", _CKPT_DIR)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
@@ -368,7 +351,7 @@ def stream_processing_time_trigger(spark: SparkSession, sf_dir: str) -> DataFram
             q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    _remove_stream_tmp(ckpt)  # memory sink holds the rows
+    shutil.rmtree(ckpt, ignore_errors=True)  # memory sink holds the rows
     return spark.table(name)
 
 
@@ -647,7 +630,7 @@ def stream_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").select("event_id", "ts", "event_type", "value")
     base_day = F.lit("2024-01-01").cast("date")
     day = F.datediff(F.col("ts").cast("date"), base_day)
-    watch = _tmp_stream_dir("late_watch_", _CKPT_DIR)
+    watch = tmp_dir("late_watch_", _CKPT_DIR)
     shards = [
         ("shard_1", day < 10),
         ("shard_2", (day >= 10) & (day < 20)),
@@ -679,7 +662,7 @@ def stream_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = run_to_completion(agg, spark, output_mode="append")
     # the memory sink holds the emitted windows — the RAM-backed watch-dir
     # event shards are dead weight once the stream drains (round 11)
-    _remove_stream_tmp(watch)
+    shutil.rmtree(watch, ignore_errors=True)
     return out.select(
         F.col("window.start").alias("win_start"), "event_type", "n", "id_sum"
     )
@@ -723,9 +706,9 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load(spark, sf_dir, "events").select("event_id", "ts", "event_type", "value")
     day = F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
-    watch = _tmp_stream_dir("resume_watch_", _CKPT_DIR)
-    ckpt = _tmp_stream_dir("resume_ckpt_", _CKPT_DIR)
-    sink = _tmp_stream_dir("resume_sink_", _CKPT_DIR)
+    watch = tmp_dir("resume_watch_", _CKPT_DIR)
+    ckpt = tmp_dir("resume_ckpt_", _CKPT_DIR)
+    sink = tmp_dir("resume_sink_", _CKPT_DIR)
 
     def write_shard(df: DataFrame, name: str, mtime: int) -> None:
         path = os.path.join(watch, name)
@@ -774,9 +757,9 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # resume is over: the watch shards and the checkpoint are dead weight;
     # the parquet SINK is what the returned DataFrame lazily reads — it
-    # stays, swept at interpreter exit via its creation-time registration
-    _remove_stream_tmp(watch)
-    _remove_stream_tmp(ckpt)
+    # stays in the temp home until interpreter exit
+    shutil.rmtree(watch, ignore_errors=True)
+    shutil.rmtree(ckpt, ignore_errors=True)
     out = spark.read.parquet(sink)
     return out.select(
         F.col("window.start").alias("win_start"), "event_type", "n", "id_sum"

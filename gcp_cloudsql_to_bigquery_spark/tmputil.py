@@ -1,70 +1,65 @@
-"""Shared tmp-tree lifecycle: creation-time atexit registration + a
-crash-ledger janitor for processes that never reach atexit.
+"""One private temp home per process for every engine temp tree.
 
-Every ``mkdtemp`` in this package — streaming checkpoints/watch dirs AND
-batch-side staging trees (ingest exports, the Derby database dir, the dedup
-fingerprint index, file-format round-trip stages) — allocates through
-:func:`tmp_dir`, which registers the path for removal at interpreter exit.
-Call sites additionally remove paths eagerly (via :func:`remove_tmp`, which
-also DEREGISTERS) as soon as they are provably unneeded; trees a returned
-DataFrame still reads lazily stay registered until the atexit sweep.
+Every scratch tree the engine writes (ELT exports and staging trees, stream
+checkpoints, watch dirs and sinks, the Derby database dir, the dedup
+fingerprint index, the Python-channel sockets) is allocated by
+:func:`tmp_dir` inside this process's *home*: a 0700 directory named
+``sg<pid>_XXXXXXXX`` directly under a root.  The roots are the temp root,
+``/dev/shm`` for stream checkpoints and ``/tmp`` for socket paths too long
+under the temp root.  A home is made lazily, once per root, and made again
+when something outside the engine has removed it.
 
-Why registration-only is the right contract for the batch trees: most of
-them back a lazily-evaluated DataFrame that the caller (driver, tests,
-bench) consumes after the query function returns, so eager removal is
-impossible at the allocation site — but a long-lived process (a 375-query
-registry build) should still exit clean rather than leaving hundreds of
-/tmp trees to the OS janitor.  (VERDICT r11 item 2; the streaming half of
-this class was closed in round 11, ADVICE r10 item 1.)
+Cleanup needs no record of what was allocated, because a home's name says
+whose it is:
 
-CRASH LEDGER (round 12): atexit cannot run under SIGKILL — and harness
-drivers DO hard-kill timed-out workers (observed: one killed full-registry
-run left ~2000 checkpoint dirs = hundreds of MB of RAM-backed /dev/shm in
-a single event).  So every allocation is ALSO appended, write-through, to
-a per-PID ledger file on disk (``$TMPDIR/spark_graft_tmp_ledger/<pid>.lst``).
-:func:`reap_stale_tmp` runs at import in every new engine process: any
-ledger whose owning PID is no longer alive has its listed trees removed
-and the ledger deleted.  PID liveness (not age) is the reap criterion, so
-a concurrent live process can never lose its trees; a recycled PID merely
-defers reaping to a later process (conservative direction).  A clean exit
-unlinks its own ledger after the atexit sweep, so steady state is an
-empty ledger dir.
+- at exit, an atexit hook removes this process's homes;
+- a process that never reaches atexit (SIGKILL, ``os._exit``) leaves its
+  homes behind, and every new engine process removes them at import
+  (:func:`reap_stale_tmp`).  Only a real directory of this user's with a
+  home's name, no group or other permission bits and a PID that is neither
+  this process nor alive is removed.  Liveness, not age, decides: a
+  concurrent process never loses a tree, and a recycled PID only defers
+  the reap.
+
+Call sites still remove a tree with ``shutil.rmtree`` as soon as nothing
+reads it; a tree that a returned DataFrame reads lazily stays until exit.
+A forked child starts with no homes, so it neither reuses nor removes its
+parent's.
 """
 
 from __future__ import annotations
 
 import atexit
 import os
+import re
 import shutil
 import stat
 import tempfile
 
-# Single shared registry of every tmp base, batch and streaming alike.
-_TMP_BASES: list[str] = []
+# "sg" + PID + "_" is at most 10 characters for any PID up to 4194304 (the
+# kernel's pid_max ceiling); mkdtemp appends 8 characters of this alphabet
+_HOME_NAME = re.compile(r"sg(\d+)_[a-z0-9_]{8}")
 
-_LEDGER_DIR = os.path.join(tempfile.gettempdir(), "spark_graft_tmp_ledger")
-
-# where short_tmp_dir allocates when the temp root's path is too long; a
-# reap root besides the temp root, for the trees the ledger lists there
+# where a short home lives when the temp root's path is too long for a socket
 _SHORT_ROOT = "/tmp"
 
-
-def _ledger_path() -> str:
-    # computed per call, not at import: a forked child must append to (and
-    # at exit unlink) ITS OWN ledger, never the parent's
-    return os.path.join(_LEDGER_DIR, f"{os.getpid()}.lst")
+_homes: dict[str, str] = {}  # root -> this process's home under it
 
 
-def _ledger_dir_is_private() -> bool:
-    """The ledger dir is a real directory of this user's that no one else
-    can write to.  Under a shared temp root another user could create it
-    and plant a dead PID's ledger naming any tree under a reap root, so a
-    ledger dir failing this is neither read nor written."""
-    try:
-        st = os.lstat(_LEDGER_DIR)
-    except OSError:
-        return False
-    return stat.S_ISDIR(st.st_mode) and st.st_uid == os.getuid() and not st.st_mode & 0o022
+def home(root: str | None = None) -> str:
+    """This process's private home under ``root`` (default: the temp root)."""
+    root = root or tempfile.gettempdir()
+    path = _homes.get(root)
+    if path is None or not os.path.isdir(path):
+        path = _homes[root] = tempfile.mkdtemp(prefix=f"sg{os.getpid()}_", dir=root)
+        os.chmod(path, 0o700)  # mkdtemp's mode is 0700 less the umask
+    return path
+
+
+def tmp_dir(prefix: str, root: str | None = None) -> str:
+    """A new directory inside this process's home under ``root``: the only
+    way package code should allocate a temp tree."""
+    return tempfile.mkdtemp(prefix=prefix, dir=home(root))
 
 
 def _pid_alive(pid: int) -> bool:
@@ -73,126 +68,45 @@ def _pid_alive(pid: int) -> bool:
     except ProcessLookupError:
         return False
     except PermissionError:
-        return True  # alive, owned by someone else — never reap
+        return True  # alive, owned by someone else
     return True
 
 
-# Every ledger line is terminated with this marker BEFORE the newline: a
-# SIGKILL can land mid-append, truncating the last line to a PREFIX of the
-# real path (e.g. "/tmp/cdc_abc1234" -> "/tmp/cd"), and rmtree'ing that
-# prefix could delete an innocent sibling tree.  A line without the marker
-# is provably incomplete and skipped (the partially-recorded tree is the
-# only thing leaked — the failure mode shrinks from "delete wrong tree"
-# to "leak one tree", the safe direction).
-_LINE_END = "\t#"
-
-
-def _reap_roots() -> tuple[str, ...]:
-    roots = [os.path.realpath(tempfile.gettempdir()), os.path.realpath(_SHORT_ROOT)]
-    if os.path.isdir("/dev/shm"):
-        roots.append(os.path.realpath("/dev/shm"))
-    return tuple(roots)
-
-
 def reap_stale_tmp() -> list[str]:
-    """Remove every tree listed in a ledger whose owning process is dead;
-    return the paths removed.  Safe under concurrency: live PIDs are never
-    touched, and two janitors racing on the same dead ledger both run
-    idempotent ignore-errors removals.  Defense-in-depth: only complete
-    (marker-terminated) lines are honored, and only paths that are direct
-    children of a known tmp root — a corrupt ledger can leak a tree but
-    never delete outside the allocation roots."""
-    removed: list[str] = []
-    if not _ledger_dir_is_private():
-        return removed
-    roots = _reap_roots()
-    for name in os.listdir(_LEDGER_DIR):
-        stem, ext = os.path.splitext(name)
-        if ext != ".lst" or not stem.isdigit():
-            continue
-        pid = int(stem)
-        if pid == os.getpid() or _pid_alive(pid):
-            continue
-        ledger = os.path.join(_LEDGER_DIR, name)
+    """Remove the homes of dead processes under every root; return their
+    paths.  An entry that is a symlink, is not this user's, or that group or
+    others could have written into is never removed."""
+    removed = []
+    for root in dict.fromkeys((tempfile.gettempdir(), "/dev/shm", _SHORT_ROOT)):
         try:
-            with open(ledger) as fh:
-                lines = fh.read().splitlines()
+            names = os.listdir(root)
         except OSError:
             continue
-        for line in lines:
-            if not line.endswith(_LINE_END):
-                continue  # truncated by the crash mid-append — skip
-            p = line[: -len(_LINE_END)]
-            if os.path.dirname(os.path.realpath(p)) not in roots:
+        for name in names:
+            m = _HOME_NAME.fullmatch(name)
+            if m is None:
                 continue
-            if p and os.path.lexists(p):
-                shutil.rmtree(p, ignore_errors=True)
-                removed.append(p)
-        try:
-            os.unlink(ledger)
-        except OSError:
-            pass
+            pid = int(m.group(1))
+            if pid == os.getpid() or _pid_alive(pid):
+                continue
+            path = os.path.join(root, name)
+            try:
+                st = os.lstat(path)
+            except OSError:
+                continue
+            if stat.S_ISDIR(st.st_mode) and st.st_uid == os.getuid() and not st.st_mode & 0o077:
+                shutil.rmtree(path, ignore_errors=True)
+                removed.append(path)
     return removed
 
 
-def _ledger_append(path: str) -> None:
-    # write-through, flushed per allocation: the ledger must be complete at
-    # the instant a SIGKILL lands.  Best-effort — a full disk must not turn
-    # tmp allocation into a hard failure (the allocation itself succeeded).
-    try:
-        os.makedirs(_LEDGER_DIR, mode=0o700, exist_ok=True)
-        if not _ledger_dir_is_private():
-            return
-        with open(_ledger_path(), "a") as fh:
-            fh.write(path + _LINE_END + "\n")
-    except OSError:
-        pass
+def _remove_homes() -> None:
+    while _homes:
+        shutil.rmtree(_homes.popitem()[1], ignore_errors=True)
 
 
-def _cleanup_tmp_bases() -> None:
-    while _TMP_BASES:
-        shutil.rmtree(_TMP_BASES.pop(), ignore_errors=True)
-    try:
-        os.unlink(_ledger_path())  # clean exit: nothing left to crash-reap
-    except OSError:
-        pass
+atexit.register(_remove_homes)
+os.register_at_fork(after_in_child=_homes.clear)
 
-
-atexit.register(_cleanup_tmp_bases)
-
-
-def tmp_dir(prefix: str, parent: str | None = None) -> str:
-    """``mkdtemp`` + registration in the shared atexit registry + a
-    write-through crash-ledger entry — the only way package code should
-    allocate a tmp dir."""
-    path = tempfile.mkdtemp(prefix=prefix, dir=parent)
-    _TMP_BASES.append(path)
-    _ledger_append(path)
-    return path
-
-
-def short_tmp_dir(prefix: str, max_len: int) -> str:
-    """:func:`tmp_dir` whose path is at most ``max_len`` bytes long: under
-    the temp root when ``mkdtemp``'s name there fits, else under ``/tmp``
-    (for paths with a length limit, such as AF_UNIX sockets)."""
-    # mkdtemp appends 8 characters to the prefix
-    longest = os.path.join(tempfile.gettempdir(), prefix + "x" * 8)
-    return tmp_dir(prefix, None if len(os.fsencode(longest)) <= max_len else _SHORT_ROOT)
-
-
-def remove_tmp(path: str) -> None:
-    """Eager removal of a REGISTERED tmp tree: rmtree + drop it from the
-    atexit registry, so the registry holds only genuinely live trees
-    instead of growing unboundedly across a long-lived process and the
-    list reads as an inventory of what is actually on disk.  (The ledger
-    line stays — stale lines are harmless no-ops at reap time.)"""
-    shutil.rmtree(path, ignore_errors=True)
-    try:
-        _TMP_BASES.remove(path)
-    except ValueError:
-        pass
-
-
-# Repair prior crashes on module load: every new engine process is a
-# janitor for dead ones.  One listdir in the common case (empty dir).
+# every new engine process is the janitor for dead ones
 reap_stale_tmp()

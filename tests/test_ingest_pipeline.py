@@ -153,11 +153,9 @@ def test_warehouse_write_config_driven_bigquery_options(spark, sf_dir):
         )
 
 
-def test_load_table_observed_single_pass_qa(spark, sf_dir):
+def test_load_table_observed_single_pass_qa(spark, sf_dir, tmp_path):
     # op #21 upgrade: QA metrics ride the load action itself (no second
     # scan); the observation must match a direct recount
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from gcp_cloudsql_to_bigquery_spark.catalog import load as cat_load
@@ -174,7 +172,7 @@ def test_load_table_observed_single_pass_qa(spark, sf_dir):
             F.nullif(F.col("o_orderstatus"), F.lit("O")).alias("status_or_null"),
         )
     )
-    base = tempfile.mkdtemp(prefix="obs_")
+    base = str(tmp_path)
     data_path, schema_path = export_table(src, base, "orders_obs")
     observed, obs = load_table_observed(spark, data_path, schema_path)
     n = observed.count()  # the "load" action — metrics ride along

@@ -28,43 +28,41 @@ SF = "/root/testdata/sf0.001"
 
 
 def _bases_added_during(prefix, fn):
-    """Run fn(); return (result, the tmp paths STILL REGISTERED after the
-    call that were registered during it, basename-prefix filtered).  Set
-    diff, not index slicing: eager removal now prunes the registry mid-call
-    (round 12), so positions are not stable."""
-    from gcp_cloudsql_to_bigquery_spark.tmputil import _TMP_BASES
+    """Run fn(); return (result, the trees fn left in this process's temp
+    home, basename-prefix filtered).  Eagerly removed trees are gone from
+    the home before fn returns, so they are not listed."""
+    from gcp_cloudsql_to_bigquery_spark.tmputil import home
 
-    before = set(_TMP_BASES)
+    before = set(os.listdir(home()))
     result = fn()
     added = [
-        p
-        for p in _TMP_BASES
-        if p not in before and os.path.basename(p).startswith(prefix)
+        os.path.join(home(), n)
+        for n in os.listdir(home())
+        if n not in before and n.startswith(prefix)
     ]
     return result, added
 
 
 def _tmp_dirs_created_during(prefix, fn):
     """Like _bases_added_during but captures EVERY allocation (including
-    paths eagerly removed — and deregistered — before fn returns) by
-    wrapping the allocator.  Only sees call sites that resolve
-    _tmp_stream_dir through the events module at call time (i.e. functions
-    living in streaming/events.py itself)."""
+    paths eagerly removed before fn returns) by wrapping the allocator.
+    Only sees call sites that resolve tmp_dir through the events module at
+    call time (i.e. functions living in streaming/events.py itself)."""
     from gcp_cloudsql_to_bigquery_spark.streaming import events as _ev
 
     created = []
-    orig = _ev._tmp_stream_dir
+    orig = _ev.tmp_dir
 
-    def recording(pfx, parent=None):
-        p = orig(pfx, parent)
+    def recording(pfx, root=None):
+        p = orig(pfx, root)
         created.append(p)
         return p
 
-    _ev._tmp_stream_dir = recording
+    _ev.tmp_dir = recording
     try:
         result = fn()
     finally:
-        _ev._tmp_stream_dir = orig
+        _ev.tmp_dir = orig
     return result, [p for p in created if os.path.basename(p).startswith(prefix)]
 
 
@@ -160,12 +158,12 @@ def test_lshttl_doc_states_lsh_miss_probability():
 def test_lshttl_post_drain_cleanup_and_atexit_hook(spark):
     """After the stream drains, the base holds ONLY the candidate dirs the
     returned DataFrame still reads (feed, all idx versions, and the
-    checkpoint are gone); the atexit hook then removes the base itself."""
-    from gcp_cloudsql_to_bigquery_spark.streaming.elt import (
-        _remove_stream_tmp,
-        stream_lsh_dedup_ttl,
-    )
-    from gcp_cloudsql_to_bigquery_spark.tmputil import _TMP_BASES
+    checkpoint are gone); the base itself stays in the temp home, which
+    the atexit hook removes."""
+    import shutil
+
+    from gcp_cloudsql_to_bigquery_spark.streaming.elt import stream_lsh_dedup_ttl
+    from gcp_cloudsql_to_bigquery_spark.tmputil import home
 
     df, bases = _bases_added_during("lshttl_", lambda: stream_lsh_dedup_ttl(spark, SF))
     (base,) = bases
@@ -173,13 +171,10 @@ def test_lshttl_post_drain_cleanup_and_atexit_hook(spark):
     entries = sorted(os.listdir(base))
     assert entries == [e for e in entries if e.startswith("cand_b")], entries
     assert entries, "candidate dirs must exist until the result is consumed"
-    # remove ONLY this test's base (ADVICE r11 item 2: draining the GLOBAL
-    # registry here would rmtree live trees other tests in the same session
-    # still read lazily); _remove_stream_tmp is exactly the per-entry step
-    # the atexit sweep's pop loop performs
-    assert base in _TMP_BASES
-    _remove_stream_tmp(base)
-    assert base not in _TMP_BASES
+    # remove ONLY this test's base: removing the whole home here would
+    # rmtree live trees other tests in the same session still read lazily
+    assert os.path.dirname(base) == home()
+    shutil.rmtree(base)
     assert not os.path.exists(base)
 
 
@@ -393,16 +388,11 @@ def test_memory_sink_checkpoint_removed_after_termination(spark, qname):
     returned DataFrame must still be fully consumable afterwards."""
     from gcp_cloudsql_to_bigquery_spark.registry import REGISTRY
 
-    from gcp_cloudsql_to_bigquery_spark.tmputil import _TMP_BASES
-
     df, ckpts = _tmp_dirs_created_during(
         "ckpt_", lambda: REGISTRY[qname].fn(spark, SF)
     )
-    assert ckpts, "checkpoint should be allocated through _tmp_stream_dir"
+    assert ckpts, "checkpoint should be allocated through tmputil.tmp_dir"
     assert not any(os.path.exists(c) for c in ckpts), ckpts
-    # eager removal also deregisters (ADVICE r11 item 3): the registry holds
-    # only live trees, so a long-lived process doesn't accumulate dead paths
-    assert not any(c in _TMP_BASES for c in ckpts), ckpts
     assert df.count() > 0  # memory sink independent of the checkpoint
 
 
@@ -422,8 +412,8 @@ def test_checkpoint_resume_keeps_only_the_lazy_sink(spark):
     gone; the parquet sink — the only thing the returned DataFrame reads —
     survives until the atexit sweep."""
     from gcp_cloudsql_to_bigquery_spark.registry import REGISTRY
-
-    from gcp_cloudsql_to_bigquery_spark.tmputil import _TMP_BASES
+    from gcp_cloudsql_to_bigquery_spark.streaming.events import _CKPT_DIR
+    from gcp_cloudsql_to_bigquery_spark.tmputil import home
 
     df, paths = _tmp_dirs_created_during(
         "resume_", lambda: REGISTRY["stream_checkpoint_resume"].fn(spark, SF)
@@ -433,10 +423,8 @@ def test_checkpoint_resume_keeps_only_the_lazy_sink(spark):
     assert not os.path.exists(by_kind["watch"])
     assert not os.path.exists(by_kind["ckpt"])
     assert os.path.exists(by_kind["sink"])
-    # only the lazily-read sink stays registered for the atexit sweep
-    assert by_kind["sink"] in _TMP_BASES
-    assert by_kind["watch"] not in _TMP_BASES
-    assert by_kind["ckpt"] not in _TMP_BASES
+    # the lazily-read sink stays in the checkpoint root's home until exit
+    assert os.path.dirname(by_kind["sink"]) == home(_CKPT_DIR)
     assert df.count() > 0
 
 
@@ -468,7 +456,7 @@ def test_finish_versioned_stream_fold_count_from_disk(spark, tmp_path):
     from gcp_cloudsql_to_bigquery_spark.streaming.elt import (
         _finish_versioned_stream,
     )
-    from gcp_cloudsql_to_bigquery_spark.tmputil import _TMP_BASES
+    from gcp_cloudsql_to_bigquery_spark.tmputil import home
 
     base = str(tmp_path / "b")
     for v in (1, 2):
@@ -477,13 +465,13 @@ def test_finish_versioned_stream_fold_count_from_disk(spark, tmp_path):
         _finish_versioned_stream(spark, base, str(tmp_path / "c"), 3, "t")
 
     spark.range(5).write.parquet(os.path.join(base, "v3"))
-    n_before = len(_TMP_BASES)
+    home_before = os.listdir(home())
     out = _finish_versioned_stream(spark, base, str(tmp_path / "c"), 3, "t")
     assert out.count() == 5
     assert os.listdir(base) == ["v3"]  # superseded versions removed
-    # atexit registration happens at mkdtemp time in the query functions
-    # (error paths stay covered), NOT in the epilogue (review r11 pass 2)
-    assert len(_TMP_BASES) == n_before
+    # the query functions allocate the base in the temp home (error paths
+    # stay covered); the epilogue allocates nothing
+    assert sorted(os.listdir(home())) == sorted(home_before)
 
 
 @pytest.mark.parametrize("seed", [11, 22, 33])

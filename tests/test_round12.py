@@ -4,20 +4,19 @@
    BEFORE the session shuffle-partition override in run_to_completion and
    stream_processing_time_trigger: an allocator failure (/dev/shm full)
    can no longer leak the override past the call.
-2. ADVICE r11 item 3 — eager tmp removal also DEREGISTERS the path
-   (``_remove_stream_tmp``), so ``tmputil._TMP_BASES`` stays an inventory
-   of genuinely live trees instead of growing unboundedly across a
-   long-lived process (a full registry build allocates hundreds).
-   (ADVICE r11 item 2 — the r11 cleanup test no longer drains the global
-   registry — is witnessed in test_round11.py itself.)
-3. VERDICT r11 item 2 — batch-side ``mkdtemp`` trees (ingest staging,
-   the Derby database dir, the dedup fingerprint index) register in the
-   same shared atexit registry; lazily-read trees are registration-only.
+2. Every temp tree, batch-side (ingest staging, the Derby database dir,
+   the dedup fingerprint index) and streaming alike, lives in this
+   process's private temp home (``tmputil.home``), removed at exit; a
+   fully cleaned query leaves its home as it found it.
+3. A process that never reaches atexit leaves its homes behind, and the
+   next engine process removes them at import — only real, private homes
+   of this user's whose PID is dead.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 
 import pytest
@@ -62,33 +61,14 @@ def test_processing_time_trigger_conf_restored_when_mkdtemp_fails(
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
 
 
-# --- ADVICE r11 item 3: registry holds only live trees -----------------------
-
-
-def test_remove_stream_tmp_unregistered_path_is_noop(tmp_path):
-    """Removing a path that was never registered (or already deregistered)
-    still clears the disk and must not raise or disturb the registry."""
-    from gcp_cloudsql_to_bigquery_spark.streaming.events import (
-        _remove_stream_tmp,
-    )
-    from gcp_cloudsql_to_bigquery_spark.tmputil import _TMP_BASES
-
-    p = str(tmp_path / "never_registered")
-    os.makedirs(p)
-    before = list(_TMP_BASES)
-    _remove_stream_tmp(p)
-    assert not os.path.exists(p)
-    assert _TMP_BASES == before
-
-
-# --- VERDICT r11 item 2: batch-side mkdtemp trees registered ------------------
+# --- every temp tree lives in this process's home ------------------------------
 
 
 def test_no_unregistered_mkdtemp_in_package():
     """Every tmp-dir allocation in the package routes through
-    tmputil.tmp_dir (creation-time atexit registration) — the grep the
-    VERDICT r11 done-criterion names, but AST-based so a comment or
-    docstring that spells out the call can't false-positive the suite."""
+    tmputil.tmp_dir, so it lands in this process's temp home — AST-based so
+    a comment or docstring that spells out the call can't false-positive
+    the suite."""
     import ast
 
     import gcp_cloudsql_to_bigquery_spark as pkg
@@ -116,56 +96,63 @@ def test_no_unregistered_mkdtemp_in_package():
     assert offenders == []
 
 
+def _home_added_during(prefix, fn, root=None):
+    """Run fn(); return (result, the trees fn left in this process's home
+    under ``root``, basename-prefix filtered)."""
+    from gcp_cloudsql_to_bigquery_spark.tmputil import home
+
+    before = set(os.listdir(home(root)))
+    result = fn()
+    added = [
+        os.path.join(home(root), n)
+        for n in os.listdir(home(root))
+        if n not in before and n.startswith(prefix)
+    ]
+    return result, added
+
+
 def test_batch_staging_tree_registered_for_atexit(spark):
     """A batch ELT query's lazily-read staging tree (impossible to remove
-    eagerly — the returned DataFrame reads it) is registered in the shared
-    atexit registry at creation time."""
+    eagerly — the returned DataFrame reads it) is made inside this
+    process's temp home, which the atexit hook removes."""
     from gcp_cloudsql_to_bigquery_spark import workload  # noqa: F401 (import populates REGISTRY)
     from gcp_cloudsql_to_bigquery_spark.registry import REGISTRY
-    from gcp_cloudsql_to_bigquery_spark.tmputil import _TMP_BASES
 
-    before = set(_TMP_BASES)
-    df = REGISTRY["elt_roundtrip_nation"].fn(spark, SF)
+    df, added = _home_added_during(
+        "elt_nation_", lambda: REGISTRY["elt_roundtrip_nation"].fn(spark, SF)
+    )
     assert df.count() > 0
-    added = [
-        p
-        for p in _TMP_BASES
-        if p not in before and os.path.basename(p).startswith("elt_nation_")
-    ]
-    assert added, "staging tree must be registered at creation"
+    assert added, "staging tree must be made inside the home"
     assert all(os.path.exists(p) for p in added)
 
 
 def test_derby_db_dir_registered_for_atexit(spark):
-    """The live-JDBC round-trip's Derby database dir registers too."""
+    """The live-JDBC round-trip's Derby database dir lives in the home too."""
     from gcp_cloudsql_to_bigquery_spark import workload  # noqa: F401 (import populates REGISTRY)
     from gcp_cloudsql_to_bigquery_spark.registry import REGISTRY
-    from gcp_cloudsql_to_bigquery_spark.tmputil import _TMP_BASES
 
-    before = set(_TMP_BASES)
-    df = REGISTRY["src_jdbc_roundtrip"].fn(spark, SF)
+    df, added = _home_added_during(
+        "derby_", lambda: REGISTRY["src_jdbc_roundtrip"].fn(spark, SF)
+    )
     assert df.count() > 0
-    added = [
-        p
-        for p in _TMP_BASES
-        if p not in before and os.path.basename(p).startswith("derby_")
-    ]
-    assert added, "Derby db dir must be registered at creation"
+    assert added, "Derby db dir must be made inside the home"
+
+
+def _repo_root() -> str:
+    import gcp_cloudsql_to_bigquery_spark as pkg
+
+    return os.path.dirname(os.path.dirname(os.path.abspath(pkg.__file__)))
 
 
 def test_atexit_sweep_runs_on_real_interpreter_exit(tmp_path):
-    """The registration contract, executed end to end: a subprocess
-    allocates through tmputil.tmp_dir and exits normally WITHOUT removing
-    the tree — the atexit hook must have swept it.  (The in-process tests
-    can only witness registration; this witnesses the sweep itself.)"""
+    """The exit contract, executed end to end: a subprocess allocates
+    through tmputil.tmp_dir and exits normally WITHOUT removing the tree —
+    the atexit hook must have removed the tree and its home."""
     import subprocess
     import sys as _sys
 
-    import gcp_cloudsql_to_bigquery_spark as pkg
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(pkg.__file__)))
     script = (
-        f"import sys; sys.path.insert(0, {repo_root!r})\n"
+        f"import sys; sys.path.insert(0, {_repo_root()!r})\n"
         "from gcp_cloudsql_to_bigquery_spark.tmputil import tmp_dir\n"
         "import os\n"
         "p = tmp_dir('atexit_witness_')\n"
@@ -176,167 +163,146 @@ def test_atexit_sweep_runs_on_real_interpreter_exit(tmp_path):
         [_sys.executable, "-c", script], capture_output=True, text=True, check=True
     )
     path = out.stdout.strip().splitlines()[-1]
-    assert path.startswith(tempfile.gettempdir()) or path.startswith("/dev/shm")
-    assert not os.path.exists(path), "atexit sweep must remove the registered tree"
+    home = os.path.dirname(path)
+    assert os.path.dirname(home) == tempfile.gettempdir()
+    assert not os.path.exists(path), "atexit sweep must remove the tree"
+    assert not os.path.exists(home), "atexit sweep must remove the home"
 
 
 def test_registry_net_growth_zero_for_fully_cleaned_query(spark):
     """stream_tumbling_window's only tmp allocation (the memory-sink
-    checkpoint) is eagerly removed AND deregistered: zero net registry
-    growth per invocation — the property that keeps the atexit list
-    bounded over a 375-query registry build."""
+    checkpoint) is removed eagerly: the query leaves both homes it could
+    touch as it found them — the property that keeps a 375-query registry
+    build from piling up trees until exit."""
     from gcp_cloudsql_to_bigquery_spark.registry import REGISTRY
-    from gcp_cloudsql_to_bigquery_spark.tmputil import _TMP_BASES
+    from gcp_cloudsql_to_bigquery_spark.streaming.events import _CKPT_DIR
+    from gcp_cloudsql_to_bigquery_spark.tmputil import home
 
-    before = set(_TMP_BASES)
+    before = {r: set(os.listdir(home(r))) for r in (None, _CKPT_DIR)}
     df = REGISTRY["stream_tumbling_window"].fn(spark, SF)
     assert df.count() > 0
-    assert [p for p in _TMP_BASES if p not in before] == []
+    assert {r: set(os.listdir(home(r))) for r in (None, _CKPT_DIR)} == before
 
 
-# --- property net: the registry is exactly the live allocations ---------------
+def test_forked_child_keeps_parent_homes():
+    """A forked child starts with no homes: it makes its own, and its
+    atexit sweep removes only that one, never the parent's."""
+    import subprocess
+    import sys as _sys
+
+    script = (
+        f"import sys; sys.path.insert(0, {_repo_root()!r})\n"
+        "import os\n"
+        "from gcp_cloudsql_to_bigquery_spark.tmputil import home\n"
+        "mine = home()\n"
+        "r, w = os.pipe()\n"
+        "pid = os.fork()\n"
+        "if pid == 0:\n"
+        "    os.write(w, home().encode()); sys.exit(0)\n"
+        "os.waitpid(pid, 0)\n"
+        "child = os.read(r, 4096).decode()\n"
+        "print(mine != child, os.path.isdir(mine), os.path.exists(child))\n"
+    )
+    out = subprocess.run(
+        [_sys.executable, "-c", script], capture_output=True, text=True, check=True
+    )
+    assert out.stdout.split() == ["True", "True", "False"]
 
 
-def test_tmputil_registry_property_random_interleavings():
-    """Seeded property net over random alloc/remove interleavings: after
-    any operation sequence, the registry segment this test added holds
-    EXACTLY the allocated-and-not-removed paths, each existing on disk;
-    removal of foreign (never-registered) paths never disturbs it.  The
-    model is a plain set; divergence means the registry stopped being an
-    inventory of live trees (the ADVICE r11 item 3 contract)."""
-    import random
-    import shutil
+# --- reaping the homes of processes that never reached atexit ------------------
 
-    from gcp_cloudsql_to_bigquery_spark.tmputil import _TMP_BASES, remove_tmp, tmp_dir
-
-    for seed in (7, 23, 1108):
-        r = random.Random(seed)
-        before = set(_TMP_BASES)
-        model, foreign = set(), []
-        try:
-            for _ in range(60):
-                op = r.random()
-                if op < 0.5 or not model:
-                    model.add(tmp_dir("prop_"))
-                elif op < 0.85:
-                    p = r.choice(sorted(model))
-                    remove_tmp(p)
-                    model.discard(p)
-                else:
-                    f = tempfile.mkdtemp(prefix="prop_foreign_")
-                    foreign.append(f)
-                    remove_tmp(f)  # never registered: disk-only removal
-                added = [p for p in _TMP_BASES if p not in before]
-                assert sorted(added) == sorted(model), (seed, added, model)
-                assert all(os.path.isdir(p) for p in added)
-        finally:
-            for p in list(model):
-                remove_tmp(p)
-            for f in foreign:
-                shutil.rmtree(f, ignore_errors=True)
-        assert [p for p in _TMP_BASES if p not in before] == []
+# PID 2**22+1 exceeds the kernel's pid_max ceiling and can never be alive
+DEAD_HOME = f"sg{2**22 + 1}_abcd1234"
 
 
-# --- crash ledger: repair for SIGKILLed processes (atexit never ran) ----------
+def _fake_home(root, name=DEAD_HOME, mode=0o700):
+    path = os.path.join(str(root), name)
+    os.mkdir(path)
+    os.chmod(path, mode)
+    open(os.path.join(path, "payload"), "w").write("x")
+    return path
 
 
-def test_reap_removes_dead_pid_ledger_trees():
-    """A ledger naming a dead PID gets its complete, root-anchored entries
-    removed and is itself deleted; a line truncated mid-append (no
-    terminator — the SIGKILL-during-write case) and a path outside the
-    allocation roots are both SKIPPED, never rmtree'd: ledger corruption
-    can leak a tree but cannot delete the wrong one."""
-    import shutil
-
+def test_reap_removes_dead_pid_home(tmp_path, monkeypatch):
+    """A private home whose PID is dead is removed with its contents; an
+    entry whose name is not exactly a home's is left alone, whatever its
+    PID."""
     from gcp_cloudsql_to_bigquery_spark import tmputil
 
-    victim = tempfile.mkdtemp(prefix="reap_victim_")  # direct child of the root
-    open(os.path.join(victim, "payload"), "w").write("x")
-    decoy = tempfile.mkdtemp(prefix="reap_decoy_")  # prefix-collision target
-    truncated = decoy  # a complete path, but written WITHOUT the terminator
-    outside = tempfile.mkdtemp(prefix="nested_", dir=decoy)  # not a root child
-    # PID 2**22+1 exceeds the default pid_max and can never be alive
-    dead = os.path.join(tmputil._LEDGER_DIR, f"{2**22 + 1}.lst")
-    os.makedirs(tmputil._LEDGER_DIR, exist_ok=True)
-    try:
-        with open(dead, "w") as fh:
-            fh.write(victim + tmputil._LINE_END + "\n")
-            fh.write(truncated + "\n")  # no terminator: crash mid-append
-            fh.write(outside + tmputil._LINE_END + "\n")
-        removed = tmputil.reap_stale_tmp()
-        assert victim in removed
-        assert not os.path.exists(victim)
-        assert os.path.exists(decoy), "unterminated line must not be reaped"
-        assert os.path.exists(outside), "non-root-child must not be reaped"
-        assert not os.path.exists(dead)
-    finally:
-        shutil.rmtree(decoy, ignore_errors=True)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    dead = _fake_home(tmp_path)
+    near_misses = [
+        _fake_home(tmp_path, n)
+        for n in (f"sg{2**22 + 1}_abc", f"sg{2**22 + 1}_abcd12345", "sgx_abcd1234",
+                  "pysock_abcd1234", f"xsg{2**22 + 1}_abcd1234")
+    ]
+    assert dead in tmputil.reap_stale_tmp()
+    assert not os.path.exists(dead)
+    assert all(os.path.isdir(p) for p in near_misses)
 
 
-@pytest.mark.parametrize("foreign", ["other_writable", "other_owner"])
-def test_ledger_dir_others_can_write_is_ignored(tmp_path, monkeypatch, foreign):
-    """Under a shared temp root another user could create the ledger dir
-    and plant a dead PID's ledger naming any tree under a reap root.  A
-    ledger dir that is not this user's, or that others can write to, is
-    neither reaped from nor appended to; the same ledger in a private dir
-    is reaped (the control)."""
+@pytest.mark.parametrize(
+    "foreign", ["symlink", "group_writable", "other_writable", "other_owner"]
+)
+def test_foreign_home_is_never_reaped(tmp_path, monkeypatch, foreign):
+    """Under a shared temp root another user could plant an entry with a
+    dead PID's home name.  An entry that is a symlink, is not this user's,
+    or that group or others can write to is never removed (nor is a
+    symlink's target); the same home made private again is reaped (the
+    control)."""
     from gcp_cloudsql_to_bigquery_spark import tmputil
 
     if foreign == "other_owner" and os.getuid() != 0:
         pytest.skip("chown to another user needs root")
-    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    ledger_dir = tmp_path / "spark_graft_tmp_ledger"
-    ledger_dir.mkdir()
-    monkeypatch.setattr(tmputil, "_LEDGER_DIR", str(ledger_dir))
-    victim = tmp_path / "victim"
-    victim.mkdir()
-    # PID 2**22+1 exceeds the default pid_max and can never be alive
-    (ledger_dir / f"{2**22 + 1}.lst").write_text(str(victim) + tmputil._LINE_END + "\n")
-    if foreign == "other_writable":
-        os.chmod(ledger_dir, 0o777)
+    root = tmp_path / "root"
+    root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(root))
+    if foreign == "symlink":
+        target = _fake_home(tmp_path, "target")
+        entry = os.path.join(str(root), DEAD_HOME)
+        os.symlink(target, entry)
     else:
-        os.chown(ledger_dir, 65534, 65534)
-    mine = tmputil.tmp_dir("ledger_foreign_")
-    try:
-        assert tmputil.reap_stale_tmp() == []
-        assert victim.is_dir()
-        assert not os.path.exists(tmputil._ledger_path())
-    finally:
-        tmputil.remove_tmp(mine)
-    os.chown(ledger_dir, os.getuid(), os.getgid())
-    os.chmod(ledger_dir, 0o700)
-    assert tmputil.reap_stale_tmp() == [str(victim)]
-    assert not victim.exists()
+        entry = _fake_home(root, mode=0o770 if foreign == "group_writable" else 0o707)
+        if foreign == "other_owner":
+            os.chmod(entry, 0o700)
+            os.chown(entry, 65534, 65534)
+    assert tmputil.reap_stale_tmp() == []
+    assert os.path.lexists(entry)
+    if foreign == "symlink":
+        assert os.listdir(target) == ["payload"]
+        return
+    os.chown(entry, os.getuid(), os.getgid())
+    os.chmod(entry, 0o700)
+    assert tmputil.reap_stale_tmp() == [entry]
+    assert not os.path.exists(entry)
 
 
-def test_reap_never_touches_live_pid_ledger(tmp_path):
-    """Our own (live) ledger — and any live process's — is never reaped."""
+def test_reap_never_touches_live_pid_home(tmp_path, monkeypatch):
+    """Our own home — and any live process's — is never reaped."""
     from gcp_cloudsql_to_bigquery_spark import tmputil
 
     mine = tmputil.tmp_dir("reap_live_")
     try:
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+        live = _fake_home(tmp_path, f"sg{os.getppid()}_abcd1234")
         removed = tmputil.reap_stale_tmp()
-        assert mine not in removed
+        assert mine not in removed and os.path.dirname(mine) not in removed
         assert os.path.isdir(mine)
-        with open(tmputil._ledger_path()) as fh:
-            assert (mine + tmputil._LINE_END) in fh.read().splitlines()
+        assert os.path.isdir(live)
     finally:
-        tmputil.remove_tmp(mine)
+        shutil.rmtree(mine, ignore_errors=True)
 
 
 def test_sigkill_leak_is_reaped_by_next_process():
     """The exact observed leak class, end to end: a subprocess allocates
     through tmp_dir and is SIGKILLed (atexit never runs, tree survives);
-    a SECOND process's import-time janitor must find the dead ledger and
-    remove the tree."""
+    a SECOND process's import-time janitor must find the dead home and
+    remove it."""
     import signal
     import subprocess
     import sys as _sys
-    import time
 
-    import gcp_cloudsql_to_bigquery_spark as pkg
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(pkg.__file__)))
+    repo_root = _repo_root()
     alloc = (
         f"import sys; sys.path.insert(0, {repo_root!r})\n"
         "from gcp_cloudsql_to_bigquery_spark.tmputil import tmp_dir\n"
@@ -367,7 +333,7 @@ def test_sigkill_leak_is_reaped_by_next_process():
             check=True,
         )
         assert out.stdout.strip().splitlines()[-1] == "True"
-        assert not os.path.exists(path)
+        assert not os.path.exists(os.path.dirname(path))
     finally:
         if proc.poll() is None:
             proc.kill()
@@ -376,19 +342,17 @@ def test_sigkill_leak_is_reaped_by_next_process():
 def test_reap_concurrent_live_process_keeps_trees():
     """The janitor's core safety claim, executed: two processes allocate
     concurrently; one is SIGKILLed, one stays alive.  A reap must remove
-    the dead process's tree and ledger while the live process's tree AND
-    ledger survive untouched; after the survivor is killed too, a second
-    reap collects it."""
+    the dead process's home while the live process's home and tree
+    survive untouched; after the survivor is killed too, a second reap
+    collects it."""
     import signal
     import subprocess
     import sys as _sys
 
-    import gcp_cloudsql_to_bigquery_spark as pkg
     from gcp_cloudsql_to_bigquery_spark import tmputil
 
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(pkg.__file__)))
     alloc = (
-        f"import sys; sys.path.insert(0, {repo_root!r})\n"
+        f"import sys; sys.path.insert(0, {_repo_root()!r})\n"
         "from gcp_cloudsql_to_bigquery_spark.tmputil import tmp_dir\n"
         "import time\n"
         "print(tmp_dir('concur_witness_'), flush=True)\n"
@@ -403,20 +367,19 @@ def test_reap_concurrent_live_process_keeps_trees():
     try:
         live_tree = survivor.stdout.readline().strip()
         dead_tree = victim.stdout.readline().strip()
+        live_home, dead_home = os.path.dirname(live_tree), os.path.dirname(dead_tree)
+        assert os.path.basename(live_home).startswith(f"sg{survivor.pid}_")
         victim.send_signal(signal.SIGKILL)
         victim.wait(timeout=30)
 
         removed = tmputil.reap_stale_tmp()
-        assert dead_tree in removed and not os.path.exists(dead_tree)
-        assert live_tree not in removed and os.path.isdir(live_tree)
-        live_ledger = os.path.join(tmputil._LEDGER_DIR, f"{survivor.pid}.lst")
-        assert os.path.exists(live_ledger), "live ledger must survive the reap"
+        assert dead_home in removed and not os.path.exists(dead_tree)
+        assert live_home not in removed and os.path.isdir(live_tree)
 
         survivor.send_signal(signal.SIGKILL)
         survivor.wait(timeout=30)
         removed2 = tmputil.reap_stale_tmp()
-        assert live_tree in removed2 and not os.path.exists(live_tree)
-        assert not os.path.exists(live_ledger)
+        assert live_home in removed2 and not os.path.exists(live_home)
     finally:
         for p in (survivor, victim):
             if p.poll() is None:

@@ -213,6 +213,8 @@ def test_long_temp_root_falls_back_to_a_short_socket_dir(tmp_path):
     import glob
     import os
 
+    from gcp_cloudsql_to_bigquery_spark.tmputil import _HOME_NAME
+
     long_tmp = tmp_path / ("t" * 80)
     long_tmp.mkdir()
     socks_before = set(glob.glob("/tmp/.*.sock"))
@@ -221,7 +223,7 @@ def test_long_temp_root_falls_back_to_a_short_socket_dir(tmp_path):
     assert os.path.dirname(sock_dir) == "/tmp"
     assert not os.path.exists(sock_dir)
     assert [f for _, _, files in os.walk(long_tmp) for f in files if f.endswith(".sock")] == []
-    assert not any("pysock" in name for name in os.listdir(long_tmp))
+    assert not any(_HOME_NAME.fullmatch(name) for name in os.listdir(long_tmp))
     assert set(glob.glob("/tmp/.*.sock")) <= socks_before
 
 
@@ -237,8 +239,9 @@ def test_socket_dir_over_sparks_61_char_limit_falls_back(tmp_path, dir_len):
 
     base = tempfile.mkdtemp(prefix="sk", dir="/tmp")
     try:
-        # the dir is <temp root>/pysock_ plus 8 characters
-        root = os.path.join(base, "t" * (dir_len - len("/pysock_") - 8 - len(base) - 1))
+        # the dir is <temp root>/sg<pid>_ plus 8 characters: dir_len long
+        # for a one-digit PID, longer for any real one
+        root = os.path.join(base, "t" * (dir_len - len("/sg0_") - 8 - len(base) - 1))
         os.mkdir(root)
         sock_dir, result = _double_in_subprocess(tmp_path, TMPDIR=root)
         assert result == "[0, 2, 4]"
@@ -247,10 +250,35 @@ def test_socket_dir_over_sparks_61_char_limit_falls_back(tmp_path, dir_len):
         shutil.rmtree(base, ignore_errors=True)
 
 
+def test_socket_dir_limit_is_61_characters(monkeypatch):
+    """The socket dir is the temp-root home while that path is at most 61
+    characters, and the ``/tmp`` home from 62 on."""
+    import os
+    import shutil
+    import tempfile
+
+    from gcp_cloudsql_to_bigquery_spark.session import python_socket_dir
+    from gcp_cloudsql_to_bigquery_spark.tmputil import home
+
+    base = tempfile.mkdtemp(prefix="sk", dir="/tmp")
+    name_len = len(f"/sg{os.getpid()}_") + 8
+    try:
+        for dir_len in (61, 62):
+            root = os.path.join(base, str(dir_len).ljust(dir_len - name_len - len(base) - 1, "t"))
+            os.mkdir(root)
+            monkeypatch.setattr(tempfile, "tempdir", root)
+            assert len(home()) == dir_len
+            expect = home() if dir_len <= 61 else home("/tmp")
+            assert python_socket_dir() == expect
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
 def test_short_socket_dir_is_reaped_after_a_hard_exit(tmp_path):
-    """A socket dir that fell back to ``/tmp`` is listed in the crash ledger
-    under the temp root like any other tree: after ``os._exit`` (no atexit
-    hook runs) the next engine process under that temp root removes it."""
+    """``perfbench/run.py`` removes its whole temp root and then ends with
+    ``os._exit``, so no atexit hook runs.  A socket dir that fell back to
+    ``/tmp`` is this process's ``/tmp`` home, named after its PID: the next
+    engine process removes it at import, whatever its temp root."""
     import os
     import shutil
     import subprocess
@@ -272,14 +300,20 @@ def test_short_socket_dir_is_reaped_after_a_hard_exit(tmp_path):
         assert out.returncode == 0, out.stderr[-2000:]
         return out.stdout.strip()
 
-    sock_dir = run(
+    pid, sock_dir, tree = run(
         "from gcp_cloudsql_to_bigquery_spark.session import python_socket_dir\n"
-        "import os; print(python_socket_dir(), flush=True); os._exit(0)\n"
-    )
+        "from gcp_cloudsql_to_bigquery_spark.tmputil import tmp_dir\n"
+        "import os, shutil, tempfile\n"
+        "print(os.getpid(), python_socket_dir(), tmp_dir('hard_exit_'), flush=True)\n"
+        "shutil.rmtree(tempfile.gettempdir())\n"
+        "os._exit(0)\n"
+    ).split()
     try:
         assert os.path.dirname(sock_dir) == "/tmp"
         assert os.path.isdir(sock_dir), "os._exit must leave the dir (no atexit)"
+        assert not os.path.exists(tree)
         run("import gcp_cloudsql_to_bigquery_spark.tmputil\n")
         assert not os.path.exists(sock_dir)
+        assert [n for n in os.listdir("/tmp") if n.startswith(f"sg{pid}_")] == []
     finally:
         shutil.rmtree(sock_dir, ignore_errors=True)

@@ -99,6 +99,23 @@ def test_partition_pruning_in_plan(spark, tmp_path):
     assert n_files_read < n_total
 
 
+def test_dynamic_partition_overwrite_leaves_session_conf_static(spark):
+    """``elt_dynamic_partition_overwrite`` scopes dynamic mode to its one
+    correction write with the writer option: every day survives the
+    overwrite (static mode would keep only the corrected one), and the
+    session conf is the same after the query."""
+    from gcp_cloudsql_to_bigquery_spark.sources.files import (
+        elt_dynamic_partition_overwrite,
+    )
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    days = elt_dynamic_partition_overwrite(spark, SF).select("d").collect()
+    assert spark.conf.get(key) == before
+    n_days = load(spark, SF, "events").select(F.to_date("ts")).distinct().count()
+    assert len(days) == n_days > 1
+
+
 def test_foreach_batch_sink(spark, tmp_path):
     """Streaming foreachBatch: the exactly-once custom-sink surface
     (SURVEY.md §2B streaming row) — micro-batches land as parquet."""
