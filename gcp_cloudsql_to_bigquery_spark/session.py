@@ -13,6 +13,7 @@ import os
 
 from pyspark.sql import SparkSession
 
+from . import jvmcache
 from .tmputil import _SHORT_ROOT, home
 
 # the directory holding this package: on every Python worker's path, so the
@@ -170,17 +171,26 @@ def _session_conf(
     # 3.3-4.2 ms over a Unix socket; TCP_NODELAY on the Python side left it
     # at 40-42 ms.  This mode drops Spark's per-app secret and relies on
     # file permissions, so the sockets go in a directory only this user can
-    # enter (python_socket_dir).  Other masters keep loopback TCP until
-    # measured there: each executor would bind in its own java.io.tmpdir,
-    # which this process can neither see nor length-check (a YARN
-    # container's tmp dir alone can come near the 107-byte AF_UNIX limit),
-    # and a driver-local directory does not exist on executor hosts.  Static
-    # confs that configure_existing never sets: a session built elsewhere
-    # keeps TCP.
+    # enter (python_socket_dir).  `local-cluster[...]` runs its executor
+    # JVMs on this host as this user, so they reach the same directory.
+    # Other masters keep loopback TCP until measured there: each executor
+    # would bind in its own java.io.tmpdir, which this process can neither
+    # see nor length-check (a YARN container's tmp dir alone can come near
+    # the 107-byte AF_UNIX limit), and a driver-local directory does not
+    # exist on executor hosts.  Static confs that configure_existing never
+    # sets: a session built elsewhere keeps TCP.
     if master is not None and master.startswith("local"):
         conf.setdefault("spark.python.unix.domain.socket.enabled", "true")
         if "spark.python.unix.domain.socket.dir" not in conf:
             conf["spark.python.unix.domain.socket.dir"] = python_socket_dir()
+    # A single-JVM master's driver maps Spark's classes from the per-user
+    # class archive (jvmcache.py): session start went 5.0-5.4 -> 2.7-3.4 s
+    # and a cold q1_pricing_summary 4.2-4.8 -> 2.6-3.1 s (local[4]).  Not
+    # for local-cluster: the archive reaches only the driver JVM, while the
+    # tasks' classes load in executor JVMs, so an archive such a driver
+    # dumped would lack them and still serve every later local session.
+    if master is not None and (master == "local" or master.startswith("local[")):
+        conf.update(jvmcache.archive_options(conf))
     return conf
 
 
@@ -201,9 +211,11 @@ def get_spark(
     builder = SparkSession.builder.appName(app_name)
     if master is not None:
         builder = builder.master(master)
-    for k, v in _session_conf(master, shuffle_partitions, extra_conf).items():
+    conf = _session_conf(master, shuffle_partitions, extra_conf)
+    for k, v in conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    with jvmcache.launching(conf):
+        spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

@@ -373,6 +373,19 @@ class ExportQueueDataSource(DataSource):
         return ExportQueueStreamReader(self.options)
 
 
+def _stop_between_triggers(query, deadline: float) -> None:
+    """Stop a streaming query once no trigger is running, or at ``deadline``.
+    While a trigger runs, Spark's Python source runner can still be writing
+    to its socket, and a stop then breaks its pipe: a ``BrokenPipeError``
+    chain reaches the driver's stderr."""
+    import time
+
+    while query.status["isTriggerActive"] and time.time() < deadline:
+        time.sleep(0.005)
+    query.stop()
+    query.awaitTermination()
+
+
 @register(
     "src_python_datasource_stream",
     oracle="""
@@ -428,8 +441,9 @@ def src_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(processingTime="0 seconds")
         .start()
     )
+    deadline = time.time() + 120
     try:
-        idle, deadline = 0, time.time() + 120
+        idle = 0
         while idle < 3 and time.time() < deadline:
             time.sleep(0.3)
             prog = q.recentProgress
@@ -438,7 +452,6 @@ def src_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             elif prog:
                 idle = 0
     finally:
-        q.stop()
-        q.awaitTermination()
+        _stop_between_triggers(q, deadline)
     shutil.rmtree(ckpt, ignore_errors=True)  # memory sink holds the rows
     return spark.table(name)

@@ -317,3 +317,295 @@ def test_short_socket_dir_is_reaped_after_a_hard_exit(tmp_path):
         assert [n for n in os.listdir("/tmp") if n.startswith(f"sg{pid}_")] == []
     finally:
         shutil.rmtree(sock_dir, ignore_errors=True)
+
+
+# --- the driver JVM's class archive (jvmcache.py) ---------------------------
+
+_ARCHIVE_OPT = "spark.driver.extraJavaOptions"
+
+
+def _archive_flag(conf: dict) -> str | None:
+    """The archive flag in a conf's driver options, without its path."""
+    from gcp_cloudsql_to_bigquery_spark.jvmcache import _OUR_FLAG
+
+    m = _OUR_FLAG.search(conf.get(_ARCHIVE_OPT, ""))
+    return m and m.group(1)
+
+
+@pytest.fixture
+def private_cache(tmp_path, monkeypatch):
+    """An empty ``XDG_CACHE_HOME``; returns the engine's cache dir in it."""
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "xdg"))
+    monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
+    return str(tmp_path / "xdg" / "gcp_cloudsql_to_bigquery_spark")
+
+
+@pytest.mark.parametrize(
+    "master, sockets, archive",
+    [
+        ("local", True, True),
+        ("local[2]", True, True),
+        ("local-cluster[2,2,1024]", True, False),
+        ("yarn", False, False),
+        (None, False, False),
+    ],
+)
+def test_archive_confs_only_for_a_single_jvm_master(private_cache, master, sockets, archive):
+    """``local-cluster`` runs its executor JVMs on this host as this user,
+    so it keeps the Unix-socket channels; the class archive reaches only a
+    driver JVM, so only a single-JVM ``local`` master gets it."""
+    from gcp_cloudsql_to_bigquery_spark.session import _session_conf
+
+    conf = _session_conf(master, 2, None)
+    assert ("spark.python.unix.domain.socket.enabled" in conf) is sockets
+    assert (_archive_flag(conf) is not None) is archive
+
+
+def test_user_driver_options_are_kept_and_their_sharing_flags_win(private_cache):
+    """The archive flags are appended to the user's own driver options;
+    a user who set any class-sharing flag keeps exactly their options."""
+    from gcp_cloudsql_to_bigquery_spark.session import _session_conf
+
+    conf = _session_conf("local[2]", 2, {_ARCHIVE_OPT: "-Dmine=1"})
+    assert conf[_ARCHIVE_OPT].startswith("-Dmine=1 -XX:ArchiveClassesAtExit=")
+    for mine in ("-Xshare:off", "-XX:SharedArchiveFile=/x.jsa", "-XX:ArchiveClassesAtExit=/x.jsa"):
+        assert _session_conf("local[2]", 2, {_ARCHIVE_OPT: mine})[_ARCHIVE_OPT] == mine
+
+
+def test_a_real_file_in_the_conf_dir_disables_the_archive(private_cache, tmp_path, monkeypatch):
+    """The JDK refuses a non-empty directory on an archived classpath.  A
+    conf dir of templates only is swapped for an empty one at launch; one
+    with any real file means no archive."""
+    from gcp_cloudsql_to_bigquery_spark import jvmcache
+
+    conf_dir = tmp_path / "conf"
+    conf_dir.mkdir()
+    (conf_dir / "spark-defaults.conf.template").write_text("")
+    monkeypatch.setenv("SPARK_CONF_DIR", str(conf_dir))
+    assert _archive_flag(jvmcache.archive_options({})) == "ArchiveClassesAtExit"
+    (conf_dir / "spark-defaults.conf").write_text("")
+    assert jvmcache.archive_options({}) == {}
+
+
+@pytest.mark.parametrize("fault", ["symlink", "other_user", "group_writable", "other_writable"])
+def test_an_unsafe_cache_dir_is_neither_used_nor_written(
+    private_cache, tmp_path, monkeypatch, fault
+):
+    """The cache dir must be a real directory of this user's with no group
+    or other permission bits; otherwise the session runs without an
+    archive and nothing is written there."""
+    import os
+
+    from gcp_cloudsql_to_bigquery_spark import jvmcache
+
+    os.makedirs(os.path.dirname(private_cache))
+    target = tmp_path / "elsewhere"
+    target.mkdir(mode=0o700)
+    if fault == "symlink":
+        os.symlink(target, private_cache)
+    else:
+        os.mkdir(private_cache, 0o700)
+        target = private_cache
+    if fault == "other_user":
+        real = os.getuid()
+        monkeypatch.setattr(os, "getuid", lambda: real + 1)
+    elif fault != "symlink":
+        os.chmod(private_cache, 0o770 if fault == "group_writable" else 0o707)
+    key = "0" * 20
+    with open(os.path.join(target, f"{key}.jsa"), "wb") as fh:
+        fh.write(b"not an archive")
+    before = sorted(os.listdir(target))
+    assert jvmcache.archive_options({}) == {}
+    jvmcache.promote(jvmcache.cache_dir(create=False))
+    assert sorted(os.listdir(target)) == before
+
+
+def test_a_live_writer_keeps_other_processes_off_the_dump(private_cache):
+    """A process that launches a dumping JVM holds an empty part from the
+    launch to its exit.  While that process lives, another one gets no
+    archive flag instead of dumping the same key again; a dead process's
+    empty part is removed."""
+    import os
+
+    from gcp_cloudsql_to_bigquery_spark import jvmcache
+
+    opts = jvmcache.archive_options({})[_ARCHIVE_OPT]
+    part = jvmcache._OUR_FLAG.search(opts).group(2)
+    open(part, "w").close()  # as launching() leaves it; this process is alive
+    assert jvmcache.archive_options({}) == {}
+    os.unlink(part)
+    dead = part.replace(f".{os.getpid()}.part", f".{_dead_pid()}.part")
+    open(dead, "w").close()
+    assert _archive_flag(jvmcache.archive_options({})) == "ArchiveClassesAtExit"
+    assert not os.path.exists(dead)
+
+
+def _run_engine(code: str, cache_home, timeout: int = 300) -> list[str]:
+    """Run ``code`` in a fresh process (so a cold JVM) with the engine
+    importable and ``XDG_CACHE_HOME`` at ``cache_home``; return its stdout
+    lines."""
+    import os
+    import subprocess
+    import sys
+
+    import gcp_cloudsql_to_bigquery_spark as pkg
+
+    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(pkg.__file__)))
+    env = {k: v for k, v in os.environ.items() if k not in ("PYTHONPATH", "SPARK_CONF_DIR")}
+    env["XDG_CACHE_HOME"] = str(cache_home)
+    out = subprocess.run(
+        [sys.executable, "-c", f"import sys; sys.path.insert(0, {repo_root!r})\n" + code],
+        env=env, capture_output=True, text=True, timeout=timeout,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    # a process that waits for its JVM's dump at exit stops its context first
+    assert "EOFError" not in out.stderr, out.stderr[-3000:]
+    return out.stdout.strip().splitlines()
+
+
+# a session as get_spark builds it, one cold q1_pricing_summary, then exit;
+# the last stdout line is what the run printed
+_Q1 = (
+    "import os\n"
+    "from pyspark import SparkContext\n"
+    "from gcp_cloudsql_to_bigquery_spark import workload\n"
+    "from gcp_cloudsql_to_bigquery_spark.session import get_spark\n"
+    "spark = get_spark(master='local[2]', shuffle_partitions=2,\n"
+    "                  extra_conf={{'spark.driver.memory': '1g'{extra}}})\n"
+    "jvm_env = spark._jvm.java.lang.System.getenv('SPARK_CONF_DIR')\n"
+    "rows = len(workload.queries()['q1_pricing_summary'](spark, {sf!r}).toPandas())\n"
+    "print(os.getpid(), SparkContext._gateway.proc.pid, rows, jvm_env,\n"
+    "      os.environ.get('SPARK_CONF_DIR'))\n"
+)
+
+
+def _q1(cache_home, extra: str = "") -> list[str]:
+    from tests.conftest import SF0001
+
+    return _run_engine(_Q1.format(extra=extra, sf=SF0001), cache_home)[-1].split()
+
+
+def _cache_files(cache: str) -> list[str]:
+    import os
+
+    return sorted(n for n in os.listdir(cache) if n != "conf")
+
+
+@pytest.fixture(scope="module")
+def built_archive(tmp_path_factory):
+    """One cold process writes a part when it exits, and the next engine
+    import promotes it; returns the cache home and the archive's path."""
+    import os
+
+    from gcp_cloudsql_to_bigquery_spark import jvmcache
+    from gcp_cloudsql_to_bigquery_spark.tmputil import _pid_alive
+
+    home = tmp_path_factory.mktemp("xdg")
+    cache = os.path.join(home, "gcp_cloudsql_to_bigquery_spark")
+    pid, jvm_pid, rows, jvm_conf_dir, py_conf_dir = _q1(home)
+    assert int(rows) > 0
+    # the JVM ran with the cache's empty conf dir; the caller's env is restored
+    assert jvm_conf_dir == os.path.join(cache, "conf") and py_conf_dir == "None"
+    # the process waited for its JVM: the dump is finished and whole
+    assert not _pid_alive(int(jvm_pid))
+    [part] = _cache_files(cache)
+    assert part.endswith(f".{pid}.part")
+    assert jvmcache._whole(os.path.join(cache, part))
+    _run_engine("import gcp_cloudsql_to_bigquery_spark.session\n", home)
+    [archive] = _cache_files(cache)
+    assert archive == part.split(".")[0] + ".jsa"
+    return home, os.path.join(cache, archive)
+
+
+def test_a_later_cold_process_maps_classes_from_the_archive(built_archive, tmp_path):
+    """With the archive built, a cold process's JVM loads most of its
+    classes from it (``-Xlog:class+load`` names the source ``shared
+    objects file (top)``), not from Spark's jars; a user's own driver
+    option rides along."""
+    home, archive = built_archive
+    log = tmp_path / "class_load.log"
+    _q1(home, extra=f", {_ARCHIVE_OPT!r}: '-Xlog:class+load=info:file={log}'")
+    sources = [line.partition(" source: ")[2] for line in log.read_text().splitlines()]
+    from_archive = sum(s == "shared objects file (top)" for s in sources)
+    from_jars = sum(s.startswith(("jar:", "file:")) for s in sources)
+    assert from_archive > 10_000, (from_archive, from_jars)
+    assert from_jars < from_archive / 4, (from_archive, from_jars)
+
+
+def _dead_pid() -> int:
+    import subprocess
+
+    proc = subprocess.Popen(["true"])
+    proc.wait()
+    return proc.pid
+
+
+def test_a_cut_short_or_live_part_is_never_promoted(built_archive, tmp_path):
+    """A part is promoted only when its process is dead and the file is
+    whole.  A dump killed mid-write (no header yet) or cut short (regions
+    past the end of the file, which a JVM would map and die of SIGBUS on)
+    is removed; a part whose process is alive is left alone."""
+    import os
+
+    from gcp_cloudsql_to_bigquery_spark import jvmcache
+
+    _, archive = built_archive
+    key = os.path.basename(archive).split(".")[0]
+    cache = tmp_path / "cache"
+    cache.mkdir(mode=0o700)
+    size = os.path.getsize(archive)
+    with open(archive, "rb") as fh:
+        header = fh.read(4096)
+    cut, headless = (str(cache / f"{key}.{_dead_pid()}.part") for _ in range(2))
+    with open(cut, "wb") as fh:  # sparse: the real header, a file cut 1 MiB short
+        fh.write(header)
+        fh.truncate(size - (1 << 20))
+    with open(headless, "wb") as fh:
+        fh.truncate(size)
+    live = str(cache / f"{key}.{os.getpid()}.part")
+    os.link(archive, live)
+    assert not jvmcache._whole(cut) and not jvmcache._whole(headless)
+    jvmcache.promote(str(cache))
+    assert sorted(os.listdir(cache)) == [os.path.basename(live)]
+
+
+def test_a_corrupt_archive_still_runs_and_is_replaced(built_archive, tmp_path, monkeypatch):
+    """A ``<key>.jsa`` cut short would crash the JVM that maps it (SIGBUS).
+    It is checked before use: the session starts, runs q1, and writes a
+    fresh part in its place."""
+    import os
+
+    from gcp_cloudsql_to_bigquery_spark import jvmcache
+
+    home = tmp_path / "xdg"
+    monkeypatch.setenv("XDG_CACHE_HOME", str(home))
+    monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
+    opts = jvmcache.archive_options({})[_ARCHIVE_OPT]
+    part = opts.split("-XX:ArchiveClassesAtExit=")[1].split()[0]
+    jsa = part.split(".")[0] + ".jsa"
+    _, archive = built_archive
+    with open(archive, "rb") as src, open(jsa, "wb") as fh:
+        fh.write(src.read(4096))  # a whole header over regions cut 1 MiB short
+        fh.truncate(os.path.getsize(archive) - (1 << 20))
+    pid, _, rows, *_ = _q1(home)
+    assert int(rows) > 0
+    assert _cache_files(os.path.dirname(jsa)) == [f"{os.path.basename(jsa)[:-4]}.{pid}.part"]
+
+
+def test_a_start_only_process_promotes_no_archive(tmp_path):
+    """An archive of a session start alone would cut start but not the
+    first query, and block the archive that would: such a part is smaller
+    than ``_MIN_ARCHIVE_BYTES`` and is removed, not promoted."""
+    import os
+
+    home = tmp_path / "xdg"
+    cache = os.path.join(home, "gcp_cloudsql_to_bigquery_spark")
+    _run_engine(
+        "from gcp_cloudsql_to_bigquery_spark.session import get_spark\n"
+        "get_spark(master='local[2]', extra_conf={'spark.driver.memory': '1g'}).stop()\n",
+        home,
+    )
+    [part] = _cache_files(cache)
+    assert part.endswith(".part")
+    _run_engine("import gcp_cloudsql_to_bigquery_spark.session\n", home)
+    assert _cache_files(cache) == []

@@ -286,3 +286,35 @@ def test_pysource_pushdown_conf_is_action_time(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     assert df.count() > 0
+
+
+def test_stream_query_stops_only_between_triggers():
+    """``src_python_datasource_stream`` stops its query only once no trigger
+    is running: a stop mid-trigger breaks the pipe Spark's Python source
+    runner is writing to.  Past the deadline it stops anyway."""
+    import time
+
+    from gcp_cloudsql_to_bigquery_spark.sources.pysource import _stop_between_triggers
+
+    class FakeQuery:
+        def __init__(self, active):
+            self.active, self.calls = list(active), []
+
+        @property
+        def status(self):
+            self.calls.append("status")
+            return {"isTriggerActive": self.active.pop(0) if self.active else False}
+
+        def stop(self):
+            self.calls.append("stop")
+
+        def awaitTermination(self):
+            self.calls.append("await")
+
+    q = FakeQuery([True, True, False])
+    _stop_between_triggers(q, time.time() + 60)
+    assert q.calls == ["status"] * 3 + ["stop", "await"]
+
+    q = FakeQuery([True] * 1000)
+    _stop_between_triggers(q, time.time() - 1)
+    assert q.calls == ["status", "stop", "await"]
