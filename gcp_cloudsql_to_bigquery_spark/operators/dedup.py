@@ -77,13 +77,27 @@ def with_shingles(docs: DataFrame) -> DataFrame:
     )
 
 
+def _ceil9(x: F.Column) -> F.Column:
+    """ceil(x) for a product x = t*n that is exact in the rationals.
+
+    When t*n is integral (e.g. t=0.65, n=20 -> 13) the raw double product
+    can land epsilon ABOVE the integer, pushing ceil up by one, which
+    shortens a prefix or raises a size bound and silently drops borderline
+    true pairs.  Rounding to 9 decimals first collapses that epsilon while
+    leaving every genuinely fractional product untouched (for a rational
+    threshold p/q the nearest non-integral product is 1/q >> 1e-9 from an
+    integer), so the prunes stay lossless for arbitrary thresholds.
+    """
+    return F.ceil(F.round(x, 9))
+
+
 def prefix_filtered_candidates(sh: DataFrame, threshold: float) -> DataFrame:
     """PPJoin-style LOSSLESS candidate pairs for Jaccard >= ``threshold``.
 
     ``sh``: (doc_id, hsh = distinct hashed shingles).  Three stacked
     lossless prunes (all from Xiao et al., WWW'08 — "Efficient Similarity
     Joins for Near Duplicate Detection"; randomized-universe property
-    tests in tests/test_round6.py and tests/test_round7.py):
+    tests in tests/test_dedup.py):
 
     1. **Prefix filter**: under the global (df, g) shingle order, each doc
        indexes only its ``|X| - ceil(t*|X|) + 1`` rarest shingles; any
@@ -122,15 +136,7 @@ def prefix_filtered_candidates(sh: DataFrame, threshold: float) -> DataFrame:
     bit-for-bit, which the all-pairs oracles of the callers re-prove at
     every selfcheck.
 
-    ceil(t*n) is computed as ceil(round(t*n, 9)): when the product is
-    exactly integral in the rationals (e.g. t=0.65, n=20 → 13) the raw
-    double product can land epsilon ABOVE the integer, pushing ceil up by
-    one, shortening the prefix, and silently dropping borderline true
-    pairs.  Rounding to 9 decimals first collapses that epsilon while
-    leaving every genuinely fractional product untouched (for a rational
-    threshold p/q the nearest non-integral product is 1/q >> 1e-9 from an
-    integer), so losslessness holds for arbitrary thresholds.  The same
-    guard wraps alpha.
+    Every ceil(t*n) here, alpha included, goes through ``_ceil9``.
 
     Callers compare the verified Jaccard ROUNDED to 6dp against t (oracle
     parity); the filters bound the exact ratio.  A pair could in
@@ -140,9 +146,6 @@ def prefix_filtered_candidates(sh: DataFrame, threshold: float) -> DataFrame:
     rounded and exact decisions coincide.
     """
     from pyspark.sql import Window as W
-
-    def _ceil9(x: "F.Column") -> "F.Column":
-        return F.ceil(F.round(x, 9))
 
     def _ceil_tn(n: "F.Column") -> "F.Column":
         return _ceil9(F.lit(threshold) * n)
@@ -1013,10 +1016,6 @@ def dedup_minhash_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max(F.when(F.col("i") % 2 == 1, F.col("hr"))),
         ).alias("h")
     )
-
-    def _ceil9(x: "F.Column") -> "F.Column":
-        # epsilon-robust ceil(t*n) — same guard as prefix_filtered_candidates
-        return F.ceil(F.round(x, 9))
 
     la, lb = sig.alias("la"), sig.alias("lb")
     cand = (

@@ -41,8 +41,8 @@ Invariants:
    (``multimodal.media_kernel``), not one worker round trip per link.
    No allowlist entry: the count is zero registry-wide.
 
-Known-justified exceptions are allowlisted with reasons (kept in sync
-with tests/test_plans.py, which pins the same invariants in CI).
+Known-justified exceptions are allowlisted with reasons below;
+tests/test_plans.py reads the same allowlist.
 
 Usage:  python scripts/plan_audit.py [--sf /root/testdata/sf0.001]
 Exit status 1 if any non-allowlisted violation is found.  A VIOLATION line

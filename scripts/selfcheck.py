@@ -109,6 +109,58 @@ def type_mismatches(con, sql: str, spark_schema) -> list[str]:
     return problems
 
 
+def duck_on(sf_dir: str):
+    """A DuckDB connection with one view per catalog table over ``sf_dir``."""
+    import duckdb
+
+    from gcp_cloudsql_to_bigquery_spark.catalog import TABLES
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def diff(spark, con, name: str, sf_dir: str, shape: dict | None = None) -> list[str]:
+    """Run registry query ``name`` on Spark over ``sf_dir`` and its oracle on
+    ``con``; return the problems found (an empty list is a pass).  A query
+    with no oracle has nothing to compare and returns no problem.  ``shape``,
+    when given, receives the Spark result's ``rows`` count and ``cols``."""
+    import __spark_entry__ as entrymod
+
+    oracle = entrymod.oracle_sql().get(name)
+    try:
+        sdf = entrymod.queries()[name](spark, sf_dir)
+        scols = sdf.columns
+        srows = [tuple(r) for r in sdf.collect()]
+    except Exception as e:
+        return [f"spark error: {e}"]
+    if shape is not None:
+        shape.update(rows=len(srows), cols=scols)
+    if oracle is None:
+        return []
+    try:
+        res = con.execute(oracle)
+        ocols = [d[0] for d in res.description]
+        orows = res.fetchall()
+    except Exception as e:
+        return [f"duckdb error: {e}"]
+    problems = []
+    if len(srows) != len(orows):
+        problems.append(f"rowcount spark={len(srows)} duckdb={len(orows)}")
+    if sorted(scols) != sorted(ocols):
+        problems.append(f"cols spark={sorted(scols)} duckdb={sorted(ocols)}")
+    tmis = type_mismatches(con, oracle, sdf.schema)
+    if tmis:
+        problems.append("TYPE " + "; ".join(tmis))
+    if not problems:
+        s, o = rowset(scols, srows), rowset(ocols, orows)
+        if s != o:
+            diffs = [(a, b) for a, b in zip(s, o) if a != b][:3]
+            problems.append(f"values differ; first diffs {diffs}")
+    return problems
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
@@ -139,20 +191,14 @@ def main() -> int:
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
-    import duckdb
-
     import __spark_entry__ as entrymod
-    from gcp_cloudsql_to_bigquery_spark.catalog import TABLES
     from gcp_cloudsql_to_bigquery_spark.session import get_spark
 
     spark = get_spark(master=args.master, shuffle_partitions=args.shuffle)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{args.sf}/{t}.parquet'")
+    con = duck_on(args.sf)
 
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    names = args.names or list(qs)
+    names = args.names or list(entrymod.queries())
     if args.sample and not args.names:
         import random
 
@@ -160,44 +206,16 @@ def main() -> int:
     n_pass = n_fail = n_rows_only = 0
     for name in names:
         t0 = time.time()
-        try:
-            sdf = qs[name](spark, args.sf)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
-        except Exception as e:
-            print(f"FAIL {name}: spark error: {e}")
-            n_fail += 1
-            continue
-        if name not in oracles:
-            print(f"ROWS-ONLY {name}: {len(srows)} rows, cols={scols} ({time.time()-t0:.1f}s)")
-            n_rows_only += 1
-            continue
-        try:
-            res = con.execute(oracles[name])
-            ocols = [d[0] for d in res.description]
-            orows = res.fetchall()
-        except Exception as e:
-            print(f"FAIL {name}: duckdb error: {e}")
-            n_fail += 1
-            continue
-        problems = []
-        if len(srows) != len(orows):
-            problems.append(f"rowcount spark={len(srows)} duckdb={len(orows)}")
-        if sorted(scols) != sorted(ocols):
-            problems.append(f"cols spark={sorted(scols)} duckdb={sorted(ocols)}")
-        tmis = type_mismatches(con, oracles[name], sdf.schema)
-        if tmis:
-            problems.append("TYPE " + "; ".join(tmis))
-        if not problems:
-            s, o = rowset(scols, srows), rowset(ocols, orows)
-            if s != o:
-                diffs = [(a, b) for a, b in zip(s, o) if a != b][:3]
-                problems.append(f"values differ; first diffs {diffs}")
+        shape: dict = {}
+        problems = diff(spark, con, name, args.sf, shape)
         if problems:
             print(f"FAIL {name}: " + "; ".join(problems))
             n_fail += 1
+        elif name not in oracles:
+            print(f"ROWS-ONLY {name}: {shape['rows']} rows, cols={shape['cols']} ({time.time()-t0:.1f}s)")
+            n_rows_only += 1
         else:
-            print(f"PASS {name}: {len(srows)} rows ({time.time()-t0:.1f}s)")
+            print(f"PASS {name}: {shape['rows']} rows ({time.time()-t0:.1f}s)")
             n_pass += 1
     print(f"\n{n_pass} pass, {n_rows_only} rows-only, {n_fail} fail / {len(names)} total")
     return 1 if n_fail else 0

@@ -1,7 +1,9 @@
 """Scale-pattern tests: bucketed join eliminates exchanges; salted join is
 semantics-preserving."""
 
+import math
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,8 +16,8 @@ from gcp_cloudsql_to_bigquery_spark.operators.scale import (
     write_bucketed,
 )
 from gcp_cloudsql_to_bigquery_spark.plans.inspect import exchange_count
-
-SF = "/root/testdata/sf0.001"
+from gcp_cloudsql_to_bigquery_spark.workload import queries
+from tests.conftest import SF0001
 
 
 @pytest.fixture(scope="module")
@@ -23,11 +25,11 @@ def bucketed_tables(spark):
     # warehouse.dir is a static conf — tables land in ./spark-warehouse
     # (gitignored); dropped below
     write_bucketed(
-        load(spark, SF, "orders").select("o_orderkey", "o_custkey", "o_totalprice"),
+        load(spark, SF0001, "orders").select("o_orderkey", "o_custkey", "o_totalprice"),
         "orders_b", "o_orderkey", 8, sort_by="o_orderkey",
     )
     write_bucketed(
-        load(spark, SF, "lineitem").select("l_orderkey", "l_quantity"),
+        load(spark, SF0001, "lineitem").select("l_orderkey", "l_quantity"),
         "lineitem_b", "l_orderkey", 8, sort_by="l_orderkey",
     )
     yield
@@ -45,8 +47,8 @@ def test_bucketed_join_has_no_exchange(spark, bucketed_tables):
         )
         assert exchange_count(j) == 0, "bucketed co-located join must not shuffle"
         # sanity: same rowcount as the plain join
-        plain = load(spark, SF, "lineitem").join(
-            load(spark, SF, "orders"),
+        plain = load(spark, SF0001, "lineitem").join(
+            load(spark, SF0001, "orders"),
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
         assert j.count() == plain.count()
@@ -58,8 +60,8 @@ def test_unbucketed_join_does_exchange(spark):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        plain = load(spark, SF, "lineitem").join(
-            load(spark, SF, "orders"), F.col("l_orderkey") == F.col("o_orderkey")
+        plain = load(spark, SF0001, "lineitem").join(
+            load(spark, SF0001, "orders"), F.col("l_orderkey") == F.col("o_orderkey")
         )
         assert exchange_count(plain) >= 2  # both sides shuffle
     finally:
@@ -67,10 +69,10 @@ def test_unbucketed_join_does_exchange(spark):
 
 
 def test_salted_join_preserves_semantics(spark):
-    li = load(spark, SF, "lineitem").select(
+    li = load(spark, SF0001, "lineitem").select(
         F.col("l_suppkey").alias("suppkey"), "l_quantity"
     )
-    supp = load(spark, SF, "supplier").select(
+    supp = load(spark, SF0001, "supplier").select(
         F.col("s_suppkey").alias("suppkey"), "s_name"
     )
     plain = (
@@ -157,7 +159,7 @@ def test_aqe_splits_skewed_join_at_runtime(spark, tmp_path):
     DataFrame must be the one executed (count() plans a different tree
     and leaves this one's adaptive plan un-finalized).  Incompressible
     padding matters too: partition sizes are compressed shuffle bytes."""
-    import pyspark.sql.functions as SF
+    import pyspark.sql.functions as SF0001
 
     confs = {
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "32KB",
@@ -170,11 +172,11 @@ def test_aqe_splits_skewed_join_at_runtime(spark, tmp_path):
         spark.conf.set(k, v)
     try:
         li = load(spark, "/root/testdata/sf0.01", "lineitem").select(
-            SF.when(SF.col("l_orderkey") % 10 < 9, 0)
-            .otherwise(SF.col("l_orderkey"))
+            SF0001.when(SF0001.col("l_orderkey") % 10 < 9, 0)
+            .otherwise(SF0001.col("l_orderkey"))
             .alias("k"),
-            SF.sha2(
-                SF.concat_ws("-", "l_orderkey", "l_linenumber", "l_extendedprice"), 512
+            SF0001.sha2(
+                SF0001.concat_ws("-", "l_orderkey", "l_linenumber", "l_extendedprice"), 512
             ).alias("pad"),
         )
         li.repartition(8).write.mode("overwrite").parquet(str(tmp_path / "skewed"))
@@ -183,7 +185,7 @@ def test_aqe_splits_skewed_join_at_runtime(spark, tmp_path):
         ).parquet(str(tmp_path / "keys"))
         big = spark.read.parquet(str(tmp_path / "skewed"))
         keys = spark.read.parquet(str(tmp_path / "keys"))
-        j = big.join(keys, SF.col("k") == SF.col("k2"))
+        j = big.join(keys, SF0001.col("k") == SF0001.col("k2"))
         assert len(j.collect()) == 60000
         final_plan = j._jdf.queryExecution().executedPlan().toString()
         assert "isFinalPlan=true" in final_plan, final_plan[:500]
@@ -293,10 +295,10 @@ def test_pairwise_cosine_dispatch_blocked_past_broadcast_cap(spark):
     )
     from gcp_cloudsql_to_bigquery_spark.plans.inspect import physical_plan
 
-    e = load(spark, SF, "embeddings").select(
+    e = load(spark, SF0001, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    hint = parquet_corpus_hint(SF)
+    hint = parquet_corpus_hint(SF0001)
     n, dim = hint
     assert n > 0 and dim > 0
 
@@ -330,7 +332,7 @@ def test_global_order_stats_capacity_guard(spark):
     exact, guard evaluated only over the bounded per-partition stats)."""
     from gcp_cloudsql_to_bigquery_spark.operators.scale import global_order_stats
 
-    df = load(spark, SF, "orders").select("o_orderkey", "o_totalprice")
+    df = load(spark, SF0001, "orders").select("o_orderkey", "o_totalprice")
 
     # (b) normal path: exact global ranks, guard invisible
     out = global_order_stats(df, [F.col("o_totalprice").desc(), "o_orderkey"])
@@ -535,12 +537,12 @@ def test_dedup_barriers_construct_lazily(spark):
         "fn_business_days",
         "elt_right_to_erasure",
     ):
-        built[name], jobs = build_jobs(f"lazy-{name}", lambda n=name: q[n](spark, SF))
+        built[name], jobs = build_jobs(f"lazy-{name}", lambda n=name: q[n](spark, SF0001))
         assert jobs == [], f"{name}: construction ran jobs {jobs}"
     _, bookmark = build_jobs(
-        "lazy-bookmark", lambda: q["elt_incremental_bookmark_extract"](spark, SF)
+        "lazy-bookmark", lambda: q["elt_incremental_bookmark_extract"](spark, SF0001)
     )
-    orders = load(spark, SF, "orders").select("o_orderkey")
+    orders = load(spark, SF0001, "orders").select("o_orderkey")
     _, rank_fence = build_jobs(
         "lazy-rank-fence",
         lambda: global_order_stats(
@@ -605,3 +607,136 @@ def test_ttl_horizon_bounds_lsh_candidates_linear_on_degenerate_corpus(spark):
     # the absolute bound the fold asserts per batch, here corpus-wide:
     # each doc pairs with at most TTL predecessors
     assert windowed[1200] <= 1200 * TTL, windowed
+
+
+def test_bloom_filter_never_false_negative(spark):
+    rows = queries()["scale_bloom_filter_audit"](spark, SF0001).collect()
+    cells = {(r["is_member"], r["maybe_present"]): r["n"] for r in rows}
+    assert (True, False) not in cells, "Bloom filters must never miss a member"
+    assert cells.get((True, True), 0) > 0
+
+
+def test_hash_uniformity_chi2_matches_bruteforce(spark):
+    """Recomputes the md5-bucket histogram and the integer cross-multiplied
+    chi-square from first principles."""
+    import hashlib
+
+    keys = [
+        r["o_orderkey"]
+        for r in spark.read.parquet(SF0001 + "/orders.parquet").select("o_orderkey").collect()
+    ]
+    counts = Counter(
+        int(hashlib.md5(str(k).encode()).hexdigest()[:8], 16) % 64 for k in keys
+    )
+    n = len(keys)
+    chi2 = math.floor(
+        sum((64 * o - n) ** 2 for o in counts.values()) / (64.0 * n) * 1000 + 0.5
+    )
+    r = queries()["scale_hash_uniformity_chi2"](spark, SF0001).collect()[0]
+    assert r["n"] == n and r["n_buckets"] == len(counts)
+    assert r["spread"] == max(counts.values()) - min(counts.values())
+    assert r["chi2_x1000"] == chi2
+    assert r["uniform_at_p001"] == (chi2 < 111000)
+
+
+def test_ntile_rank_formula_exhaustive():
+    """distributed_ntile derives the bucket from (rank, n_total) with pure
+    integer arithmetic — check it against SQL ntile semantics (first n%k
+    buckets one row larger) for every n in 1..400 and several k, i.e.
+    every rank of every size: an off-by-one here would silently misbin
+    boundary rows at any scale."""
+    for k in (2, 3, 4, 7, 10, 16):
+        for n in range(1, 401):
+            rem, q = n % k, n // k
+            # ground truth: sizes ceil for first rem buckets, floor after
+            truth = []
+            for b in range(1, k + 1):
+                truth.extend([b] * ((q + 1) if b <= rem else q))
+            for rn in range(1, n + 1):
+                if rn <= rem * (q + 1):
+                    bin_ = (rn - 1) // (q + 1) + 1
+                else:
+                    bin_ = rem + (rn - rem * (q + 1) - 1) // max(q, 1) + 1
+                assert bin_ == truth[rn - 1], (n, k, rn, bin_, truth[rn - 1])
+
+
+# ---------------------------------------------------------------------------
+# global_order_stats branch-divergence bug (the round's worst find): the
+# offsets branch and the final-join branch each re-executed the range
+# exchange, and RangePartitioner's boundary sample depends on the upstream
+# aggregate's row order — which differs between the branches' column-pruned
+# plans.  At sf0.1 volume EVERY partition's count described different
+# contents than the rows being ranked; ranks interleaved silently (rfm
+# quintiles off by one for hundreds of customers).  Fixed by an eager
+# localCheckpoint fence pinning ONE physical layout for both branches.
+# ---------------------------------------------------------------------------
+
+
+def test_global_order_stats_ranks_are_a_permutation_in_order(spark, skewed_sf):
+    """On the exposing data (wide rollup + tie-heavy order key), the rank
+    column must be exactly 1..n AND walking ranks in order must never
+    violate the sort order — the unfenced form failed both (297 seam
+    violations)."""
+    from gcp_cloudsql_to_bigquery_spark.catalog import load
+    from gcp_cloudsql_to_bigquery_spark.operators.scale import global_order_stats
+    from pyspark.sql import functions as F
+
+    o = load(spark, skewed_sf, "orders")
+    tx = o.groupBy(F.col("o_custkey").alias("custkey")).agg(
+        F.max("o_orderdate").alias("last_order"),
+        F.count(F.lit(1)).alias("frequency"),
+    )
+    ranked = global_order_stats(
+        tx, [F.col("frequency").desc(), F.asc_nulls_first("custkey")]
+    )
+    rows = sorted((r["_rn"], r["frequency"], r["custkey"]) for r in ranked.collect())
+    assert [r[0] for r in rows] == list(range(1, len(rows) + 1))
+    keys = [(-r[1], r[2]) for r in rows]
+    assert keys == sorted(keys), "rank walk violates the sort order"
+
+
+# ---------------------------------------------------------------------------
+# integer-exact rank selection == percentile_disc (r16 buffer-agg fixes)
+# ---------------------------------------------------------------------------
+# elt_incremental_bookmark_extract and elt_range_partition_layout replaced
+# their GLOBAL percentile_disc aggregates (value->count buffer merged on a
+# single reducer — plan_audit invariant 5) with rank selection over
+# scale.global_order_stats: percentile_disc(p) == the smallest value whose
+# exact 1-based rank r satisfies r >= p*n, cross-multiplied to integers
+# (r*q >= n*p_num) so no double comparison exists on the Spark side.  The
+# registry oracles witness this against DuckDB's independent quantile_disc
+# on 8 data geometries; this net pins the equivalence ON CRAFTED EDGE
+# FIXTURES (exact-boundary n, duplicates straddling the cut, n=1, all-
+# equal values) directly against Spark's own percentile_disc aggregate,
+# so a future refactor of the rank arithmetic fails here first.
+
+
+@pytest.mark.parametrize(
+    "values",
+    [
+        list(range(1, 11)),            # n=10: 0.6*n exact integer boundary
+        list(range(1, 8)),             # n=7: ceil lands mid-gap
+        [5, 5, 5, 7, 7, 9, 9, 9, 9],   # duplicates straddling every cut
+        [42],                          # n=1: every percentile is the value
+        [3, 3, 3, 3],                  # all-equal, n divisible by 4
+        list(range(1, 6)),             # n=5: 0.25/0.75 non-integer ranks
+    ],
+)
+def test_rank_selection_matches_percentile_disc(spark, values):
+    from pyspark.sql import functions as F
+
+    from gcp_cloudsql_to_bigquery_spark.operators.scale import global_order_stats
+
+    df = spark.createDataFrame([(float(v),) for v in values], "x double")
+    ranked = global_order_stats(df, ["x"])
+    got = ranked.agg(
+        F.min(F.when(F.col("_rn") * 4 >= F.col("_n_total"), F.col("x"))).alias("p25"),
+        F.min(F.when(F.col("_rn") * 10 >= F.col("_n_total") * 6, F.col("x"))).alias("p60"),
+        F.min(F.when(F.col("_rn") * 4 >= F.col("_n_total") * 3, F.col("x"))).alias("p75"),
+    ).first()
+    want = df.agg(
+        F.expr("percentile_disc(0.25) WITHIN GROUP (ORDER BY x)").alias("p25"),
+        F.expr("percentile_disc(0.6) WITHIN GROUP (ORDER BY x)").alias("p60"),
+        F.expr("percentile_disc(0.75) WITHIN GROUP (ORDER BY x)").alias("p75"),
+    ).first()
+    assert (got.p25, got.p60, got.p75) == (want.p25, want.p60, want.p75), values

@@ -104,6 +104,7 @@ def test_tws_executes_against_batch_oracle(spark):
     environment, the operator may re-enter the registry there."""
     import pytest
 
+    from gcp_cloudsql_to_bigquery_spark.catalog import load
     from gcp_cloudsql_to_bigquery_spark.streaming.stateful import (
         _tws_available,
         stream_tws_type_totals,
