@@ -492,7 +492,7 @@ def embedding_normalize_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
             # where the oracle's list_sum SKIPS null elements (and its
             # all-NULL/empty sum is NULL); the old slow path's
             # np.asarray(list-with-None) did the same.  Witnessed in
-            # tests/test_oracle.py against DuckDB on exactly that
+            # tests/test_round15.py against DuckDB on exactly that
             # geometry (no hostile tier plants element-level nulls).
             if len(elem_null):
                 csum = np.concatenate(

@@ -97,7 +97,7 @@ def prefix_filtered_candidates(sh: DataFrame, threshold: float) -> DataFrame:
     ``sh``: (doc_id, hsh = distinct hashed shingles).  Three stacked
     lossless prunes (all from Xiao et al., WWW'08 — "Efficient Similarity
     Joins for Near Duplicate Detection"; randomized-universe property
-    tests in tests/test_dedup.py):
+    tests in tests/test_round6.py and tests/test_round7.py):
 
     1. **Prefix filter**: under the global (df, g) shingle order, each doc
        indexes only its ``|X| - ceil(t*|X|) + 1`` rarest shingles; any

@@ -175,7 +175,7 @@ def distributed_ntile(
     single-reducer global-sort window: the bucket falls out of
     :func:`global_order_stats`'s (rank, total) with pure integer
     arithmetic, bit-identical to SQL ntile semantics (first n%k buckets
-    one row larger; formula checked exhaustively in tests/test_scale.py).
+    one row larger; formula checked exhaustively in tests/test_round6.py).
     Appends ``out_col`` (bigint bucket in 1..n_buckets) to ``df``."""
     ranked = global_order_stats(df, order_cols, n_partitions=n_partitions)
     k = int(n_buckets)

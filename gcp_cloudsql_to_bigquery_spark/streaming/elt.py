@@ -310,7 +310,7 @@ def _cdc_fold_body(base: str):
     "not one batch rewrite.  DURABILITY (round 11): snapshot versions "
     "derive from the batch_id with idempotent overwrites, so a "
     "crash-before-commit replay lands on the pre-batch snapshot — "
-    "EXECUTED as a kill-and-resume test (tests/test_streaming_elt.py).  Scale: "
+    "EXECUTED as a kill-and-resume test (tests/test_round11.py).  Scale: "
     "each merge shuffles only on user_id; the upsert is union + "
     "max(struct), i.e. partial-aggregable.",
 )
@@ -576,7 +576,7 @@ def _row_minhash_sig():
     ``shingles`` column — the same values as the batch
     ``dedup.minhash_signatures`` (min of seeded xxhash64 over the shingle
     set commutes with the batch explode/groupBy formulation); equivalence
-    is pinned by ``tests/test_streaming_elt.py``."""
+    is pinned by ``tests/test_round10.py``."""
     from ..operators.dedup import N_HASHES
 
     def _minhash(i: int):
@@ -698,7 +698,7 @@ def _run_lsh_ttl_stream(
     recomputes from exactly the pre-batch index, and its batch_id-keyed
     OVERWRITES (cand_b{batch_id}, idx_v{batch_id+1}) land idempotently —
     pinned by the kill-between-folds + resume-from-checkpoint test in
-    tests/test_streaming_elt.py.  ``on_fold_done(batch_id)`` is the
+    tests/test_round11.py.  ``on_fold_done(batch_id)`` is the
     crash-injection hook that test uses (called after ALL of the fold's
     writes, before the checkpoint commit).
     """
@@ -835,7 +835,7 @@ def _run_lsh_ttl_stream(
     f"versions derive from the batch_id and the frontier is recovered "
     f"from the persisted index, so a crash-before-commit replay is "
     f"idempotent — EXECUTED as a kill-between-folds + resume test "
-    f"(tests/test_streaming_elt.py), not just argued.  At 100 TB: the index is "
+    f"(tests/test_round11.py), not just argued.  At 100 TB: the index is "
     f"a keyed state store (band,bucket → recent ids), arrivals shuffle "
     f"only (id,band,bucket) triples, and the TTL bound makes state size "
     f"independent of history — the shape transformWithStateInPandas "

@@ -17,6 +17,7 @@ sys.path.insert(0, os.path.join(_ROOT, "scripts"))
 
 import make_hostile_sf  # noqa: E402
 import make_skewed_sf  # noqa: E402
+from selfcheck import diff, duck_on  # noqa: E402
 
 from gcp_cloudsql_to_bigquery_spark.catalog import TABLES  # noqa: E402
 from gcp_cloudsql_to_bigquery_spark.session import get_spark  # noqa: E402
@@ -191,6 +192,17 @@ def nullelem_embeddings_sf(tmp_path_factory):
     return _planted(tmp_path_factory, "nullelem_embeddings_sf", "embeddings", mutate)
 
 
+def assert_matches_oracle(spark, sf, name):
+    """Hold registry query ``name`` on data directory ``sf`` to its DuckDB
+    oracle through scripts/selfcheck.py's one compare: columns, row count,
+    result kinds and canonical values."""
+    import __spark_entry__ as entry
+
+    assert name in entry.oracle_sql(), f"{name} has no oracle to hold it to"
+    with duck_on(sf) as con:
+        assert diff(spark, con, name, sf) == []
+
+
 # ---------------------------------------------------------------------------
 # Small helpers the brute-force witnesses of several families share.
 # ---------------------------------------------------------------------------
@@ -234,3 +246,23 @@ def events_rows(spark):
 
 def events_pdf(sf):
     return pq.read_table(f"{sf}/events.parquet").to_pandas()
+
+
+def ceil9(x: float) -> int:
+    """ceil after rounding to 9 places: the dedup kernels' fp-robust ceil."""
+    return math.ceil(round(x, 9))
+
+
+# Fixed-width feed records built by hand from the format spec (D = 1+9 key
+# +18 name+1 sign+11 cents+10 segment; T = 1+9 count+1 sign+15 total): an
+# independent witness of the parser's offsets.
+
+
+def fw_detail_rec(key, name, cents, seg):
+    sign = "-" if cents < 0 else "+"
+    return f"D{key:09d}{name:<18.18}{sign}{abs(cents):011d}{seg:<10.10}"
+
+
+def fw_trailer_rec(count, total):
+    sign = "-" if total < 0 else "+"
+    return f"T{count:09d}{sign}{abs(total):015d}"

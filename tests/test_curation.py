@@ -1,13 +1,9 @@
 """Curation operator tests: stratified sample proportions + determinism,
 hash sample stability across scale factors."""
 
-import hashlib
-import math
-from collections import defaultdict
-
 from gcp_cloudsql_to_bigquery_spark.catalog import load
 from gcp_cloudsql_to_bigquery_spark.workload import queries
-from tests.conftest import M12, SF0001, h12
+from tests.conftest import SF0001
 
 
 def test_stratified_proportions_and_determinism(spark):
@@ -65,254 +61,3 @@ def test_percentile_approx_accuracy(spark):
         r = rows[k]
         assert abs(r.p50_exact - p50) < 1e-3 and abs(r.p99_exact - p99) < 1e-3
         assert r.p50_in_bounds and r.p99_in_bounds, (k, r)
-
-
-def test_importance_resampling_ranks_and_pool(spark):
-    rows = queries()["curation_importance_resampling"](spark, SF0001).collect()
-    assert rows, "expected a non-empty selection"
-    ranks = sorted(r["rnk"] for r in rows)
-    assert ranks == list(range(1, len(rows) + 1)), "ranks must be dense 1..N"
-    assert all(r["lang"] != "en" for r in rows), "target-pool docs must not be scored"
-    # scores must be non-increasing in rank order
-    by_rank = sorted(rows, key=lambda r: r["rnk"])
-    scores = [r["score_fp"] for r in by_rank]
-    assert scores == sorted(scores, reverse=True)
-
-
-def test_dedup_pipeline_funnel_monotone(spark):
-    rows = {r["stage"]: r for r in queries()["curation_dedup_pipeline"](spark, SF0001).collect()}
-    order = ["stage0_raw", "stage1_exact_dedup", "stage2_near_dedup", "stage3_quality"]
-    assert set(rows) == set(order)
-    for earlier, later in zip(order, order[1:]):
-        assert rows[later]["n_docs"] <= rows[earlier]["n_docs"]
-        assert rows[later]["total_chars"] <= rows[earlier]["total_chars"]
-
-
-def test_dsir_score_replicates_for_one_doc(spark):
-    import hashlib
-
-    docs = load(spark, SF0001, "documents").select("doc_id", "lang", "text").collect()
-
-    def buckets(text):
-        out = []
-        for w in text.lower().split(" "):
-            if w:
-                out.append(int(hashlib.md5(w.encode()).hexdigest()[:8], 16) % 1024)
-        return out
-
-    ct, cr = {}, {}
-    for r in docs:
-        tgt = r["lang"] == "en"
-        for b in buckets(r["text"]):
-            (ct if tgt else cr)[b] = (ct if tgt else cr).get(b, 0) + 1
-    t, rsum = sum(ct.values()), sum(cr.values())
-    lr = {}
-    for b in set(ct) | set(cr):
-        lr[b] = math.floor(
-            (
-                math.log((ct.get(b, 0) + 0.5) / (t + 512.0))
-                - math.log((cr.get(b, 0) + 0.5) / (rsum + 512.0))
-            )
-            * 1e6
-            + 0.5
-        )
-    got = {r["doc_id"]: r for r in queries()["curation_importance_resampling"](spark, SF0001).collect()}
-    assert got, "selection must be non-empty"
-    checked = 0
-    for r in docs:
-        if r["lang"] == "en" or r["doc_id"] not in got:
-            continue
-        score = sum(lr[b] for b in buckets(r["text"]))
-        assert got[r["doc_id"]]["score_fp"] == score, r["doc_id"]
-        checked += 1
-    assert checked > 0
-
-
-# -------------------------------------------------------- weighted reservoir
-
-
-def test_reservoir_matches_bruteforce(spark):
-    docs = load(spark, SF0001, "documents").select("doc_id", "source", "n_chars").collect()
-    per_src = {}
-    for doc_id, src, n_chars in docs:
-        u = h12(f"res:{doc_id}") / float(M12)
-        t = min(3, n_chars // 500)
-        k = u
-        for _ in range(t):
-            k = math.sqrt(k)
-        per_src.setdefault(src, []).append((-k, doc_id, t))
-    expected = set()
-    for src, lst in per_src.items():
-        lst.sort()
-        for rnk, (_, doc_id, t) in enumerate(lst[:40], start=1):
-            expected.add((src, rnk, doc_id, t))
-    got = {
-        (r["source"], r["rnk"], r["doc_id"], r["tier"])
-        for r in queries()["curation_weighted_reservoir"](spark, SF0001).collect()
-    }
-    assert got == expected
-
-
-# ---------------------------------------------------------------- kfold split
-
-
-def test_kfold_exact_balance_and_determinism(spark):
-    rows = queries()["curation_kfold_split"](spark, SF0001).collect()
-    import collections
-
-    per = collections.defaultdict(collections.Counter)
-    for r in rows:
-        per[r["source"]][r["fold"]] += 1
-    for src, folds in per.items():
-        assert set(folds) == {1, 2, 3, 4, 5}
-        assert max(folds.values()) - min(folds.values()) <= 1, (src, folds)
-    # deterministic: re-running yields the identical assignment
-    again = {
-        (r["doc_id"], r["fold"]) for r in queries()["curation_kfold_split"](spark, SF0001).collect()
-    }
-    assert again == {(r["doc_id"], r["fold"]) for r in rows}
-
-
-# ---------------------------------------------------------------- winsorize
-
-
-def test_winsorize_matches_bruteforce(spark):
-    docs = load(spark, SF0001, "documents").select("doc_id", "source", "n_chars").collect()
-    by_src = {}
-    for doc_id, src, n in docs:
-        by_src.setdefault(src, []).append((n, doc_id))
-    got = {r["source"]: r for r in queries()["curation_winsorize_clip"](spark, SF0001).collect()}
-    for src, vals in by_src.items():
-        vals.sort()
-        n = len(vals)
-        p05 = vals[(5 * n + 99) // 100 - 1][0]
-        p95 = vals[(95 * n + 99) // 100 - 1][0]
-        r = got[src]
-        assert (r["p05"], r["p95"], r["n_docs"]) == (p05, p95, n)
-        assert r["sum_raw"] == sum(v for v, _ in vals)
-        assert r["sum_clipped"] == sum(min(max(v, p05), p95) for v, _ in vals)
-        assert r["n_clipped"] == sum(1 for v, _ in vals if v < p05 or v > p95)
-
-
-# ------------------------------------------------------------ span corruption
-
-
-def test_span_corruption_reconstructs_original(spark):
-    docs = {
-        r[0]: r[1].lower().split(" ")
-        for r in load(spark, SF0001, "documents").filter("doc_id % 5 = 0").select("doc_id", "text").collect()
-    }
-    rows = {r["doc_id"]: r for r in queries()["curation_span_corruption"](spark, SF0001).collect()}
-    assert set(rows) == set(docs)
-    for doc_id, toks in docs.items():
-        r = rows[doc_id]
-        inp = r["input_str"].split(" ") if r["input_str"] else []
-        tgt = r["target_str"].split(" ") if r["target_str"] else []
-        # splice targets back into inputs at the sentinels: must equal original
-        spans = {}
-        cur = None
-        for t in tgt:
-            if t.startswith("<extra_id_"):
-                cur = t
-                spans[cur] = []
-            else:
-                spans[cur].append(t)
-        rebuilt = []
-        for t in inp:
-            if t.startswith("<extra_id_"):
-                rebuilt.extend(spans[t])
-            else:
-                rebuilt.append(t)
-        assert rebuilt == toks, doc_id
-        assert r["n_spans"] == len(spans)
-        # spans are exactly 3 tokens (anchor spacing guarantees no merge)
-        for body in spans.values():
-            assert len(body) == 3
-
-
-def test_capped_candidate_funnel_equals_all_pairs(spark):
-    """The dedup pipeline's candidate rule (PPJoin prefix filtering: each
-    doc indexes its |X| - ceil(t*|X|) + 1 rarest shingles, plus the
-    size-band length filter) must lose NO pair that the all-pairs ground
-    truth finds at J>=0.65 — prefix filtering is provably lossless (Xiao
-    et al., WWW'08; property-tested on random universes below), so any
-    miss here means the implementation diverged from the principle."""
-    funnel = {
-        r["stage"]: (r["n_docs"], r["total_chars"])
-        for r in queries()["curation_dedup_pipeline"](spark, SF0001).collect()
-    }
-    # recompute the funnel from PURE-PYTHON all-pairs ground truth —
-    # independent of BOTH the pipeline and dedup_ngram_jaccard (which now
-    # share the prefix-filter candidate rule)
-    docs = {
-        r["doc_id"]: (r["n_chars"], r["text"])
-        for r in spark.read.parquet(SF0001 + "/documents.parquet").collect()
-    }
-    import itertools
-
-    shingle_sets = {
-        did: {t[i : i + 3] for i in range(max(len(t) - 2, 1))}
-        for did, (_, t) in docs.items()
-    }
-    exact = set()
-    for a, b in itertools.combinations(sorted(docs), 2):
-        sa, sb = shingle_sets[a], shingle_sets[b]
-        inter = len(sa & sb)
-        if inter and round(inter / (len(sa) + len(sb) - inter), 6) >= 0.65:
-            exact.add((a, b))
-    import hashlib
-    import re as _re
-
-    by_fp = {}
-    for doc_id in sorted(docs):
-        f = hashlib.md5(_re.sub(r"\s+", " ", docs[doc_id][1].lower()).strip().encode()).hexdigest()
-        by_fp.setdefault(f, doc_id)
-    stage1 = set(by_fp.values())
-    drop = {b for (a, b) in exact if a in stage1 and b in stage1}
-    stage2 = stage1 - drop
-    stage3 = {d for d in stage2 if 200 <= docs[d][0] <= 5000}
-    assert funnel["stage1_exact_dedup"] == (
-        len(stage1),
-        sum(docs[d][0] for d in stage1),
-    )
-    assert funnel["stage2_near_dedup"] == (
-        len(stage2),
-        sum(docs[d][0] for d in stage2),
-    )
-    assert funnel["stage3_quality"] == (
-        len(stage3),
-        sum(docs[d][0] for d in stage3),
-    )
-
-
-def test_sample_weights_export_matches_bruteforce(spark):
-    import re as _re
-
-    rows = spark.read.parquet(SF0001 + "/documents.parquet").select(
-        "doc_id", "source", "n_chars", "text"
-    ).collect()
-    fp = {
-        r["doc_id"]: hashlib.md5(
-            _re.sub(r"\s+", " ", r["text"].lower()).strip().encode()
-        ).hexdigest()
-        for r in rows
-    }
-    keeper_of = {}
-    for r in sorted(rows, key=lambda r: r["doc_id"]):
-        keeper_of.setdefault(fp[r["doc_id"]], r["doc_id"])
-    chars = defaultdict(int)
-    for r in rows:
-        chars[r["source"]] += r["n_chars"]
-    tw = sum(c ** 0.7 for c in chars.values())
-    mix = {s: math.floor(c ** 0.7 / tw * 1e6 + 0.5) for s, c in chars.items()}
-    expect = {}
-    for r in rows:
-        is_keeper = keeper_of[fp[r["doc_id"]]] == r["doc_id"]
-        quality = 200 <= r["n_chars"] <= 5000
-        w = 0 if not is_keeper else (mix[r["source"]] * 2 if quality else mix[r["source"]])
-        expect[r["doc_id"]] = (w, is_keeper, quality)
-    got = {
-        r["doc_id"]: (r["weight_ppm2"], r["is_keeper"], r["quality_pass"])
-        for r in queries()["curation_sample_weights_export"](spark, SF0001).collect()
-    }
-    assert got == expect

@@ -1,20 +1,12 @@
 """Dedup operator tests: LSH vs exact ground truth, SimHash properties,
 approx-distinct accuracy (SURVEY.md §5 strategy for non-SQL-expressible ops)."""
 
-import itertools
-import math
-import random
-from collections import Counter
-
-import pyarrow.parquet as pq
-import pytest
 from pyspark.sql import functions as F
 
 from gcp_cloudsql_to_bigquery_spark.catalog import load
 from gcp_cloudsql_to_bigquery_spark.operators import dedup
 from gcp_cloudsql_to_bigquery_spark.workload import queries
-from selfcheck import duck_on
-from tests.conftest import SF0001, SF001
+from tests.conftest import SF0001
 
 
 def test_minhash_lsh_matches_exact_ground_truth(spark):
@@ -108,521 +100,3 @@ def test_hll_sketch_rollup_estimates_match_exact(spark):
     for k, n in exact.items():
         assert rows[k].exact_customers == n, (k, rows[k].exact_customers, n)
         assert rows[k].hll_within_5pct, (k, n)
-
-
-def test_containment_bounds_and_best_container(spark):
-    rows = queries()["dedup_containment"](spark, SF0001).collect()
-    seen = set()
-    for r in rows:
-        assert r["doc_a"] not in seen, "one best container per contained doc"
-        seen.add(r["doc_a"])
-        assert r["doc_a"] != r["doc_b"]
-        assert 0 < r["n_inter"] <= r["n_a"]
-        assert 50 <= r["containment_pct"] <= 100
-
-
-def test_semdedup_dup_targets_have_lower_keeper(spark):
-    rows = queries()["dedup_semdedup"](spark, SF0001).collect()
-    for r in rows:
-        assert r["dup_of"] < r["vec_id"]
-        assert r["best_cos_fp"] >= 400000
-
-
-def test_prefix_filter_lossless_property():
-    """The PPJoin prefix rule used by curation_dedup_pipeline: with sets
-    ordered by a global (df, token) order and prefix length
-    |X| - ceil(t|X|) + 1, every pair with Jaccard >= t must collide on the
-    prefixes.  Randomized check over small universes — an off-by-one in
-    the prefix length silently drops borderline pairs (exactly the bug
-    class the df-cap attempt had)."""
-    import itertools
-    import random
-
-    rng = random.Random(7)
-    t = 0.65
-    for trial in range(300):
-        n_docs = rng.randint(2, 8)
-        universe = list(range(rng.randint(3, 12)))
-        docs = [
-            set(rng.sample(universe, rng.randint(1, len(universe))))
-            for _ in range(n_docs)
-        ]
-        df = Counter(g for d in docs for g in d)
-        order = sorted(universe, key=lambda g: (df[g], g))
-        pos = {g: i for i, g in enumerate(order)}
-        prefixes = []
-        for d in docs:
-            p = len(d) - math.ceil(t * len(d)) + 1
-            prefixes.append(set(sorted(d, key=lambda g: pos[g])[:p]))
-        for i, j in itertools.combinations(range(n_docs), 2):
-            inter = len(docs[i] & docs[j])
-            union = len(docs[i] | docs[j])
-            if union and inter / union >= t:
-                assert prefixes[i] & prefixes[j], (
-                    trial, sorted(docs[i]), sorted(docs[j]), inter / union
-                )
-
-
-# --- FP-robust prefix ceil (ADVICE r6 #1) ----------------------------------
-
-
-def test_prefix_ceil_fp_robust_grid():
-    """ceil(round(t*n, 9)) == exact-rational ceil for every common
-    threshold x n <= 2000 — the raw double ceil is WRONG in 54 of these
-    cells (first: t=0.55, n=100 -> 56 instead of 55), each one silently
-    shortening the prefix and dropping borderline true pairs."""
-    import math
-    from fractions import Fraction
-
-    hazards = 0
-    for num, den in [(13, 20), (4, 5), (7, 10), (3, 5), (9, 10), (17, 20),
-                     (1, 2), (3, 4), (19, 20), (11, 20)]:
-        t = num / den
-        for n in range(1, 2001):
-            exact = math.ceil(Fraction(num, den) * n)
-            if math.ceil(t * n) != exact:
-                hazards += 1
-            assert math.ceil(round(t * n, 9)) == exact, (num, den, n)
-    assert hazards == 54  # the bug class is real, not hypothetical
-
-
-def test_prefix_filter_survives_fp_hazard_threshold(spark):
-    """End-to-end witness at the t=0.55, |A|=100 hazard point: doc A has
-    45 unique + 55 shared tokens, doc B exactly the 55 shared, so
-    J(A,B) = 55/100 = 0.55 and the pair's ONLY prefix collision is A's
-    46th prefix slot.  The raw-double ceil yields prefix length 45 and
-    silently drops the pair; the FP-robust ceil keeps it."""
-    import math
-
-    from gcp_cloudsql_to_bigquery_spark.operators.dedup import (
-        prefix_filtered_candidates,
-    )
-
-    # the hazard is live in IEEE doubles (same arithmetic the JVM runs)
-    assert math.ceil(0.55 * 100) == 56  # wrong (exact value is 55)
-
-    uniq = [1000 + i for i in range(45)]
-    shared = [2000 + i for i in range(55)]
-    sh = spark.createDataFrame(
-        [(1, uniq + shared), (2, shared)], "doc_id long, hsh array<long>"
-    )
-    got = {
-        (r.doc_a, r.doc_b)
-        for r in prefix_filtered_candidates(sh, 0.55).collect()
-    }
-    assert (1, 2) in got
-
-
-def test_positional_filter_lossless_property():
-    """PPJoin positional filter (r7, Xiao et al. WWW'08): a collision row
-    witnesses a pair only if 1 + min(na-ra, nb-rb) >= alpha with alpha =
-    ceil(t/(1+t)*(na+nb)).  A qualifying pair's FIRST common token always
-    passes (no common token precedes it), so the per-row filter is
-    lossless.  Randomized check across thresholds and universes, with the
-    same rounded-ground-truth the oracles use."""
-    import itertools
-    import math
-    import random
-    from collections import Counter
-
-    rng = random.Random(42)
-
-    def ceil9(x):
-        return math.ceil(round(x, 9))
-
-    for trial in range(800):
-        t = rng.choice([0.5, 0.55, 0.6, 0.65, 0.7, 0.75, 0.8, 0.85])
-        n_docs = rng.randint(2, 10)
-        universe = list(range(rng.randint(3, 14)))
-        docs = [
-            set(rng.sample(universe, rng.randint(1, len(universe))))
-            for _ in range(n_docs)
-        ]
-        df = Counter(g for d in docs for g in d)
-        pos = {g: i for i, g in enumerate(sorted(universe, key=lambda g: (df[g], g)))}
-        ranks = [
-            {g: i + 1 for i, g in enumerate(sorted(d, key=lambda g: pos[g]))}
-            for d in docs
-        ]
-        cands = set()
-        for i, j in itertools.combinations(range(n_docs), 2):
-            na, nb = len(docs[i]), len(docs[j])
-            if na < ceil9(t * nb) or nb < ceil9(t * na):
-                continue
-            pla = na - ceil9(t * na) + 1
-            plb = nb - ceil9(t * nb) + 1
-            alpha = ceil9(t / (1 + t) * (na + nb))
-            if any(
-                ranks[i][g] <= pla and ranks[j][g] <= plb
-                and 1 + min(na - ranks[i][g], nb - ranks[j][g]) >= alpha
-                for g in docs[i] & docs[j]
-            ):
-                cands.add((i, j))
-        for i, j in itertools.combinations(range(n_docs), 2):
-            inter = len(docs[i] & docs[j])
-            union = len(docs[i] | docs[j])
-            if union and round(inter / union, 6) >= t:
-                assert (i, j) in cands, (
-                    trial, t, sorted(docs[i]), sorted(docs[j]), inter / union
-                )
-
-
-def test_url_canonical_matches_urllib(spark):
-    """URL synthesis AND canonicalization are replayed identically by the
-    oracle; this witness re-derives both through urllib.parse (a third,
-    structurally different parser) and a plain dict aggregation."""
-    from urllib.parse import urlsplit
-
-    doc_ids = pq.read_table(SF0001 + "/documents.parquet", columns=["doc_id"]).column(0).to_pylist()
-
-    def synth(k):
-        b = k // 4
-        host = f"s{b % 7}.example.com"
-        return [
-            f"https://{host}/page/{b}?id={b}&p=1",
-            f"HTTPS://{host.upper()}:443/page/{b}?id={b}&p=1",
-            f"https://{host}/page/{b}?p=1&utm_source=news&id={b}",
-            f"https://{host}/page/{b}?utm_campaign=x&id={b}&p=1#sec2",
-        ][k % 4]
-
-    agg = {}
-    for k in doc_ids:
-        u = urlsplit(synth(k))
-        host = u.netloc.lower()
-        host = host[:-4] if host.endswith(":443") else host
-        params = sorted(
-            kv for kv in u.query.split("&") if kv and not kv.startswith("utm_")
-        )
-        canon = u.scheme.lower() + "://" + host + u.path + (
-            "?" + "&".join(params) if params else ""
-        )
-        n, keeper = agg.get(canon, (0, k))
-        agg[canon] = (n + 1, min(keeper, k))
-    got = {
-        r["canonical_url"]: (r["n_variants"], r["keeper"])
-        for r in queries()["dedup_url_canonical"](spark, SF0001).collect()
-    }
-    assert got == agg
-    # the synthesis really exercises all four variant shapes into ONE key
-    assert Counter(n for n, _ in agg.values())[4] > 0
-
-
-# ---------------------------------------------------------------------------
-# AND-2 banding expected-miss budget (ADVICE r15)
-# ---------------------------------------------------------------------------
-
-
-@pytest.mark.parametrize("sf_dir", [SF0001, SF001])
-def test_minhash_ml_oracle_pairs_carry_negligible_miss_budget(sf_dir):
-    """The r15 contract: P(miss) per true pair = (1-j^2)^8 under 8 OR-ed
-    AND-2 bands.  Summed over the ACTUAL oracle pair population of each
-    driver-checked tier the expected miss count must be ~0 (< 0.005), so
-    any future differential flake on this query is a code regression, not
-    a probabilistic band miss.  (A pair at j=0.8 contributes 2.8e-4; this
-    asserts no tier is dense in such borderline pairs.)"""
-    import __spark_entry__ as entry
-
-    with duck_on(sf_dir) as con:
-        rows = con.execute(entry.oracle_sql()["dedup_minhash_ml"]).fetchall()
-    assert rows, f"oracle returned no pairs at {sf_dir} — fixture drifted"
-    js = [r[-1] for r in rows]
-    assert all(j >= 0.8 for j in js)
-    budget = sum((1 - j * j) ** 8 for j in js)
-    assert budget < 0.005, (
-        f"expected-miss budget {budget:.5f} at {sf_dir}: the tier is dense "
-        f"in borderline pairs; re-derive the banding contract before "
-        f"trusting differential greens"
-    )
-
-
-def _ceil9(x: float) -> int:
-    return math.ceil(round(x, 9))
-
-
-def test_asymmetric_prefix_lossless_model():
-    """Model of the full r16 candidate rule — asymmetric prefixes, size
-    band, positional filter: every pair with J >= t must keep at least
-    one witness collision row.  An off-by-one in the 2t/(1+t) index
-    prefix (or a raw-double ceil of an exactly-integral product) drops
-    borderline pairs; 300 random universes x 4 thresholds would catch
-    it."""
-    rng = random.Random(16)
-    for t in (0.5, 0.55, 0.65, 0.8):
-        for trial in range(300):
-            n_docs = rng.randint(2, 8)
-            universe = list(range(rng.randint(3, 14)))
-            docs = [
-                set(rng.sample(universe, rng.randint(1, len(universe))))
-                for _ in range(n_docs)
-            ]
-            df = Counter(g for d in docs for g in d)
-            pos = {
-                g: i
-                for i, g in enumerate(sorted(universe, key=lambda g: (df[g], g)))
-            }
-            ordered = [sorted(d, key=lambda g: pos[g]) for d in docs]
-            probe = [od[: len(od) - _ceil9(t * len(od)) + 1] for od in ordered]
-            index = [
-                od[: len(od) - _ceil9(2.0 * t / (1.0 + t) * len(od)) + 1]
-                for od in ordered
-            ]
-            for i, j in itertools.combinations(range(n_docs), 2):
-                inter = len(docs[i] & docs[j])
-                union = len(docs[i] | docs[j])
-                if not union or inter / union < t:
-                    continue
-                # orient: b = smaller (size, id), a = larger
-                b, a = sorted(
-                    (i, j), key=lambda k: (len(docs[k]), k)
-                )
-                na, nb = len(docs[a]), len(docs[b])
-                alpha = _ceil9(t / (1.0 + t) * (na + nb))
-                rank_a = {g: r + 1 for r, g in enumerate(ordered[a])}
-                rank_b = {g: r + 1 for r, g in enumerate(ordered[b])}
-                witnesses = [
-                    g
-                    for g in set(probe[a]) & set(index[b])
-                    if 1 + min(na - rank_a[g], nb - rank_b[g]) >= alpha
-                ]
-                assert witnesses, (
-                    t, trial, sorted(docs[a]), sorted(docs[b]), inter / union
-                )
-
-
-def test_asymmetric_candidates_superset_of_true_pairs(spark):
-    """End-to-end through the real operator: on a random hashed-shingle
-    corpus the candidate set must contain every brute-force pair with
-    J >= t, and rows must come out canonicalized (doc_a < doc_b) exactly
-    once."""
-    from gcp_cloudsql_to_bigquery_spark.operators.dedup import (
-        prefix_filtered_candidates,
-    )
-
-    rng = random.Random(61)
-    t = 0.65
-    universe = list(range(1, 40))
-    docs = {
-        i: set(rng.sample(universe, rng.randint(1, 25))) for i in range(1, 31)
-    }
-    # salt in guaranteed borderline near-dups (J in [t, 1])
-    docs[100] = set(docs[1])
-    docs[101] = set(list(sorted(docs[2]))[:-1]) or {1}
-    docs[102] = docs[3] | {999}
-    sh = spark.createDataFrame(
-        [(i, sorted(s)) for i, s in docs.items()],
-        "doc_id long, hsh array<long>",
-    )
-    rows = prefix_filtered_candidates(sh, t).collect()
-    got = [(r.doc_a, r.doc_b) for r in rows]
-    assert len(got) == len(set(got))
-    assert all(a < b for a, b in got)
-    for i, j in itertools.combinations(sorted(docs), 2):
-        inter = len(docs[i] & docs[j])
-        union = len(docs[i] | docs[j])
-        if union and inter / union >= t:
-            assert (min(i, j), max(i, j)) in set(got), (i, j, inter / union)
-
-
-def test_null_doc_id_never_pairs(spark):
-    """null-KEYS hazard pinned during r16: the (size, id) pair order
-    compares sizes FIRST (never NULL), so a NULL-id doc could pass
-    orientation against a smaller doc and least/greatest would collapse
-    the pair into a spurious (x, x) self-pair.  NULL-id docs must be
-    invisible to the candidate machinery, exactly like the oracles'
-    a.doc_id < b.doc_id pairing."""
-    from gcp_cloudsql_to_bigquery_spark.operators.dedup import (
-        prefix_filtered_candidates,
-    )
-
-    sh = spark.createDataFrame(
-        [
-            (1, [10, 11, 12, 13]),
-            (None, [10, 11, 12, 13]),   # exact dup of doc 1, but NULL id
-            (2, [10, 11, 12]),          # J(2,1)=0.75, J(2,null-doc)=0.75
-        ],
-        "doc_id long, hsh array<long>",
-    )
-    got = {(r.doc_a, r.doc_b) for r in prefix_filtered_candidates(sh, 0.65).collect()}
-    assert got == {(1, 2)}
-
-
-def _model_collisions(docs: dict, t: float) -> dict:
-    """Pure-Python replica of the candidate rule: asymmetric prefixes +
-    size band + per-row positional filter.  Returns, per canonical
-    (lo, hi) pair with at least one passing collision, ``(na, nb, alpha,
-    [(ra, rb), ...])`` for its passing collisions."""
-    df = Counter(g for d in docs.values() for g in d)
-    ordered = {i: sorted(d, key=lambda g: (df[g], g)) for i, d in docs.items()}
-    probe = {
-        i: set(od[: len(od) - _ceil9(t * len(od)) + 1]) for i, od in ordered.items()
-    }
-    index = {
-        i: set(od[: len(od) - _ceil9(2.0 * t / (1.0 + t) * len(od)) + 1])
-        for i, od in ordered.items()
-    }
-    rank = {
-        i: {g: r + 1 for r, g in enumerate(od)} for i, od in ordered.items()
-    }
-    out = {}
-    for i, j in itertools.combinations(sorted(docs), 2):
-        # orient: b = smaller in (size, id) order, a = larger
-        b, a = sorted((i, j), key=lambda k: (len(docs[k]), k))
-        na, nb = len(docs[a]), len(docs[b])
-        # size band (binding half under nb <= na)
-        if nb < _ceil9(t * na):
-            continue
-        alpha = _ceil9(t / (1.0 + t) * (na + nb))
-        collisions = [
-            (rank[a][g], rank[b][g])
-            for g in probe[a] & index[b] & (docs[a] & docs[b])
-            if 1 + min(na - rank[a][g], nb - rank[b][g]) >= alpha
-        ]
-        if collisions:
-            out[(min(i, j), max(i, j))] = (na, nb, alpha, collisions)
-    return out
-
-
-def _model_candidates(docs: dict, t: float) -> set:
-    return set(_model_collisions(docs, t))
-
-
-def test_accumulated_suffix_bound_lossless_model():
-    """300 random universes x 4 thresholds: the model candidate set must
-    contain every brute-force pair with J >= t.  An off-by-one in the
-    positional filter (e.g. forgetting that collision ranks are 1-based)
-    drops borderline pairs and this catches it."""
-    rng = random.Random(17)
-    for t in (0.5, 0.55, 0.65, 0.8):
-        for trial in range(300):
-            n_docs = rng.randint(2, 8)
-            universe = list(range(rng.randint(3, 14)))
-            docs = {
-                k: set(rng.sample(universe, rng.randint(1, len(universe))))
-                for k in range(n_docs)
-            }
-            cand = _model_candidates(docs, t)
-            for i, j in itertools.combinations(sorted(docs), 2):
-                inter = len(docs[i] & docs[j])
-                union = len(docs[i] | docs[j])
-                if union and inter / union >= t:
-                    assert (i, j) in cand, (
-                        t, trial, sorted(docs[i]), sorted(docs[j]), inter / union
-                    )
-
-
-def _accumulated_bound(na, nb, collisions) -> int:
-    return len(collisions) + min(
-        na - max(ra for ra, _ in collisions), nb - max(rb for _, rb in collisions)
-    )
-
-
-def test_accumulated_bound_never_prunes_past_positional_filter():
-    """The round-17 geometry that was meant to show the accumulated bound
-    pruning: t = 0.6, x of size 16 and y of size 10 (alpha = 10) sharing
-    exactly two tokens, at ranks (1, 1) and (8, 3).  Through the model the
-    (8, 3) collision never counts — rank 8 lies outside x's 7-token probe
-    prefix and its per-row bound is 1 + min(8, 7) = 8 < 10 — so the pair
-    keeps its lone (1, 1) witness, whose accumulated bound is
-    1 + min(15, 9) = 10 = alpha: kept, though its true J is 2/24.  Then,
-    over random universes, every kept pair meets the accumulated bound."""
-    t = 0.6
-    # every token has df 2 (fillers 3 and 4 pair with x- and y-only
-    # tokens), so each doc ranks its tokens by id
-    x = {0, 10, 20, 30, 40, 50, 60, 70} | set(range(80, 160, 10))
-    y = {0, 5, 70} | set(range(200, 207))
-    docs = {1: x, 2: y, 3: x - y, 4: y - x}
-    assert (len(x), len(y)) == (16, 10)
-    assert (sorted(x).index(70) + 1, sorted(y).index(70) + 1) == (8, 3)
-    na, nb, alpha, collisions = _model_collisions(docs, t)[(1, 2)]
-    assert (na, nb, alpha, collisions) == (16, 10, 10, [(1, 1)])
-    assert _accumulated_bound(na, nb, collisions) == alpha
-
-    rng = random.Random(5)
-    for t in (0.5, 0.6, 0.65, 0.8, 0.9):
-        for _ in range(300):
-            universe = list(range(rng.randint(3, 30)))
-            docs = {
-                k: set(rng.sample(universe, rng.randint(1, len(universe))))
-                for k in range(rng.randint(2, 8))
-            }
-            for na, nb, alpha, collisions in _model_collisions(docs, t).values():
-                assert _accumulated_bound(na, nb, collisions) >= alpha
-
-
-def test_spark_candidates_still_superset_and_canonical(spark):
-    """End-to-end through the real operator: candidate set still contains
-    every brute-force pair with J >= t, rows still canonicalized (doc_a < doc_b) exactly once, and the set
-    matches the pure-Python model exactly (the model is the spec)."""
-    from gcp_cloudsql_to_bigquery_spark.operators.dedup import (
-        prefix_filtered_candidates,
-    )
-
-    rng = random.Random(71)
-    t = 0.65
-    universe = list(range(1, 40))
-    docs = {
-        i: set(rng.sample(universe, rng.randint(1, 25))) for i in range(1, 31)
-    }
-    docs[100] = set(docs[1])                         # exact dup
-    docs[101] = set(list(sorted(docs[2]))[:-1]) or {1}  # borderline near-dup
-    docs[102] = docs[3] | {999}                      # superset near-dup
-    sh = spark.createDataFrame(
-        [(i, sorted(s)) for i, s in docs.items()],
-        "doc_id long, hsh array<long>",
-    )
-    rows = prefix_filtered_candidates(sh, t).collect()
-    got = [(r.doc_a, r.doc_b) for r in rows]
-    assert len(got) == len(set(got))
-    assert all(a < b for a, b in got)
-    for i, j in itertools.combinations(sorted(docs), 2):
-        inter = len(docs[i] & docs[j])
-        union = len(docs[i] | docs[j])
-        if union and inter / union >= t:
-            assert (min(i, j), max(i, j)) in set(got), (i, j, inter / union)
-    # exact agreement with the model (hashes in the operator are the raw
-    # ints here, so ordering/df stats coincide)
-    assert set(got) == _model_candidates(docs, t)
-
-
-def test_lsh_size_band_lossless_and_prunes(spark):
-    """r17 size band at the LSH band join: J >= 0.8 forces
-    min(|A|,|B|) >= ceil9(0.8*max), so (a) every true pair at the 0.8
-    verify threshold must still come out of lsh_candidate_pairs, and
-    (b) a pair whose sizes violate the band must be pruned even when
-    its minhash bands collide (identical prefix content + a long tail
-    makes every band... not collide; instead make the small doc a strict
-    subset so SOME bands can collide while J = |small|/|large| < 0.8)."""
-    from pyspark.sql import functions as F
-
-    from gcp_cloudsql_to_bigquery_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        minhash_signatures,
-        with_shingles,
-    )
-
-    # doc 1/2: near-identical long texts (J >= 0.8 guaranteed: only the
-    # last char differs); doc 3: a short strict prefix of doc 1 (subset
-    # shingles => minhash bands CAN collide, but size ratio < 0.8)
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    docs = [
-        (1, base + " tail one"),
-        (2, base + " tail onX"),
-        (3, base[:20]),
-    ]
-    d = with_shingles(
-        spark.createDataFrame(docs, "doc_id long, text string")
-    )
-    sig = minhash_signatures(d)
-    # n_sh must equal the distinct-shingle count (the oracle-grain size)
-    sizes = {r.doc_id: r.n_sh for r in sig.collect()}
-    expect = {
-        r.doc_id: r.n for r in d.select(
-            "doc_id", F.size("shingles").alias("n")).collect()
-    }
-    assert sizes == expect
-    got = {(r.doc_a, r.doc_b) for r in lsh_candidate_pairs(sig).collect()}
-    assert (1, 2) in got           # true near-dup survives the band
-    # the subset doc's size violates the 0.8 band against both long docs
-    import math
-    assert sizes[3] < math.ceil(round(0.8 * sizes[1], 9))
-    assert (1, 3) not in got and (2, 3) not in got

@@ -2,8 +2,6 @@
 truncate idempotence, row-count verification — the reference 4-stage chain
 on sf0.001."""
 
-import hashlib
-
 from pyspark.sql import functions as F
 
 from gcp_cloudsql_to_bigquery_spark.catalog import load
@@ -13,8 +11,6 @@ from gcp_cloudsql_to_bigquery_spark.ingest.pipeline import (
     roundtrip,
     verify_rowcount,
 )
-from gcp_cloudsql_to_bigquery_spark.workload import queries
-from tests.conftest import SF0001, SF001
 
 
 def test_roundtrip_preserves_rows_and_values(spark, sf_dir, tmp_path):
@@ -235,70 +231,3 @@ def test_small_parquet_file_scans_as_one_split(spark):
     path = os.path.join(SF001, "lineitem.parquet")
     assert os.path.getsize(path) <= 1024 * 1024
     assert spark.read.parquet(path).rdd.getNumPartitions() == 1
-
-
-def test_early_arriving_facts_partition_cleanly(spark):
-    from gcp_cloudsql_to_bigquery_spark.catalog import load
-
-    rows = queries()["elt_early_arriving_facts"](spark, SF0001).collect()
-    total = sum(r["n"] for r in rows)
-    n_facts = (
-        load(spark, SF0001, "orders")
-        .filter("o_orderdate >= timestamp '1998-01-01'")
-        .count()
-    )
-    assert total == n_facts  # phase1 + retry partition the fact set exactly
-    assert {r["resolved_in"] for r in rows} == {"phase1", "retry"}
-
-
-# ---------------------------------------------------------- backfill planner
-
-
-def test_backfill_islands_partition_missing_days(spark):
-    import datetime as dt
-
-    days = {}
-    for (od,) in load(spark, SF0001, "orders").select("o_orderdate").collect():
-        days[od.date()] = days.get(od.date(), 0) + 1
-    lo, hi = min(days), max(days)
-    present = {
-        d for d in days
-        if hashlib.md5(f"bf:{d.isoformat()}".encode()).hexdigest()[0] != "0"
-    }
-    missing = []
-    d = lo
-    while d <= hi:
-        if d not in present:
-            missing.append(d)
-        d += dt.timedelta(days=1)
-    rows = queries()["elt_backfill_planner"](spark, SF0001).collect()
-    covered = []
-    for r in rows:
-        assert r["start_date"] <= r["end_date"]
-        assert r["n_days"] == (r["end_date"] - r["start_date"]).days + 1
-        assert r["est_rows"] == sum(
-            days.get(r["start_date"] + dt.timedelta(days=i), 0)
-            for i in range(r["n_days"])
-        )
-        covered.extend(
-            r["start_date"] + dt.timedelta(days=i) for i in range(r["n_days"])
-        )
-    # jobs exactly tile the missing set, in maximal contiguous runs
-    assert sorted(covered) == missing
-    starts = {r["start_date"] for r in rows}
-    for d in missing:
-        prev_missing = (d - dt.timedelta(days=1)) in missing
-        assert (d in starts) == (not prev_missing)
-
-
-# ---------------------------------------------------------------- data vault
-
-
-def test_data_vault_integrity(spark):
-    rows = {r["entity"]: r for r in queries()["elt_data_vault_model"](spark, SF0001).collect()}
-    c = load(spark, SF0001, "customer").count()
-    o = load(spark, SF0001, "orders").count()
-    assert rows["hub_customer"]["n_rows"] == c
-    assert rows["hub_order"]["n_rows"] == o
-    assert rows["link_placed"]["n_rows"] == o  # one placing per order
-    assert all(r["keys_unique"] for r in rows.values())

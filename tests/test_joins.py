@@ -3,11 +3,7 @@
 
 from pyspark.sql import functions as F
 
-from gcp_cloudsql_to_bigquery_spark.catalog import load
 from gcp_cloudsql_to_bigquery_spark.operators.joins import asof_join
-from gcp_cloudsql_to_bigquery_spark.workload import queries
-from selfcheck import duck_on
-from tests.conftest import SF0001
 
 
 def _fixtures(spark):
@@ -59,136 +55,3 @@ def test_pandas_merge_asof_agreement(spark):
     want_set = {(int(r.k), int(r.t), int(r.rt), int(r.val)) for r in want.itertuples()}
     got_set = {(r.k, r.t, r.asof_rt, r.asof_val) for r in got}
     assert got_set == want_set
-
-
-# ------------------------------------------------------------ Allen algebra
-
-
-def _allen(a_s, a_e, b_s, b_e):
-    if a_e < b_s:
-        return "before"
-    if a_e == b_s:
-        return "meets"
-    if a_s > b_e:
-        return "after"
-    if a_s == b_e:
-        return "met_by"
-    if a_s == b_s and a_e == b_e:
-        return "equals"
-    if a_s == b_s and a_e < b_e:
-        return "starts"
-    if a_s == b_s:
-        return "started_by"
-    if a_e == b_e and a_s > b_s:
-        return "finishes"
-    if a_e == b_e:
-        return "finished_by"
-    if a_s > b_s and a_e < b_e:
-        return "during"
-    if a_s < b_s and a_e > b_e:
-        return "contains"
-    if a_s < b_s:
-        return "overlaps"
-    return "overlapped_by"
-
-
-def test_allen_matches_bruteforce(spark):
-    import datetime as dt
-
-    orders = load(spark, SF0001, "orders").select(
-        "o_custkey", "o_orderkey", "o_orderdate"
-    ).collect()
-    byc = {}
-    for ck, ok, od in orders:
-        d = od.date()
-        byc.setdefault(ck, []).append((ok, d, d + dt.timedelta(days=ok % 20 + 3)))
-    expected = {}
-    for ivs in byc.values():
-        ivs.sort()
-        for i in range(len(ivs)):
-            for j in range(i + 1, len(ivs)):
-                rel = _allen(ivs[i][1], ivs[i][2], ivs[j][1], ivs[j][2])
-                expected[rel] = expected.get(rel, 0) + 1
-    got = {r["relation"]: r["n_pairs"] for r in queries()["join_allen_intervals"](spark, SF0001).collect()}
-    assert got == expected
-    assert sum(got.values()) == sum(len(v) * (len(v) - 1) // 2 for v in byc.values())
-
-
-# ---------------------------------------------------------------------------
-# interval_join inverted-interval guard (VERDICT r12 item 2)
-# ---------------------------------------------------------------------------
-
-
-def test_interval_join_drops_inverted_intervals(spark):
-    from gcp_cloudsql_to_bigquery_spark.operators.joins import interval_join
-
-    points = spark.createDataFrame(
-        [(1, "2024-01-01 12:00:00"), (2, "2024-01-01 12:00:00")],
-        "k int, t string",
-    ).selectExpr("k", "CAST(t AS TIMESTAMP) AS t")
-    intervals = spark.createDataFrame(
-        [
-            # valid: contains the point
-            (1, "2024-01-01 00:00:00", "2024-01-02 00:00:00", "ok"),
-            # inverted: end 3 days BEFORE start — must contribute zero rows
-            # (pre-guard it exploded a descending 3-day bucket range)
-            (2, "2024-01-04 00:00:00", "2024-01-01 00:00:00", "bad"),
-        ],
-        "k int, s string, e string, tag string",
-    ).selectExpr(
-        "k", "CAST(s AS TIMESTAMP) AS s", "CAST(e AS TIMESTAMP) AS e", "tag"
-    )
-    out = interval_join(
-        points, intervals, "k", "k", "t", "s", "e", bucket_width_sec=3600
-    )
-    tags = [r["tag"] for r in out.collect()]
-    assert tags == ["ok"]
-
-
-def test_interval_join_inverted_explodes_no_buckets(spark):
-    """The guard must act BEFORE the explode: an all-inverted interval side
-    produces an empty join input, not a descending garbage fan-out."""
-    from pyspark.sql import functions as F
-
-    from gcp_cloudsql_to_bigquery_spark.operators.joins import interval_join
-
-    points = spark.createDataFrame(
-        [(1, "2024-01-03 00:00:00")], "k int, t string"
-    ).selectExpr("k", "CAST(t AS TIMESTAMP) AS t")
-    inverted = spark.createDataFrame(
-        [(1, "2024-01-05 00:00:00", "2024-01-01 00:00:00")],
-        "k int, s string, e string",
-    ).selectExpr("k", "CAST(s AS TIMESTAMP) AS s", "CAST(e AS TIMESTAMP) AS e")
-    out = interval_join(points, inverted, "k", "k", "t", "s", "e", 3600)
-    assert out.count() == 0
-
-
-def test_star_q3_rounding_was_order_dependent(skewed_sf):
-    """Load-bearing check: on this data, DuckDB's round(sum(...), 2) and
-    the cent-quantized form genuinely DISAGREE for at least one group —
-    i.e. the old oracle shape was unfixable by any Spark-side summation
-    order, and the contract change was necessary."""
-    con = duck_on(skewed_sf)
-    try:
-        diff = con.execute(
-            """
-            WITH g AS (
-              SELECT l_orderkey,
-                     round(sum(l_extendedprice * (1 - l_discount)), 2) AS a,
-                     CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount)
-                                         * 100 + 0.5) AS BIGINT)) AS BIGINT)
-                       / 100.0 AS b
-              FROM customer
-              JOIN orders   ON c_custkey = o_custkey
-              JOIN lineitem ON l_orderkey = o_orderkey
-              WHERE c_mktsegment = 'BUILDING'
-                AND o_orderdate < TIMESTAMP '1995-03-15 00:00:00'
-                AND l_shipdate  > TIMESTAMP '1995-03-15 00:00:00'
-              GROUP BY l_orderkey
-            )
-            SELECT count(*) FROM g WHERE a <> b
-            """
-        ).fetchone()[0]
-    finally:
-        con.close()
-    assert diff > 0, "fixture no longer forces the rounding-boundary case"

@@ -5,10 +5,9 @@ multi-key fuzzy blocking, and pair-uniqueness invariants."""
 import hashlib
 from itertools import combinations
 
-from gcp_cloudsql_to_bigquery_spark.catalog import load
 from gcp_cloudsql_to_bigquery_spark.operators.linkage import _FUZZ_MAX_DIST, _GEO_MOD, _GEO_R2
 from gcp_cloudsql_to_bigquery_spark.workload import queries
-from tests.conftest import SF0001, md5_hex
+from tests.conftest import SF0001
 
 
 def _coord(salt: str, k: int) -> int:
@@ -60,91 +59,3 @@ def test_fuzzy_blocking_full_recall(spark):
         for r in queries()["join_fuzzy_blocked"](spark, SF0001).collect()
     }
     assert got == expect
-
-
-def test_morton_parent_child_containment(spark):
-    rows = queries()["geo_morton_rollup"](spark, SF0001).collect()
-    for r in rows:
-        assert r["cell_fine"] >> 4 == r["cell_coarse"], r
-
-
-# ------------------------------------------------------------ Fellegi-Sunter
-
-
-def test_fs_weights_and_partition(spark):
-    rows = queries()["linkage_fellegi_sunter"](spark, SF0001).collect()
-    w = {"name": (9288, -1414), "seg": (2129, -2678), "band": (3366, -3862)}
-    total_pairs = 0
-    for r in rows:
-        expect = (
-            w["name"][0 if r["name_agree"] else 1]
-            + w["seg"][0 if r["seg_agree"] else 1]
-            + w["band"][0 if r["band_agree"] else 1]
-        )
-        assert r["weight_milli"] == expect
-        expect_dec = (
-            "link" if expect >= 6000 else "possible" if expect >= 0 else "non_link"
-        )
-        assert r["decision"] == expect_dec
-        total_pairs += r["n_pairs"]
-    # true pairs concentrate in the all-agree / near-agree patterns
-    best = max(rows, key=lambda r: r["weight_milli"])
-    assert best["n_true_pairs"] > 0
-    # every candidate pair is classified exactly once (patterns partition)
-    c = load(spark, SF0001, "customer").select("c_custkey", "c_nationkey").collect()
-    import collections
-
-    nat_a = collections.Counter(nk for _, nk in c)
-    nat_b = collections.Counter()
-    for k, nk in c:
-        if md5_hex(f"fs2:{k}")[0] == "0":
-            nat_b[(nk + 1) % 25] += 1
-        else:
-            nat_b[nk] += 1
-    assert total_pairs == sum(nat_a[n] * nat_b[n] for n in nat_b)
-
-
-# -------------------------------------------------------- point in polygon
-
-_POLY = ((20000, 10000), (80000, 20000), (90000, 70000), (50000, 95000), (10000, 60000))
-
-
-def test_point_in_polygon_matches_bruteforce(spark):
-    rows = queries()["geo_point_in_polygon"](spark, SF0001).collect()
-    assert rows
-    n_in = 0
-    for r in rows:
-        x, y = r["x"], r["y"]
-        inside = all(
-            (x2 - x1) * (y - y1) - (y2 - y1) * (x - x1) >= 0
-            for (x1, y1), (x2, y2) in zip(_POLY, _POLY[1:] + _POLY[:1])
-        )
-        assert r["inside"] == inside, r
-        n_in += inside
-    # the fence covers a substantial interior: both classes occur
-    assert 0 < n_in < len(rows)
-
-
-# ------------------------------------------------- geo nearest neighbor
-
-
-def test_geo_nn_matches_allpairs(spark):
-    cust = load(spark, SF0001, "customer").select("c_custkey").collect()
-
-    def axis(tag, k):
-        return int(hashlib.md5(f"{tag}{k}".encode()).hexdigest()[:5], 16) % 100_000
-
-    pts = {k[0]: (axis("x", k[0]), axis("y", k[0])) for k in cust}
-    got = {r["k"]: (r["nearest_k"], r["dist_sq"]) for r in queries()["join_geo_nearest_neighbor"](spark, SF0001).collect()}
-    expected = {}
-    for k, (x, y) in pts.items():
-        best = None
-        for k2, (x2, y2) in pts.items():
-            if k2 == k:
-                continue
-            d2 = (x - x2) ** 2 + (y - y2) ** 2
-            if d2 <= 700 * 700 and (best is None or (d2, k2) < best):
-                best = (d2, k2)
-        if best:
-            expected[k] = (best[1], best[0])
-    assert got == expected

@@ -1,24 +1,11 @@
 """Multimodal plumbing tests: binary column, metadata struct, mapInPandas
 decode contract (real PPM/WAV kernels), column-pruning behavior."""
 
-import random
-import struct
-import zlib
-
 import pytest
-from hypothesis import given, settings, strategies as st
 
 from gcp_cloudsql_to_bigquery_spark.catalog import load
 from gcp_cloudsql_to_bigquery_spark.operators import multimodal
-from gcp_cloudsql_to_bigquery_spark.operators.multimodal import (
-    _png_chunk,
-    as_media_table,
-    decode_png,
-    run_steps,
-    synthesize_bmff,
-    synthesize_png,
-    walk_bmff,
-)
+from gcp_cloudsql_to_bigquery_spark.operators.multimodal import as_media_table
 from gcp_cloudsql_to_bigquery_spark.workload import queries
 from tests.conftest import SF0001
 
@@ -122,6 +109,8 @@ def test_resize_halves_dims_and_preserves_planes():
 
 
 _GOOD_P6 = b"P6\n2 2\n255\n" + bytes(12)
+
+
 _PPM_CONSUMERS = ("decode_ppm", "resize_ppm", "phash_ppm", "ppm_histogram", "detect_shots")
 
 
@@ -142,505 +131,3 @@ def test_media_kernels_reject_corrupt_payloads(kernel, payload, message):
     step = getattr(multimodal, kernel)
     with pytest.raises(ValueError, match=message):
         list(step(1, payload))
-
-
-def _expected_phash(doc_id: int) -> str:
-    h = doc_id % 48 + 8
-    return "".join(
-        "ff" if (i * h) // 8 + ((i + 1) * h) // 8 > h else "00" for i in range(8)
-    )
-
-
-def test_phash_matches_closed_form(spark):
-    rows = queries()["multimodal_phash_dedup"](spark, SF0001).collect()
-    assert rows, "no docs"
-    by_hash = {}
-    for r in rows:
-        assert r["phash"] == _expected_phash(r["doc_id"]), r
-        by_hash.setdefault(r["phash"], []).append(r)
-    for members in by_hash.values():
-        rep = min(m["doc_id"] for m in members)
-        for m in members:
-            assert m["cluster_size"] == len(members)
-            assert m["rep_doc_id"] == rep
-            assert m["is_dup"] == (len(members) > 1 and m["doc_id"] != rep)
-
-
-def _brute_phash(px_rows):
-    """Independent aHash: explicit per-block pixel loops (no numpy, no
-    integral image) over a row-major [[(r,g,b), ...], ...] image."""
-    h, w = len(px_rows), len(px_rows[0])
-    gray = [[sum(p) for p in row] for row in px_rows]
-    total = sum(sum(row) for row in gray)
-    out = []
-    for i in range(8):
-        a, b = i * h // 8, (i + 1) * h // 8
-        byte = 0
-        for j in range(8):
-            c, d = j * w // 8, (j + 1) * w // 8
-            s = sum(gray[y][x] for y in range(a, b) for x in range(c, d))
-            if s * (h * w) > total * ((b - a) * (d - c)):
-                byte |= 1 << (7 - j)
-        out.append(byte)
-    return bytes(out).hex()
-
-
-def _striped_image(doc_id, n_chars):
-    w, h, k = n_chars % 64 + 8, doc_id % 48 + 8, doc_id % 8
-    lo, hi = (k * h + 7) // 8, ((k + 1) * h + 7) // 8
-    return [
-        [(doc_id % 256, 255 if lo <= y < hi else y, (doc_id * 31) % 256)] * w
-        for y in range(h)
-    ]
-
-
-def test_phash_thumbnail_match_matches_bruteforce(spark):
-    docs = load(spark, SF0001, "documents").select("doc_id", "n_chars").collect()
-    oh, th = {}, {}
-    import collections
-
-    t_counts = collections.Counter()
-    for r in docs:
-        img = _striped_image(r["doc_id"], r["n_chars"])
-        oh[r["doc_id"]] = _brute_phash(img)
-        thumb = [row[::2] for row in img[::2]]
-        t = _brute_phash(thumb)
-        th[r["doc_id"]] = t
-        t_counts[t] += 1
-
-    def ham(a, b):
-        return bin(int(a, 16) ^ int(b, 16)).count("1")
-
-    got = {r["doc_id"]: r for r in queries()["multimodal_phash_thumbnail_match"](spark, SF0001).collect()}
-    assert len(got) == len(docs)
-    assert len(set(oh.values())) > 5, "fixture should give a diverse hash corpus"
-    for doc_id, phash in oh.items():
-        near = [(ham(phash, t), n) for t, n in t_counts.items() if ham(phash, t) <= 8]
-        r = got[doc_id]
-        assert r["phash"] == phash, doc_id
-        assert r["n_thumb_matches"] == sum(n for _, n in near), doc_id
-        assert r["best_hamming"] == (min(d for d, _ in near) if near else None), doc_id
-
-
-# ------------------------------------------------------------------ TIFF walk
-
-
-def test_tiff_roundtrip_both_endiannesses(spark):
-    rows = queries()["multimodal_tiff_metadata"](spark, SF0001).collect()
-    assert rows
-    seen = {r["byte_order"] for r in rows}
-    assert seen == {"II", "MM"}  # the corpus genuinely exercises both
-    docs = {r[0]: r[1] for r in load(spark, SF0001, "documents").select("doc_id", "n_chars").collect()}
-    for r in rows:
-        assert r["byte_order"] == ("II" if r["doc_id"] % 2 == 0 else "MM")
-        assert r["width"] == r["doc_id"] % 200 + 16
-        assert r["height"] == docs[r["doc_id"]] % 100 + 8
-        assert (r["bits"], r["compression"], r["n_entries"]) == (8, 1, 5)
-        assert r["orientation"] == r["doc_id"] % 8 + 1
-
-
-# ----------------------------------------------------------- PNG integrity
-
-
-def test_png_decoder_rejects_corruption(spark):
-    from gcp_cloudsql_to_bigquery_spark.operators.multimodal import (
-        decode_png,
-        run_steps,
-        synthesize_png,
-    )
-
-    media = run_steps([(2, 100), (3, 257)], synthesize_png)
-    ok = run_steps(media, decode_png)
-    assert [row[6] for row in ok] == [True, True]  # crc_ok
-    assert [row[5] for row in ok] == [3, 3]  # n_chunks
-    # flip one IDAT byte: CRC must catch it (crc_ok False), not crash
-    doc_id, payload = media[0]
-    b = bytearray(payload)
-    b[len(b) - 20] ^= 0xFF  # inside IDAT body, away from IEND
-    ((*_, crc_ok, _px_sum),) = decode_png(doc_id, bytes(b))
-    assert not crc_ok
-
-
-# --------------------------------------------------------------- BMFF walk
-
-
-def test_bmff_walk_rejects_bad_sizes(spark):
-    from gcp_cloudsql_to_bigquery_spark.operators.multimodal import (
-        synthesize_bmff,
-        walk_bmff,
-    )
-
-    ((_, payload),) = synthesize_bmff(5, 123)
-    rows = list(walk_bmff(5, payload))
-    assert [path for _, path, _, _ in rows] == [
-        "/ftyp", "/moov", "/moov/mvhd", "/moov/trak", "/moov/trak/tkhd", "/mdat",
-    ]
-    # nested sizes are consistent: moov = header + children
-    sizes = {path: size for _, path, size, _ in rows}
-    assert sizes["/moov"] == 8 + sizes["/moov/mvhd"] + sizes["/moov/trak"]
-    assert sizes["/moov/trak"] == 8 + sizes["/moov/trak/tkhd"]
-    # corrupt a size field: the walker must refuse, not mis-walk
-    import struct
-
-    b = bytearray(payload)
-    struct.pack_into(">I", b, 0, 7)  # ftyp size < 8
-    try:
-        next(walk_bmff(5, bytes(b)))
-        raise AssertionError("expected ValueError on bad box size")
-    except ValueError:
-        pass
-
-
-def _good_png(doc_id=5, n_chars=7):
-    ((_, png),) = synthesize_png(doc_id, n_chars)
-    return png
-
-
-# --- PNG happy path: decode output == first-principles gradient math ---
-
-
-def test_png_roundtrip_matches_pure_python_gradient():
-    doc_id, n_chars = 5, 7
-    w, h = doc_id % 24 + 4, n_chars % 16 + 4
-    expected_px = sum(
-        (x + 3 * y + doc_id) % 256 for x in range(w) for y in range(h)
-    )
-    ((_, width, height, depth, ctype, n_chunks, crc_ok, px_sum),) = decode_png(
-        doc_id, _good_png(doc_id, n_chars)
-    )
-    assert (width, height) == (w, h)
-    assert (depth, ctype, n_chunks) == (8, 0, 3)
-    assert crc_ok and px_sum == expected_px
-
-
-# --- PNG failure paths: each documented rejection branch fires once ---
-
-
-def test_png_corrupt_idat_surfaces_as_crc_false_not_crash():
-    """Flip one byte inside the IDAT body: the kernel must emit
-    crc_ok=False with px_sum NULL — never reach zlib.decompress on the
-    corrupted stream (which would abort the whole Arrow batch)."""
-    png = bytearray(_good_png())
-    # IDAT body starts after 8 sig + 25 IHDR chunk + 8 IDAT header
-    idat_body = 8 + (12 + 13) + 8
-    png[idat_body + 2] ^= 0xFF
-    ((*_, crc_ok, px_sum),) = decode_png(5, bytes(png))
-    assert not crc_ok
-    assert px_sum is None
-
-
-def test_png_bad_signature_raises():
-    png = b"\x89PNX" + _good_png()[4:]
-    with pytest.raises(ValueError, match="bad PNG signature"):
-        list(decode_png(5, png))
-
-
-def test_png_missing_idat_raises():
-    ihdr = struct.pack(">IIBBBBB", 4, 4, 8, 0, 0, 0, 0)
-    png = b"\x89PNG\r\n\x1a\n" + _png_chunk(b"IHDR", ihdr) + _png_chunk(b"IEND", b"")
-    with pytest.raises(ValueError, match="missing IHDR/IDAT"):
-        list(decode_png(5, png))
-
-
-def test_png_inflated_size_mismatch_raises():
-    """Valid CRCs but the IDAT inflates to the wrong byte count (one
-    scanline short): the buffer-size validation must catch it."""
-    w, h = 4, 4
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
-    raw = (b"\x00" + bytes(w)) * (h - 1)  # one scanline missing
-    png = (
-        b"\x89PNG\r\n\x1a\n"
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(raw))
-        + _png_chunk(b"IEND", b"")
-    )
-    with pytest.raises(ValueError, match="inflated size"):
-        list(decode_png(9, png))
-
-
-def test_png_unsupported_filter_byte_raises():
-    w, h = 4, 2
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
-    raw = b"\x01" + bytes(w) + b"\x00" + bytes(w)  # filter 1 (Sub) unsupported
-    png = (
-        b"\x89PNG\r\n\x1a\n"
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(raw))
-        + _png_chunk(b"IEND", b"")
-    )
-    with pytest.raises(ValueError, match="unsupported filter 1"):
-        list(decode_png(9, png))
-
-
-# --- BMFF happy path: walk output == hand-computed box tree ---
-
-
-def _bmff_box(tag: bytes, body: bytes) -> bytes:
-    return struct.pack(">I", len(body) + 8) + tag + body
-
-
-def test_bmff_walk_matches_hand_computed_tree():
-    doc_id, n_chars = 3, 12
-    ((_, payload),) = synthesize_bmff(doc_id, n_chars)
-    got = [row[1:] for row in walk_bmff(doc_id, payload)]
-    # sizes derived from the format spec by hand, not from the encoder:
-    # ftyp body 16B; tkhd 8B body; mvhd 4B; trak wraps tkhd; moov wraps
-    # mvhd+trak; mdat body is n_chars%50+1 bytes
-    assert got == [
-        ("/ftyp", 24, 0),
-        ("/moov", 44, 0),
-        ("/moov/mvhd", 12, 1),
-        ("/moov/trak", 24, 1),
-        ("/moov/trak/tkhd", 16, 2),
-        ("/mdat", 8 + (n_chars % 50 + 1), 0),
-    ]
-
-
-# --- BMFF failure paths: strict bounds checks reject malformed boxes ---
-
-
-def test_bmff_truncated_header_raises():
-    payload = _bmff_box(b"ftyp", b"isom") + b"\x00\x00\x00"  # 3 trailing bytes
-    with pytest.raises(ValueError, match="truncated box header"):
-        list(walk_bmff(1, payload))
-
-
-def test_bmff_undersized_box_raises():
-    # size=4 < 8-byte header: would loop forever or emit garbage if accepted
-    payload = struct.pack(">I", 4) + b"free"
-    with pytest.raises(ValueError, match="bad box size 4"):
-        list(walk_bmff(1, payload))
-
-
-def test_bmff_overflowing_box_raises():
-    # declared size runs past the end of the buffer
-    payload = struct.pack(">I", 64) + b"mdat" + bytes(8)
-    with pytest.raises(ValueError, match="bad box size 64"):
-        list(walk_bmff(1, payload))
-
-
-def test_bmff_overflowing_child_inside_container_raises():
-    """A child whose size escapes its PARENT's extent (but not the file)
-    must be rejected — the recursion's end is the parent's end, which is
-    what makes the walk safe on adversarial containers."""
-    bad_child = struct.pack(">I", 48) + b"tkhd" + bytes(8)  # claims 48, parent has 16
-    moov = _bmff_box(b"moov", bad_child)
-    payload = moov + _bmff_box(b"free", bytes(32))
-    with pytest.raises(ValueError, match="bad box size 48"):
-        list(walk_bmff(1, payload))
-
-
-# --- PNG: property over the whole fixture lattice ---
-
-
-@settings(max_examples=30, deadline=None)
-@given(doc_id=st.integers(0, 10_000), n_chars=st.integers(0, 1_000_000))
-def test_png_gradient_property(doc_id, n_chars):
-    w, h = doc_id % 24 + 4, n_chars % 16 + 4
-    ((_, width, height, _depth, _ctype, _n, crc_ok, px_sum),) = run_steps(
-        [(doc_id, n_chars)], synthesize_png, decode_png
-    )
-    assert (width, height, crc_ok) == (w, h, True)
-    assert px_sum == sum(
-        (x + 3 * y + doc_id) % 256 for x in range(w) for y in range(h)
-    )
-
-
-# --- BMFF: walker vs generator bookkeeping on random trees ---
-
-_CONTAINERS = [b"moov", b"trak"]  # the walker's recursion set
-_LEAVES = [b"ftyp", b"mvhd", b"tkhd", b"mdat", b"free"]
-
-
-def _random_tree(rng, path, depth, max_depth, expected):
-    """Emit a random run of sibling boxes; containers recurse.  Returns
-    the concatenated bytes and appends (path, size, depth) rows to
-    `expected` in the walker's visit order (parent before children)."""
-    blob = b""
-    for _ in range(rng.randint(1, 3)):
-        if depth < max_depth and rng.random() < 0.5:
-            tag = rng.choice(_CONTAINERS)
-            p = f"{path}/{tag.decode()}"
-            marker = len(expected)
-            expected.append(None)  # reserve the parent's slot
-            body = (
-                _random_tree(rng, p, depth + 1, max_depth, expected)
-                if rng.random() < 0.8
-                else b""  # empty container: zero children is legal
-            )
-            expected[marker] = (p, len(body) + 8, depth)
-        else:
-            tag = rng.choice(_LEAVES)
-            body = bytes(rng.randrange(256) for _ in range(rng.randint(0, 12)))
-            expected.append((f"{path}/{tag.decode()}", len(body) + 8, depth))
-        blob += struct.pack(">I", len(body) + 8) + tag + body
-    return blob
-
-
-def test_bmff_walker_matches_generator_on_random_trees():
-    rng = random.Random(0xB0F)
-    for trial in range(40):
-        expected = []
-        payload = _random_tree(rng, "", 0, max_depth=4, expected=expected)
-        got = [row[1:] for row in walk_bmff(trial, payload)]
-        assert got == expected, f"trial {trial}"
-
-
-# --- PNG integrity kernel: seeded structural fuzz ------------------------
-#
-# The round-8 tests pin each rejection branch individually; this fuzzes the
-# WHOLE decode tuple against an independent model over random dimensions,
-# random (non-gradient) pixel data, ancillary tEXt chunks the fixture
-# encoder never emits, and random corruption targets (IDAT body byte or any
-# chunk's CRC field) — all pure Python, no Spark session needed.
-
-
-def test_png_integrity_seeded_structural_fuzz():
-    import random
-    import struct
-    import zlib
-
-    from gcp_cloudsql_to_bigquery_spark.operators.multimodal import (
-        _png_chunk,
-        decode_png,
-    )
-
-    rng = random.Random(0x916)
-    for case in range(40):
-        w, h = rng.randint(1, 32), rng.randint(1, 24)
-        pixels = [[rng.randrange(256) for _ in range(w)] for _ in range(h)]
-        raw = b"".join(b"\x00" + bytes(row) for row in pixels)
-        n_text = rng.randint(0, 2)
-        chunks = [_png_chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0))]
-        for t in range(n_text):
-            chunks.append(_png_chunk(b"tEXt", b"k%d\x00v%d" % (t, case)))
-        chunks.append(_png_chunk(b"IDAT", zlib.compress(raw, rng.randint(0, 9))))
-        chunks.append(_png_chunk(b"IEND", b""))
-        png = bytearray(b"\x89PNG\r\n\x1a\n" + b"".join(chunks))
-
-        mode = rng.choice(["clean", "idat_body", "any_crc"])
-        if mode == "idat_body":
-            # first IDAT body byte: 8 sig + IHDR chunk + tEXt chunks + 8 hdr
-            off = 8 + len(chunks[0]) + sum(len(c) for c in chunks[1:1 + n_text]) + 8
-            png[off] ^= 0xFF
-        elif mode == "any_crc":
-            # last 4 bytes of a random chunk are its CRC field
-            ci = rng.randrange(len(chunks))
-            start = 8 + sum(len(c) for c in chunks[:ci])
-            png[start + len(chunks[ci]) - rng.randint(1, 4)] ^= 0xFF
-
-        ((_, width, height, _depth, _ctype, n_chunks, crc_ok, px_sum),) = decode_png(
-            case, bytes(png)
-        )
-        assert (width, height) == (w, h), (case, mode)
-        assert n_chunks == 3 + n_text, (case, mode)
-        if mode == "clean":
-            assert crc_ok, (case, mode)
-            assert px_sum == sum(map(sum, pixels)), (case, mode)
-        else:
-            assert not crc_ok, (case, mode)
-            assert px_sum is None, (case, mode)
-
-
-# --- BMFF box walker: seeded structural fuzz -----------------------------
-#
-# Random box TREES (the fixture's tree is fixed-shape): leaves with random
-# tags/body sizes, containers (moov/trak) recursing to random depth, plus
-# corruption modes (size overflowing the parent, size < 8, truncated
-# header) — expected rows modeled independently during generation.
-
-
-def test_bmff_walker_seeded_structural_fuzz():
-    import random
-    import struct
-
-    import pytest as _pytest
-
-    from gcp_cloudsql_to_bigquery_spark.operators.multimodal import walk_bmff
-
-    rng = random.Random(0xB0FF)
-    _LEAF_TAGS = [b"ftyp", b"mvhd", b"tkhd", b"mdat", b"free", b"udta"]
-
-    def gen_boxes(depth, path, expect, doc_id):
-        n = rng.randint(1, 3) if depth else rng.randint(2, 4)
-        out = b""
-        for _ in range(n):
-            if depth < 2 and rng.random() < 0.4:
-                tag = rng.choice([b"moov", b"trak"])
-                body = gen_boxes(depth + 1, f"{path}/{tag.decode()}", expect, doc_id)
-            else:
-                tag = rng.choice(_LEAF_TAGS)
-                body = bytes(rng.randrange(256) for _ in range(rng.randint(0, 20)))
-            size = 8 + len(body)
-            expect.append((doc_id, f"{path}/{tag.decode()}", size, depth))
-            out += struct.pack(">I", size) + tag + body
-        return out
-
-    for case in range(30):
-        expect = []
-        payload = bytearray(gen_boxes(0, "", expect, case))
-        mode = rng.choice(["clean", "overflow", "tiny_size", "truncate"])
-        if mode == "overflow":
-            struct.pack_into(">I", payload, 0, len(payload) + rng.randint(1, 99))
-        elif mode == "tiny_size":
-            struct.pack_into(">I", payload, 0, rng.randint(0, 7))
-        elif mode == "truncate":
-            payload = payload[: len(payload) - rng.randint(1, 7)]
-        if mode == "clean":
-            got = list(walk_bmff(case, bytes(payload)))
-            # walker emits parent-before-children depth-first; the generator
-            # appends in the same order EXCEPT containers append their
-            # children first — compare as multisets plus per-path equality
-            assert sorted(got) == sorted(expect), (case, got, expect)
-        else:
-            with _pytest.raises(ValueError, match="truncated box|bad box size"):
-                list(walk_bmff(case, bytes(payload)))
-
-
-# --- TIFF IFD walker: seeded structural fuzz -----------------------------
-#
-# Random endianness, a random header->IFD gap (real scanners place data
-# before the IFD; the offset field must be honored, not assumed 8), extra
-# SHORT tags beyond the required five, random values — plus every loud
-# rejection mode (bad BOM, bad magic, unsupported entry type, chained IFD).
-
-
-def test_tiff_walker_seeded_structural_fuzz():
-    import random
-    import struct
-
-    import pytest as _pytest
-
-    from gcp_cloudsql_to_bigquery_spark.operators.multimodal import decode_tiff
-
-    rng = random.Random(0x71FF)
-    REQUIRED = (256, 257, 258, 259, 274)
-    for case in range(40):
-        e = rng.choice(["<", ">"])
-        gap = rng.randint(0, 16)
-        off = 8 + gap
-        vals = {t: rng.randint(0, 0xFFFF) for t in REQUIRED}
-        extra = sorted(rng.sample(range(300, 400), rng.randint(0, 3)))
-        entries = sorted(list(vals.items()) + [(t, rng.randint(0, 0xFFFF)) for t in extra])
-        mode = rng.choice(["clean", "bad_bom", "bad_magic", "bad_type", "chained"])
-
-        ifd = struct.pack(e + "H", len(entries))
-        for i, (tag, val) in enumerate(entries):
-            typ = 9 if (mode == "bad_type" and i == 0) else 3
-            ifd += struct.pack(e + "HHI", tag, typ, 1) + struct.pack(e + "H", val) + b"\x00\x00"
-        ifd += struct.pack(e + "I", 77 if mode == "chained" else 0)
-        bom = b"XX" if mode == "bad_bom" else (b"II" if e == "<" else b"MM")
-        magic = 43 if mode == "bad_magic" else 42
-        payload = bom + struct.pack(e + "HI", magic, off) + bytes(gap) + ifd
-
-        if mode == "clean":
-            ((_, byte_order, n_entries, *got),) = decode_tiff(case, payload)
-            assert byte_order == ("II" if e == "<" else "MM"), case
-            assert n_entries == len(entries), case
-            # (width, height, bits, compression, orientation)
-            assert tuple(got) == tuple(vals[t] for t in REQUIRED), (case, got)
-        else:
-            pat = {"bad_bom": "byte-order", "bad_magic": "magic",
-                   "bad_type": "unsupported entry", "chained": "chained"}[mode]
-            with _pytest.raises(ValueError, match=pat):
-                list(decode_tiff(case, payload))

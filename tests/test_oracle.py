@@ -1,235 +1,14 @@
-"""The Spark-vs-DuckDB oracle differential and registry-wide checks.
+"""The shared Spark-vs-DuckDB compare can fail.
 
-``scripts/selfcheck.py`` sweeps every registry query over one data
-directory.  The table below pins the (geometry, query) pairs whose
-divergences were found and fixed on a geometry the plain testdata does
-not cover; each geometry is a session fixture in conftest.py.  Add a pair
-as one more name in its geometry's list; run one geometry alone with
-``-k <fixture name>``, e.g. ``pytest tests/test_oracle.py -k hostile_nulls_sf``.
+``scripts/selfcheck.py``'s ``diff`` is the one compare behind the
+registry sweep and conftest's ``assert_matches_oracle``, which every
+geometry differential of the suite calls.  These tests feed it two known
+divergences and check that it reports each one.
 """
 
-import pytest
-
 import __spark_entry__ as entry
-from selfcheck import canon, diff, duck_on
+from selfcheck import diff, duck_on
 from tests.conftest import SF0001
-
-ORACLE_TABLE = {
-    # scripts/make_hostile_sf.py values tier: Spark crashes, silent int64
-    # wraparound, zero-vector cosine, unicode semantics, timestamp
-    # truncation, float rounding boundaries, -0.0 canonicalization
-    "hostile_sf": [
-        "text_contamination_ngram",
-        "text_repetition_filter",
-        "fn_json_variant",
-        "fn_json",
-        "fn_map_functions",
-        "fn_map_higher_order",
-        "src_json_roundtrip",
-        "agg_grouped_pandas_udaf",
-        "agg_ab_ttest",
-        "ts_autocorrelation",
-        "ann_bruteforce_topk",
-        "ann_ivf_topk",
-        "ann_ivf_kmeans_topk",
-        "ann_pq_rerank",
-        "ann_matryoshka_rerank",
-        "ann_recall_report",
-        "dedup_semdedup",
-        "embedding_normalize_arrow",
-        "embedding_quantize_int8",
-        "q4_exists_predicate",
-        "fn_mask_pii",
-        "fn_arrow_python_udf",
-        "fn_aes_roundtrip",
-        "fn_string_similarity",
-        "fn_pandas_udf_iter",
-        "src_fixed_width_trailer",
-        "stream_stateful_user_stats",
-        "join_lateral_topn",
-    ],
-    # NULLs in value columns: size(NULL) = -1 legacy conf, null-kernel
-    # crashes, engine null-placement/null-skipping divergences, the
-    # NULL-exclusion contracts of the dedup/ANN index builds, NULL values
-    # in the stateful fold
-    "hostile_nulls_sf": [
-        "text_repetition_filter",
-        "agg_grouped_pandas_udaf",
-        "ann_recall_report",
-        "embedding_normalize_arrow",
-        "fn_arrow_python_udf",
-        "fn_pandas_udf_iter",
-        "src_fixed_width_trailer",
-        "fn_string",
-        "fn_unpivot_stack",
-        "window_distribution",
-        "stream_lsh_dedup_ttl",
-        "src_python_datasource_stream",
-        "ann_anchor_lsh",
-        "curation_pack_sequences",
-        "src_python_datasource",
-        "dedup_embedding_cosine",
-        "dedup_simhash",
-        "fn_array",
-        "fn_array_advanced",
-        "fn_pandas_udaf_geomean",
-        "curation_source_overlap",
-        "sample_stratified",
-        "text_bpe_tokens",
-        "text_langid",
-        "text_pii_redaction",
-        "text_quality_score",
-        "text_rolling_hash_shingles",
-        "text_token_stats",
-        "elt_delimiter_sniffing",
-        "agg_percentile_exact_grouped",
-        "fn_uuid3_name_based",
-        "fn_pandas_on_spark_api",
-        "dedup_connected_components",
-        "dedup_cluster_representatives",
-        "dedup_ngram_jaccard",
-        "dedup_minhash_lsh",
-        "ann_ivfpq_topk",
-        "curation_dataset_card",
-        "dedup_signal_agreement",
-        "embedding_label_centroid_arrow",
-        "text_lang_confusion",
-        "analytics_equidepth_histogram",
-        "fn_array_higher_order",
-        "fn_udtf_table_argument",
-        "dedup_minhash_ml",
-        "stream_stateful_user_stats",
-    ],
-    # zero-row documents/embeddings/events (empty in, empty out): np.stack
-    # of zero arrays, empty k-means init, empty partitioned write
-    # read-back, streams over empty feeds, crosstab with no pivot columns
-    "hostile_empty_sf": [
-        "ann_bruteforce_topk",
-        "ann_ivf_topk",
-        "ann_ivf_kmeans_topk",
-        "ann_matryoshka_rerank",
-        "ann_anchor_lsh",
-        "ann_recall_report",
-        "dedup_semdedup",
-        "dedup_embedding_cosine",
-        "dedup_signal_agreement",
-        "agg_crosstab",
-        "stream_incremental_sessionize",
-        "elt_dynamic_partition_overwrite",
-        "stream_processing_time_trigger",
-        "stream_lsh_dedup_ttl",
-    ],
-    # NULLs in join/group/sort/id keys: vector/doc identity contracts,
-    # explicit null placement in ordered windows, event-time exclusion,
-    # exhaustive stored/delta splits, export producers, pandas-dialect
-    # semantics, DuckDB ASOF null-sort artifact, crosstab label encoding
-    "hostile_nullkeys_sf": [
-        "agg_crosstab",
-        "agg_heavy_hitters_mg",
-        "agg_incremental_maintenance",
-        "analytics_cohort_ltv",
-        "analytics_event_transitions",
-        "analytics_fifo_allocation",
-        "analytics_peak_concurrency",
-        "analytics_repurchase_intervals",
-        "analytics_rfm_segmentation",
-        "analytics_state_durations",
-        "analytics_top_paths",
-        "ann_bruteforce_topk",
-        "ann_ivf_kmeans_topk",
-        "ann_matryoshka_rerank",
-        "ann_recall_report",
-        "curation_kfold_split",
-        "curation_pack_sequences",
-        "dedup_semdedup",
-        "elt_bad_records_quarantine",
-        "elt_delimiter_sniffing",
-        "elt_format_migration_chain",
-        "elt_incremental_join_maintenance",
-        "elt_scd2_dimension",
-        "elt_write_audit_publish",
-        "fn_generators_posexplode_outer",
-        "fn_pandas_on_spark_api",
-        "fn_pandas_udf_iter",
-        "join_asof",
-        "join_asof_nearest",
-        "multimodal_audio_spectral",
-        "multimodal_bmff_box_walk",
-        "multimodal_decode_ppm",
-        "multimodal_decode_wav",
-        "multimodal_frame_sample",
-        "multimodal_image_histogram",
-        "multimodal_phash_dedup",
-        "multimodal_phash_thumbnail_match",
-        "multimodal_png_integrity",
-        "multimodal_resample_wav",
-        "multimodal_resize_ppm",
-        "multimodal_shot_boundaries",
-        "multimodal_tiff_metadata",
-        "sec_impossible_travel",
-        "sessionize_batch",
-        "src_fixed_width_trailer",
-        "src_python_datasource",
-        "src_python_datasource_stream",
-        "stream_elt_file_arrival",
-        "stream_incremental_sessionize",
-        "stream_session_window",
-        "stream_session_window_dynamic_gap",
-        "stream_sliding_window",
-        "stream_tumbling_window",
-        "text_bigram_kneser_ney",
-        "text_cdc_chunk_dedup",
-        "ts_anomaly_seasonal_residual",
-        "ts_anomaly_zscore",
-        "ts_cusum_changepoint",
-        "ts_forecast_mase",
-        "ts_holt_linear",
-        "ts_ma_decompose",
-        "ts_max_drawdown",
-        "ts_moving_median",
-        "window_distinct_running",
-        "window_lag_lead",
-        "window_moving_avg",
-        "window_running_sum",
-        "window_session_batch",
-    ],
-    # sf0.1 volume with ties: join_star_q3's cent sums landing within an
-    # ulp of a .xx5 boundary, global_order_stats' rank layout under the
-    # rfm quintiles, the SLA ppm product past int64
-    "skewed_sf": [
-        "join_star_q3",
-        "analytics_rfm_segmentation",
-        "ts_interval_subtract_sla",
-    ],
-    # a whole geo-mean group of NULL prices: NULL, not NaN
-    "allnull_price_sf": ["fn_pandas_udaf_geomean"],
-    # NULL-start trigrams: concat (NULL-propagating), not concat_ws
-    "nulltype_events_sf": ["analytics_top_paths"],
-    # nullable ts window orders pinned NULLS FIRST on both sides
-    "nullts_events_sf": ["analytics_top_paths", "analytics_repurchase_intervals"],
-    # the both-NULL (key, balance) row exports a 3-field line that loads
-    # back as a good row
-    "bothnull_customer_sf": ["elt_bad_records_quarantine"],
-    # NULL corpus rows take the PQ kernel's scalar path and stay rankable
-    "nullvec_embeddings_sf": ["ann_pq_topk"],
-    # list_sum skip semantics in the element-validity kernels, including
-    # label groups that mix clean and degenerate rows
-    "nullelem_embeddings_sf": ["embedding_normalize_arrow", "embedding_label_centroid_arrow"],
-    # the AND-2 banded candidate join keeps exact recall
-    "sf_dir": ["dedup_minhash_ml"],
-}
-
-
-@pytest.mark.parametrize(
-    "geometry, name",
-    [(g, n) for g, names in ORACLE_TABLE.items() for n in names],
-    ids=[f"{g}-{n}" for g, names in ORACLE_TABLE.items() for n in names],
-)
-def test_matches_oracle(request, spark, geometry, name):
-    assert name in entry.oracle_sql(), f"{name} has no oracle to hold it to"
-    sf = request.getfixturevalue(geometry)
-    with duck_on(sf) as con:
-        assert diff(spark, con, name, sf) == []
 
 
 def test_diff_reports_a_value_divergence(spark, allnull_price_sf):
@@ -250,99 +29,3 @@ def test_diff_reports_a_result_kind_divergence(spark, monkeypatch):
     with duck_on(SF0001) as con:
         problems = diff(spark, con, "q1_pricing_summary", SF0001)
     assert problems == ["TYPE count_order: duckdb DECIMAL(18,0) vs spark bigint"], problems
-
-
-# --- registry binding invariant ---
-
-
-def test_registry_names_bind_their_own_functions():
-    """Every registered query's fn.__name__ must equal its registry key.
-    Pins the decorator-binding hazard: a module-level helper inserted
-    between @register(...) and the query def silently rebinds the entry
-    to the helper (caught live during the r8 feed-helper extraction —
-    selfcheck failed with 'takes 1 positional argument but 2 were
-    given'); this makes the mistake a unit-test failure instead."""
-    from gcp_cloudsql_to_bigquery_spark.workload import REGISTRY
-
-    mismatched = {k: q.fn.__name__ for k, q in REGISTRY.items() if q.fn.__name__ != k}
-    assert not mismatched
-
-
-# --- partition invariance pinned in CI (sampled) -------------------------
-#
-# The per-round full-registry sweep at the hostile local[3]/shuffle=7
-# config is the repo's strongest transfers-to-a-real-cluster evidence, but
-# it runs once per round; this pins the property per-commit for a sample of
-# the most accumulation/order-sensitive shapes (rank ties, double sums,
-# running windows, weighted order statistics).  newSession() shares the
-# SparkContext but scopes spark.sql.shuffle.partitions per session, so the
-# re-plan is real and cheap.
-
-
-def _canon_rows(df):
-    cols = sorted(df.columns)
-    out = []
-    for row in df.collect():
-        vals = []
-        for c in cols:
-            v = row[c]
-            if isinstance(v, float):
-                v = round(v, 9)
-            vals.append(v)
-        out.append(tuple(vals))
-    return sorted(out, key=lambda t: tuple((x is None, str(x)) for x in t))
-
-
-@pytest.mark.parametrize(
-    "name",
-    [
-        "topk_per_group",          # rank ties
-        "agg_rollup",              # double sums across partial aggs
-        "window_running_sum",      # running frame over shuffled input
-        "agg_weighted_median",     # order statistic
-        "ts_moving_median",        # sliding order statistic
-        "analytics_rfm_segmentation",  # quantile-bucketed segmentation
-    ],
-)
-def test_partition_invariance_ci_sample(spark, name):
-    from gcp_cloudsql_to_bigquery_spark.workload import queries
-
-    q = queries()[name]
-    base = _canon_rows(q(spark, SF0001))
-    # drop shared cache entries so the alternate session genuinely
-    # re-executes under its own partitioning (the CacheManager is
-    # SparkContext-scoped and substitutes by plan equality)
-    spark.catalog.clearCache()
-    alt = spark.newSession()
-    alt.conf.set("spark.sql.shuffle.partitions", "5")
-    assert _canon_rows(q(alt, SF0001)) == base, name
-
-
-# --- bench contract ------------------------------------------------------
-#
-# perfbench checks every query result against its oracle_sql() digest and
-# scripts/dump_plans.py reads the same query lists — pin the wiring so a
-# rename or registry change can't silently break either.
-
-
-def test_bench_query_sets_are_registered_and_oracle_backed():
-    from gcp_cloudsql_to_bigquery_spark.workload import oracle_sql, queries
-    from perfbench.workloads import ETL_STREAMS, PY_KERNELS, SQL_BATCH
-
-    qs, sqls = queries(), oracle_sql()
-    names = SQL_BATCH + PY_KERNELS + ETL_STREAMS
-    assert len(set(names)) == len(names)
-    for name in names:
-        assert name in qs, f"bench names unregistered query {name}"
-        assert name in sqls, f"bench query {name} lacks an oracle"
-
-
-def test_minus_zero_canonicalization():
-    """-0.0 == 0.0 (IEEE) but str() differs; Spark's round() normalizes the
-    sign while DuckDB keeps it — canon must collapse both to +0.0 so the
-    str-keyed row sort cannot split numerically-equal rows."""
-    from decimal import Decimal
-
-    assert str(canon(-0.0)) == str(canon(0.0)) == "0.0"
-    assert str(canon(Decimal("-0"))) == "0.0"
-    assert canon(-1.5) == -1.5

@@ -4,8 +4,6 @@ These encode the 100 TB contract — if a code change degrades a plan to
 shuffle-the-fact-table or scan-every-column, these fail at sf0.001.
 """
 
-import pytest
-
 from gcp_cloudsql_to_bigquery_spark.plans import inspect
 from gcp_cloudsql_to_bigquery_spark.plans.inspect import broadcast_join_count, physical_plan
 from gcp_cloudsql_to_bigquery_spark.workload import queries
@@ -687,314 +685,3 @@ def test_media_pipelines_are_one_arrow_crossing(spark):
             q,
             physical_plan(df),
         )
-
-
-def test_phash_single_exchange(spark):
-    # synthesize -> decode -> hash are narrow mapInPandas stages; the ONLY
-    # shuffle is the phash-partitioned cluster window (doc_id + 8-byte hash,
-    # never the payload bytes)
-    df = queries()["multimodal_phash_dedup"](spark, SF0001)
-    assert inspect.exchange_count(df) == 1, inspect.physical_plan(df)
-
-
-def test_correlation_matrix_plan(spark):
-    # one pass over the fact table: a single partial-aggregated global agg
-    # (one exchange of one 15-number state row per partition), melt is
-    # explode on the 1-row result — no second scan
-    df = queries()["agg_correlation_matrix"](spark, SF0001)
-    plan = inspect.physical_plan(df)
-    assert inspect.exchange_count(df) == 0, plan  # no hash/range shuffle at all
-    assert plan.count("Exchange SinglePartition") == 1, plan
-    assert "partial_sum" in plan, plan  # map-side combine of the 15 statistics
-    scans = inspect.read_schema_columns(df)
-    read = {c for cols in scans for c in cols}
-    assert read <= {"l_quantity", "l_extendedprice", "l_discount", "l_tax"}, read
-
-
-def test_holt_two_exchanges(spark):
-    # hourly pre-reduction (partial-agged groupBy) + the per-series
-    # applyInPandas grouping — recursion itself adds no shuffle
-    df = queries()["ts_holt_linear"](spark, SF0001)
-    assert inspect.exchange_count(df) <= 2, inspect.physical_plan(df)
-
-
-def test_reservoir_single_exchange(spark):
-    # key computation is codegen-narrow; the only shuffle is the per-source
-    # top-k window
-    df = queries()["curation_weighted_reservoir"](spark, SF0001)
-    assert inspect.exchange_count(df) == 1, inspect.physical_plan(df)
-
-
-def _plan(spark, name):
-    return queries()[name](spark, SF0001)
-
-
-def test_feature_hashing_single_shuffle(spark):
-    # explode + md5 bucketing are narrow; the ONLY exchange is the
-    # (doc, feature) aggregate — no vocabulary pass, no dictionary join
-    df = _plan(spark, "text_feature_hashing")
-    assert inspect.exchange_count(df) == 1, inspect.physical_plan(df)
-    assert inspect.broadcast_join_count(df) == 0
-
-
-def test_benford_single_aggregate_exchange(spark):
-    # 9-digit domain: one partial-agg exchange; the share window runs on
-    # the aggregate, adding a single-partition exchange of 9 rows
-    df = _plan(spark, "dq_benford_law")
-    assert inspect.exchange_count(df) <= 2, inspect.physical_plan(df)
-
-
-def test_dp_counts_single_exchange(spark):
-    # hash draw + CASE ladder are per-group expressions on the aggregate
-    df = _plan(spark, "sec_dp_noisy_counts")
-    assert inspect.exchange_count(df) == 1, inspect.physical_plan(df)
-
-
-def test_ip_cidr_block_join_is_broadcast(spark):
-    # the CIDR dim must broadcast: the fact side is never shuffled for
-    # the range join, only for the final bounded groupBy
-    df = _plan(spark, "fn_ip_cidr_lookup")
-    assert inspect.count_occurrences(df, "BroadcastNestedLoopJoin") >= 1, (
-        inspect.physical_plan(df)
-    )
-
-
-def test_percentile_window_and_agg_share_exchange(spark):
-    # ranking window and final groupBy both key on pri: one exchange
-    df = _plan(spark, "agg_percentile_exact_grouped")
-    assert inspect.exchange_count(df) == 1, inspect.physical_plan(df)
-
-
-def test_subject_access_fact_joins_are_broadcast(spark):
-    # the subject list must broadcast against every store — a shuffled
-    # fact-to-subject join would be the 100 TB mistake
-    df = _plan(spark, "sec_subject_access_export")
-    assert inspect.broadcast_join_count(df) >= 3, inspect.physical_plan(df)
-    assert inspect.sort_merge_join_count(df) == 0
-
-
-def test_winsorize_threshold_join_is_broadcast(spark):
-    df = _plan(spark, "curation_winsorize_clip")
-    assert inspect.broadcast_join_count(df) >= 1, inspect.physical_plan(df)
-
-
-def test_kneser_ney_counts_reduce_before_join(spark):
-    # the top-200 head drives the joins; left/cont count tables join onto
-    # it, the scalar broadcast-binds — no fact-sized join anywhere
-    df = _plan(spark, "text_bigram_kneser_ney")
-    assert inspect.count_occurrences(df, "BroadcastNestedLoopJoin") == 1, (
-        inspect.physical_plan(df)
-    )
-
-
-def test_point_in_polygon_no_shuffle(spark):
-    # stateless codegen arithmetic: zero exchanges
-    df = _plan(spark, "geo_point_in_polygon")
-    assert inspect.exchange_count(df) == 0, inspect.physical_plan(df)
-    # codegen stages render as "*(n)" prefixes in executedPlan strings
-    assert "*(1)" in inspect.physical_plan(df)
-
-
-def test_tiff_walk_prunes_to_two_columns(spark):
-    # the synthesize stage reads only (doc_id, n_chars) — payload-free scan
-    df = _plan(spark, "multimodal_tiff_metadata")
-    for cols in inspect.read_schema_columns(df):
-        assert set(cols) <= {"doc_id", "n_chars"}, cols
-
-
-def test_cdc_chunking_exchanges_bounded(spark):
-    # doc-keyed window (chunking) + fingerprint groupBy + frequency join:
-    # digest-keyed exchanges only, bounded count
-    df = _plan(spark, "text_cdc_chunk_dedup")
-    assert inspect.exchange_count(df) <= 5, inspect.physical_plan(df)
-
-
-def test_allen_pairs_equi_join_on_custkey(spark):
-    # the pair join must be a hash/sort-merge EQUI join on ck, never a
-    # nested-loop over all orders
-    df = _plan(spark, "join_allen_intervals")
-    plan = inspect.physical_plan(df)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-# --- alias hygiene: zero trivially-true-equals warnings in CI ------------
-#
-# Spark's analyzer logs "Join condition is missing or trivially true" /
-# "trivially true" style warnings through log4j when a self-join condition
-# degenerates to `col = col` on the SAME attribute id — the bug class the
-# r8 explicit-alias sweep fixed in the PQ family, the gapfill spine joins,
-# the merge upsert, and linear attribution.  The r8 acceptance was an
-# artifact convention (zero hits in plan_audit_warn.log); this pins it as a
-# test: rebuild each once-offending plan with the JVM's root-logger output
-# captured and assert the warning never fires.
-
-
-_ONCE_OFFENDING = (
-    "ann_pq_topk",
-    "ann_ivfpq_topk",
-    "ann_pq_rerank",
-    "ts_gapfill_locf",
-    "ts_gapfill_interpolate",
-    "elt_merge_upsert",
-    "analytics_attribution_linear",
-)
-
-
-@pytest.fixture(scope="module")
-def _jvm_log_capture(spark):
-    """Attach a log4j2 StringWriter appender to the JVM root logger for the
-    duration of the module; yields a callable draining captured text."""
-    jvm = spark._sc._jvm
-    sw = jvm.java.io.StringWriter()
-    ctx = jvm.org.apache.logging.log4j.core.LoggerContext.getContext(False)
-    cfg = ctx.getConfiguration()
-    layout = jvm.org.apache.logging.log4j.core.layout.PatternLayout.newBuilder()\
-        .withPattern("%p %c: %m%n").withConfiguration(cfg).build()
-    app = jvm.org.apache.logging.log4j.core.appender.WriterAppender.createAppender(
-        layout, None, sw, "pytest_r9_capture", False, True
-    )
-    app.start()
-    root = cfg.getRootLogger()
-    root.addAppender(app, jvm.org.apache.logging.log4j.Level.WARN, None)
-    ctx.updateLoggers()
-
-    def drain() -> str:
-        buf = sw.getBuffer()
-        out = buf.toString()
-        buf.setLength(0)
-        return out
-
-    yield drain
-    root.removeAppender("pytest_r9_capture")
-    app.stop()
-    ctx.updateLoggers()
-
-
-def test_capture_detects_deliberate_offender(spark, _jvm_log_capture):
-    """Positive control: the appender really sees the Column warning — so
-    the clean assertions below cannot pass vacuously if the capture or the
-    warning text ever changes."""
-    from gcp_cloudsql_to_bigquery_spark.catalog import load
-
-    _jvm_log_capture()
-    n = load(spark, SF0001, "nation")
-    n.join(n, n.n_nationkey == n.n_nationkey)  # deliberate offender
-    assert "trivially true" in _jvm_log_capture()
-
-
-@pytest.mark.parametrize("name", _ONCE_OFFENDING)
-def test_alias_hygiene_no_trivially_true_join_warnings(spark, _jvm_log_capture, name):
-    from gcp_cloudsql_to_bigquery_spark.workload import queries
-
-    _jvm_log_capture()  # drain anything earlier tests logged
-    df = queries()[name](spark, SF0001)
-    df._jdf.queryExecution().executedPlan()  # force full analysis/planning
-    captured = _jvm_log_capture()
-    assert "trivially true" not in captured, (name, captured[-2000:])
-
-
-# ---------------------------------------------------------------------------
-# dedup_minhash_ml (VERDICT r13 item 2's SCALE finding): MLlib
-# approxSimilarityJoin collapsed into a single 19-minute task at sf0.1
-# volume (one-partition explode feeding a broadcast join whose per-row
-# Iterator keyDistance ran on every bucket pair — jstack-confirmed).
-# Candidates now come from an explicit (table, hash)-keyed self-join over
-# the estimator's signature column: same buckets, same recall contract
-# (the approx-distance prefilter was redundant under the exact
-# jaccard >= 0.8 gate), but the pair work shuffles on the bucket key.
-# ---------------------------------------------------------------------------
-
-
-def test_minhash_ml_candidate_join_is_bucket_keyed(spark):
-    """The plan must shuffle/join on the (table, hash) bucket key — never
-    a nested-loop or single-partition pair scan."""
-    from gcp_cloudsql_to_bigquery_spark.workload import queries
-
-    df = queries()["dedup_minhash_ml"](spark, SF0001)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    # the bucket equi-join keys (t, h) appear as join/exchange keys
-    assert "t#" in plan and "h#" in plan, plan
-
-
-def test_pq_rank_windows_have_partial_window_group_limit(spark):
-    """Plan pin (VERDICT r14 item 2, declarative half): every PQ rank
-    window (row_number + rnk<=k filter) must carry Spark 4's
-    WindowGroupLimit in Partial mode BELOW the query_id exchange, so each
-    map task ships at most k rows per query and the per-query reducer
-    sees k*parts rows — the native map-side top-k.  (A manual salt-bucket
-    two-level rank was tried and removed this round: same bound, one
-    extra shuffle — see ranked_topk's docstring.)"""
-    import re
-
-    from gcp_cloudsql_to_bigquery_spark.operators.similarity import (
-        ann_pq_topk_candidates,
-    )
-    from gcp_cloudsql_to_bigquery_spark.plans.inspect import physical_plan
-    from gcp_cloudsql_to_bigquery_spark.workload import queries
-
-    for df, k in (
-        (queries()["ann_pq_topk"](spark, SF0001), 5),
-        (queries()["ann_ivfpq_topk"](spark, SF0001), 5),
-        (ann_pq_topk_candidates(spark, SF0001, k=25), 25),
-    ):
-        plan = physical_plan(df)
-        m = re.search(
-            rf"Exchange hashpartitioning\(query_id[\s\S]*?"
-            rf"WindowGroupLimit \[query_id[^\n]*row_number\(\), {k}, Partial",
-            plan,
-        )
-        assert m, f"no Partial group-limit below the query_id exchange:\n{plan}"
-
-
-# ---------------------------------------------------------------------------
-# Registry-wide WindowGroupLimit scan finds (r15): rank-filter queries
-# whose plan shape silently defeated Spark's map-side group-limit.
-# ---------------------------------------------------------------------------
-
-
-def test_top_paths_is_take_ordered_not_global_sort(spark):
-    """Global top-20 must plan as TakeOrderedAndProject (per-partition
-    heap + k-row driver merge) — the old rank-then-filter shape
-    single-partition-sorted every distinct trigram, and
-    InferWindowGroupLimit never fires for empty partition specs."""
-    from gcp_cloudsql_to_bigquery_spark.plans.inspect import physical_plan
-    from gcp_cloudsql_to_bigquery_spark.workload import queries
-
-    plan = physical_plan(queries()["analytics_top_paths"](spark, SF0001))
-    assert "TakeOrderedAndProject" in plan, plan
-
-
-def test_cluster_representatives_rank_window_group_limited(spark):
-    """With n_members computed BELOW the rank window, the rn==1 filter
-    sits directly on the row_number window and WindowGroupLimit fires
-    (the old interleaving count window defeated it)."""
-    from gcp_cloudsql_to_bigquery_spark.plans.inspect import physical_plan
-    from gcp_cloudsql_to_bigquery_spark.workload import queries
-
-    plan = physical_plan(queries()["dedup_cluster_representatives"](spark, SF0001))
-    assert "WindowGroupLimit" in plan, plan
-
-
-def test_bookmark_plan_has_no_percentile_and_one_rank_pass(spark):
-    """The rewritten bookmark query must carry ZERO percentile aggregates
-    (the buffer-agg class it left), and its ranks come from ONE
-    materialization: every audit branch's copy of the high-water mark
-    reads the same global_order_stats checkpoint, with no fence of its
-    own — so the walk sees the 1-row mark's aggregate and the broadcast
-    crosses stay bounded binds."""
-    from gcp_cloudsql_to_bigquery_spark.plans import inspect
-    from gcp_cloudsql_to_bigquery_spark.workload import queries
-
-    df = queries()["elt_incremental_bookmark_extract"](spark, SF0001)
-    plan = inspect.physical_plan(df)
-    assert "percentile" not in plan, plan
-    assert inspect.unbounded_global_buffer_aggregates(df) == []
-    fences = [n for n in inspect._plan_nodes(df) if inspect._is_checkpoint_scan(n)]
-    assert len(fences) >= 2, plan
-    assert len({n.rdd().id() for n in fences}) == 1, plan
-    assert inspect.fact_cartesian_count(df) == 0

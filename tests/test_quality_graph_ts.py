@@ -3,31 +3,14 @@ fixture proving violations are DETECTED, not just counted as zero), SCD2
 interval invariants, EWMA/z-score semantics, PageRank mass properties, and
 the plan shapes that keep them scale-safe."""
 
-import datetime as dt
-import hashlib
-import math
 import os
-from collections import Counter, defaultdict
 
-import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from gcp_cloudsql_to_bigquery_spark.catalog import load
 from gcp_cloudsql_to_bigquery_spark.plans.inspect import exchange_count
 from gcp_cloudsql_to_bigquery_spark.workload import queries
-from tests.conftest import (
-    M12,
-    SF0001,
-    events_pdf,
-    events_rows,
-    h12,
-    md5_hex,
-    parquet_col,
-    parquet_cols,
-    td_us,
-    to_cents,
-)
+from tests.conftest import SF0001
 
 
 def test_dq_audit_clean_data_passes(spark):
@@ -496,995 +479,3 @@ def test_link_prediction_candidates_are_nonadjacent(spark):
         assert r.node_a < r.node_b
         assert r.n_common >= 1
         assert 0 < r.jaccard_x1e6 <= 1_000_000
-
-
-def test_kcore_is_fixpoint_and_subgraph(spark):
-    """Every 2-core member keeps degree >= 2 WITHIN the core (the defining
-    fixpoint property), and the core is a subgraph of the dup graph."""
-    from gcp_cloudsql_to_bigquery_spark.workload import queries as q
-
-    rows = q()["graph_kcore"](spark, SF0001).collect()
-    for r in rows:
-        assert r["core_degree"] >= 2, r
-
-
-def test_mad_outliers_bounded(spark):
-    rows = queries()["ts_outlier_mad"](spark, SF0001).collect()
-    assert len(rows) == 5
-    for r in rows:
-        assert 0 <= r["n_outliers"] < r["n"]
-        assert r["mad4"] >= 0
-
-
-def test_copurchase_symmetric_and_ranked(spark):
-    rows = queries()["graph_copurchase_similarity"](spark, SF0001).collect()
-    pairs = {(r["part"], r["similar_part"]): r["cos_fp"] for r in rows}
-    for r in rows:
-        assert r["part"] != r["similar_part"]
-        assert 1 <= r["rnk"] <= 5
-        assert r["cooc"] >= 2
-        # symmetry of the score where both directions survived top-5
-        back = pairs.get((r["similar_part"], r["part"]))
-        if back is not None:
-            assert back == r["cos_fp"]
-
-
-def test_freshness_audit_full_month(spark):
-    rows = queries()["dq_freshness_partition_audit"](spark, SF0001).collect()
-    assert len(rows) == 30  # one partition per January day
-    for r in rows:
-        assert r["n_rows"] > 0 and r["n_users"] > 0
-        assert 0 <= r["freshness_lag_sec"] < 86400
-        assert r["fresh_within_1h"] == (r["freshness_lag_sec"] < 3600)
-
-
-def test_bfs_layers_seeds_at_depth_zero(spark):
-    rows = queries()["graph_bfs_layers"](spark, SF0001).collect()
-    if not rows:
-        return  # no dup edges at this SF
-    by_depth = {}
-    for r in rows:
-        by_depth.setdefault(r["depth"], set()).add(r["doc_id"])
-    assert 0 in by_depth
-    for n in by_depth[0]:
-        assert n % 100 == 0
-    assert max(by_depth) <= 6
-
-
-def test_cusum_equals_reset_recurrence(spark):
-    """The windowed identity cumsum - running_min must equal Page's
-    explicit reset recurrence S_t = max(0, S_{t-1} + dev_t)."""
-    import statistics
-
-    ev = (
-        load(spark, SF0001, "events")
-        .select("event_type", "ts", "event_id", "value")
-        .collect()
-    )
-    by_type = {}
-    for r in ev:
-        by_type.setdefault(r["event_type"], []).append(r)
-    got = {r["event_type"]: r for r in queries()["ts_cusum_changepoint"](spark, SF0001).collect()}
-    for etype, rows in by_type.items():
-        rows.sort(key=lambda r: (r["ts"], r["event_id"]))
-        cents = [to_cents(r["value"]) for r in rows]
-        med2 = round(2 * statistics.median(cents))
-        s = 0
-        peak = 0
-        alarms = 0
-        for c in cents:
-            s = max(0, s + 2 * c - med2)
-            peak = max(peak, s)
-            if s > 2000000:
-                alarms += 1
-        assert got[etype]["max_cusum2"] == peak, etype
-        assert got[etype]["n_alarms"] == alarms, etype
-
-
-def test_moving_median_matches_bruteforce(spark):
-    import statistics
-
-    hourly = {}
-    for r in load(spark, SF0001, "events").select("event_type", "ts", "value").collect():
-        h = r["ts"].replace(minute=0, second=0, microsecond=0)
-        k = (r["event_type"], h)
-        hourly[k] = hourly.get(k, 0) + to_cents(r["value"])
-    series = {}
-    for (etype, h), c in hourly.items():
-        series.setdefault(etype, []).append((h, c))
-    got = {
-        (r["event_type"], r["h"]): r["med2"]
-        for r in queries()["ts_moving_median"](spark, SF0001).collect()
-    }
-    n_checked = 0
-    for etype, pts in series.items():
-        pts.sort()
-        vals = [c for _, c in pts]
-        for i in range(12, len(pts) - 12):
-            window = sorted(vals[i - 12 : i + 13])
-            med2 = window[12] + window[12]  # 25 elements -> middle twice
-            assert got[(etype, pts[i][0])] == med2
-            n_checked += 1
-    assert n_checked > 0
-
-
-def test_autocorrelation_matches_numpy(spark):
-    import numpy as np
-
-    hourly = {}
-    for r in load(spark, SF0001, "events").select("event_type", "ts", "value").collect():
-        h = r["ts"].replace(minute=0, second=0, microsecond=0)
-        k = (r["event_type"], h)
-        hourly[k] = hourly.get(k, 0) + to_cents(r["value"])
-    series = {}
-    for (etype, h), c in hourly.items():
-        series.setdefault(etype, []).append((h, c))
-    got = {
-        (r["event_type"], r["lag"]): r["acf_x1e6"]
-        for r in queries()["ts_autocorrelation"](spark, SF0001).collect()
-    }
-    for etype, pts in series.items():
-        pts.sort()
-        xs = np.array([c for _, c in pts], dtype=float)
-        for k in (1, 24):
-            if len(xs) <= k:
-                continue
-            r = np.corrcoef(xs[k:], xs[:-k])[0, 1]
-            assert abs(got[(etype, k)] - math.floor(r * 1e6 + 0.5)) <= 1, (etype, k)
-
-
-def test_holt_matches_bruteforce(spark):
-    out = queries()["ts_holt_linear"](spark, SF0001).collect()
-    series = {}
-    for r in sorted(out, key=lambda r: (r["event_type"], r["h"])):
-        series.setdefault(r["event_type"], []).append(r)
-    assert series
-    for rows in series.values():
-        l = b = None
-        for t, r in enumerate(rows):
-            x = float(r["cents"])
-            if t == 0:
-                l, b = x, 0.0
-            else:
-                lt = 0.5 * x + 0.5 * (l + b)
-                b = 0.5 * (lt - l) + 0.5 * b
-                l = lt
-            q = lambda v: math.floor(v / 100.0 * 1e4 + 0.5)  # noqa: E731
-            assert r["level_x10k"] == q(l)
-            assert r["trend_x10k"] == q(b)
-            assert r["forecast_next_x10k"] == q(l + b)
-
-
-# ---------------------------------------------------------------- Theil-Sen
-
-
-def test_theil_sen_matches_bruteforce(spark):
-    ev = load(spark, SF0001, "events").select("event_type", "ts").collect()
-    daily = {}
-    for et, ts in ev:
-        daily.setdefault(et, {}).setdefault(ts.date(), 0)
-        daily[et][ts.date()] += 1
-
-    def quant(x):
-        return math.floor(x * 1e9 + 0.5) / 1e9
-
-    def rank_median(vals):
-        vals = sorted(vals)
-        n = len(vals)
-        return quant((vals[(n + 1) // 2 - 1] + vals[n // 2]) / 2)
-
-    rows = {r["event_type"]: r for r in queries()["ts_theil_sen"](spark, SF0001).collect()}
-    assert rows
-    for et, days in daily.items():
-        pts = [((d - __import__("datetime").date(1970, 1, 1)).days, float(y)) for d, y in days.items()]
-        slopes = [
-            (y2 - y1) / (x2 - x1)
-            for i, (x1, y1) in enumerate(pts)
-            for (x2, y2) in pts[i + 1 :]
-            if x2 != x1
-        ]
-        # pts unordered: recompute honoring x order
-        slopes = []
-        spts = sorted(pts)
-        for i in range(len(spts)):
-            for j in range(i + 1, len(spts)):
-                slopes.append((spts[j][1] - spts[i][1]) / (spts[j][0] - spts[i][0]))
-        slope = rank_median(slopes)
-        icept = rank_median([y - slope * x for x, y in pts])
-        r = rows[et]
-        assert r["n_pairs"] == len(slopes)
-        assert r["n_points"] == len(pts)
-        assert r["slope_x1e9"] == math.floor(slope * 1e9 + 0.5)
-        assert r["intercept_x1e9"] == math.floor(icept * 1e9 + 0.5)
-
-
-# ------------------------------------------------------------- DP mechanism
-
-_DP_CUM = [1, 3, 7, 15, 31, 63, 127, 159, 175, 183, 187, 189, 190]
-
-
-def test_dp_noise_matches_mechanism(spark):
-    rows = queries()["sec_dp_noisy_counts"](spark, SF0001).collect()
-    assert rows
-    for r in rows:
-        u190 = h12(f"dp:{r['c_nationkey']}:{r['c_mktsegment']}") * 190
-        k = next(i - 6 for i, c in enumerate(_DP_CUM) if u190 < c * M12)
-        assert r["noise"] == k
-        assert -6 <= r["noise"] <= 6
-        assert r["noisy_count"] == r["true_count"] + r["noise"]
-
-
-# ----------------------------------------------------------------- Benford
-
-
-def test_benford_matches_bruteforce(spark):
-    prices = [r[0] for r in load(spark, SF0001, "orders").select("o_totalprice").collect()]
-    digits = {}
-    for p in prices:
-        d = int(str(math.floor(p * 100 + 0.5))[0])
-        digits[d] = digits.get(d, 0) + 1
-    n = len(prices)
-    rows = {r["digit"]: r for r in queries()["dq_benford_law"](spark, SF0001).collect()}
-    assert set(rows) == set(digits)
-    for d, cnt in digits.items():
-        r = rows[d]
-        assert r["n_obs"] == cnt
-        assert r["obs_ppm"] == math.floor(cnt * 1e6 / n + 0.5)
-        assert r["exp_ppm"] == math.floor(math.log10(1 + 1 / d) * 1e6 + 0.5)
-        assert r["dev_ppm"] == r["obs_ppm"] - r["exp_ppm"]
-
-
-# -------------------------------------------------------------------- HITS
-
-
-def test_hits_scores_normalized_and_converging(spark):
-    rows = queries()["graph_hits"](spark, SF0001).collect()
-    assert len(rows) == 25
-    auths = [r["auth_x1e9"] for r in rows]
-    hubs = [r["hub_x1e9"] for r in rows]
-    # max-normalized: the best authority / hub sits exactly at 1e9
-    assert max(auths) == 10**9
-    assert max(hubs) == 10**9
-    assert all(0 <= v <= 10**9 for v in auths + hubs)
-    # positivity is structural: a nation scores as authority iff some edge
-    # points at it (supplier side), as hub iff it sources one (customer
-    # side) — sf0.001 has only ~10 suppliers, so most in-degrees are zero
-    li = load(spark, SF0001, "lineitem").select("l_orderkey", "l_suppkey").collect()
-    o = {r[0]: r[1] for r in load(spark, SF0001, "orders").select("o_orderkey", "o_custkey").collect()}
-    c = {r[0]: r[1] for r in load(spark, SF0001, "customer").select("c_custkey", "c_nationkey").collect()}
-    s = {r[0]: r[1] for r in load(spark, SF0001, "supplier").select("s_suppkey", "s_nationkey").collect()}
-    srcs = {c[o[ok]] for ok, sk in li}
-    dsts = {s[sk] for ok, sk in li}
-    for r in rows:
-        assert (r["auth_x1e9"] > 0) == (r["n_nationkey"] in dsts), r
-        assert (r["hub_x1e9"] > 0) == (r["n_nationkey"] in srcs), r
-
-
-def test_sla_interval_subtraction_matches_bruteforce(spark):
-    evs = events_rows(spark)
-    got = {r["event_type"]: r for r in queries()["ts_interval_subtract_sla"](spark, SF0001).collect()}
-    agg = {}
-    for r in evs:
-        s = r["ts"]
-        e = s + dt.timedelta(minutes=30)
-        masked = 0
-        for off in (0, 1):
-            day = dt.datetime.combine(s.date() + dt.timedelta(days=off), dt.time())
-            ms, me = day + dt.timedelta(hours=3), day + dt.timedelta(hours=4)
-            masked += max(0, td_us(min(e, me) - max(s, ms)))
-        raw = 30 * 60 * 1_000_000
-        a = agg.setdefault(r["event_type"], [0, 0])
-        a[0] += raw
-        a[1] += raw - masked
-    for et, (raw, eff) in agg.items():
-        r = got[et]
-        assert (r["raw_us"], r["effective_us"]) == (raw, eff)
-        assert r["sla_ppm"] == eff * 1_000_000 // raw
-
-
-# ------------------------------------------------------ harmonic centrality
-
-
-def test_harmonic_matches_bfs(spark):
-    li = load(spark, SF0001, "lineitem").select("l_orderkey", "l_suppkey").collect()
-    o = {
-        r[0]: r[1]
-        for r in load(spark, SF0001, "orders").select("o_orderkey", "o_custkey").collect()
-    }
-    c = {r[0]: r[1] for r in load(spark, SF0001, "customer").select("c_custkey", "c_nationkey").collect()}
-    s = {r[0]: r[1] for r in load(spark, SF0001, "supplier").select("s_suppkey", "s_nationkey").collect()}
-    adj = {}
-    for ok, sk in li:
-        a, b = c[o[ok]], s[sk]
-        if a != b:
-            adj.setdefault(a, set()).add(b)
-            adj.setdefault(b, set()).add(a)
-    got = {r["n_nationkey"]: r for r in queries()["graph_harmonic_centrality"](spark, SF0001).collect()}
-    assert len(got) == 25
-    for u in range(25):
-        dist = {u: 0}
-        frontier = {u}
-        for d in range(1, 5):
-            frontier = {v for f in frontier for v in adj.get(f, ()) if v not in dist}
-            for v in frontier:
-                dist[v] = d
-        expect = sum(1_000_000 // d for v, d in dist.items() if d > 0)
-        r = got[u]
-        assert r["harmonic_x1e6"] == expect, (u, r)
-        assert r["n_reached"] == len(dist) - 1
-
-
-# ----------------------------------------------------------------------- MASE
-
-
-def test_mase_matches_bruteforce(spark):
-    ev = load(spark, SF0001, "events").select("event_type", "ts").collect()
-    daily = {}
-    for et, ts in ev:
-        daily.setdefault(et, {}).setdefault(ts.date(), 0)
-        daily[et][ts.date()] += 1
-    got = {r["event_type"]: r for r in queries()["ts_forecast_mase"](spark, SF0001).collect()}
-    for et, days in daily.items():
-        series = sorted(days.items())
-        ys = [y for _, y in series]
-        e_model = [abs(ys[i] - ys[i - 7]) for i in range(7, len(ys))]
-        e_naive = [abs(ys[i] - ys[i - 1]) for i in range(7, len(ys))]
-        r = got[et]
-        assert r["n_scored"] == len(e_model)
-        assert r["sum_abs_err_seasonal"] == sum(e_model)
-        assert r["sum_abs_err_naive"] == sum(e_naive)
-        assert r["mase_ppm"] == sum(e_model) * 1_000_000 // sum(e_naive)
-
-
-# ----------------------------------------------------------- hash-chain log
-
-
-def test_hash_chain_detects_reorder(spark):
-    rows = queries()["sec_tamper_evident_log"](spark, SF0001).collect()
-    orders = load(spark, SF0001, "orders").select("o_orderdate", "o_orderkey", "o_totalprice").collect()
-    per_day = {}
-    for od, ok, p in orders:
-        cents = math.floor(p * 100 + 0.5)
-        per_day.setdefault(od.date(), []).append((ok, md5_hex(f"tx:{ok}:{cents}")))
-    for r in rows:
-        entries = sorted(per_day[r["day"]])
-        digs = [d for _, d in entries]
-        chain = digs[0]
-        for d in digs[1:]:
-            chain = md5_hex(chain + d)
-        assert r["chain_hash"] == chain
-        assert r["chain_head"] == digs[0]
-        assert r["n_entries"] == len(digs)
-        # reordering any two entries changes the chain
-        if len(digs) >= 3:
-            swapped = [digs[1], digs[0]] + digs[2:]
-            alt = swapped[0]
-            for d in swapped[1:]:
-                alt = md5_hex(alt + d)
-            assert alt != chain
-
-
-def _write_events(tmp_path, rows):
-    tbl = pa.table(
-        {
-            "event_id": pa.array(range(len(rows)), pa.int64()),
-            "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
-            "user_id": pa.array([1] * len(rows), pa.int64()),
-            "event_type": pa.array([r[0] for r in rows], pa.string()),
-            "value": pa.array([0.0] * len(rows), pa.float64()),
-            "props": pa.array(["{}"] * len(rows), pa.string()),
-        }
-    )
-    pq.write_table(tbl, str(tmp_path / "events.parquet"))
-    return str(tmp_path)
-
-
-def test_interval_sla_duplicate_timestamps(spark, tmp_path):
-    """N identical (event_type, ts) rows must each contribute their own
-    raw 30 min AND their own masked overlap — the r5 shape collapsed them
-    into one interval row whose masked summed N-fold (effective_us could
-    go negative)."""
-    import datetime as dt
-
-    t_in = dt.datetime(2024, 1, 1, 3, 10, 0)  # 3:10, fully inside 3-4am mask
-    t_out = dt.datetime(2024, 1, 1, 12, 0, 0)  # untouched by the mask
-    rows = [("click", t_in)] * 3 + [("click", t_out)]
-    sf_dir = _write_events(tmp_path, rows)
-    got = queries()["ts_interval_subtract_sla"](spark, sf_dir).collect()
-    assert len(got) == 1
-    r = got[0]
-    half_hour = 30 * 60 * 1_000_000
-    assert r["raw_us"] == 4 * half_hour
-    # each duplicate is fully masked (30 min inside the window), once each
-    assert r["effective_us"] == 1 * half_hour
-    assert r["effective_us"] >= 0
-    assert r["sla_ppm"] == (1 * half_hour) * 1_000_000 // (4 * half_hour)
-
-
-def test_weighted_sssp_matches_bruteforce(spark):
-    """The SSSP oracle replays the same bounded Bellman-Ford rounds as
-    unrolled SQL (replay-style) — this witness rebuilds the co-purchase
-    graph and runs an INDEPENDENT textbook Bellman-Ford in pure Python."""
-    import hashlib
-    from collections import defaultdict
-
-    li = spark.read.parquet(SF0001 + "/lineitem.parquet").select("l_orderkey", "l_partkey")
-    o = spark.read.parquet(SF0001 + "/orders.parquet").select("o_orderkey", "o_custkey")
-    rows = (
-        li.filter(li.l_partkey % 10 == 0)
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .select("o_custkey", "l_partkey")
-        .distinct()
-        .collect()
-    )
-    by_cust = defaultdict(set)
-    for r in rows:
-        by_cust[r["o_custkey"]].add(r["l_partkey"])
-    cooc = Counter()
-    for parts in by_cust.values():
-        ps = sorted(parts)
-        for i, pa in enumerate(ps):
-            for pb in ps[i + 1 :]:
-                cooc[(pa, pb)] += 1
-    adj = defaultdict(list)
-    for (pa, pb), c in cooc.items():
-        if c >= 2:
-            w = int(hashlib.md5(f"w:{pa}:{pb}".encode()).hexdigest()[:5], 16) % 90 + 10
-            adj[pa].append((pb, w))
-            adj[pb].append((pa, w))
-    seeds = [n for n in adj if n % 50 == 0]
-    dist = {n: 0 for n in seeds}
-    for _ in range(6):  # same round bound as the operator
-        nxt = dict(dist)
-        for u, du in dist.items():
-            for v, w in adj[u]:
-                if v not in nxt or du + w < nxt[v]:
-                    nxt[v] = du + w
-        dist = nxt
-    got = {
-        r["node"]: r["dist"] for r in queries()["graph_weighted_sssp"](spark, SF0001).collect()
-    }
-    assert got == dist
-
-
-def _axis(tag, event_id):
-    return int(hashlib.md5(f"{tag}{event_id}".encode()).hexdigest()[:5], 16) % 100000
-
-
-def test_impossible_travel_matches_bruteforce(spark):
-    from gcp_cloudsql_to_bigquery_spark.operators.quality import _TRAVEL_V2
-
-    ev = spark.read.parquet(SF0001 + "/events.parquet").select(
-        "user_id", "event_id", "ts"
-    ).collect()
-    by_user = defaultdict(list)
-    for r in ev:
-        by_user[r["user_id"]].append((r["ts"], r["event_id"]))
-    expect = {}
-    for u, evs in by_user.items():
-        evs.sort()
-        n_hops = n_imp = 0
-        worst = None
-        for (pts, pid), (ts, eid) in zip(evs, evs[1:]):
-            dt = int((ts - pts).total_seconds() * 1_000_000)
-            dx = _axis("gx:", eid) - _axis("gx:", pid)
-            dy = _axis("gy:", eid) - _axis("gy:", pid)
-            d2 = dx * dx + dy * dy
-            n_hops += 1
-            # exact integer compare, no sqrt: d2 * 1e12 > V2 * dt^2
-            if d2 * 10**12 > _TRAVEL_V2 * dt * dt:
-                n_imp += 1
-                worst = d2 if worst is None else max(worst, d2)
-        if n_hops:
-            expect[u] = (n_hops, n_imp, worst)
-    got = {
-        r["user_id"]: (r["n_hops"], r["n_impossible"], r["worst_d2"])
-        for r in queries()["sec_impossible_travel"](spark, SF0001).collect()
-    }
-    assert got == expect
-
-
-def test_population_stability_matches_bruteforce(spark):
-    rows = spark.read.parquet(SF0001 + "/orders.parquet").select(
-        "o_totalprice", "o_orderdate"
-    ).collect()
-    import datetime as dt
-
-    cut = dt.datetime(1995, 1, 1)
-    vals = [
-        (math.floor(r["o_totalprice"] * 100 + 0.5), r["o_orderdate"] < cut)
-        for r in rows
-    ]
-    lo = min(c for c, _ in vals)
-    hi = max(c for c, _ in vals)
-    n_ref = defaultdict(int)
-    n_cur = defaultdict(int)
-    for c, is_ref in vals:
-        b = min(9, (c - lo) * 10 // (hi - lo + 1))
-        (n_ref if is_ref else n_cur)[b] += 1
-    bins = sorted(set(n_ref) | set(n_cur))
-    tr = sum(n_ref.values())
-    tc = sum(n_cur.values())
-    expect = {}
-    for b in bins:
-        p = (n_ref[b] + 1) / (tr + 10)
-        q = (n_cur[b] + 1) / (tc + 10)
-        expect[b] = (n_ref[b], n_cur[b], math.floor((p - q) * math.log(p / q) * 1e9 + 0.5))
-    got = {
-        r["bin"]: (r["n_ref"], r["n_cur"], r["term_x1e9"])
-        for r in queries()["dq_population_stability"](spark, SF0001).collect()
-    }
-    assert set(got) == set(expect)
-    total = 0
-    for b, (nr, nc, term) in expect.items():
-        gnr, gnc, gterm = got[b]
-        assert (gnr, gnc) == (nr, nc)
-        # independent float path: allow 1 nano-unit of quantization slack
-        assert abs(gterm - term) <= 1, (b, gterm, term)
-        total += gterm
-    psi = {r["psi_total_x1e9"] for r in queries()["dq_population_stability"](spark, SF0001).collect()}
-    assert psi == {total}
-
-
-def test_seasonal_strength_matches_bruteforce(spark):
-    """ts_seasonal_strength's oracle replays the identical quantized
-    detrend -> seasonal-mean -> residual pipeline — this witness recomputes
-    strength from first principles with the same 1e-9 quantization."""
-    ev = spark.read.parquet(SF0001 + "/events.parquet").select("event_type", "ts").collect()
-    hourly = defaultdict(int)
-    for r in ev:
-        hourly[(r["event_type"], r["ts"].date(), r["ts"].hour)] += 1
-
-    def quant(v):
-        return math.floor(v * 1e9 + 0.5) / 1e9
-
-    daymean = defaultdict(lambda: (0.0, 0))
-    for (t, d, h), x in hourly.items():
-        s, c = daymean[(t, d)]
-        daymean[(t, d)] = (s + x, c + 1)
-    det = {(t, d, h): quant(x - daymean[(t, d)][0] / daymean[(t, d)][1])
-           for (t, d, h), x in hourly.items()}
-    seas_acc = defaultdict(lambda: (0.0, 0))
-    for (t, d, h), dt_ in det.items():
-        s, c = seas_acc[(t, h)]
-        seas_acc[(t, h)] = (s + dt_, c + 1)
-    seas = {k: quant(s / c) for k, (s, c) in seas_acc.items()}
-    per_type = defaultdict(lambda: [0, 0.0, 0.0])  # n_obs, sum r^2, sum dt^2
-    peak = {}
-    for (t, d, h), dt_ in det.items():
-        r = quant(dt_ - seas[(t, h)])
-        acc = per_type[t]
-        acc[0] += 1
-        acc[1] += r * r
-        acc[2] += dt_ * dt_
-    for (t, h), s_ in seas.items():
-        m = max(v for (tt, hh), v in seas.items() if tt == t)
-        if s_ == m and t not in peak:
-            peak[t] = min(hh for (tt, hh), v in seas.items() if tt == t and v == m)
-    got = {
-        r["event_type"]: (r["n_obs"], r["strength_ppm"], r["peak_hour"])
-        for r in queries()["ts_seasonal_strength"](spark, SF0001).collect()
-    }
-    assert set(got) == set(per_type)
-    for t, (n_obs, ss_r, ss_dt) in per_type.items():
-        strength = math.floor(max(0.0, 1.0 - ss_r / ss_dt) * 1e6 + 0.5)
-        gn, gs, gp = got[t]
-        assert gn == n_obs
-        # independent summation order: allow 1 micro-unit of slack
-        assert abs(gs - strength) <= 1, (t, gs, strength)
-        assert gp == peak[t]
-
-
-def _hourly_cents(spark):
-    ev = spark.read.parquet(SF0001 + "/events.parquet").select(
-        "event_type", "ts", "value"
-    ).collect()
-    hourly = defaultdict(int)
-    for r in ev:
-        h = r["ts"].replace(minute=0, second=0, microsecond=0)
-        hourly[(r["event_type"], h)] += math.floor(r["value"] * 100 + 0.5)
-    return hourly
-
-
-def test_autocorrelation_matches_bruteforce(spark):
-    """Pearson ACF at lags 1 and 24 over the hourly cents series,
-    recomputed from the raw moment sums in pure Python."""
-    hourly = _hourly_cents(spark)
-    series = defaultdict(list)
-    for (t, h), c in sorted(hourly.items()):
-        series[t].append(c)
-    expect = {}
-    for t, xs in series.items():
-        for k in (1, 24):
-            pairs = [(xs[i], xs[i - k]) for i in range(k, len(xs))]
-            if not pairs:
-                continue
-            n = len(pairs)
-            sx = sum(x for x, _ in pairs)
-            sy = sum(y for _, y in pairs)
-            sxy = sum(x * y for x, y in pairs)
-            sxx = sum(x * x for x, _ in pairs)
-            syy = sum(y * y for _, y in pairs)
-            r = (n * sxy - sx * sy) / math.sqrt(
-                (n * sxx - sx * sx) * 1.0 * (n * syy - sy * sy)
-            )
-            expect[(t, k)] = (n, math.floor(r * 1e6 + 0.5))
-    got = {
-        (r["event_type"], r["lag"]): (r["n_pairs"], r["acf_x1e6"])
-        for r in queries()["ts_autocorrelation"](spark, SF0001).collect()
-    }
-    assert set(got) == set(expect)
-    for k, (n, acf) in expect.items():
-        gn, gacf = got[k]
-        assert gn == n
-        assert abs(gacf - acf) <= 1, (k, gacf, acf)  # independent float path
-
-
-def test_ma_decompose_matches_bruteforce(spark):
-    """Centered 25-hour moving-average detrend + hour-of-day seasonal
-    means, all in rounded integer cents, recomputed directly."""
-    hourly = _hourly_cents(spark)
-    series = defaultdict(list)
-    for (t, h), c in sorted(hourly.items()):
-        series[t].append((h, c))
-    resids = defaultdict(list)  # (type, hour-of-day) -> residuals
-    for t, pts in series.items():
-        for i in range(12, len(pts) - 12):
-            window = [c for _, c in pts[i - 12 : i + 13]]
-            wsum, wn = sum(window), 25
-            trend = (2 * wsum + wn) // (2 * wn)  # round-half-up integer mean
-            h, c = pts[i]
-            resids[(t, h.hour)].append(c - trend)
-    expect = {
-        k: (len(v), math.floor((2 * sum(v) + len(v)) / (2.0 * len(v))))
-        for k, v in resids.items()
-    }
-    got = {
-        (r["event_type"], r["hod"]): (r["n"], r["seasonal_cents"])
-        for r in queries()["ts_ma_decompose"](spark, SF0001).collect()
-    }
-    assert got == expect
-
-
-def test_seasonal_profile_matches_bruteforce(spark):
-    """Hour-of-day profile: integer-rounded mean cents and each hour's
-    1e-6 share of its type's profile total, recomputed directly."""
-    hourly = _hourly_cents(spark)
-    acc = defaultdict(lambda: (0, 0))  # (type, hod) -> (sum, n)
-    for (t, h), c in hourly.items():
-        s, n = acc[(t, h.hour)]
-        acc[(t, h.hour)] = (s + c, n + 1)
-    avg = {k: (n, math.floor(s / n * 100 + 0.5)) for k, (s, n) in acc.items()}
-    tot = defaultdict(int)
-    for (t, _), (_, a) in avg.items():
-        tot[t] += a
-    got = {
-        (r["event_type"], r["hod"]): (r["n_obs"], r["avg_cents_x100"], r["share_x1e6"])
-        for r in queries()["ts_seasonal_profile"](spark, SF0001).collect()
-    }
-    assert set(got) == set(avg)
-    for k, (n, a) in avg.items():
-        share = math.floor(a / tot[k[0]] * 1e6 + 0.5)
-        gn, ga, gs = got[k]
-        assert (gn, ga) == (n, a)
-        assert abs(gs - share) <= 1, (k, gs, share)
-
-
-def test_l_diversity_matches_bruteforce(spark):
-    import re as _re  # noqa: F401  (kept for symmetry with other witnesses)
-
-    rows = spark.read.parquet(SF0001 + "/customer.parquet").select(
-        "c_nationkey", "c_mktsegment", "c_acctbal"
-    ).collect()
-    cls = defaultdict(lambda: defaultdict(int))
-    for r in rows:
-        sens = math.floor(r["c_acctbal"] / 1000)
-        cls[(r["c_nationkey"], r["c_mktsegment"])][sens] += 1
-    expect = {}
-    for k, sens_counts in cls.items():
-        size = sum(sens_counts.values())
-        l_d = len(sens_counts)
-        expect[k] = (
-            size,
-            l_d,
-            l_d >= 3,
-            math.floor(max(sens_counts.values()) * 1_000_000.0 / size + 0.5),
-        )
-    got = {
-        (r["c_nationkey"], r["c_mktsegment"]): (
-            r["class_size"], r["l_distinct"], r["meets_l"], r["top_share_ppm"],
-        )
-        for r in queries()["sec_l_diversity_audit"](spark, SF0001).collect()
-    }
-    assert got == expect
-
-
-def test_duplicate_payments_matches_bruteforce(spark):
-    """Same-customer same-price-band order pairs within a year, explicit
-    double loop per customer."""
-    import itertools
-
-    rows = spark.read.parquet(SF0001 + "/orders.parquet").select(
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"
-    ).collect()
-    by_cust = defaultdict(list)
-    for r in rows:
-        by_cust[r["o_custkey"]].append(
-            (
-                r["o_orderkey"],
-                math.floor(r["o_totalprice"] / 100),
-                math.floor(r["o_totalprice"] * 100 + 0.5),
-                r["o_orderdate"].date(),
-            )
-        )
-    expect = set()
-    for ck, orders in by_cust.items():
-        for (ok1, b1, c1, d1), (ok2, b2, c2, d2) in itertools.permutations(orders, 2):
-            if ok1 < ok2 and b1 == b2 and abs((d2 - d1).days) <= 365:
-                expect.add((ck, ok1, ok2, b1, c1, c2, (d2 - d1).days))
-    got = {
-        (
-            r["custkey"], r["order_a"], r["order_b"], r["band"],
-            r["cents_a"], r["cents_b"], r["days_apart"],
-        )
-        for r in queries()["dq_duplicate_payments"](spark, SF0001).collect()
-    }
-    assert got == expect
-
-
-def test_random_walk_matches_python(spark):
-    """The walk policy (md5-argmin neighbor choice per step) is replayed
-    by the oracle SQL step-for-step; this witness replays it from first
-    principles: rebuild the co-purchase graph from raw parquet, walk 4
-    steps with hashlib, compare every (walk, step, node)."""
-    li = pq.read_table(SF0001 + "/lineitem.parquet", columns=["l_orderkey", "l_partkey"])
-    orders = pq.read_table(SF0001 + "/orders.parquet", columns=["o_orderkey", "o_custkey"])
-    ok2ck = dict(zip(orders.column(0).to_pylist(), orders.column(1).to_pylist()))
-    cp = set()
-    for ok, pk in zip(li.column(0).to_pylist(), li.column(1).to_pylist()):
-        if pk % 10 == 0:
-            cp.add((ok2ck[ok], pk))
-    by_c = {}
-    for c, p in cp:
-        by_c.setdefault(c, set()).add(p)
-    cooc = Counter()
-    for parts in by_c.values():
-        sp = sorted(parts)
-        for i, pa in enumerate(sp):
-            for pb in sp[i + 1:]:
-                cooc[(pa, pb)] += 1
-    und = {}
-    for (pa, pb), n in cooc.items():
-        if n >= 2:
-            und.setdefault(pa, set()).add(pb)
-            und.setdefault(pb, set()).add(pa)
-    want = set()
-    for seed in sorted(und):
-        if seed % 50 != 0:
-            continue
-        want.add((seed, 0, seed))
-        node = seed
-        for step in range(1, 5):
-            nbrs = und.get(node)
-            if not nbrs:
-                break
-            node = min(
-                nbrs,
-                key=lambda d: hashlib.md5(
-                    f"walk:{seed}:{step}:{node}:{d}".encode()
-                ).hexdigest(),
-            )
-            want.add((seed, step, node))
-    got = {
-        (r["walk_id"], r["step"], r["node"])
-        for r in queries()["graph_random_walk"](spark, SF0001).collect()
-    }
-    assert got == want and want
-
-
-def test_cell_level_diff_matches_python(spark):
-    """The replica corruptions (k%97 status flip, k%131 cents drift) are
-    replayed identically in the oracle; recompute the expected cell diff
-    directly from the raw parquet."""
-    t = pq.read_table(
-        SF0001 + "/orders.parquet",
-        columns=["o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority"],
-    )
-    want = set()
-    for k, st, price, pri in zip(*(t.column(i).to_pylist() for i in range(4))):
-        if k > 6000:
-            continue
-        cents = int(np.floor(price * 100 + 0.5))
-        if k % 97 == 0 and st != "X":
-            want.add((k, "st", st, "X"))
-        if k % 131 == 0:
-            want.add((k, "cents", str(cents), str(cents + 7)))
-    got = {
-        (r["k"], r["col"], r["old_val"], r["new_val"])
-        for r in queries()["elt_cell_level_diff"](spark, SF0001).collect()
-    }
-    assert got == want and want
-
-
-def test_hits_matches_bruteforce(spark):
-    """Full pure-Python replay of the 3-iteration HITS loop: edge weights
-    from the 4-way join, h0=1, per-half-round dst/src-keyed weighted sums,
-    MAX-normalize over raw scores, micro-quantize to 1e-9 — then compare
-    the x1e9 integers.  Summation-order float drift can move a quantized
-    value by at most one 1e-9 step, so the assertion allows |delta| <= 1;
-    any algorithmic bug (wrong key direction, missing coalesce-to-zero,
-    normalizing before the sum, L1 instead of max) shifts scores by
-    orders of magnitude more."""
-    lk = parquet_col(SF0001, "lineitem", "l_orderkey")
-    ls = parquet_col(SF0001, "lineitem", "l_suppkey")
-    o = dict(zip(parquet_col(SF0001, "orders", "o_orderkey"), parquet_col(SF0001, "orders", "o_custkey")))
-    c = dict(zip(parquet_col(SF0001, "customer", "c_custkey"), parquet_col(SF0001, "customer", "c_nationkey")))
-    s = dict(zip(parquet_col(SF0001, "supplier", "s_suppkey"), parquet_col(SF0001, "supplier", "s_nationkey")))
-    nations = sorted(parquet_col(SF0001, "nation", "n_nationkey"))
-
-    w = Counter((c[o[ok]], s[sk]) for ok, sk in zip(lk, ls))
-
-    def quant(x):
-        return math.floor(x * 1e9 + 0.5) / 1e9
-
-    def half_round(score, from_idx, to_idx):
-        raw = defaultdict(float)
-        for (src, dst), wt in w.items():
-            key = (src, dst)
-            raw[key[to_idx]] += score[key[from_idx]] * wt
-        m = max(raw.values())
-        return {n: quant(raw.get(n, 0.0) / m) for n in nations}
-
-    h = {n: 1.0 for n in nations}
-    for _ in range(3):
-        a = half_round(h, 0, 1)  # authority: dst-keyed sum of h[src]*w
-        h = half_round(a, 1, 0)  # hub: src-keyed sum of a[dst]*w
-    want_a = {n: math.floor(a[n] * 1e9 + 0.5) for n in nations}
-    want_h = {n: math.floor(h[n] * 1e9 + 0.5) for n in nations}
-
-    rows = queries()["graph_hits"](spark, SF0001).collect()
-    assert len(rows) == len(nations)
-    for r in rows:
-        n = r["n_nationkey"]
-        assert abs(r["auth_x1e9"] - want_a[n]) <= 1, (n, r["auth_x1e9"], want_a[n])
-        assert abs(r["hub_x1e9"] - want_h[n]) <= 1, (n, r["hub_x1e9"], want_h[n])
-        # zero/positive structure must be exact (no quantization slack):
-        # a nation has authority iff an edge points at it, hub iff it
-        # sources one
-        assert (r["auth_x1e9"] > 0) == (want_a[n] > 0)
-        assert (r["hub_x1e9"] > 0) == (want_h[n] > 0)
-    # non-degenerate: the corpus has real asymmetry to rank
-    assert len({r["auth_x1e9"] for r in rows}) > 2
-
-
-def _jaccard_edges(path, thresh=0.65):
-    """Ground-truth near-dup edge set recomputed from raw text: distinct
-    character 3-gram shingles (``substring(text, i, 3)`` for i in
-    1..max(len-2, 1), exactly the engine's SHINGLE_EXPR), exact pairwise
-    Jaccard over the STRING sets (the engine compares xxhash64-hashed
-    sets — an xxhash64 collision would surface here as a diff), rounded
-    half-up to 6dp like both engines, thresholded.  Pairs (a < b)."""
-    t = pq.read_table(f"{path}/documents.parquet", columns=["doc_id", "text"])
-    shingles = {
-        i: frozenset(x[j : j + 3] for j in range(max(len(x) - 2, 1)))
-        for i, x in zip(t.column("doc_id").to_pylist(), t.column("text").to_pylist())
-    }
-    ids = sorted(shingles)
-    edges = set()
-    for i, a in enumerate(ids):
-        sa = shingles[a]
-        for b in ids[i + 1 :]:
-            sb = shingles[b]
-            inter = len(sa & sb)
-            if inter and math.floor(inter / (len(sa) + len(sb) - inter) * 1e6 + 0.5) / 1e6 >= thresh:
-                edges.add((a, b))
-    return edges
-
-
-def test_kcore_matches_bruteforce_peel(spark):
-    """graph_kcore's oracle unrolls the same 8 peel rounds the Spark loop
-    runs (replay-style), so the peel is recomputed here from first
-    principles: symmetric edge set from _jaccard_edges, iteratively drop
-    nodes of degree < 2 plus their edges until fixpoint, compare the
-    surviving (node, core_degree) map exactly.  Also asserts the peel
-    reaches fixpoint within the 8 shared rounds — the premise that makes
-    the fixed unroll exact."""
-    edges = _jaccard_edges(SF0001)
-    assert edges  # non-degenerate corpus
-    adj = defaultdict(set)
-    for a, b in edges:
-        adj[a].add(b)
-        adj[b].add(a)
-    rounds = 0
-    while True:
-        drop = {n for n, nb in adj.items() if len(nb) < 2}
-        if not drop:
-            break
-        rounds += 1
-        for n in drop:
-            for m in adj[n]:
-                adj[m].discard(n)
-            del adj[n]
-        adj = {n: nb for n, nb in adj.items() if nb}
-    assert rounds <= 8  # fixpoint inside the shared unroll bound
-    want = {n: len(nb) for n, nb in adj.items()}
-
-    got = {
-        r["doc_id"]: r["core_degree"]
-        for r in queries()["graph_kcore"](spark, SF0001).collect()
-    }
-    assert got == want
-    assert want  # the 2-core is non-empty at this SF
-
-
-def test_bfs_layers_match_bruteforce_bfs(spark):
-    """graph_bfs_layers' oracle is the same recursive expansion in CTE
-    form (replay-style): recompute min-hop distances with a plain BFS
-    from the % 100 == 0 seed set over the recomputed edge set, capped at
-    depth 6, and compare (doc_id, depth) exactly."""
-    edges = _jaccard_edges(SF0001)
-    adj = defaultdict(set)
-    for a, b in edges:
-        adj[a].add(b)
-        adj[b].add(a)
-    seeds = {n for n in adj if n % 100 == 0}
-    assert seeds  # non-degenerate: the seed filter selects real nodes
-    dist = {n: 0 for n in seeds}
-    frontier = set(seeds)
-    for d in range(1, 7):
-        frontier = {v for u in frontier for v in adj[u] if v not in dist}
-        for v in frontier:
-            dist[v] = d
-
-    got = {
-        r["doc_id"]: r["depth"]
-        for r in queries()["graph_bfs_layers"](spark, SF0001).collect()
-    }
-    assert got == dist
-    assert len({d for d in dist.values()}) > 1  # more than just the seed layer
-
-
-def test_null_pattern_profile_matches_bruteforce(spark):
-    (keys,) = parquet_cols("customer", ["c_custkey"])
-    pattern = Counter(
-        (k % 7 == 0, k % 7 == 0, k % 11 == 0, k % 13 == 0) for k in keys
-    )
-    got = {}
-    for r in queries()["dq_null_pattern_profile"](spark, SF0001).collect():
-        mask = (r["name_null"], r["seg_null"], r["bal_null"], r["nat_null"])
-        assert r["n_present"] == 4 - sum(mask)
-        got[mask] = r["n_rows"]
-    assert got == dict(pattern)
-
-
-def test_holt_linear_pure_python_recompute(spark, hostile_nullkeys_sf):
-    import math
-
-    import __spark_entry__ as entry
-
-    pdf = events_pdf(hostile_nullkeys_sf)
-    pdf = pdf[pdf["ts"].notna()].copy()
-    pdf["h"] = pdf["ts"].dt.floor("h")
-    cents = (pdf["value"] * 100 + 0.5).apply(math.floor).astype("int64")
-    pdf["c"] = cents
-    # NULL event_type is ONE series (the null-safe contract under test)
-    key = pdf["event_type"].where(pdf["event_type"].notna(), "\x00NULL")
-    expected = {}
-    for et, g in pdf.groupby(key):
-        hourly = g.groupby("h")["c"].sum().sort_index()
-        lv = tr = None
-        for h, x in hourly.items():
-            if lv is None:
-                lv, tr = float(x), 0.0
-            else:
-                lt = 0.5 * float(x) + 0.5 * (lv + tr)
-                tr = 0.5 * (lt - lv) + 0.5 * tr
-                lv = lt
-            q = lambda v: math.floor(v / 100.0 * 1e4 + 0.5)  # noqa: E731
-            et_out = None if et == "\x00NULL" else et
-            expected[(et_out, h.to_pydatetime())] = (q(lv), q(tr), q(lv + tr))
-    out = entry.queries()["ts_holt_linear"](spark, hostile_nullkeys_sf).collect()
-    assert len(out) == len(expected)
-    for r in out:
-        got = (r["level_x10k"], r["trend_x10k"], r["forecast_next_x10k"])
-        assert expected[(r["event_type"], r["h"])] == got, r

@@ -8,9 +8,7 @@
    line stays visible (the ``\\z`` anchor vs the ``$``-eats-two hazard).
 """
 
-from __future__ import annotations
-
-SF = "/root/testdata/sf0.001"
+from tests.conftest import SF0001
 
 
 def test_sniffer_interior_blank_line_stays_visible(spark):
@@ -61,7 +59,7 @@ def test_stream_lsh_dedup_ttl_matches_python_bruteforce(spark):
         stream_lsh_dedup_ttl,
     )
 
-    tbl = pq.read_table(f"{SF}/documents.parquet", columns=["doc_id", "text"])
+    tbl = pq.read_table(f"{SF0001}/documents.parquet", columns=["doc_id", "text"])
     docs = sorted(zip(tbl["doc_id"].to_pylist(), tbl["text"].to_pylist()))
     sh = {d: _py_shingles(t) for d, t in docs}
     expect = {}
@@ -76,7 +74,7 @@ def test_stream_lsh_dedup_ttl_matches_python_bruteforce(spark):
                 expect[(a, b)] = jac
     got = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in stream_lsh_dedup_ttl(spark, SF).collect()
+        for r in stream_lsh_dedup_ttl(spark, SF0001).collect()
     }
     assert set(got) == set(expect), (
         sorted(set(expect) - set(got)),
@@ -96,7 +94,7 @@ def test_ann_recall_report_matches_manual_intersection(spark):
 
     from gcp_cloudsql_to_bigquery_spark.operators import similarity as S
 
-    tbl = pq.read_table(f"{SF}/embeddings.parquet", columns=["vec_id", "embedding"])
+    tbl = pq.read_table(f"{SF0001}/embeddings.parquet", columns=["vec_id", "embedding"])
     ids = np.array(tbl["vec_id"].to_pylist())
     mat = np.array(tbl["embedding"].to_pylist(), dtype=np.float64)
     order = np.argsort(ids)
@@ -113,7 +111,7 @@ def test_ann_recall_report_matches_manual_intersection(spark):
     n_q = int(q_mask.sum())
     assert len(exact) == 5 * n_q
 
-    rep = {r["method"]: r for r in S.ann_recall_report(spark, SF).collect()}
+    rep = {r["method"]: r for r in S.ann_recall_report(spark, SF0001).collect()}
     fns = {
         "ann_ivf_topk": S.ann_ivf_topk,
         "ann_ivf_kmeans_topk": S.ann_ivf_kmeans_topk,
@@ -125,7 +123,7 @@ def test_ann_recall_report_matches_manual_intersection(spark):
     assert set(rep) == set(fns)
     for m, fn in fns.items():
         approx = {
-            (r["query_id"], r["neighbor_id"]) for r in fn(spark, SF).collect()
+            (r["query_id"], r["neighbor_id"]) for r in fn(spark, SF0001).collect()
         }
         hits = len(exact & approx)
         assert rep[m]["n_queries"] == n_q, m

@@ -17,14 +17,12 @@
    (candidate set and final index identical to an uninterrupted run).
 """
 
-from __future__ import annotations
-
 import glob
 import os
 
 import pytest
 
-SF = "/root/testdata/sf0.001"
+from tests.conftest import SF0001
 
 
 def _bases_added_during(prefix, fn):
@@ -165,7 +163,7 @@ def test_lshttl_post_drain_cleanup_and_atexit_hook(spark):
     from gcp_cloudsql_to_bigquery_spark.streaming.elt import stream_lsh_dedup_ttl
     from gcp_cloudsql_to_bigquery_spark.tmputil import home
 
-    df, bases = _bases_added_during("lshttl_", lambda: stream_lsh_dedup_ttl(spark, SF))
+    df, bases = _bases_added_during("lshttl_", lambda: stream_lsh_dedup_ttl(spark, SF0001))
     (base,) = bases
     assert df.count() >= 0  # consume while cand_b* is still on disk
     entries = sorted(os.listdir(base))
@@ -211,7 +209,7 @@ def test_lshttl_crash_resume_replay_is_idempotent(spark, tmp_path):
         _write_id_ordered_shards,
     )
 
-    docs = load(spark, SF, "documents").select("doc_id", "text")
+    docs = load(spark, SF0001, "documents").select("doc_id", "text")
 
     # uninterrupted reference run
     base1, ckpt1 = str(tmp_path / "run1"), str(tmp_path / "ckpt1")
@@ -254,7 +252,7 @@ def test_lshttl_crash_resume_at_edge_batches(spark, tmp_path, crash_at):
         _write_id_ordered_shards,
     )
 
-    docs = load(spark, SF, "documents").select("doc_id", "text")
+    docs = load(spark, SF0001, "documents").select("doc_id", "text")
     base1, ckpt1 = str(tmp_path / "run1"), str(tmp_path / "ckpt1")
     os.makedirs(base1)
     _write_id_ordered_shards(docs, os.path.join(base1, "feed"))
@@ -318,7 +316,7 @@ def test_versioned_fold_crash_resume_idempotent(spark, tmp_path, name):
     write_feed, fold_body, glob_pat, fixed_schema = _fold_stream_cfg(name)
 
     def prep(base):
-        schema = write_feed(spark, SF, os.path.join(base, "feed"))
+        schema = write_feed(spark, SF0001, os.path.join(base, "feed"))
         return fixed_schema if fixed_schema is not None else schema
 
     # uninterrupted reference run
@@ -372,7 +370,7 @@ def test_versioned_stream_post_drain_cleanup(spark, qname):
         "stream_incremental_topk": "topk_",
         "stream_incremental_sessionize": "isess_",
     }[qname]
-    df, bases = _bases_added_during(prefix, lambda: REGISTRY[qname].fn(spark, SF))
+    df, bases = _bases_added_during(prefix, lambda: REGISTRY[qname].fn(spark, SF0001))
     (base,) = bases
     assert df.count() > 0
     entries = os.listdir(base)
@@ -389,7 +387,7 @@ def test_memory_sink_checkpoint_removed_after_termination(spark, qname):
     from gcp_cloudsql_to_bigquery_spark.registry import REGISTRY
 
     df, ckpts = _tmp_dirs_created_during(
-        "ckpt_", lambda: REGISTRY[qname].fn(spark, SF)
+        "ckpt_", lambda: REGISTRY[qname].fn(spark, SF0001)
     )
     assert ckpts, "checkpoint should be allocated through tmputil.tmp_dir"
     assert not any(os.path.exists(c) for c in ckpts), ckpts
@@ -400,7 +398,7 @@ def test_late_data_audit_watch_removed_after_drain(spark):
     from gcp_cloudsql_to_bigquery_spark.registry import REGISTRY
 
     df, watches = _tmp_dirs_created_during(
-        "late_watch_", lambda: REGISTRY["stream_late_data_audit"].fn(spark, SF)
+        "late_watch_", lambda: REGISTRY["stream_late_data_audit"].fn(spark, SF0001)
     )
     (watch,) = watches
     assert not os.path.exists(watch)
@@ -416,7 +414,7 @@ def test_checkpoint_resume_keeps_only_the_lazy_sink(spark):
     from gcp_cloudsql_to_bigquery_spark.tmputil import home
 
     df, paths = _tmp_dirs_created_during(
-        "resume_", lambda: REGISTRY["stream_checkpoint_resume"].fn(spark, SF)
+        "resume_", lambda: REGISTRY["stream_checkpoint_resume"].fn(spark, SF0001)
     )
     by_kind = {os.path.basename(p).split("_")[1]: p for p in paths}
     assert set(by_kind) == {"watch", "ckpt", "sink"}, paths
@@ -511,7 +509,7 @@ def test_elt_file_arrival_post_drain_cleanup(spark):
     from gcp_cloudsql_to_bigquery_spark.registry import REGISTRY
 
     df, bases = _bases_added_during(
-        "stream_elt_", lambda: REGISTRY["stream_elt_file_arrival"].fn(spark, SF)
+        "stream_elt_", lambda: REGISTRY["stream_elt_file_arrival"].fn(spark, SF0001)
     )
     (base,) = bases
     assert df.count() > 0

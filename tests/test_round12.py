@@ -13,15 +13,13 @@
    of this user's whose PID is dead.
 """
 
-from __future__ import annotations
-
 import os
 import shutil
 import tempfile
 
 import pytest
 
-SF = "/root/testdata/sf0.001"
+from tests.conftest import SF0001
 
 
 # --- ADVICE r11 item 1: conf-leak guard --------------------------------------
@@ -57,7 +55,7 @@ def test_processing_time_trigger_conf_restored_when_mkdtemp_fails(
 
     monkeypatch.setattr(tempfile, "mkdtemp", boom)
     with pytest.raises(OSError):
-        REGISTRY["stream_processing_time_trigger"].fn(spark, SF)
+        REGISTRY["stream_processing_time_trigger"].fn(spark, SF0001)
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
 
 
@@ -119,7 +117,7 @@ def test_batch_staging_tree_registered_for_atexit(spark):
     from gcp_cloudsql_to_bigquery_spark.registry import REGISTRY
 
     df, added = _home_added_during(
-        "elt_nation_", lambda: REGISTRY["elt_roundtrip_nation"].fn(spark, SF)
+        "elt_nation_", lambda: REGISTRY["elt_roundtrip_nation"].fn(spark, SF0001)
     )
     assert df.count() > 0
     assert added, "staging tree must be made inside the home"
@@ -132,7 +130,7 @@ def test_derby_db_dir_registered_for_atexit(spark):
     from gcp_cloudsql_to_bigquery_spark.registry import REGISTRY
 
     df, added = _home_added_during(
-        "derby_", lambda: REGISTRY["src_jdbc_roundtrip"].fn(spark, SF)
+        "derby_", lambda: REGISTRY["src_jdbc_roundtrip"].fn(spark, SF0001)
     )
     assert df.count() > 0
     assert added, "Derby db dir must be made inside the home"
@@ -179,7 +177,7 @@ def test_registry_net_growth_zero_for_fully_cleaned_query(spark):
     from gcp_cloudsql_to_bigquery_spark.tmputil import home
 
     before = {r: set(os.listdir(home(r))) for r in (None, _CKPT_DIR)}
-    df = REGISTRY["stream_tumbling_window"].fn(spark, SF)
+    df = REGISTRY["stream_tumbling_window"].fn(spark, SF0001)
     assert df.count() > 0
     assert {r: set(os.listdir(home(r))) for r in (None, _CKPT_DIR)} == before
 

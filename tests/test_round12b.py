@@ -13,48 +13,10 @@ mechanisms (packed-trim decode on negative cents, -0.0 canonicalization,
 zero-vector exclusion, short-doc n-gram guard).
 """
 
-from __future__ import annotations
-
-import importlib.util
-import os
-import sys
-
 import pytest
 
-_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, _ROOT)
-
-from gcp_cloudsql_to_bigquery_spark.catalog import TABLES  # noqa: E402
-
-
-def _load_script(name: str):
-    spec = importlib.util.spec_from_file_location(name, os.path.join(_ROOT, "scripts", f"{name}.py"))
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-_selfcheck = _load_script("selfcheck")
-
-
-@pytest.fixture(scope="module")
-def hostile_sf(tmp_path_factory):
-    mod = _load_script("make_hostile_sf")
-    out = tmp_path_factory.mktemp("hostile_sf")
-    return mod.main(str(out))
-
-
-@pytest.fixture(scope="module")
-def duck(hostile_sf):
-    import duckdb
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{hostile_sf}/{t}.parquet'"
-        )
-    yield con
-    con.close()
+from selfcheck import canon
+from tests.conftest import assert_matches_oracle
 
 
 # every query the first hostile sweep flagged (the fix regression set)
@@ -91,45 +53,8 @@ HOSTILE_FIXED = [
 
 
 @pytest.mark.parametrize("name", HOSTILE_FIXED)
-def test_hostile_fixed_query_matches_oracle(spark, duck, hostile_sf, name):
-    import __spark_entry__ as entry
-
-    sdf = entry.queries()[name](spark, hostile_sf)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    res = duck.execute(entry.oracle_sql()[name])
-    ocols = [d[0] for d in res.description]
-    orows = res.fetchall()
-    assert sorted(scols) == sorted(ocols), f"{name}: column mismatch"
-    assert len(srows) == len(orows), (
-        f"{name}: rowcount spark={len(srows)} duckdb={len(orows)}"
-    )
-    mismatches = _selfcheck.type_mismatches(duck, entry.oracle_sql()[name], sdf.schema)
-    assert not mismatches, f"{name}: {mismatches}"
-    s = _selfcheck.rowset(scols, srows)
-    o = _selfcheck.rowset(ocols, orows)
-    assert s == o, f"{name}: first diffs {[p for p in zip(s, o) if p[0] != p[1]][:3]}"
-
-
-@pytest.fixture(scope="module")
-def hostile_nulls_sf(tmp_path_factory):
-    mod = _load_script("make_hostile_sf")
-    out = tmp_path_factory.mktemp("hostile_nulls_sf")
-    return mod.main(str(out), tier="nulls")
-
-
-@pytest.fixture(scope="module")
-def duck_nulls(hostile_nulls_sf):
-    import duckdb
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM '{hostile_nulls_sf}/{t}.parquet'"
-        )
-    yield con
-    con.close()
+def test_hostile_fixed_query_matches_oracle(spark, hostile_sf, name):
+    assert_matches_oracle(spark, hostile_sf, name)
 
 
 # every query the null-tier sweep flagged (45): size(NULL)=-1 legacy conf,
@@ -188,43 +113,8 @@ NULLS_FIXED = [
 
 
 @pytest.mark.parametrize("name", NULLS_FIXED)
-def test_nulls_fixed_query_matches_oracle(spark, duck_nulls, hostile_nulls_sf, name):
-    import __spark_entry__ as entry
-
-    sdf = entry.queries()[name](spark, hostile_nulls_sf)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    res = duck_nulls.execute(entry.oracle_sql()[name])
-    ocols = [d[0] for d in res.description]
-    orows = res.fetchall()
-    assert sorted(scols) == sorted(ocols), f"{name}: column mismatch"
-    assert len(srows) == len(orows), (
-        f"{name}: rowcount spark={len(srows)} duckdb={len(orows)}"
-    )
-    s = _selfcheck.rowset(scols, srows)
-    o = _selfcheck.rowset(ocols, orows)
-    assert s == o, f"{name}: first diffs {[p for p in zip(s, o) if p[0] != p[1]][:3]}"
-
-
-@pytest.fixture(scope="module")
-def hostile_empty_sf(tmp_path_factory):
-    mod = _load_script("make_hostile_sf")
-    out = tmp_path_factory.mktemp("hostile_empty_sf")
-    return mod.main(str(out), tier="empty")
-
-
-@pytest.fixture(scope="module")
-def duck_empty(hostile_empty_sf):
-    import duckdb
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM '{hostile_empty_sf}/{t}.parquet'"
-        )
-    yield con
-    con.close()
+def test_nulls_fixed_query_matches_oracle(spark, hostile_nulls_sf, name):
+    assert_matches_oracle(spark, hostile_nulls_sf, name)
 
 
 # every query the empty-tier sweep flagged (14 — all Spark-side crashes on
@@ -250,22 +140,8 @@ EMPTY_FIXED = [
 
 
 @pytest.mark.parametrize("name", EMPTY_FIXED)
-def test_empty_fixed_query_matches_oracle(spark, duck_empty, hostile_empty_sf, name):
-    import __spark_entry__ as entry
-
-    sdf = entry.queries()[name](spark, hostile_empty_sf)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    res = duck_empty.execute(entry.oracle_sql()[name])
-    ocols = [d[0] for d in res.description]
-    orows = res.fetchall()
-    assert sorted(scols) == sorted(ocols), f"{name}: column mismatch"
-    assert len(srows) == len(orows), (
-        f"{name}: rowcount spark={len(srows)} duckdb={len(orows)}"
-    )
-    s = _selfcheck.rowset(scols, srows)
-    o = _selfcheck.rowset(ocols, orows)
-    assert s == o, f"{name}: first diffs {[p for p in zip(s, o) if p[0] != p[1]][:3]}"
+def test_empty_fixed_query_matches_oracle(spark, hostile_empty_sf, name):
+    assert_matches_oracle(spark, hostile_empty_sf, name)
 
 
 def test_size_of_null_is_null(spark):
@@ -321,9 +197,9 @@ def test_minus_zero_canonicalization():
     str-keyed row sort cannot split numerically-equal rows."""
     from decimal import Decimal
 
-    assert str(_selfcheck.canon(-0.0)) == str(_selfcheck.canon(0.0)) == "0.0"
-    assert str(_selfcheck.canon(Decimal("-0"))) == "0.0"
-    assert _selfcheck.canon(-1.5) == -1.5
+    assert str(canon(-0.0)) == str(canon(0.0)) == "0.0"
+    assert str(canon(Decimal("-0"))) == "0.0"
+    assert canon(-1.5) == -1.5
 
 
 def test_zero_vector_excluded_from_cosine_ranking(spark, hostile_sf):

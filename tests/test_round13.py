@@ -11,19 +11,11 @@ Wave 1: the ADVICE r12 closures —
   DESCENDING bucket sequence; now dropped before the explode).
 """
 
-from __future__ import annotations
-
-import os
-import shutil
-import sys
-
 import pandas as pd
 import pytest
 
-_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, _ROOT)
-
-SF0001 = "/root/testdata/sf0.001"
+from gcp_cloudsql_to_bigquery_spark.workload import queries
+from tests.conftest import assert_matches_oracle, events_pdf
 
 
 # ---------------------------------------------------------------------------
@@ -108,52 +100,13 @@ def test_stateful_fold_null_total_stays_null_across_batches():
     assert out2["total_value"] == pytest.approx(4.0)
 
 
-# ---------------------------------------------------------------------------
-# geo_mean all-NULL group (ADVICE r12, low) — oracle-net witness on a
-# fixture where one whole priority group's o_totalprice is NULL
-# ---------------------------------------------------------------------------
-
-
-@pytest.fixture(scope="module")
-def allnull_price_sf(tmp_path_factory):
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    out = tmp_path_factory.mktemp("allnull_price_sf")
-    for name in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split():
-        shutil.copy(f"{SF0001}/{name}.parquet", out / f"{name}.parquet")
-    t = pq.read_table(out / "orders.parquet")
-    mask = pc.equal(t["o_orderpriority"], "1-URGENT")
-    price = pc.if_else(mask, None, t["o_totalprice"])
-    t = t.set_column(t.schema.get_field_index("o_totalprice"), "o_totalprice", price)
-    pq.write_table(t, out / "orders.parquet")
-    return str(out)
-
-
 def test_geomean_all_null_group_is_null(spark, allnull_price_sf):
-    import duckdb
-
-    import __spark_entry__ as entry
-
-    sdf = entry.queries()["fn_pandas_udaf_geomean"](spark, allnull_price_sf)
+    """A group whose every value is NULL has a NULL geo mean, not NaN, and
+    every group matches the oracle on this geometry."""
+    sdf = queries()["fn_pandas_udaf_geomean"](spark, allnull_price_sf)
     srows = {r["o_orderpriority"]: r["geo_mean"] for r in sdf.collect()}
     assert "1-URGENT" in srows and srows["1-URGENT"] is None
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW orders AS SELECT * FROM '{allnull_price_sf}/orders.parquet'"
-    )
-    orows = dict(con.execute(entry.oracle_sql()["fn_pandas_udaf_geomean"]).fetchall())
-    con.close()
-    assert orows["1-URGENT"] is None
-    for k, v in orows.items():
-        if v is None:
-            assert srows[k] is None
-        else:
-            assert srows[k] == pytest.approx(v, abs=1e-4)
+    assert_matches_oracle(spark, allnull_price_sf, "fn_pandas_udaf_geomean")
 
 
 # ---------------------------------------------------------------------------
@@ -220,46 +173,6 @@ def test_interval_join_inverted_explodes_no_buckets(spark):
     ).selectExpr("k", "CAST(s AS TIMESTAMP) AS s", "CAST(e AS TIMESTAMP) AS e")
     out = interval_join(points, inverted, "k", "k", "t", "s", "e", 3600)
     assert out.count() == 0
-
-
-# ---------------------------------------------------------------------------
-# Wave 2: the null-KEYS hostile tier (VERDICT r12 item 3) — NULLs in
-# join/group/sort/primary-id columns.  First sweep found 66 real
-# divergences across ten fix classes (vector/doc identity contracts,
-# explicit null placement in ordered windows, event-time exclusion,
-# exhaustive stored/delta splits, export producers, pandas-dialect
-# semantics, DuckDB ASOF null-sort artifact, crosstab label encoding).
-# Every fixed query is pinned against its oracle ON THE NULLKEYS DATA.
-# ---------------------------------------------------------------------------
-
-
-@pytest.fixture(scope="module")
-def hostile_nullkeys_sf(tmp_path_factory):
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "make_hostile_sf", os.path.join(_ROOT, "scripts", "make_hostile_sf.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    out = tmp_path_factory.mktemp("hostile_nullkeys_sf")
-    return mod.main(str(out), tier="nullkeys")
-
-
-@pytest.fixture(scope="module")
-def duck_nullkeys(hostile_nullkeys_sf):
-    import duckdb
-
-    from gcp_cloudsql_to_bigquery_spark.catalog import TABLES
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM '{hostile_nullkeys_sf}/{t}.parquet'"
-        )
-    yield con
-    con.close()
 
 
 NULLKEYS_FIXED = [
@@ -335,97 +248,16 @@ NULLKEYS_FIXED = [
 
 
 @pytest.mark.parametrize("name", NULLKEYS_FIXED)
-def test_nullkeys_fixed_query_matches_oracle(
-    spark, duck_nullkeys, hostile_nullkeys_sf, name
-):
-    import importlib.util
-
-    import __spark_entry__ as entry
-
-    spec = importlib.util.spec_from_file_location(
-        "selfcheck", os.path.join(_ROOT, "scripts", "selfcheck.py")
-    )
-    selfcheck = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(selfcheck)
-
-    sdf = entry.queries()[name](spark, hostile_nullkeys_sf)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    res = duck_nullkeys.execute(entry.oracle_sql()[name])
-    ocols = [d[0] for d in res.description]
-    orows = res.fetchall()
-    assert sorted(scols) == sorted(ocols), f"{name}: column mismatch"
-    assert len(srows) == len(orows), (
-        f"{name}: rowcount spark={len(srows)} duckdb={len(orows)}"
-    )
-    s = selfcheck.rowset(scols, srows)
-    o = selfcheck.rowset(ocols, orows)
-    assert s == o, f"{name}: first diffs {[p for p in zip(s, o) if p[0] != p[1]][:3]}"
-
-
-# ---------------------------------------------------------------------------
-# Sibling-audit find: analytics_top_paths used concat_ws where the oracle
-# uses || — a NULL event_type silently SHORTENED the trigram to a two-step
-# path instead of nulling it.  Latent on every tier (the divergent paths
-# sat below the top-20 cut); this fixture nulls enough types that the NULL
-# path MUST reach the ranking, pinning the concat (null-propagating) form.
-# ---------------------------------------------------------------------------
-
-
-@pytest.fixture(scope="module")
-def nulltype_events_sf(tmp_path_factory):
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    out = tmp_path_factory.mktemp("nulltype_events_sf")
-    for name in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split():
-        shutil.copy(f"{SF0001}/{name}.parquet", out / f"{name}.parquet")
-    t = pq.read_table(out / "events.parquet")
-    # null every third event's type: null-START trigrams become frequent
-    mask = pc.equal(pc.bit_wise_and(t["event_id"], 3), 0)
-    etype = pc.if_else(mask, None, t["event_type"])
-    t = t.set_column(t.schema.get_field_index("event_type"), "event_type", etype)
-    pq.write_table(t, out / "events.parquet")
-    return str(out)
+def test_nullkeys_fixed_query_matches_oracle(spark, hostile_nullkeys_sf, name):
+    assert_matches_oracle(spark, hostile_nullkeys_sf, name)
 
 
 def test_top_paths_null_start_trigram_is_null_path(spark, nulltype_events_sf):
-    import duckdb
-
-    import __spark_entry__ as entry
-
-    key = lambda t: (t[0] is None, t[0] or "", t[1], t[2])  # noqa: E731
-    sdf = entry.queries()["analytics_top_paths"](spark, nulltype_events_sf)
-    srows = sorted(((r["path"], r["n"], r["rnk"]) for r in sdf.collect()), key=key)
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{nulltype_events_sf}/events.parquet'"
-    )
-    orows = sorted(
-        (tuple(r) for r in con.execute(entry.oracle_sql()["analytics_top_paths"]).fetchall()),
-        key=key,
-    )
-    con.close()
-    assert any(p is None for p, _, _ in srows), "fixture must surface a NULL path"
-    assert srows == orows
-
-
-# ---------------------------------------------------------------------------
-# Third-witness rule (README): the two REPLAY-style oracles changed this
-# round (holt's recursive step join, drawdown's trough subquery — both made
-# null-safe) get from-first-principles pure-Python recomputations over the
-# nullkeys fixture, so a shared Spark/DuckDB algorithmic bug cannot hide
-# behind the hash match.
-# ---------------------------------------------------------------------------
-
-
-def _events_pdf(sf):
-    import pyarrow.parquet as pq
-
-    return pq.read_table(f"{sf}/events.parquet").to_pandas()
+    """The planted NULL event types reach the top 20 as a NULL path, and
+    the ranking matches the oracle on this geometry."""
+    rows = queries()["analytics_top_paths"](spark, nulltype_events_sf).collect()
+    assert any(r["path"] is None for r in rows), "fixture must surface a NULL path"
+    assert_matches_oracle(spark, nulltype_events_sf, "analytics_top_paths")
 
 
 def test_holt_linear_pure_python_recompute(spark, hostile_nullkeys_sf):
@@ -433,7 +265,7 @@ def test_holt_linear_pure_python_recompute(spark, hostile_nullkeys_sf):
 
     import __spark_entry__ as entry
 
-    pdf = _events_pdf(hostile_nullkeys_sf)
+    pdf = events_pdf(hostile_nullkeys_sf)
     pdf = pdf[pdf["ts"].notna()].copy()
     pdf["h"] = pdf["ts"].dt.floor("h")
     cents = (pdf["value"] * 100 + 0.5).apply(math.floor).astype("int64")
@@ -466,7 +298,7 @@ def test_max_drawdown_pure_python_recompute(spark, hostile_nullkeys_sf):
 
     import __spark_entry__ as entry
 
-    pdf = _events_pdf(hostile_nullkeys_sf)
+    pdf = events_pdf(hostile_nullkeys_sf)
     pdf = pdf[pdf["ts"].notna()].copy()
     pdf["d"] = pdf["ts"].dt.date
     pdf["net"] = ((pdf["value"] - 50.0) * 100 + 0.5).apply(math.floor).astype("int64")

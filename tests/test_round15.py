@@ -21,7 +21,6 @@ import math
 
 import numpy as np
 import pyarrow as pa
-import pytest
 
 from gcp_cloudsql_to_bigquery_spark.operators.similarity import (
     _PQ_K,
@@ -30,9 +29,10 @@ from gcp_cloudsql_to_bigquery_spark.operators.similarity import (
     _PQ_TOPK,
     _pq_build_kernel,
 )
+from tests.conftest import SF0001, assert_matches_oracle
+
 
 DIM = _PQ_M * _PQ_SUB
-SF0001 = "/root/testdata/sf0.001"
 
 
 # ---------------------------------------------------------------------------
@@ -114,7 +114,7 @@ def _mk_head(rng):
 
 
 # ---------------------------------------------------------------------------
-# 1. ADVICE r14 medium — the exact triggering geometry
+# ADVICE r14 medium — the exact triggering geometry
 # ---------------------------------------------------------------------------
 
 
@@ -143,7 +143,7 @@ def test_pq_kernel_trailing_null_element_at_buffer_end_is_not_missed():
 
 
 # ---------------------------------------------------------------------------
-# 2. scalar-vs-vector agreement (the honest version of the r14 test)
+# scalar-vs-vector agreement (the honest version of the r14 test)
 # ---------------------------------------------------------------------------
 
 
@@ -178,7 +178,7 @@ def test_pq_kernel_scalar_and_vector_paths_agree_with_reference():
 
 
 # ---------------------------------------------------------------------------
-# 3. batch-local top-k boundedness + exactness (VERDICT r14 item 2)
+# batch-local top-k boundedness + exactness (VERDICT r14 item 2)
 # ---------------------------------------------------------------------------
 
 
@@ -235,7 +235,7 @@ def test_pq_rank_windows_have_partial_window_group_limit(spark):
 
 
 # ---------------------------------------------------------------------------
-# 4. NULL-codeword argmin convention (oracle-inexpressible; pinned here)
+# NULL-codeword argmin convention (oracle-inexpressible; pinned here)
 # ---------------------------------------------------------------------------
 
 
@@ -279,117 +279,18 @@ def test_pq_build_kernel_empty_head_returns_none():
     )
 
 
-# ---------------------------------------------------------------------------
-# 5. Sibling audit of the element-validity bug class (ADVICE r14 medium
-# generalized): every Python Arrow kernel over list<double> columns whose
-# oracle CAN state element-level NULLs must match DuckDB on that geometry.
-# embedding_normalize_arrow's old fast path NaN'd NULL elements where
-# list_sum skips them; embedding_label_centroid_arrow's np.stack did the
-# same to the per-dim integer sums.  (The cosine-ranking kernels are
-# oracle-INEXPRESSIBLE on this geometry — DuckDB list_cosine_similarity /
-# list_inner_product error on NULL elements — so there is no differential
-# to hold them to; documented at their nonzero()/codebook contracts.)
-# ---------------------------------------------------------------------------
-
-import shutil
-
-from gcp_cloudsql_to_bigquery_spark.catalog import TABLES as _TABLES
-
-
-def _copy_sf(dst):
-    for name in _TABLES:
-        shutil.copy(f"{SF0001}/{name}.parquet", dst / f"{name}.parquet")
-
-
-@pytest.fixture(scope="module")
-def nullelem_embeddings_sf(tmp_path_factory):
-    """sf0.001 with element-level degeneracy planted in embeddings: mid
-    NULL, trailing NULL, all-NULL, empty list, short vector, NULL first
-    element, and one row-NULL — geometries no hostile tier plants."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    out = tmp_path_factory.mktemp("nullelem_embeddings_sf")
-    _copy_sf(out)
-    t = pq.read_table(out / "embeddings.parquet")
-    idx = t.schema.get_field_index("embedding")
-    elem_t = t.schema.field(idx).type.value_type
-    vecs = t.column("embedding").to_pylist()
-    ids = t.column("vec_id").to_pylist()
-    pos = {v: i for i, v in enumerate(ids) if v is not None}
-    mut = {
-        100: lambda v: v[:5] + [None] + v[6:],   # mid NULL element
-        101: lambda v: v[:-1] + [None],           # trailing NULL element
-        102: lambda v: [None] * len(v),           # all-NULL elements
-        103: lambda v: [],                        # empty list
-        104: lambda v: v[:32],                    # short vector
-        105: lambda v: [None] + v[1:],            # NULL first element
-        106: lambda v: None,                      # row NULL
-    }
-    applied = 0
-    for vid, fn in mut.items():
-        if vid in pos and vecs[pos[vid]] is not None:
-            vecs[pos[vid]] = fn(vecs[pos[vid]])
-            applied += 1
-    assert applied == len(mut), "fixture ids missing from sf0.001 embeddings"
-    col = pa.array(vecs, type=pa.list_(elem_t))
-    t = t.set_column(idx, "embedding", col)
-    pq.write_table(t, out / "embeddings.parquet")
-    return str(out)
-
-
-def _match(spark, sf_dir, name):
-    import importlib.util
-    from pathlib import Path
-
-    import duckdb
-
-    import __spark_entry__ as entry
-
-    # repo-relative (ADVICE r15 low: the old absolute /root/repo path broke
-    # any other checkout)
-    spec = importlib.util.spec_from_file_location(
-        "selfcheck",
-        str(Path(__file__).resolve().parents[1] / "scripts" / "selfcheck.py"),
-    )
-    selfcheck = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(selfcheck)
-
-    sdf = entry.queries()[name](spark, sf_dir)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    con = duckdb.connect()
-    try:
-        for t in _TABLES:
-            con.execute(
-                f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-            )
-        res = con.execute(entry.oracle_sql()[name])
-        ocols = [d[0] for d in res.description]
-        orows = res.fetchall()
-    finally:
-        con.close()
-    assert sorted(scols) == sorted(ocols), f"{name}: column mismatch"
-    assert len(srows) == len(orows), (
-        f"{name}: rowcount spark={len(srows)} duckdb={len(orows)}"
-    )
-    s = selfcheck.rowset(scols, srows)
-    o = selfcheck.rowset(ocols, orows)
-    assert s == o, f"{name}: first diffs {[p for p in zip(s, o) if p[0] != p[1]][:3]}"
-
-
 def test_normalize_arrow_null_elements_match_oracle(spark, nullelem_embeddings_sf):
     """list_sum skips NULL elements (sum over the valid ones), empty and
     all-NULL lists sum to NULL, the unit numerator is the POSITIONAL first
     element — the old kernel emitted NaN for every one of these."""
-    _match(spark, nullelem_embeddings_sf, "embedding_normalize_arrow")
+    assert_matches_oracle(spark, nullelem_embeddings_sf, "embedding_normalize_arrow")
 
 
 def test_label_centroid_null_elements_match_oracle(spark, nullelem_embeddings_sf):
     """Per-dim integer sums skip NULL (and short-vector-missing) elements
     while count(*) still counts the vector; an all-NULL dim is NULL — the
     old np.stack path poisoned whole dims with NaN-garbage codes."""
-    _match(spark, nullelem_embeddings_sf, "embedding_label_centroid_arrow")
+    assert_matches_oracle(spark, nullelem_embeddings_sf, "embedding_label_centroid_arrow")
 
 
 def test_normalize_arrow_fast_and_exact_paths_agree(spark, nullelem_embeddings_sf):
@@ -414,7 +315,7 @@ def test_normalize_arrow_fast_and_exact_paths_agree(spark, nullelem_embeddings_s
 
 
 # ---------------------------------------------------------------------------
-# 6. Registry-wide WindowGroupLimit scan finds (r15): rank-filter queries
+# Registry-wide WindowGroupLimit scan finds (r15): rank-filter queries
 # whose plan shape silently defeated Spark's map-side group-limit.
 # ---------------------------------------------------------------------------
 

@@ -1,31 +1,15 @@
-# Round-16 witnesses:
-#
-# 1. ann_pq_topk job fold (VERDICT r15 item 2): the codebook/query head now
-#    comes from a DRIVER-SIDE pyarrow read with row-group-stat pruning
-#    instead of a Spark collect job — parity with the collect it replaced
-#    is proven on benign data AND the planted element-degeneracy fixture.
-# 2. embedding_label_centroid_arrow per-ROW fast/exact split (ADVICE r15):
-#    the mixed kernel path (vectorized clean subset + scalar degenerate
-#    tail) is driven directly on hand-built Arrow groups against a pure-
-#    Python oracle-semantics reference.
-# 3. dedup_minhash_ml expected-miss budget (ADVICE r15): the AND-2 banding
-#    recall contract is checked against the ACTUAL oracle pair population —
-#    the summed per-pair miss probability at each checked tier is asserted
-#    ~0, so a future recall flake is diagnosable as a regression, not
-#    banding randomness.
+
 
 import math
 
 import pytest
 
+from selfcheck import duck_on
 from tests.conftest import SF0001, SF001
-from tests.test_round15 import nullelem_embeddings_sf  # noqa: F401 (fixture)
-
-SFD = SF0001
 
 
 # ---------------------------------------------------------------------------
-# 1. _pq_head_from_parquet parity with the Spark collect it replaced
+# _pq_head_from_parquet parity with the Spark collect it replaced
 # ---------------------------------------------------------------------------
 
 
@@ -49,9 +33,9 @@ def test_pq_head_parquet_read_matches_spark_collect(spark):
     )
     from gcp_cloudsql_to_bigquery_spark.workload import queries
 
-    assert _pq_head_from_parquet(SFD) == _collect_head(spark, SFD)
+    assert _pq_head_from_parquet(SF0001) == _collect_head(spark, SF0001)
     # and the head drives the full ranked result: 10 queries x top 5
-    assert len(queries()["ann_pq_topk"](spark, SFD).collect()) == 50
+    assert len(queries()["ann_pq_topk"](spark, SF0001).collect()) == 50
 
 
 def test_pq_head_parquet_read_matches_on_degenerate_rows(
@@ -91,7 +75,7 @@ def test_pq_head_parquet_read_empty_tier(tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# 2. per-row fast/exact split in the label-centroid kernel
+# per-row fast/exact split in the label-centroid kernel
 # ---------------------------------------------------------------------------
 
 _D = 64
@@ -164,17 +148,8 @@ def test_centroid_kernel_clean_group_unchanged():
     assert _drive_kernel(vecs) == _ref_centroids(vecs)
 
 
-def test_centroid_mixed_tier_matches_oracle(spark, nullelem_embeddings_sf):
-    """End-to-end mixed-path differential: the fixture's mutated rows share
-    labels with clean rows, so the kernel's clean-subset + scalar-tail
-    combine is held to DuckDB on every mixed group."""
-    from tests.test_round15 import _match
-
-    _match(spark, nullelem_embeddings_sf, "embedding_label_centroid_arrow")
-
-
 # ---------------------------------------------------------------------------
-# 3. AND-2 banding expected-miss budget (ADVICE r15)
+# AND-2 banding expected-miss budget (ADVICE r15)
 # ---------------------------------------------------------------------------
 
 
@@ -186,21 +161,10 @@ def test_minhash_ml_oracle_pairs_carry_negligible_miss_budget(sf_dir):
     any future differential flake on this query is a code regression, not
     a probabilistic band miss.  (A pair at j=0.8 contributes 2.8e-4; this
     asserts no tier is dense in such borderline pairs.)"""
-    import duckdb
-
     import __spark_entry__ as entry
 
-    from gcp_cloudsql_to_bigquery_spark.catalog import TABLES
-
-    con = duckdb.connect()
-    try:
-        for t in TABLES:
-            con.execute(
-                f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-            )
+    with duck_on(sf_dir) as con:
         rows = con.execute(entry.oracle_sql()["dedup_minhash_ml"]).fetchall()
-    finally:
-        con.close()
     assert rows, f"oracle returned no pairs at {sf_dir} — fixture drifted"
     js = [r[-1] for r in rows]
     assert all(j >= 0.8 for j in js)
@@ -213,7 +177,7 @@ def test_minhash_ml_oracle_pairs_carry_negligible_miss_budget(sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# 4. integer-exact rank selection == percentile_disc (r16 buffer-agg fixes)
+# integer-exact rank selection == percentile_disc (r16 buffer-agg fixes)
 # ---------------------------------------------------------------------------
 # elt_incremental_bookmark_extract and elt_range_partition_layout replaced
 # their GLOBAL percentile_disc aggregates (value->count buffer merged on a
@@ -269,7 +233,7 @@ def test_bookmark_plan_has_no_percentile_and_one_rank_pass(spark):
     from gcp_cloudsql_to_bigquery_spark.plans import inspect
     from gcp_cloudsql_to_bigquery_spark.workload import queries
 
-    df = queries()["elt_incremental_bookmark_extract"](spark, SFD)
+    df = queries()["elt_incremental_bookmark_extract"](spark, SF0001)
     plan = inspect.physical_plan(df)
     assert "percentile" not in plan, plan
     assert inspect.unbounded_global_buffer_aggregates(df) == []
@@ -280,7 +244,7 @@ def test_bookmark_plan_has_no_percentile_and_one_rank_pass(spark):
 
 
 # ---------------------------------------------------------------------------
-# 5. RocksDB state store — the production large-state scale path
+# RocksDB state store — the production large-state scale path
 # ---------------------------------------------------------------------------
 # The HDFS-backed (in-JVM-heap) state store the suite runs on caps state at
 # executor memory; the 100 TB story for stateful streaming is Spark's
@@ -302,13 +266,13 @@ def test_rocksdb_state_store_parity(spark):
     rocks = (
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     )
-    base = stream_tumbling_window(spark, SFD).orderBy(
+    base = stream_tumbling_window(spark, SF0001).orderBy(
         "win_start", "event_type"
     ).collect()
     prev = spark.conf.get(key)
     spark.conf.set(key, rocks)
     try:
-        got = stream_tumbling_window(spark, SFD).orderBy(
+        got = stream_tumbling_window(spark, SF0001).orderBy(
             "win_start", "event_type"
         ).collect()
     finally:

@@ -8,16 +8,12 @@ pairs ordered by (set size, doc_id), probing side keeps the standard
 argument both as a pure-Python model (no Spark, exhaustive randomized
 universes, several thresholds) and end-to-end through the real operator.
 """
-from __future__ import annotations
 
 import itertools
-import math
 import random
 from collections import Counter
 
-
-def _ceil9(x: float) -> int:
-    return math.ceil(round(x, 9))
+from tests.conftest import ceil9
 
 
 def test_asymmetric_prefix_lossless_model():
@@ -42,9 +38,9 @@ def test_asymmetric_prefix_lossless_model():
                 for i, g in enumerate(sorted(universe, key=lambda g: (df[g], g)))
             }
             ordered = [sorted(d, key=lambda g: pos[g]) for d in docs]
-            probe = [od[: len(od) - _ceil9(t * len(od)) + 1] for od in ordered]
+            probe = [od[: len(od) - ceil9(t * len(od)) + 1] for od in ordered]
             index = [
-                od[: len(od) - _ceil9(2.0 * t / (1.0 + t) * len(od)) + 1]
+                od[: len(od) - ceil9(2.0 * t / (1.0 + t) * len(od)) + 1]
                 for od in ordered
             ]
             for i, j in itertools.combinations(range(n_docs), 2):
@@ -57,7 +53,7 @@ def test_asymmetric_prefix_lossless_model():
                     (i, j), key=lambda k: (len(docs[k]), k)
                 )
                 na, nb = len(docs[a]), len(docs[b])
-                alpha = _ceil9(t / (1.0 + t) * (na + nb))
+                alpha = ceil9(t / (1.0 + t) * (na + nb))
                 rank_a = {g: r + 1 for r, g in enumerate(ordered[a])}
                 rank_b = {g: r + 1 for r, g in enumerate(ordered[b])}
                 witnesses = [

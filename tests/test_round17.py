@@ -14,16 +14,12 @@ collision carries both max ranks and alone already satisfies
 ``test_accumulated_bound_never_prunes_past_positional_filter`` pins the
 implication.
 """
-from __future__ import annotations
 
 import itertools
-import math
 import random
 from collections import Counter
 
-
-def _ceil9(x: float) -> int:
-    return math.ceil(round(x, 9))
+from tests.conftest import ceil9
 
 
 def _model_collisions(docs: dict, t: float) -> dict:
@@ -34,10 +30,10 @@ def _model_collisions(docs: dict, t: float) -> dict:
     df = Counter(g for d in docs.values() for g in d)
     ordered = {i: sorted(d, key=lambda g: (df[g], g)) for i, d in docs.items()}
     probe = {
-        i: set(od[: len(od) - _ceil9(t * len(od)) + 1]) for i, od in ordered.items()
+        i: set(od[: len(od) - ceil9(t * len(od)) + 1]) for i, od in ordered.items()
     }
     index = {
-        i: set(od[: len(od) - _ceil9(2.0 * t / (1.0 + t) * len(od)) + 1])
+        i: set(od[: len(od) - ceil9(2.0 * t / (1.0 + t) * len(od)) + 1])
         for i, od in ordered.items()
     }
     rank = {
@@ -49,9 +45,9 @@ def _model_collisions(docs: dict, t: float) -> dict:
         b, a = sorted((i, j), key=lambda k: (len(docs[k]), k))
         na, nb = len(docs[a]), len(docs[b])
         # size band (binding half under nb <= na)
-        if nb < _ceil9(t * na):
+        if nb < ceil9(t * na):
             continue
-        alpha = _ceil9(t / (1.0 + t) * (na + nb))
+        alpha = ceil9(t / (1.0 + t) * (na + nb))
         collisions = [
             (rank[a][g], rank[b][g])
             for g in probe[a] & index[b] & (docs[a] & docs[b])

@@ -4,20 +4,13 @@ Python computation on the same inputs."""
 
 import math
 
-from pyspark.sql import functions as F
-
 from gcp_cloudsql_to_bigquery_spark.catalog import load
 from gcp_cloudsql_to_bigquery_spark.workload import queries
-
-SF = "/root/testdata/sf0.001"
-
-
-def _cents(v):
-    return math.floor(v * 100 + 0.5)
+from tests.conftest import SF0001, to_cents
 
 
 def test_ks_statistic_matches_bruteforce(spark):
-    rows = load(spark, SF, "documents").select("source", "n_chars").collect()
+    rows = load(spark, SF0001, "documents").select("source", "n_chars").collect()
     g1 = sorted(r["n_chars"] for r in rows if int(r["source"][3:]) < 10)
     g2 = sorted(r["n_chars"] for r in rows if int(r["source"][3:]) >= 10)
     values = sorted(set(g1) | set(g2))
@@ -30,7 +23,7 @@ def test_ks_statistic_matches_bruteforce(spark):
         )
         for v in values
     )
-    got = queries()["agg_ks_two_sample"](spark, SF).collect()[0]
+    got = queries()["agg_ks_two_sample"](spark, SF0001).collect()[0]
     assert got["n1"] == len(g1) and got["n2"] == len(g2)
     assert got["d_num"] == d
     assert got["ks_x1e6"] == math.floor(d / (len(g1) * len(g2)) * 1e6 + 0.5)
@@ -38,15 +31,15 @@ def test_ks_statistic_matches_bruteforce(spark):
 
 def test_gini_matches_bruteforce(spark):
     by_cust = {}
-    for r in load(spark, SF, "orders").select("o_custkey", "o_totalprice").collect():
-        by_cust[r["o_custkey"]] = by_cust.get(r["o_custkey"], 0) + _cents(
+    for r in load(spark, SF0001, "orders").select("o_custkey", "o_totalprice").collect():
+        by_cust[r["o_custkey"]] = by_cust.get(r["o_custkey"], 0) + to_cents(
             r["o_totalprice"]
         )
     xs = [c for _, c in sorted(by_cust.items(), key=lambda kv: (kv[1], kv[0]))]
     n, s = len(xs), sum(xs)
     ws = sum((2 * (i + 1) - 1) * x for i, x in enumerate(xs))
     expect = math.floor((ws / (n * float(s)) - 1.0) * 1e6 + 0.5)
-    got = queries()["analytics_gini_coefficient"](spark, SF).collect()[0]
+    got = queries()["analytics_gini_coefficient"](spark, SF0001).collect()[0]
     assert got["n"] == n and got["total_cents"] == s
     assert got["gini_x1e6"] == expect
     assert 0 <= got["gini_x1e6"] <= 1_000_000
@@ -58,17 +51,17 @@ def test_cusum_equals_reset_recurrence(spark):
     import statistics
 
     ev = (
-        load(spark, SF, "events")
+        load(spark, SF0001, "events")
         .select("event_type", "ts", "event_id", "value")
         .collect()
     )
     by_type = {}
     for r in ev:
         by_type.setdefault(r["event_type"], []).append(r)
-    got = {r["event_type"]: r for r in queries()["ts_cusum_changepoint"](spark, SF).collect()}
+    got = {r["event_type"]: r for r in queries()["ts_cusum_changepoint"](spark, SF0001).collect()}
     for etype, rows in by_type.items():
         rows.sort(key=lambda r: (r["ts"], r["event_id"]))
-        cents = [_cents(r["value"]) for r in rows]
+        cents = [to_cents(r["value"]) for r in rows]
         med2 = round(2 * statistics.median(cents))
         s = 0
         peak = 0
@@ -86,16 +79,16 @@ def test_moving_median_matches_bruteforce(spark):
     import statistics
 
     hourly = {}
-    for r in load(spark, SF, "events").select("event_type", "ts", "value").collect():
+    for r in load(spark, SF0001, "events").select("event_type", "ts", "value").collect():
         h = r["ts"].replace(minute=0, second=0, microsecond=0)
         k = (r["event_type"], h)
-        hourly[k] = hourly.get(k, 0) + _cents(r["value"])
+        hourly[k] = hourly.get(k, 0) + to_cents(r["value"])
     series = {}
     for (etype, h), c in hourly.items():
         series.setdefault(etype, []).append((h, c))
     got = {
         (r["event_type"], r["h"]): r["med2"]
-        for r in queries()["ts_moving_median"](spark, SF).collect()
+        for r in queries()["ts_moving_median"](spark, SF0001).collect()
     }
     n_checked = 0
     for etype, pts in series.items():
@@ -113,16 +106,16 @@ def test_autocorrelation_matches_numpy(spark):
     import numpy as np
 
     hourly = {}
-    for r in load(spark, SF, "events").select("event_type", "ts", "value").collect():
+    for r in load(spark, SF0001, "events").select("event_type", "ts", "value").collect():
         h = r["ts"].replace(minute=0, second=0, microsecond=0)
         k = (r["event_type"], h)
-        hourly[k] = hourly.get(k, 0) + _cents(r["value"])
+        hourly[k] = hourly.get(k, 0) + to_cents(r["value"])
     series = {}
     for (etype, h), c in hourly.items():
         series.setdefault(etype, []).append((h, c))
     got = {
         (r["event_type"], r["lag"]): r["acf_x1e6"]
-        for r in queries()["ts_autocorrelation"](spark, SF).collect()
+        for r in queries()["ts_autocorrelation"](spark, SF0001).collect()
     }
     for etype, pts in series.items():
         pts.sort()
@@ -135,7 +128,7 @@ def test_autocorrelation_matches_numpy(spark):
 
 
 def test_trending_decayed_matches_direct_sum(spark):
-    rows = load(spark, SF, "events").select("event_type", "ts").collect()
+    rows = load(spark, SF0001, "events").select("event_type", "ts").collect()
     t_now = max(r["ts"] for r in rows)
     expect = {}
     for r in rows:
@@ -144,7 +137,7 @@ def test_trending_decayed_matches_direct_sum(spark):
         expect[r["event_type"]] = expect.get(r["event_type"], 0) + w
     got = {
         r["event_type"]: r["decayed_count_x1e9"]
-        for r in queries()["analytics_trending_decayed"](spark, SF).collect()
+        for r in queries()["analytics_trending_decayed"](spark, SF0001).collect()
     }
     for etype, total in expect.items():
         # per-term quantization is exact; allow <= n ulp slack for the
@@ -155,7 +148,7 @@ def test_trending_decayed_matches_direct_sum(spark):
 def test_dsir_score_replicates_for_one_doc(spark):
     import hashlib
 
-    docs = load(spark, SF, "documents").select("doc_id", "lang", "text").collect()
+    docs = load(spark, SF0001, "documents").select("doc_id", "lang", "text").collect()
 
     def buckets(text):
         out = []
@@ -180,7 +173,7 @@ def test_dsir_score_replicates_for_one_doc(spark):
             * 1e6
             + 0.5
         )
-    got = {r["doc_id"]: r for r in queries()["curation_importance_resampling"](spark, SF).collect()}
+    got = {r["doc_id"]: r for r in queries()["curation_importance_resampling"](spark, SF0001).collect()}
     assert got, "selection must be non-empty"
     checked = 0
     for r in docs:

@@ -8,8 +8,7 @@ import math
 from gcp_cloudsql_to_bigquery_spark.catalog import load
 from gcp_cloudsql_to_bigquery_spark.plans import inspect
 from gcp_cloudsql_to_bigquery_spark.workload import queries
-
-SF = "/root/testdata/sf0.001"
+from tests.conftest import SF0001
 
 
 def _expected_phash(doc_id: int) -> str:
@@ -20,7 +19,7 @@ def _expected_phash(doc_id: int) -> str:
 
 
 def test_phash_matches_closed_form(spark):
-    rows = queries()["multimodal_phash_dedup"](spark, SF).collect()
+    rows = queries()["multimodal_phash_dedup"](spark, SF0001).collect()
     assert rows, "no docs"
     by_hash = {}
     for r in rows:
@@ -38,13 +37,13 @@ def test_phash_single_exchange(spark):
     # synthesize -> decode -> hash are narrow mapInPandas stages; the ONLY
     # shuffle is the phash-partitioned cluster window (doc_id + 8-byte hash,
     # never the payload bytes)
-    df = queries()["multimodal_phash_dedup"](spark, SF)
+    df = queries()["multimodal_phash_dedup"](spark, SF0001)
     assert inspect.exchange_count(df) == 1, inspect.physical_plan(df)
 
 
 def _scaled_lineitem(spark):
     rows = (
-        load(spark, SF, "lineitem")
+        load(spark, SF0001, "lineitem")
         .select("l_quantity", "l_extendedprice", "l_discount", "l_tax")
         .collect()
     )
@@ -62,7 +61,7 @@ def test_correlation_matrix_matches_bruteforce(spark):
     names = ["qty", "price", "disc", "tax"]
     got = {
         (r["x_name"], r["y_name"]): r
-        for r in queries()["agg_correlation_matrix"](spark, SF).collect()
+        for r in queries()["agg_correlation_matrix"](spark, SF0001).collect()
     }
     assert len(got) == 6
     for i in range(4):
@@ -87,7 +86,7 @@ def test_correlation_matrix_plan(spark):
     # one pass over the fact table: a single partial-aggregated global agg
     # (one exchange of one 15-number state row per partition), melt is
     # explode on the 1-row result — no second scan
-    df = queries()["agg_correlation_matrix"](spark, SF)
+    df = queries()["agg_correlation_matrix"](spark, SF0001)
     plan = inspect.physical_plan(df)
     assert inspect.exchange_count(df) == 0, plan  # no hash/range shuffle at all
     assert plan.count("Exchange SinglePartition") == 1, plan
@@ -98,7 +97,7 @@ def test_correlation_matrix_plan(spark):
 
 
 def test_holt_matches_bruteforce(spark):
-    out = queries()["ts_holt_linear"](spark, SF).collect()
+    out = queries()["ts_holt_linear"](spark, SF0001).collect()
     series = {}
     for r in sorted(out, key=lambda r: (r["event_type"], r["h"])):
         series.setdefault(r["event_type"], []).append(r)
@@ -122,7 +121,7 @@ def test_holt_matches_bruteforce(spark):
 def test_holt_two_exchanges(spark):
     # hourly pre-reduction (partial-agged groupBy) + the per-series
     # applyInPandas grouping — recursion itself adds no shuffle
-    df = queries()["ts_holt_linear"](spark, SF)
+    df = queries()["ts_holt_linear"](spark, SF0001)
     assert inspect.exchange_count(df) <= 2, inspect.physical_plan(df)
 
 
@@ -155,7 +154,7 @@ def _striped_image(doc_id, n_chars):
 
 
 def test_phash_thumbnail_match_matches_bruteforce(spark):
-    docs = load(spark, SF, "documents").select("doc_id", "n_chars").collect()
+    docs = load(spark, SF0001, "documents").select("doc_id", "n_chars").collect()
     oh, th = {}, {}
     import collections
 
@@ -171,7 +170,7 @@ def test_phash_thumbnail_match_matches_bruteforce(spark):
     def ham(a, b):
         return bin(int(a, 16) ^ int(b, 16)).count("1")
 
-    got = {r["doc_id"]: r for r in queries()["multimodal_phash_thumbnail_match"](spark, SF).collect()}
+    got = {r["doc_id"]: r for r in queries()["multimodal_phash_thumbnail_match"](spark, SF0001).collect()}
     assert len(got) == len(docs)
     assert len(set(oh.values())) > 5, "fixture should give a diverse hash corpus"
     for doc_id, phash in oh.items():

@@ -9,14 +9,7 @@ import math
 from gcp_cloudsql_to_bigquery_spark.catalog import load
 from gcp_cloudsql_to_bigquery_spark.plans import inspect
 from gcp_cloudsql_to_bigquery_spark.workload import queries
-
-SF = "/root/testdata/sf0.001"
-
-_M12 = 16**12
-
-
-def _h12(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:12], 16)
+from tests.conftest import M12, SF0001, h12
 
 
 # ---------------------------------------------------------------- KMV sketch
@@ -26,24 +19,24 @@ def _kmv_est(us, k=64):
     us = sorted(us)[:k]
     if len(us) < k:
         return len(us)
-    return (k - 1) * _M12 // us[-1]
+    return (k - 1) * M12 // us[-1]
 
 
 def test_kmv_matches_bruteforce(spark):
-    li = load(spark, SF, "lineitem").select("l_orderkey", "l_partkey").collect()
-    o = {r[0]: r[1] for r in load(spark, SF, "orders").select("o_orderkey", "o_custkey").collect()}
-    c = {r[0]: r[1] for r in load(spark, SF, "customer").select("c_custkey", "c_mktsegment").collect()}
+    li = load(spark, SF0001, "lineitem").select("l_orderkey", "l_partkey").collect()
+    o = {r[0]: r[1] for r in load(spark, SF0001, "orders").select("o_orderkey", "o_custkey").collect()}
+    c = {r[0]: r[1] for r in load(spark, SF0001, "customer").select("c_custkey", "c_mktsegment").collect()}
     segs = {}
     for ok, pk in li:
         segs.setdefault(c[o[ok]], set()).add(pk)
-    rows = queries()["agg_kmv_theta_sketch"](spark, SF).collect()
+    rows = queries()["agg_kmv_theta_sketch"](spark, SF0001).collect()
     assert rows, "no segment pairs"
     for r in rows:
         a, b = segs[r["seg_a"]], segs[r["seg_b"]]
         assert r["exact_intersect"] == len(a & b)
         assert r["exact_union"] == len(a | b)
-        ua = [_h12(f"kmv:{pk}") for pk in a]
-        ub = [_h12(f"kmv:{pk}") for pk in b]
+        ua = [h12(f"kmv:{pk}") for pk in a]
+        ub = [h12(f"kmv:{pk}") for pk in b]
         assert r["est_a"] == _kmv_est(ua)
         assert r["est_b"] == _kmv_est(ub)
         # merged sketch = re-min over the union of the two k-sets
@@ -59,7 +52,7 @@ def test_kmv_matches_bruteforce(spark):
 
 
 def test_theil_sen_matches_bruteforce(spark):
-    ev = load(spark, SF, "events").select("event_type", "ts").collect()
+    ev = load(spark, SF0001, "events").select("event_type", "ts").collect()
     daily = {}
     for et, ts in ev:
         daily.setdefault(et, {}).setdefault(ts.date(), 0)
@@ -73,7 +66,7 @@ def test_theil_sen_matches_bruteforce(spark):
         n = len(vals)
         return quant((vals[(n + 1) // 2 - 1] + vals[n // 2]) / 2)
 
-    rows = {r["event_type"]: r for r in queries()["ts_theil_sen"](spark, SF).collect()}
+    rows = {r["event_type"]: r for r in queries()["ts_theil_sen"](spark, SF0001).collect()}
     assert rows
     for et, days in daily.items():
         pts = [((d - __import__("datetime").date(1970, 1, 1)).days, float(y)) for d, y in days.items()]
@@ -132,7 +125,7 @@ def _allen(a_s, a_e, b_s, b_e):
 def test_allen_matches_bruteforce(spark):
     import datetime as dt
 
-    orders = load(spark, SF, "orders").select(
+    orders = load(spark, SF0001, "orders").select(
         "o_custkey", "o_orderkey", "o_orderdate"
     ).collect()
     byc = {}
@@ -146,7 +139,7 @@ def test_allen_matches_bruteforce(spark):
             for j in range(i + 1, len(ivs)):
                 rel = _allen(ivs[i][1], ivs[i][2], ivs[j][1], ivs[j][2])
                 expected[rel] = expected.get(rel, 0) + 1
-    got = {r["relation"]: r["n_pairs"] for r in queries()["join_allen_intervals"](spark, SF).collect()}
+    got = {r["relation"]: r["n_pairs"] for r in queries()["join_allen_intervals"](spark, SF0001).collect()}
     assert got == expected
     assert sum(got.values()) == sum(len(v) * (len(v) - 1) // 2 for v in byc.values())
 
@@ -155,10 +148,10 @@ def test_allen_matches_bruteforce(spark):
 
 
 def test_reservoir_matches_bruteforce(spark):
-    docs = load(spark, SF, "documents").select("doc_id", "source", "n_chars").collect()
+    docs = load(spark, SF0001, "documents").select("doc_id", "source", "n_chars").collect()
     per_src = {}
     for doc_id, src, n_chars in docs:
-        u = _h12(f"res:{doc_id}") / float(_M12)
+        u = h12(f"res:{doc_id}") / float(M12)
         t = min(3, n_chars // 500)
         k = u
         for _ in range(t):
@@ -171,7 +164,7 @@ def test_reservoir_matches_bruteforce(spark):
             expected.add((src, rnk, doc_id, t))
     got = {
         (r["source"], r["rnk"], r["doc_id"], r["tier"])
-        for r in queries()["curation_weighted_reservoir"](spark, SF).collect()
+        for r in queries()["curation_weighted_reservoir"](spark, SF0001).collect()
     }
     assert got == expected
 
@@ -179,7 +172,7 @@ def test_reservoir_matches_bruteforce(spark):
 def test_reservoir_single_exchange(spark):
     # key computation is codegen-narrow; the only shuffle is the per-source
     # top-k window
-    df = queries()["curation_weighted_reservoir"](spark, SF)
+    df = queries()["curation_weighted_reservoir"](spark, SF0001)
     assert inspect.exchange_count(df) == 1, inspect.physical_plan(df)
 
 
@@ -189,11 +182,11 @@ _DP_CUM = [1, 3, 7, 15, 31, 63, 127, 159, 175, 183, 187, 189, 190]
 
 
 def test_dp_noise_matches_mechanism(spark):
-    rows = queries()["sec_dp_noisy_counts"](spark, SF).collect()
+    rows = queries()["sec_dp_noisy_counts"](spark, SF0001).collect()
     assert rows
     for r in rows:
-        u190 = _h12(f"dp:{r['c_nationkey']}:{r['c_mktsegment']}") * 190
-        k = next(i - 6 for i, c in enumerate(_DP_CUM) if u190 < c * _M12)
+        u190 = h12(f"dp:{r['c_nationkey']}:{r['c_mktsegment']}") * 190
+        k = next(i - 6 for i, c in enumerate(_DP_CUM) if u190 < c * M12)
         assert r["noise"] == k
         assert -6 <= r["noise"] <= 6
         assert r["noisy_count"] == r["true_count"] + r["noise"]
@@ -203,13 +196,13 @@ def test_dp_noise_matches_mechanism(spark):
 
 
 def test_benford_matches_bruteforce(spark):
-    prices = [r[0] for r in load(spark, SF, "orders").select("o_totalprice").collect()]
+    prices = [r[0] for r in load(spark, SF0001, "orders").select("o_totalprice").collect()]
     digits = {}
     for p in prices:
         d = int(str(math.floor(p * 100 + 0.5))[0])
         digits[d] = digits.get(d, 0) + 1
     n = len(prices)
-    rows = {r["digit"]: r for r in queries()["dq_benford_law"](spark, SF).collect()}
+    rows = {r["digit"]: r for r in queries()["dq_benford_law"](spark, SF0001).collect()}
     assert set(rows) == set(digits)
     for d, cnt in digits.items():
         r = rows[d]
@@ -226,7 +219,7 @@ def test_backfill_islands_partition_missing_days(spark):
     import datetime as dt
 
     days = {}
-    for (od,) in load(spark, SF, "orders").select("o_orderdate").collect():
+    for (od,) in load(spark, SF0001, "orders").select("o_orderdate").collect():
         days[od.date()] = days.get(od.date(), 0) + 1
     lo, hi = min(days), max(days)
     present = {
@@ -239,7 +232,7 @@ def test_backfill_islands_partition_missing_days(spark):
         if d not in present:
             missing.append(d)
         d += dt.timedelta(days=1)
-    rows = queries()["elt_backfill_planner"](spark, SF).collect()
+    rows = queries()["elt_backfill_planner"](spark, SF0001).collect()
     covered = []
     for r in rows:
         assert r["start_date"] <= r["end_date"]
@@ -263,7 +256,7 @@ def test_backfill_islands_partition_missing_days(spark):
 
 
 def test_hits_scores_normalized_and_converging(spark):
-    rows = queries()["graph_hits"](spark, SF).collect()
+    rows = queries()["graph_hits"](spark, SF0001).collect()
     assert len(rows) == 25
     auths = [r["auth_x1e9"] for r in rows]
     hubs = [r["hub_x1e9"] for r in rows]
@@ -274,10 +267,10 @@ def test_hits_scores_normalized_and_converging(spark):
     # positivity is structural: a nation scores as authority iff some edge
     # points at it (supplier side), as hub iff it sources one (customer
     # side) — sf0.001 has only ~10 suppliers, so most in-degrees are zero
-    li = load(spark, SF, "lineitem").select("l_orderkey", "l_suppkey").collect()
-    o = {r[0]: r[1] for r in load(spark, SF, "orders").select("o_orderkey", "o_custkey").collect()}
-    c = {r[0]: r[1] for r in load(spark, SF, "customer").select("c_custkey", "c_nationkey").collect()}
-    s = {r[0]: r[1] for r in load(spark, SF, "supplier").select("s_suppkey", "s_nationkey").collect()}
+    li = load(spark, SF0001, "lineitem").select("l_orderkey", "l_suppkey").collect()
+    o = {r[0]: r[1] for r in load(spark, SF0001, "orders").select("o_orderkey", "o_custkey").collect()}
+    c = {r[0]: r[1] for r in load(spark, SF0001, "customer").select("c_custkey", "c_nationkey").collect()}
+    s = {r[0]: r[1] for r in load(spark, SF0001, "supplier").select("s_suppkey", "s_nationkey").collect()}
     srcs = {c[o[ok]] for ok, sk in li}
     dsts = {s[sk] for ok, sk in li}
     for r in rows:

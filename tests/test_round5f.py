@@ -2,25 +2,19 @@
 recomputation, semantic properties (shift-robustness, eigen-alignment,
 RFC layout), and plan shape where it carries the scale claim."""
 
-import hashlib
 import math
 
 from gcp_cloudsql_to_bigquery_spark.catalog import load
 from gcp_cloudsql_to_bigquery_spark.workload import queries
-
-SF = "/root/testdata/sf0.001"
-
-
-def _md5hex(s: str) -> str:
-    return hashlib.md5(s.encode()).hexdigest()
+from tests.conftest import SF0001, md5_hex
 
 
 # ------------------------------------------------- exact grouped percentiles
 
 
 def test_percentiles_match_bruteforce(spark):
-    rows = {r["pri"]: r for r in queries()["agg_percentile_exact_grouped"](spark, SF).collect()}
-    orders = load(spark, SF, "orders").select("o_orderpriority", "o_totalprice").collect()
+    rows = {r["pri"]: r for r in queries()["agg_percentile_exact_grouped"](spark, SF0001).collect()}
+    orders = load(spark, SF0001, "orders").select("o_orderpriority", "o_totalprice").collect()
     by_pri = {}
     for pri, p in orders:
         by_pri.setdefault(pri, []).append(math.floor(p * 100 + 0.5))
@@ -36,7 +30,7 @@ def test_percentiles_match_bruteforce(spark):
 
 def test_equidepth_bins_balanced_and_ordered(spark):
     rows = sorted(
-        queries()["analytics_equidepth_histogram"](spark, SF).collect(),
+        queries()["analytics_equidepth_histogram"](spark, SF0001).collect(),
         key=lambda r: r["bin"],
     )
     assert [r["bin"] for r in rows] == list(range(1, 11))
@@ -50,7 +44,7 @@ def test_equidepth_bins_balanced_and_ordered(spark):
 
 
 def test_fs_weights_and_partition(spark):
-    rows = queries()["linkage_fellegi_sunter"](spark, SF).collect()
+    rows = queries()["linkage_fellegi_sunter"](spark, SF0001).collect()
     w = {"name": (9288, -1414), "seg": (2129, -2678), "band": (3366, -3862)}
     total_pairs = 0
     for r in rows:
@@ -69,13 +63,13 @@ def test_fs_weights_and_partition(spark):
     best = max(rows, key=lambda r: r["weight_milli"])
     assert best["n_true_pairs"] > 0
     # every candidate pair is classified exactly once (patterns partition)
-    c = load(spark, SF, "customer").select("c_custkey", "c_nationkey").collect()
+    c = load(spark, SF0001, "customer").select("c_custkey", "c_nationkey").collect()
     import collections
 
     nat_a = collections.Counter(nk for _, nk in c)
     nat_b = collections.Counter()
     for k, nk in c:
-        if _md5hex(f"fs2:{k}")[0] == "0":
+        if md5_hex(f"fs2:{k}")[0] == "0":
             nat_b[(nk + 1) % 25] += 1
         else:
             nat_b[nk] += 1
@@ -86,18 +80,18 @@ def test_fs_weights_and_partition(spark):
 
 
 def test_feature_hashing_matches_bruteforce(spark):
-    docs = load(spark, SF, "documents").select("doc_id", "text").collect()
+    docs = load(spark, SF0001, "documents").select("doc_id", "text").collect()
     expected = {}
     for doc_id, text in docs:
         for t in text.lower().split(" "):
-            idx = int(_md5hex(f"fh:{t}")[:8], 16) % 32
-            sgn = 1 if _md5hex(f"fs:{t}")[0] <= "7" else -1
+            idx = int(md5_hex(f"fh:{t}")[:8], 16) % 32
+            sgn = 1 if md5_hex(f"fs:{t}")[0] <= "7" else -1
             key = (doc_id, idx)
             expected[key] = expected.get(key, 0) + sgn
     expected = {k: v for k, v in expected.items() if v != 0}
     got = {
         (r["doc_id"], r["feature_idx"]): r["val"]
-        for r in queries()["text_feature_hashing"](spark, SF).collect()
+        for r in queries()["text_feature_hashing"](spark, SF0001).collect()
     }
     assert got == expected
 
@@ -106,7 +100,7 @@ def test_feature_hashing_matches_bruteforce(spark):
 
 
 def test_kfold_exact_balance_and_determinism(spark):
-    rows = queries()["curation_kfold_split"](spark, SF).collect()
+    rows = queries()["curation_kfold_split"](spark, SF0001).collect()
     import collections
 
     per = collections.defaultdict(collections.Counter)
@@ -117,7 +111,7 @@ def test_kfold_exact_balance_and_determinism(spark):
         assert max(folds.values()) - min(folds.values()) <= 1, (src, folds)
     # deterministic: re-running yields the identical assignment
     again = {
-        (r["doc_id"], r["fold"]) for r in queries()["curation_kfold_split"](spark, SF).collect()
+        (r["doc_id"], r["fold"]) for r in queries()["curation_kfold_split"](spark, SF0001).collect()
     }
     assert again == {(r["doc_id"], r["fold"]) for r in rows}
 
@@ -126,11 +120,11 @@ def test_kfold_exact_balance_and_determinism(spark):
 
 
 def test_tiff_roundtrip_both_endiannesses(spark):
-    rows = queries()["multimodal_tiff_metadata"](spark, SF).collect()
+    rows = queries()["multimodal_tiff_metadata"](spark, SF0001).collect()
     assert rows
     seen = {r["byte_order"] for r in rows}
     assert seen == {"II", "MM"}  # the corpus genuinely exercises both
-    docs = {r[0]: r[1] for r in load(spark, SF, "documents").select("doc_id", "n_chars").collect()}
+    docs = {r[0]: r[1] for r in load(spark, SF0001, "documents").select("doc_id", "n_chars").collect()}
     for r in rows:
         assert r["byte_order"] == ("II" if r["doc_id"] % 2 == 0 else "MM")
         assert r["width"] == r["doc_id"] % 200 + 16
@@ -149,7 +143,7 @@ def _cdc_chunks(text: str) -> list[str]:
         brk = False
         if i >= 2:
             tri = " ".join(toks[i - 2 : i + 1])
-            brk = int(_md5hex(tri)[:8], 16) % 8 == 0
+            brk = int(md5_hex(tri)[:8], 16) % 8 == 0
         if brk and cur:
             chunks.append(cur)
             cur = []
@@ -160,9 +154,9 @@ def _cdc_chunks(text: str) -> list[str]:
 
 
 def test_cdc_chunks_match_bruteforce(spark):
-    docs = load(spark, SF, "documents").select("doc_id", "text").collect()
+    docs = load(spark, SF0001, "documents").select("doc_id", "text").collect()
     rows = {}
-    for r in queries()["text_cdc_chunk_dedup"](spark, SF).collect():
+    for r in queries()["text_cdc_chunk_dedup"](spark, SF0001).collect():
         rows.setdefault(r["doc_id"], {})[r["chunk_idx"]] = r
     for doc_id, text in docs:
         chunks = _cdc_chunks(text)
@@ -170,7 +164,7 @@ def test_cdc_chunks_match_bruteforce(spark):
         assert len(got) == len(chunks), doc_id
         for idx, chunk in enumerate(chunks):
             r = got[idx]
-            assert r["chunk_fp"] == _md5hex(chunk)
+            assert r["chunk_fp"] == md5_hex(chunk)
             assert r["n_toks"] == len(chunk.split(" "))
 
 
@@ -195,12 +189,12 @@ def test_cdc_chunking_is_shift_robust():
 def test_pca_aligns_with_numpy_eigenvector(spark):
     import numpy as np
 
-    emb = load(spark, SF, "embeddings").select("vec_id", "embedding").collect()
+    emb = load(spark, SF0001, "embeddings").select("vec_id", "embedding").collect()
     X = np.array([r[1] for r in emb], dtype=np.float64)
     Xc = X - X.mean(axis=0)
     cov = Xc.T @ Xc
     vals = np.linalg.eigvalsh(cov)
-    rows = sorted(queries()["embedding_pca_top_component"](spark, SF).collect(), key=lambda r: r["dim"])
+    rows = sorted(queries()["embedding_pca_top_component"](spark, SF0001).collect(), key=lambda r: r["dim"])
     v = np.array([r["pc1_x1e9"] for r in rows], dtype=np.float64)
     v /= np.linalg.norm(v)
     rq = v @ cov @ v
@@ -218,14 +212,14 @@ def test_pca_aligns_with_numpy_eigenvector(spark):
 
 
 def test_uuid3_layout_and_determinism(spark):
-    rows = queries()["fn_uuid3_name_based"](spark, SF).collect()
+    rows = queries()["fn_uuid3_name_based"](spark, SF0001).collect()
     import re
 
     pat = re.compile(r"^[0-9a-f]{8}-[0-9a-f]{4}-3[0-9a-f]{3}-[89ab][0-9a-f]{3}-[0-9a-f]{12}$")
-    c = {r[0]: r[1] for r in load(spark, SF, "customer").select("c_custkey", "c_name").collect()}
+    c = {r[0]: r[1] for r in load(spark, SF0001, "customer").select("c_custkey", "c_name").collect()}
     for r in rows:
         assert pat.match(r["uuid"]), r["uuid"]
         assert r["version_ok"] and r["variant_ok"]
-        d = _md5hex(f"uuid3:customers:{c[r['c_custkey']]}")
+        d = md5_hex(f"uuid3:customers:{c[r['c_custkey']]}")
         assert r["uuid"].replace("-", "")[:12] == d[:12]  # prefix passes through
     assert len({r["uuid"] for r in rows}) == len(rows)  # injective on this corpus

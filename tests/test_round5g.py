@@ -6,22 +6,15 @@ import math
 
 from gcp_cloudsql_to_bigquery_spark.catalog import load
 from gcp_cloudsql_to_bigquery_spark.workload import queries
-
-SF = "/root/testdata/sf0.001"
-
-
-def _events(spark):
-    return load(spark, SF, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    ).collect()
+from tests.conftest import SF0001, events_rows, td_us
 
 
 # --------------------------------------------------------- peak concurrency
 
 
 def test_peak_concurrency_matches_sweep(spark):
-    evs = _events(spark)
-    got = {r["event_type"]: r for r in queries()["analytics_peak_concurrency"](spark, SF).collect()}
+    evs = events_rows(spark)
+    got = {r["event_type"]: r for r in queries()["analytics_peak_concurrency"](spark, SF0001).collect()}
     by_type = {}
     for r in evs:
         by_type.setdefault(r["event_type"], []).append(r["ts"])
@@ -42,12 +35,12 @@ def test_peak_concurrency_matches_sweep(spark):
 
 
 def test_max_drawdown_matches_bruteforce(spark):
-    evs = _events(spark)
+    evs = events_rows(spark)
     daily = {}
     for r in evs:
         key = (r["event_type"], r["ts"].date())
         daily[key] = daily.get(key, 0) + math.floor((r["value"] - 50.0) * 100 + 0.5)
-    got = {r["event_type"]: r for r in queries()["ts_max_drawdown"](spark, SF).collect()}
+    got = {r["event_type"]: r for r in queries()["ts_max_drawdown"](spark, SF0001).collect()}
     by_type = {}
     for (et, d), net in daily.items():
         by_type.setdefault(et, []).append((d, net))
@@ -77,7 +70,7 @@ def test_max_drawdown_matches_bruteforce(spark):
 
 
 def test_association_rules_match_bruteforce(spark):
-    li = load(spark, SF, "lineitem").select("l_orderkey", "l_partkey").collect()
+    li = load(spark, SF0001, "lineitem").select("l_orderkey", "l_partkey").collect()
     baskets = {}
     for o, p in li:
         baskets.setdefault(o, set()).add(p)
@@ -100,7 +93,7 @@ def test_association_rules_match_bruteforce(spark):
             )
     got = {
         (r["ante"], r["cons"]): (r["n_pair"], r["support_x1e6"], r["confidence_x1e6"], r["lift_x1e6"])
-        for r in queries()["analytics_association_rules"](spark, SF).collect()
+        for r in queries()["analytics_association_rules"](spark, SF0001).collect()
     }
     assert got == expected
 
@@ -110,7 +103,7 @@ def test_association_rules_match_bruteforce(spark):
 
 def test_cron_fires_match_manual_walk(spark):
     rows = {}
-    for r in queries()["fn_cron_schedule_expand"](spark, SF).collect():
+    for r in queries()["fn_cron_schedule_expand"](spark, SF0001).collect():
         rows.setdefault(r["cron_expr"], []).append((r["fire_seq"], r["fire_ts"]))
 
     def matches(t, expr):
@@ -144,7 +137,7 @@ def test_cron_fires_match_manual_walk(spark):
 
 
 def test_km_survival_matches_bruteforce(spark):
-    orders = load(spark, SF, "orders").select("o_custkey", "o_orderdate").collect()
+    orders = load(spark, SF0001, "orders").select("o_custkey", "o_orderdate").collect()
     span = {}
     for ck, od in orders:
         d = od.date()
@@ -159,7 +152,7 @@ def test_km_survival_matches_bruteforce(spark):
     for dur, evt in subj:
         c, d = per_t.get(dur, (0, 0))
         per_t[dur] = (c + 1, d + evt)
-    rows = sorted(queries()["analytics_survival_km"](spark, SF).collect(), key=lambda r: r["t_days"])
+    rows = sorted(queries()["analytics_survival_km"](spark, SF0001).collect(), key=lambda r: r["t_days"])
     n_before = 0
     cum_l = 0
     total = len(subj)
@@ -183,7 +176,7 @@ def test_km_survival_matches_bruteforce(spark):
 
 
 def test_hdr_buckets_match_bit_arithmetic(spark):
-    li = load(spark, SF, "lineitem").select("l_extendedprice").collect()
+    li = load(spark, SF0001, "lineitem").select("l_extendedprice").collect()
     expected = {}
     for (p,) in li:
         cents = math.floor(p * 100 + 0.5)
@@ -195,11 +188,11 @@ def test_hdr_buckets_match_bit_arithmetic(spark):
         expected[key] = (n + 1, min(mn, cents), max(mx, cents))
     got = {
         (r["exponent"], r["sub_bucket"]): (r["n"], r["min_cents"], r["max_cents"])
-        for r in queries()["agg_hdr_log_histogram"](spark, SF).collect()
+        for r in queries()["agg_hdr_log_histogram"](spark, SF0001).collect()
     }
     assert got == expected
     # lo_bound is within each bucket's observed range
-    for r in queries()["agg_hdr_log_histogram"](spark, SF).collect():
+    for r in queries()["agg_hdr_log_histogram"](spark, SF0001).collect():
         lo = 1 << (r["exponent"] - 1)
         assert r["lo_bound"] == lo + (r["sub_bucket"] * lo) // 4
         assert r["lo_bound"] <= r["min_cents"]
@@ -209,11 +202,11 @@ def test_hdr_buckets_match_bit_arithmetic(spark):
 
 
 def test_winsorize_matches_bruteforce(spark):
-    docs = load(spark, SF, "documents").select("doc_id", "source", "n_chars").collect()
+    docs = load(spark, SF0001, "documents").select("doc_id", "source", "n_chars").collect()
     by_src = {}
     for doc_id, src, n in docs:
         by_src.setdefault(src, []).append((n, doc_id))
-    got = {r["source"]: r for r in queries()["curation_winsorize_clip"](spark, SF).collect()}
+    got = {r["source"]: r for r in queries()["curation_winsorize_clip"](spark, SF0001).collect()}
     for src, vals in by_src.items():
         vals.sort()
         n = len(vals)
@@ -248,16 +241,9 @@ def test_png_decoder_rejects_corruption(spark):
     assert not crc_ok
 
 
-# ------------------------------------------------------------ SLA subtraction
-
-
-def _td_us(td):
-    return td.days * 86_400_000_000 + td.seconds * 1_000_000 + td.microseconds
-
-
 def test_sla_interval_subtraction_matches_bruteforce(spark):
-    evs = _events(spark)
-    got = {r["event_type"]: r for r in queries()["ts_interval_subtract_sla"](spark, SF).collect()}
+    evs = events_rows(spark)
+    got = {r["event_type"]: r for r in queries()["ts_interval_subtract_sla"](spark, SF0001).collect()}
     agg = {}
     for r in evs:
         s = r["ts"]
@@ -266,7 +252,7 @@ def test_sla_interval_subtraction_matches_bruteforce(spark):
         for off in (0, 1):
             day = dt.datetime.combine(s.date() + dt.timedelta(days=off), dt.time())
             ms, me = day + dt.timedelta(hours=3), day + dt.timedelta(hours=4)
-            masked += max(0, _td_us(min(e, me) - max(s, ms)))
+            masked += max(0, td_us(min(e, me) - max(s, ms)))
         raw = 30 * 60 * 1_000_000
         a = agg.setdefault(r["event_type"], [0, 0])
         a[0] += raw
@@ -281,7 +267,7 @@ def test_sla_interval_subtraction_matches_bruteforce(spark):
 
 
 def test_currency_roundtrip_all_ok_and_formats_plausible(spark):
-    rows = queries()["fn_currency_parse"](spark, SF).collect()
+    rows = queries()["fn_currency_parse"](spark, SF0001).collect()
     assert rows
     import re
 
@@ -299,7 +285,7 @@ def test_currency_roundtrip_all_ok_and_formats_plausible(spark):
 
 
 def test_state_durations_match_bruteforce(spark):
-    evs = _events(spark)
+    evs = events_rows(spark)
     by_user = {}
     for r in evs:
         by_user.setdefault(r["user_id"], []).append((r["ts"], r["event_id"], r["event_type"]))
@@ -307,10 +293,10 @@ def test_state_durations_match_bruteforce(spark):
     for seq in by_user.values():
         seq.sort()
         for (t1, _, st), (t2, _, _) in zip(seq, seq[1:]):
-            us = _td_us(t2 - t1)
+            us = td_us(t2 - t1)
             n, tot = agg.get(st, (0, 0))
             agg[st] = (n + 1, tot + us)
-    got = {r["state"]: r for r in queries()["analytics_state_durations"](spark, SF).collect()}
+    got = {r["state"]: r for r in queries()["analytics_state_durations"](spark, SF0001).collect()}
     for st, (n, tot) in agg.items():
         r = got[st]
         assert (r["n_visits"], r["total_us"], r["mean_us"]) == (n, tot, tot // n)

@@ -3,12 +3,11 @@ claims in each docstring, made regression-testable."""
 
 from gcp_cloudsql_to_bigquery_spark.plans import inspect
 from gcp_cloudsql_to_bigquery_spark.workload import queries
-
-SF = "/root/testdata/sf0.001"
+from tests.conftest import SF0001
 
 
 def _plan(spark, name):
-    return queries()[name](spark, SF)
+    return queries()[name](spark, SF0001)
 
 
 def test_feature_hashing_single_shuffle(spark):

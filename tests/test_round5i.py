@@ -5,15 +5,14 @@ import math
 
 from gcp_cloudsql_to_bigquery_spark.catalog import load
 from gcp_cloudsql_to_bigquery_spark.workload import queries
-
-SF = "/root/testdata/sf0.001"
+from tests.conftest import SF0001
 
 
 # ------------------------------------------------------------- Kneser-Ney
 
 
 def test_kneser_ney_matches_bruteforce(spark):
-    docs = load(spark, SF, "documents").select("doc_id", "text").collect()
+    docs = load(spark, SF0001, "documents").select("doc_id", "text").collect()
     bi = {}
     for _, text in docs:
         toks = [t for t in text.lower().split(" ") if t]
@@ -26,7 +25,7 @@ def test_kneser_ney_matches_bruteforce(spark):
         n1p_fwd[a] = n1p_fwd.get(a, 0) + 1
         n1p_rev[b] = n1p_rev.get(b, 0) + 1
     nbt = len(bi)
-    rows = queries()["text_bigram_kneser_ney"](spark, SF).collect()
+    rows = queries()["text_bigram_kneser_ney"](spark, SF0001).collect()
     assert len(rows) == 200
     top = sorted(bi.items(), key=lambda kv: (-kv[1], kv[0]))[:200]
     assert {(r["w"], r["nxt"]) for r in rows} == {k for k, _ in top}
@@ -49,7 +48,7 @@ _POLY = ((20000, 10000), (80000, 20000), (90000, 70000), (50000, 95000), (10000,
 
 
 def test_point_in_polygon_matches_bruteforce(spark):
-    rows = queries()["geo_point_in_polygon"](spark, SF).collect()
+    rows = queries()["geo_point_in_polygon"](spark, SF0001).collect()
     assert rows
     n_in = 0
     for r in rows:
@@ -68,20 +67,20 @@ def test_point_in_polygon_matches_bruteforce(spark):
 
 
 def test_harmonic_matches_bfs(spark):
-    li = load(spark, SF, "lineitem").select("l_orderkey", "l_suppkey").collect()
+    li = load(spark, SF0001, "lineitem").select("l_orderkey", "l_suppkey").collect()
     o = {
         r[0]: r[1]
-        for r in load(spark, SF, "orders").select("o_orderkey", "o_custkey").collect()
+        for r in load(spark, SF0001, "orders").select("o_orderkey", "o_custkey").collect()
     }
-    c = {r[0]: r[1] for r in load(spark, SF, "customer").select("c_custkey", "c_nationkey").collect()}
-    s = {r[0]: r[1] for r in load(spark, SF, "supplier").select("s_suppkey", "s_nationkey").collect()}
+    c = {r[0]: r[1] for r in load(spark, SF0001, "customer").select("c_custkey", "c_nationkey").collect()}
+    s = {r[0]: r[1] for r in load(spark, SF0001, "supplier").select("s_suppkey", "s_nationkey").collect()}
     adj = {}
     for ok, sk in li:
         a, b = c[o[ok]], s[sk]
         if a != b:
             adj.setdefault(a, set()).add(b)
             adj.setdefault(b, set()).add(a)
-    got = {r["n_nationkey"]: r for r in queries()["graph_harmonic_centrality"](spark, SF).collect()}
+    got = {r["n_nationkey"]: r for r in queries()["graph_harmonic_centrality"](spark, SF0001).collect()}
     assert len(got) == 25
     for u in range(25):
         dist = {u: 0}
@@ -100,13 +99,13 @@ def test_harmonic_matches_bfs(spark):
 
 
 def test_geo_nn_matches_allpairs(spark):
-    cust = load(spark, SF, "customer").select("c_custkey").collect()
+    cust = load(spark, SF0001, "customer").select("c_custkey").collect()
 
     def axis(tag, k):
         return int(hashlib.md5(f"{tag}{k}".encode()).hexdigest()[:5], 16) % 100_000
 
     pts = {k[0]: (axis("x", k[0]), axis("y", k[0])) for k in cust}
-    got = {r["k"]: (r["nearest_k"], r["dist_sq"]) for r in queries()["join_geo_nearest_neighbor"](spark, SF).collect()}
+    got = {r["k"]: (r["nearest_k"], r["dist_sq"]) for r in queries()["join_geo_nearest_neighbor"](spark, SF0001).collect()}
     expected = {}
     for k, (x, y) in pts.items():
         best = None
@@ -157,7 +156,7 @@ def test_bmff_walk_rejects_bad_sizes(spark):
 def test_export_queue_reader_offset_contract():
     from gcp_cloudsql_to_bigquery_spark.sources.pysource import ExportQueueStreamReader
 
-    r = ExportQueueStreamReader({"path": f"{SF}/customer.parquet"})
+    r = ExportQueueStreamReader({"path": f"{SF0001}/customer.parquet"})
     off = r.initialOffset()
     seen = []
     for _ in range(6):

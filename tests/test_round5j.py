@@ -1,17 +1,11 @@
 """Triple-witness tests for the seventeenth-to-twenty-first-wave operators."""
 
 import datetime as dt
-import hashlib
 import math
 
 from gcp_cloudsql_to_bigquery_spark.catalog import load
 from gcp_cloudsql_to_bigquery_spark.workload import queries
-
-SF = "/root/testdata/sf0.001"
-
-
-def _md5(s: str) -> str:
-    return hashlib.md5(s.encode()).hexdigest()
+from tests.conftest import SF0001, md5_hex
 
 
 # ------------------------------------------------------------ business days
@@ -31,7 +25,7 @@ def test_business_days_match_manual_walk(spark):
                 n -= 1
         return cur
 
-    rows = queries()["fn_business_days"](spark, SF).collect()
+    rows = queries()["fn_business_days"](spark, SF0001).collect()
     assert rows
     for r in rows:
         assert r["due_date"] == add_biz(r["order_date"], 10), r
@@ -41,11 +35,11 @@ def test_business_days_match_manual_walk(spark):
 
 
 def test_skew_kurtosis_match_bruteforce(spark):
-    li = load(spark, SF, "lineitem").select("l_returnflag", "l_extendedprice").collect()
+    li = load(spark, SF0001, "lineitem").select("l_returnflag", "l_extendedprice").collect()
     by_flag = {}
     for f, p in li:
         by_flag.setdefault(f, []).append(math.floor(p * 100 + 0.5))
-    got = {r["flag"]: r for r in queries()["agg_skew_kurtosis_exact"](spark, SF).collect()}
+    got = {r["flag"]: r for r in queries()["agg_skew_kurtosis_exact"](spark, SF0001).collect()}
     for f, xs in by_flag.items():
         n = len(xs)
         s1, s2 = sum(xs), sum(x * x for x in xs)
@@ -70,12 +64,12 @@ def test_skew_kurtosis_match_bruteforce(spark):
 
 
 def test_mase_matches_bruteforce(spark):
-    ev = load(spark, SF, "events").select("event_type", "ts").collect()
+    ev = load(spark, SF0001, "events").select("event_type", "ts").collect()
     daily = {}
     for et, ts in ev:
         daily.setdefault(et, {}).setdefault(ts.date(), 0)
         daily[et][ts.date()] += 1
-    got = {r["event_type"]: r for r in queries()["ts_forecast_mase"](spark, SF).collect()}
+    got = {r["event_type"]: r for r in queries()["ts_forecast_mase"](spark, SF0001).collect()}
     for et, days in daily.items():
         series = sorted(days.items())
         ys = [y for _, y in series]
@@ -94,9 +88,9 @@ def test_mase_matches_bruteforce(spark):
 def test_span_corruption_reconstructs_original(spark):
     docs = {
         r[0]: r[1].lower().split(" ")
-        for r in load(spark, SF, "documents").filter("doc_id % 5 = 0").select("doc_id", "text").collect()
+        for r in load(spark, SF0001, "documents").filter("doc_id % 5 = 0").select("doc_id", "text").collect()
     }
-    rows = {r["doc_id"]: r for r in queries()["curation_span_corruption"](spark, SF).collect()}
+    rows = {r["doc_id"]: r for r in queries()["curation_span_corruption"](spark, SF0001).collect()}
     assert set(rows) == set(docs)
     for doc_id, toks in docs.items():
         r = rows[doc_id]
@@ -128,11 +122,11 @@ def test_span_corruption_reconstructs_original(spark):
 
 
 def test_srm_binomial_sanity(spark):
-    rows = queries()["analytics_ab_srm_check"](spark, SF).collect()
+    rows = queries()["analytics_ab_srm_check"](spark, SF0001).collect()
     assert len(rows) == 1
     r = rows[0]
-    users = {u[0] for u in load(spark, SF, "events").select("user_id").distinct().collect()}
-    nc = sum(1 for u in users if int(_md5(f"ab:{u}")[:8], 16) % 2 == 0)
+    users = {u[0] for u in load(spark, SF0001, "events").select("user_id").distinct().collect()}
+    nc = sum(1 for u in users if int(md5_hex(f"ab:{u}")[:8], 16) % 2 == 0)
     assert (r["n_control"], r["n_treatment"]) == (nc, len(users) - nc)
     chi2 = (r["n_control"] - r["n_treatment"]) ** 2 / len(users)
     assert r["chi2_x1e6"] == math.floor(chi2 * 1e6 + 0.5)
@@ -143,9 +137,9 @@ def test_srm_binomial_sanity(spark):
 
 
 def test_data_vault_integrity(spark):
-    rows = {r["entity"]: r for r in queries()["elt_data_vault_model"](spark, SF).collect()}
-    c = load(spark, SF, "customer").count()
-    o = load(spark, SF, "orders").count()
+    rows = {r["entity"]: r for r in queries()["elt_data_vault_model"](spark, SF0001).collect()}
+    c = load(spark, SF0001, "customer").count()
+    o = load(spark, SF0001, "orders").count()
     assert rows["hub_customer"]["n_rows"] == c
     assert rows["hub_order"]["n_rows"] == o
     assert rows["link_placed"]["n_rows"] == o  # one placing per order
@@ -156,8 +150,8 @@ def test_data_vault_integrity(spark):
 
 
 def test_secrets_scan_full_recall_no_false_positives(spark):
-    docs = [r[0] for r in load(spark, SF, "documents").select("doc_id").collect()]
-    rows = queries()["text_secrets_scan"](spark, SF).collect()
+    docs = [r[0] for r in load(spark, SF0001, "documents").select("doc_id").collect()]
+    rows = queries()["text_secrets_scan"](spark, SF0001).collect()
     by_kind = {}
     for r in rows:
         by_kind.setdefault(r["kind"], set()).add((r["doc_id"], r["hit"]))
@@ -167,27 +161,27 @@ def test_secrets_scan_full_recall_no_false_positives(spark):
     assert {d for d, _ in by_kind.get("hex_token_32", set())} == want_toks
     tr = str.maketrans("0123456789abcdef", "ABCDEFGHIJKLMNOP")
     for d, hit in by_kind.get("aws_access_key", set()):
-        assert hit == "AKIA" + _md5(f"sk:{d}").translate(tr)[:16]
+        assert hit == "AKIA" + md5_hex(f"sk:{d}").translate(tr)[:16]
     for d, hit in by_kind.get("hex_token_32", set()):
-        assert hit == "tok_" + _md5(f"tk:{d}")
+        assert hit == "tok_" + md5_hex(f"tk:{d}")
 
 
 # ----------------------------------------------------------- hash-chain log
 
 
 def test_hash_chain_detects_reorder(spark):
-    rows = queries()["sec_tamper_evident_log"](spark, SF).collect()
-    orders = load(spark, SF, "orders").select("o_orderdate", "o_orderkey", "o_totalprice").collect()
+    rows = queries()["sec_tamper_evident_log"](spark, SF0001).collect()
+    orders = load(spark, SF0001, "orders").select("o_orderdate", "o_orderkey", "o_totalprice").collect()
     per_day = {}
     for od, ok, p in orders:
         cents = math.floor(p * 100 + 0.5)
-        per_day.setdefault(od.date(), []).append((ok, _md5(f"tx:{ok}:{cents}")))
+        per_day.setdefault(od.date(), []).append((ok, md5_hex(f"tx:{ok}:{cents}")))
     for r in rows:
         entries = sorted(per_day[r["day"]])
         digs = [d for _, d in entries]
         chain = digs[0]
         for d in digs[1:]:
-            chain = _md5(chain + d)
+            chain = md5_hex(chain + d)
         assert r["chain_hash"] == chain
         assert r["chain_head"] == digs[0]
         assert r["n_entries"] == len(digs)
@@ -196,5 +190,5 @@ def test_hash_chain_detects_reorder(spark):
             swapped = [digs[1], digs[0]] + digs[2:]
             alt = swapped[0]
             for d in swapped[1:]:
-                alt = _md5(alt + d)
+                alt = md5_hex(alt + d)
             assert alt != chain

@@ -10,8 +10,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from gcp_cloudsql_to_bigquery_spark.workload import queries
+from tests.conftest import SF0001
 
-SF = "/root/testdata/sf0.001"
 
 _KN_D = 0.75
 
@@ -129,7 +129,7 @@ def _shannon_unats(s):
 
 
 def test_secrets_scan_plants_jwt_and_entropy_gate(spark):
-    rows = queries()["text_secrets_scan"](spark, SF).collect()
+    rows = queries()["text_secrets_scan"](spark, SF0001).collect()
     by_kind = {}
     for r in rows:
         by_kind.setdefault(r["kind"], []).append(r)
@@ -160,14 +160,14 @@ def test_capped_candidate_funnel_equals_all_pairs(spark):
     miss here means the implementation diverged from the principle."""
     funnel = {
         r["stage"]: (r["n_docs"], r["total_chars"])
-        for r in queries()["curation_dedup_pipeline"](spark, SF).collect()
+        for r in queries()["curation_dedup_pipeline"](spark, SF0001).collect()
     }
     # recompute the funnel from PURE-PYTHON all-pairs ground truth —
     # independent of BOTH the pipeline and dedup_ngram_jaccard (which now
     # share the prefix-filter candidate rule)
     docs = {
         r["doc_id"]: (r["n_chars"], r["text"])
-        for r in spark.read.parquet(SF + "/documents.parquet").collect()
+        for r in spark.read.parquet(SF0001 + "/documents.parquet").collect()
     }
     import itertools
 
@@ -211,7 +211,7 @@ def test_wilson_ci_matches_bruteforce(spark):
     Spark and DuckDB (VERDICT r5 oracle-independence caveat) — this witness
     recomputes the interval from the standard Wilson formula with z=1.96
     written independently in Python."""
-    rows = spark.read.parquet(SF + "/orders.parquet").select(
+    rows = spark.read.parquet(SF0001 + "/orders.parquet").select(
         "o_orderpriority", "o_orderstatus"
     ).collect()
     agg = {}
@@ -221,7 +221,7 @@ def test_wilson_ci_matches_bruteforce(spark):
     z = 1.96
     got = {
         r["pri"]: (r["n"], r["s"], r["wilson_lo_x1e9"], r["wilson_hi_x1e9"])
-        for r in queries()["analytics_wilson_ci"](spark, SF).collect()
+        for r in queries()["analytics_wilson_ci"](spark, SF0001).collect()
     }
     assert set(got) == set(agg)
     for pri, (n, s) in agg.items():
@@ -246,7 +246,7 @@ def test_hash_uniformity_chi2_matches_bruteforce(spark):
 
     keys = [
         r["o_orderkey"]
-        for r in spark.read.parquet(SF + "/orders.parquet").select("o_orderkey").collect()
+        for r in spark.read.parquet(SF0001 + "/orders.parquet").select("o_orderkey").collect()
     ]
     counts = Counter(
         int(hashlib.md5(str(k).encode()).hexdigest()[:8], 16) % 64 for k in keys
@@ -255,7 +255,7 @@ def test_hash_uniformity_chi2_matches_bruteforce(spark):
     chi2 = math.floor(
         sum((64 * o - n) ** 2 for o in counts.values()) / (64.0 * n) * 1000 + 0.5
     )
-    r = queries()["scale_hash_uniformity_chi2"](spark, SF).collect()[0]
+    r = queries()["scale_hash_uniformity_chi2"](spark, SF0001).collect()[0]
     assert r["n"] == n and r["n_buckets"] == len(counts)
     assert r["spread"] == max(counts.values()) - min(counts.values())
     assert r["chi2_x1000"] == chi2
@@ -269,8 +269,8 @@ def test_weighted_sssp_matches_bruteforce(spark):
     import hashlib
     from collections import defaultdict
 
-    li = spark.read.parquet(SF + "/lineitem.parquet").select("l_orderkey", "l_partkey")
-    o = spark.read.parquet(SF + "/orders.parquet").select("o_orderkey", "o_custkey")
+    li = spark.read.parquet(SF0001 + "/lineitem.parquet").select("l_orderkey", "l_partkey")
+    o = spark.read.parquet(SF0001 + "/orders.parquet").select("o_orderkey", "o_custkey")
     rows = (
         li.filter(li.l_partkey % 10 == 0)
         .join(o, li.l_orderkey == o.o_orderkey)
@@ -303,7 +303,7 @@ def test_weighted_sssp_matches_bruteforce(spark):
                     nxt[v] = du + w
         dist = nxt
     got = {
-        r["node"]: r["dist"] for r in queries()["graph_weighted_sssp"](spark, SF).collect()
+        r["node"]: r["dist"] for r in queries()["graph_weighted_sssp"](spark, SF0001).collect()
     }
     assert got == dist
 
@@ -314,7 +314,7 @@ def test_longest_streak_matches_bruteforce(spark):
     import datetime as dt
     from collections import defaultdict
 
-    ev = spark.read.parquet(SF + "/events.parquet").select("user_id", "ts").collect()
+    ev = spark.read.parquet(SF0001 + "/events.parquet").select("user_id", "ts").collect()
     days = defaultdict(set)
     for r in ev:
         days[r["user_id"]].add(r["ts"].date())
@@ -335,7 +335,7 @@ def test_longest_streak_matches_bruteforce(spark):
             expect[u] = (best_len, best_start, best_start + dt.timedelta(days=best_len - 1))
     got = {
         r["user_id"]: (r["streak_days"], r["start_day"], r["end_day"])
-        for r in queries()["analytics_longest_streak"](spark, SF).collect()
+        for r in queries()["analytics_longest_streak"](spark, SF0001).collect()
     }
     assert got == expect
 

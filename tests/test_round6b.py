@@ -8,15 +8,14 @@ import math
 from collections import defaultdict
 
 from gcp_cloudsql_to_bigquery_spark.workload import queries
-
-SF = "/root/testdata/sf0.001"
+from tests.conftest import SF0001
 
 
 def test_fifo_allocation_matches_explicit_walk(spark):
     """The windowed identity alloc = min(qty, max(dem - prior, 0)) must
     equal an explicit FIFO consumption loop over lots in (date, lot) order."""
     li = (
-        spark.read.parquet(SF + "/lineitem.parquet")
+        spark.read.parquet(SF0001 + "/lineitem.parquet")
         .where("l_partkey % 40 = 0")
         .select("l_partkey", "l_orderkey", "l_quantity", "l_shipdate")
         .collect()
@@ -41,7 +40,7 @@ def test_fifo_allocation_matches_explicit_walk(spark):
             r["remaining"],
             r["is_boundary_lot"],
         )
-        for r in queries()["analytics_fifo_allocation"](spark, SF).collect()
+        for r in queries()["analytics_fifo_allocation"](spark, SF0001).collect()
     }
     assert got == expect
 
@@ -53,7 +52,7 @@ def _axis(tag, event_id):
 def test_impossible_travel_matches_bruteforce(spark):
     from gcp_cloudsql_to_bigquery_spark.operators.quality import _TRAVEL_V2
 
-    ev = spark.read.parquet(SF + "/events.parquet").select(
+    ev = spark.read.parquet(SF0001 + "/events.parquet").select(
         "user_id", "event_id", "ts"
     ).collect()
     by_user = defaultdict(list)
@@ -78,13 +77,13 @@ def test_impossible_travel_matches_bruteforce(spark):
             expect[u] = (n_hops, n_imp, worst)
     got = {
         r["user_id"]: (r["n_hops"], r["n_impossible"], r["worst_d2"])
-        for r in queries()["sec_impossible_travel"](spark, SF).collect()
+        for r in queries()["sec_impossible_travel"](spark, SF0001).collect()
     }
     assert got == expect
 
 
 def test_population_stability_matches_bruteforce(spark):
-    rows = spark.read.parquet(SF + "/orders.parquet").select(
+    rows = spark.read.parquet(SF0001 + "/orders.parquet").select(
         "o_totalprice", "o_orderdate"
     ).collect()
     import datetime as dt
@@ -111,7 +110,7 @@ def test_population_stability_matches_bruteforce(spark):
         expect[b] = (n_ref[b], n_cur[b], math.floor((p - q) * math.log(p / q) * 1e9 + 0.5))
     got = {
         r["bin"]: (r["n_ref"], r["n_cur"], r["term_x1e9"])
-        for r in queries()["dq_population_stability"](spark, SF).collect()
+        for r in queries()["dq_population_stability"](spark, SF0001).collect()
     }
     assert set(got) == set(expect)
     total = 0
@@ -121,7 +120,7 @@ def test_population_stability_matches_bruteforce(spark):
         # independent float path: allow 1 nano-unit of quantization slack
         assert abs(gterm - term) <= 1, (b, gterm, term)
         total += gterm
-    psi = {r["psi_total_x1e9"] for r in queries()["dq_population_stability"](spark, SF).collect()}
+    psi = {r["psi_total_x1e9"] for r in queries()["dq_population_stability"](spark, SF0001).collect()}
     assert psi == {total}
 
 
@@ -129,7 +128,7 @@ def test_seasonal_strength_matches_bruteforce(spark):
     """ts_seasonal_strength's oracle replays the identical quantized
     detrend -> seasonal-mean -> residual pipeline — this witness recomputes
     strength from first principles with the same 1e-9 quantization."""
-    ev = spark.read.parquet(SF + "/events.parquet").select("event_type", "ts").collect()
+    ev = spark.read.parquet(SF0001 + "/events.parquet").select("event_type", "ts").collect()
     hourly = defaultdict(int)
     for r in ev:
         hourly[(r["event_type"], r["ts"].date(), r["ts"].hour)] += 1
@@ -162,7 +161,7 @@ def test_seasonal_strength_matches_bruteforce(spark):
             peak[t] = min(hh for (tt, hh), v in seas.items() if tt == t and v == m)
     got = {
         r["event_type"]: (r["n_obs"], r["strength_ppm"], r["peak_hour"])
-        for r in queries()["ts_seasonal_strength"](spark, SF).collect()
+        for r in queries()["ts_seasonal_strength"](spark, SF0001).collect()
     }
     assert set(got) == set(per_type)
     for t, (n_obs, ss_r, ss_dt) in per_type.items():
@@ -175,7 +174,7 @@ def test_seasonal_strength_matches_bruteforce(spark):
 
 
 def _hourly_cents(spark):
-    ev = spark.read.parquet(SF + "/events.parquet").select(
+    ev = spark.read.parquet(SF0001 + "/events.parquet").select(
         "event_type", "ts", "value"
     ).collect()
     hourly = defaultdict(int)
@@ -210,7 +209,7 @@ def test_autocorrelation_matches_bruteforce(spark):
             expect[(t, k)] = (n, math.floor(r * 1e6 + 0.5))
     got = {
         (r["event_type"], r["lag"]): (r["n_pairs"], r["acf_x1e6"])
-        for r in queries()["ts_autocorrelation"](spark, SF).collect()
+        for r in queries()["ts_autocorrelation"](spark, SF0001).collect()
     }
     assert set(got) == set(expect)
     for k, (n, acf) in expect.items():
@@ -240,7 +239,7 @@ def test_ma_decompose_matches_bruteforce(spark):
     }
     got = {
         (r["event_type"], r["hod"]): (r["n"], r["seasonal_cents"])
-        for r in queries()["ts_ma_decompose"](spark, SF).collect()
+        for r in queries()["ts_ma_decompose"](spark, SF0001).collect()
     }
     assert got == expect
 
@@ -259,7 +258,7 @@ def test_seasonal_profile_matches_bruteforce(spark):
         tot[t] += a
     got = {
         (r["event_type"], r["hod"]): (r["n_obs"], r["avg_cents_x100"], r["share_x1e6"])
-        for r in queries()["ts_seasonal_profile"](spark, SF).collect()
+        for r in queries()["ts_seasonal_profile"](spark, SF0001).collect()
     }
     assert set(got) == set(avg)
     for k, (n, a) in avg.items():
@@ -274,7 +273,7 @@ def test_novelty_rate_matches_bruteforce(spark):
     integer ppm, recomputed with plain dict bookkeeping."""
     docs = sorted(
         (r["doc_id"], r["text"])
-        for r in spark.read.parquet(SF + "/documents.parquet").collect()
+        for r in spark.read.parquet(SF0001 + "/documents.parquet").collect()
         if len(r["text"]) > 0
     )
     gram_sets = {}
@@ -293,7 +292,7 @@ def test_novelty_rate_matches_bruteforce(spark):
         expect[did] = (total, novel, (2 * 1_000_000 * novel + total) // (2 * total))
     got = {
         r["doc_id"]: (r["n_shingles"], r["n_novel"], r["novelty_ppm"])
-        for r in queries()["text_novelty_rate"](spark, SF).collect()
+        for r in queries()["text_novelty_rate"](spark, SF0001).collect()
     }
     assert got == expect
 
@@ -301,7 +300,7 @@ def test_novelty_rate_matches_bruteforce(spark):
 def test_quantize_int8_matches_bruteforce(spark):
     """Symmetric int8 quantization: per-vector abs-max scale, round-half-up
     codes, max reconstruction error — recomputed in numpy-free Python."""
-    rows = spark.read.parquet(SF + "/embeddings.parquet").select(
+    rows = spark.read.parquet(SF0001 + "/embeddings.parquet").select(
         "vec_id", "embedding"
     ).collect()
     expect = {}
@@ -317,7 +316,7 @@ def test_quantize_int8_matches_bruteforce(spark):
         )
     got = {
         r["vec_id"]: (r["scale_micro"], r["q"], r["err_micro"])
-        for r in queries()["embedding_quantize_int8"](spark, SF).collect()
+        for r in queries()["embedding_quantize_int8"](spark, SF0001).collect()
     }
     assert set(got) == set(expect)
     for k, (sm, q, em) in expect.items():
@@ -329,7 +328,7 @@ def test_quantize_int8_matches_bruteforce(spark):
 def test_l_diversity_matches_bruteforce(spark):
     import re as _re  # noqa: F401  (kept for symmetry with other witnesses)
 
-    rows = spark.read.parquet(SF + "/customer.parquet").select(
+    rows = spark.read.parquet(SF0001 + "/customer.parquet").select(
         "c_nationkey", "c_mktsegment", "c_acctbal"
     ).collect()
     cls = defaultdict(lambda: defaultdict(int))
@@ -350,7 +349,7 @@ def test_l_diversity_matches_bruteforce(spark):
         (r["c_nationkey"], r["c_mktsegment"]): (
             r["class_size"], r["l_distinct"], r["meets_l"], r["top_share_ppm"],
         )
-        for r in queries()["sec_l_diversity_audit"](spark, SF).collect()
+        for r in queries()["sec_l_diversity_audit"](spark, SF0001).collect()
     }
     assert got == expect
 
@@ -358,7 +357,7 @@ def test_l_diversity_matches_bruteforce(spark):
 def test_sample_weights_export_matches_bruteforce(spark):
     import re as _re
 
-    rows = spark.read.parquet(SF + "/documents.parquet").select(
+    rows = spark.read.parquet(SF0001 + "/documents.parquet").select(
         "doc_id", "source", "n_chars", "text"
     ).collect()
     fp = {
@@ -383,7 +382,7 @@ def test_sample_weights_export_matches_bruteforce(spark):
         expect[r["doc_id"]] = (w, is_keeper, quality)
     got = {
         r["doc_id"]: (r["weight_ppm2"], r["is_keeper"], r["quality_pass"])
-        for r in queries()["curation_sample_weights_export"](spark, SF).collect()
+        for r in queries()["curation_sample_weights_export"](spark, SF0001).collect()
     }
     assert got == expect
 
@@ -397,7 +396,7 @@ def test_lang_confusion_crosstab_math(spark):
 
     pred = [
         (r["lang"], r["pred_lang"])
-        for r in text_langid(spark, SF).select("lang", "pred_lang").collect()
+        for r in text_langid(spark, SF0001).select("lang", "pred_lang").collect()
     ]
     n_total = len(pred)
     cm = defaultdict(int)
@@ -411,7 +410,7 @@ def test_lang_confusion_crosstab_math(spark):
     }
     got = {
         (r["actual"], r["pred_lang"]): (r["n"], r["correct"], r["share_ppm"])
-        for r in queries()["text_lang_confusion"](spark, SF).collect()
+        for r in queries()["text_lang_confusion"](spark, SF0001).collect()
     }
     assert got == expect
 
@@ -422,7 +421,7 @@ def test_linear_attribution_matches_bruteforce(spark):
     micro-cents) — recomputed with explicit loops."""
     import datetime as dt
 
-    ev = spark.read.parquet(SF + "/events.parquet").select(
+    ev = spark.read.parquet(SF0001 + "/events.parquet").select(
         "user_id", "event_type", "ts", "event_id", "value"
     ).collect()
     touches = defaultdict(list)
@@ -449,7 +448,7 @@ def test_linear_attribution_matches_bruteforce(spark):
             credited[ch] += (2 * 1_000_000 * cents + n) // (2 * n)
     got = {
         r["channel"]: (r["n_credits"], r["credited_microcents"])
-        for r in queries()["analytics_attribution_linear"](spark, SF).collect()
+        for r in queries()["analytics_attribution_linear"](spark, SF0001).collect()
     }
     assert got == {ch: (n_credits[ch], credited[ch]) for ch in n_credits}
 
@@ -459,7 +458,7 @@ def test_duplicate_payments_matches_bruteforce(spark):
     double loop per customer."""
     import itertools
 
-    rows = spark.read.parquet(SF + "/orders.parquet").select(
+    rows = spark.read.parquet(SF0001 + "/orders.parquet").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"
     ).collect()
     by_cust = defaultdict(list)
@@ -482,6 +481,6 @@ def test_duplicate_payments_matches_bruteforce(spark):
             r["custkey"], r["order_a"], r["order_b"], r["band"],
             r["cents_a"], r["cents_b"], r["days_apart"],
         )
-        for r in queries()["dq_duplicate_payments"](spark, SF).collect()
+        for r in queries()["dq_duplicate_payments"](spark, SF0001).collect()
     }
     assert got == expect

@@ -8,8 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from gcp_cloudsql_to_bigquery_spark.catalog import load
-
-SF = "/root/testdata/sf0.001"
+from tests.conftest import SF0001
 
 
 # --- §2A #27: secret resolution -------------------------------------------
@@ -51,7 +50,7 @@ def test_jdbc_source_from_conf_reads_live_derby(spark, tmp_path):
     )
     from gcp_cloudsql_to_bigquery_spark.sources.secrets import jdbc_source_from_conf
 
-    dbdir = derby_create_nation(spark, SF)
+    dbdir = derby_create_nation(spark, SF0001)
     spark.conf.set("spark.secrets.db.url", f"jdbc:derby:{dbdir}")
     spark.conf.set("spark.secrets.db.user", "app")
     spark.conf.set("spark.secrets.db.password", "")
@@ -62,7 +61,7 @@ def test_jdbc_source_from_conf_reads_live_derby(spark, tmp_path):
     finally:
         for k in ("db.url", "db.user", "db.password"):
             spark.conf.unset("spark.secrets." + k)
-    assert got == load(spark, SF, "nation").count() == 25
+    assert got == load(spark, SF0001, "nation").count() == 25
 
 
 # --- §2A #26: retention-sweep enforcement ----------------------------------
@@ -74,7 +73,7 @@ def aged_layout(spark, tmp_path):
     relative to a fixed as_of date (no wall clock anywhere)."""
     from gcp_cloudsql_to_bigquery_spark.sources.files import write_date_partitioned
 
-    ev = load(spark, SF, "events").select("event_id", "user_id", "ts", "value")
+    ev = load(spark, SF0001, "events").select("event_id", "user_id", "ts", "value")
     base = str(tmp_path / "aged")
     write_date_partitioned(ev, base, "ts", "day")
     days = sorted(
@@ -208,7 +207,7 @@ def test_bigquery_writer_configured_and_reaches_loader(spark):
     absent jar BY NAME — real wiring, no pretended execution."""
     from gcp_cloudsql_to_bigquery_spark.sources.bigquery import bigquery_writer
 
-    n = load(spark, SF, "nation")
+    n = load(spark, SF0001, "nation")
     w = bigquery_writer(n, "proj.dataset.nation", write_method="direct",
                         extra={"clusteredFields": "n_regionkey"})
     with pytest.raises(Exception, match="(?i)bigquery"):
@@ -226,7 +225,7 @@ def test_retention_sweep_driven_by_tiering_plan(spark, aged_layout):
     from gcp_cloudsql_to_bigquery_spark.sources.files import retention_sweep
 
     base, days = aged_layout
-    plan = {r["tier"]: r for r in elt_storage_tiering_plan(spark, SF).collect()}
+    plan = {r["tier"]: r for r in elt_storage_tiering_plan(spark, SF0001).collect()}
     as_of = max(datetime.date.fromisoformat(d) for d in days)
     assert plan["hot"]["newest_day"].isoformat() == as_of.isoformat()
     report = retention_sweep(spark, base, 22, as_of, dry_run=True)

@@ -9,12 +9,9 @@ from collections import Counter
 
 import numpy as np
 import pyarrow.parquet as pq
-import pytest
 
 from gcp_cloudsql_to_bigquery_spark.workload import queries
-
-SF = "/root/testdata/sf0.001"
-SF01 = "/root/testdata/sf0.01"
+from tests.conftest import SF0001, SF001
 
 
 def test_pseudonymize_matches_hashlib(spark):
@@ -23,7 +20,7 @@ def test_pseudonymize_matches_hashlib(spark):
     from the raw parquet (sf0.01: exactly the 6 heavy customers qualify,
     so the HAVING gate is exercised non-trivially)."""
     custkeys = pq.read_table(
-        SF01 + "/orders.parquet", columns=["o_custkey"]
+        SF001 + "/orders.parquet", columns=["o_custkey"]
     ).column(0).to_pylist()
     per_key = Counter(custkeys)
 
@@ -36,7 +33,7 @@ def test_pseudonymize_matches_hashlib(spark):
     assert len(want) == 6  # non-trivial: the gate actually filters
     got = {
         r["pseud"]: (r["n_orders"], r["n_raw_keys"])
-        for r in queries()["fn_pseudonymize_consistent"](spark, SF01).collect()
+        for r in queries()["fn_pseudonymize_consistent"](spark, SF001).collect()
     }
     assert got == want
     # joinability contract: no token collision across ALL keys, not just
@@ -49,7 +46,7 @@ def test_matryoshka_rerank_matches_numpy(spark):
     Also proves no cosine in this corpus sits within 1e-9 of a 6dp
     rounding boundary, so the implementation's round-half-even and the
     oracle's round-half-up cannot diverge here."""
-    t = pq.read_table(SF + "/embeddings.parquet")
+    t = pq.read_table(SF0001 + "/embeddings.parquet")
     ids = np.array(t.column("vec_id").to_pylist(), dtype=np.int64)
     mat = np.stack([np.asarray(v, dtype=np.float64) for v in t.column("embedding").to_pylist()])
     order = np.argsort(ids)
@@ -83,7 +80,7 @@ def test_matryoshka_rerank_matches_numpy(spark):
     got = {
         (r["query_id"], r["neighbor_id"], r["coarse_rnk"],
          round(r["cosine"], 6), r["rnk"])
-        for r in queries()["ann_matryoshka_rerank"](spark, SF).collect()
+        for r in queries()["ann_matryoshka_rerank"](spark, SF0001).collect()
     }
     assert got == want and len(want) == 10 * K
 
@@ -93,8 +90,8 @@ def test_random_walk_matches_python(spark):
     by the oracle SQL step-for-step; this witness replays it from first
     principles: rebuild the co-purchase graph from raw parquet, walk 4
     steps with hashlib, compare every (walk, step, node)."""
-    li = pq.read_table(SF + "/lineitem.parquet", columns=["l_orderkey", "l_partkey"])
-    orders = pq.read_table(SF + "/orders.parquet", columns=["o_orderkey", "o_custkey"])
+    li = pq.read_table(SF0001 + "/lineitem.parquet", columns=["l_orderkey", "l_partkey"])
+    orders = pq.read_table(SF0001 + "/orders.parquet", columns=["o_orderkey", "o_custkey"])
     ok2ck = dict(zip(orders.column(0).to_pylist(), orders.column(1).to_pylist()))
     cp = set()
     for ok, pk in zip(li.column(0).to_pylist(), li.column(1).to_pylist()):
@@ -133,7 +130,7 @@ def test_random_walk_matches_python(spark):
             want.add((seed, step, node))
     got = {
         (r["walk_id"], r["step"], r["node"])
-        for r in queries()["graph_random_walk"](spark, SF).collect()
+        for r in queries()["graph_random_walk"](spark, SF0001).collect()
     }
     assert got == want and want
 
@@ -143,7 +140,7 @@ def test_cell_level_diff_matches_python(spark):
     replayed identically in the oracle; recompute the expected cell diff
     directly from the raw parquet."""
     t = pq.read_table(
-        SF + "/orders.parquet",
+        SF0001 + "/orders.parquet",
         columns=["o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority"],
     )
     want = set()
@@ -157,7 +154,7 @@ def test_cell_level_diff_matches_python(spark):
             want.add((k, "cents", str(cents), str(cents + 7)))
     got = {
         (r["k"], r["col"], r["old_val"], r["new_val"])
-        for r in queries()["elt_cell_level_diff"](spark, SF).collect()
+        for r in queries()["elt_cell_level_diff"](spark, SF0001).collect()
     }
     assert got == want and want
 
@@ -168,7 +165,7 @@ def test_url_canonical_matches_urllib(spark):
     structurally different parser) and a plain dict aggregation."""
     from urllib.parse import urlsplit
 
-    doc_ids = pq.read_table(SF + "/documents.parquet", columns=["doc_id"]).column(0).to_pylist()
+    doc_ids = pq.read_table(SF0001 + "/documents.parquet", columns=["doc_id"]).column(0).to_pylist()
 
     def synth(k):
         b = k // 4
@@ -195,7 +192,7 @@ def test_url_canonical_matches_urllib(spark):
         agg[canon] = (n + 1, min(keeper, k))
     got = {
         r["canonical_url"]: (r["n_variants"], r["keeper"])
-        for r in queries()["dedup_url_canonical"](spark, SF).collect()
+        for r in queries()["dedup_url_canonical"](spark, SF0001).collect()
     }
     assert got == agg
     # the synthesis really exercises all four variant shapes into ONE key

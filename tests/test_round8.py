@@ -17,13 +17,7 @@ from collections import Counter, defaultdict
 import pyarrow.parquet as pq
 
 from gcp_cloudsql_to_bigquery_spark.workload import queries
-
-SF = "/root/testdata/sf0.001"
-SF01 = "/root/testdata/sf0.01"
-
-
-def _col(path, table, name):
-    return pq.read_table(f"{path}/{table}.parquet", columns=[name]).column(0).to_pylist()
+from tests.conftest import SF0001, SF001, parquet_col
 
 
 def test_hits_matches_bruteforce(spark):
@@ -35,12 +29,12 @@ def test_hits_matches_bruteforce(spark):
     any algorithmic bug (wrong key direction, missing coalesce-to-zero,
     normalizing before the sum, L1 instead of max) shifts scores by
     orders of magnitude more."""
-    lk = _col(SF, "lineitem", "l_orderkey")
-    ls = _col(SF, "lineitem", "l_suppkey")
-    o = dict(zip(_col(SF, "orders", "o_orderkey"), _col(SF, "orders", "o_custkey")))
-    c = dict(zip(_col(SF, "customer", "c_custkey"), _col(SF, "customer", "c_nationkey")))
-    s = dict(zip(_col(SF, "supplier", "s_suppkey"), _col(SF, "supplier", "s_nationkey")))
-    nations = sorted(_col(SF, "nation", "n_nationkey"))
+    lk = parquet_col(SF0001, "lineitem", "l_orderkey")
+    ls = parquet_col(SF0001, "lineitem", "l_suppkey")
+    o = dict(zip(parquet_col(SF0001, "orders", "o_orderkey"), parquet_col(SF0001, "orders", "o_custkey")))
+    c = dict(zip(parquet_col(SF0001, "customer", "c_custkey"), parquet_col(SF0001, "customer", "c_nationkey")))
+    s = dict(zip(parquet_col(SF0001, "supplier", "s_suppkey"), parquet_col(SF0001, "supplier", "s_nationkey")))
+    nations = sorted(parquet_col(SF0001, "nation", "n_nationkey"))
 
     w = Counter((c[o[ok]], s[sk]) for ok, sk in zip(lk, ls))
 
@@ -62,7 +56,7 @@ def test_hits_matches_bruteforce(spark):
     want_a = {n: math.floor(a[n] * 1e9 + 0.5) for n in nations}
     want_h = {n: math.floor(h[n] * 1e9 + 0.5) for n in nations}
 
-    rows = queries()["graph_hits"](spark, SF).collect()
+    rows = queries()["graph_hits"](spark, SF0001).collect()
     assert len(rows) == len(nations)
     for r in rows:
         n = r["n_nationkey"]
@@ -86,7 +80,7 @@ def test_chained_stateful_aggs_match_manual_rollup(spark):
     frontier bugs (emitting unfinalized windows / dropping finalized
     ones) and bucket misalignment that the rows-only driver check for
     streaming queries would miss."""
-    t = pq.read_table(f"{SF}/events.parquet", columns=["ts", "event_type"])
+    t = pq.read_table(f"{SF0001}/events.parquet", columns=["ts", "event_type"])
     ts = t.column("ts").to_pylist()
     et = t.column("event_type").to_pylist()
 
@@ -110,7 +104,7 @@ def test_chained_stateful_aggs_match_manual_rollup(spark):
 
     got = {
         (r["win_start"], r["event_type"]): (r["peak_hourly"], r["n_hours"])
-        for r in queries()["stream_chained_stateful_aggs"](spark, SF).collect()
+        for r in queries()["stream_chained_stateful_aggs"](spark, SF0001).collect()
     }
     assert got == want
 
@@ -121,13 +115,13 @@ def test_python_datasource_stream_delivers_each_key_once(spark):
     is exercised across multiple micro-batches): every customer key lands
     exactly once, with its acctbal in integer cents and the block lineage
     k // 500 the offset contract promises."""
-    keys = _col(SF01, "customer", "c_custkey")
-    bals = _col(SF01, "customer", "c_acctbal")
+    keys = parquet_col(SF001, "customer", "c_custkey")
+    bals = parquet_col(SF001, "customer", "c_acctbal")
     want = {
         k: (math.floor(b * 100 + 0.5), k // 500) for k, b in zip(keys, bals)
     }
 
-    rows = queries()["src_python_datasource_stream"](spark, SF01).collect()
+    rows = queries()["src_python_datasource_stream"](spark, SF001).collect()
     assert len(rows) == len(want)  # no duplicate delivery, no loss
     got = {r["k"]: (r["cents"], r["block"]) for r in rows}
     assert got == want
@@ -167,7 +161,7 @@ def test_kcore_matches_bruteforce_peel(spark):
     surviving (node, core_degree) map exactly.  Also asserts the peel
     reaches fixpoint within the 8 shared rounds — the premise that makes
     the fixed unroll exact."""
-    edges = _jaccard_edges(SF)
+    edges = _jaccard_edges(SF0001)
     assert edges  # non-degenerate corpus
     adj = defaultdict(set)
     for a, b in edges:
@@ -189,7 +183,7 @@ def test_kcore_matches_bruteforce_peel(spark):
 
     got = {
         r["doc_id"]: r["core_degree"]
-        for r in queries()["graph_kcore"](spark, SF).collect()
+        for r in queries()["graph_kcore"](spark, SF0001).collect()
     }
     assert got == want
     assert want  # the 2-core is non-empty at this SF
@@ -200,7 +194,7 @@ def test_bfs_layers_match_bruteforce_bfs(spark):
     form (replay-style): recompute min-hop distances with a plain BFS
     from the % 100 == 0 seed set over the recomputed edge set, capped at
     depth 6, and compare (doc_id, depth) exactly."""
-    edges = _jaccard_edges(SF)
+    edges = _jaccard_edges(SF0001)
     adj = defaultdict(set)
     for a, b in edges:
         adj[a].add(b)
@@ -216,7 +210,7 @@ def test_bfs_layers_match_bruteforce_bfs(spark):
 
     got = {
         r["doc_id"]: r["depth"]
-        for r in queries()["graph_bfs_layers"](spark, SF).collect()
+        for r in queries()["graph_bfs_layers"](spark, SF0001).collect()
     }
     assert got == dist
     assert len({d for d in dist.values()}) > 1  # more than just the seed layer
@@ -226,8 +220,8 @@ def test_pandas_on_spark_api_matches_python(spark):
     """The pandas-dialect grouped aggregate recomputed with a plain dict
     sweep over the raw orders parquet — integer cents end-to-end, so the
     comparison is exact."""
-    pri = _col(SF, "orders", "o_orderpriority")
-    tp = _col(SF, "orders", "o_totalprice")
+    pri = parquet_col(SF0001, "orders", "o_orderpriority")
+    tp = parquet_col(SF0001, "orders", "o_totalprice")
     want = {}
     for p, v in zip(pri, tp):
         cents = math.floor(v * 100 + 0.5)
@@ -236,6 +230,6 @@ def test_pandas_on_spark_api_matches_python(spark):
 
     got = {
         r["pri"]: (r["n"], r["cents"], r["max_cents"])
-        for r in queries()["fn_pandas_on_spark_api"](spark, SF).collect()
+        for r in queries()["fn_pandas_on_spark_api"](spark, SF0001).collect()
     }
     assert got == want

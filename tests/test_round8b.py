@@ -21,10 +21,11 @@ import pytest
 from gcp_cloudsql_to_bigquery_spark.operators.multimodal import (
     _png_chunk,
     decode_png,
-    synthesize_png,
     synthesize_bmff,
+    synthesize_png,
     walk_bmff,
 )
+from tests.conftest import fw_detail_rec, fw_trailer_rec
 
 
 def _good_png(doc_id=5, n_chars=7):
@@ -170,33 +171,23 @@ def test_bmff_overflowing_child_inside_container_raises():
 #
 # The producer inside the query is consistent by construction, so the
 # audit's false branches never fire on fixture data.  These feeds are
-# crafted by hand from the format spec (D = 1+9 key+18 name+1 sign+11
-# cents+10 segment; T = 1+9 count+1 sign+15 total) — an independent
-# witness of the offsets as well as of the audit verdicts.
-
-
-def _d_rec(key, name, cents, seg):
-    sign = "-" if cents < 0 else "+"
-    return f"D{key:09d}{name:<18.18}{sign}{abs(cents):011d}{seg:<10.10}"
-
-
-def _t_rec(count, total):
-    sign = "-" if total < 0 else "+"
-    return f"T{count:09d}{sign}{abs(total):015d}"
+# crafted by hand from the format spec (conftest's fw_detail_rec /
+# fw_trailer_rec) — an independent witness of the offsets as well as
+# of the audit verdicts.
 
 
 def test_fixed_width_trailer_audit_flags_tampering(spark):
     from gcp_cloudsql_to_bigquery_spark.sources.files import parse_fixed_width_feed
 
     good = "\n".join(
-        ["H000000000", _d_rec(8, "ALICE", 12345, "AUTO"),
-         _d_rec(16, "BOB", -678, "MACHINERY"), _t_rec(2, 11667)]
+        ["H000000000", fw_detail_rec(8, "ALICE", 12345, "AUTO"),
+         fw_detail_rec(16, "BOB", -678, "MACHINERY"), fw_trailer_rec(2, 11667)]
     )
     bad_count = "\n".join(
-        ["H000000001", _d_rec(24, "CAROL", 500, "HOUSEHOLD"), _t_rec(2, 500)]
+        ["H000000001", fw_detail_rec(24, "CAROL", 500, "HOUSEHOLD"), fw_trailer_rec(2, 500)]
     )
     bad_sum = "\n".join(
-        ["H000000002", _d_rec(32, "DAVE", -40, "FURNITURE"), _t_rec(1, 40)]
+        ["H000000002", fw_detail_rec(32, "DAVE", -40, "FURNITURE"), fw_trailer_rec(1, 40)]
     )
     feeds = spark.createDataFrame(
         [(0, good), (1, bad_count), (2, bad_sum)], "shard int, content string"

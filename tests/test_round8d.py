@@ -21,8 +21,7 @@ import random
 import string
 import struct
 
-from hypothesis import given, settings
-from hypothesis import strategies as st
+from hypothesis import given, settings, strategies as st
 
 from gcp_cloudsql_to_bigquery_spark.operators.multimodal import (
     decode_png,
@@ -51,6 +50,8 @@ def test_png_gradient_property(doc_id, n_chars):
 # --- BMFF: walker vs generator bookkeeping on random trees ---
 
 _CONTAINERS = [b"moov", b"trak"]  # the walker's recursion set
+
+
 _LEAVES = [b"ftyp", b"mvhd", b"tkhd", b"mdat", b"free"]
 
 

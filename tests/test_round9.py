@@ -11,36 +11,21 @@
    can't silently regress the fix (VERDICT r8 item 4).
 """
 
-from __future__ import annotations
-
 import pytest
 
-SF = "/root/testdata/sf0.001"
-
-
-# --- 1. fixed-width feed: missing-trailer shard -----------------------------
-
-
-def _d_rec(key, name, cents, seg):
-    sign = "-" if cents < 0 else "+"
-    return f"D{key:09d}{name:<18.18}{sign}{abs(cents):011d}{seg:<10.10}"
-
-
-def _t_rec(count, total):
-    sign = "-" if total < 0 else "+"
-    return f"T{count:09d}{sign}{abs(total):015d}"
+from tests.conftest import SF0001, fw_detail_rec, fw_trailer_rec
 
 
 def test_fixed_width_missing_trailer_flags_rows_not_drops(spark):
     from gcp_cloudsql_to_bigquery_spark.sources.files import parse_fixed_width_feed
 
     good = "\n".join(
-        ["H000000000", _d_rec(8, "ALICE", 12345, "AUTO"), _t_rec(1, 12345)]
+        ["H000000000", fw_detail_rec(8, "ALICE", 12345, "AUTO"), fw_trailer_rec(1, 12345)]
     )
     # truncated mid-feed: header + body records, no T trailer at all
     truncated = "\n".join(
-        ["H000000001", _d_rec(16, "BOB", -678, "MACHINERY"),
-         _d_rec(24, "CAROL", 500, "HOUSEHOLD")]
+        ["H000000001", fw_detail_rec(16, "BOB", -678, "MACHINERY"),
+         fw_detail_rec(24, "CAROL", 500, "HOUSEHOLD")]
     )
     feeds = spark.createDataFrame(
         [(0, good), (1, truncated)], "shard int, content string"
@@ -64,8 +49,8 @@ def test_fixed_width_duplicate_trailer_flags_without_fanout(spark):
     from gcp_cloudsql_to_bigquery_spark.sources.files import parse_fixed_width_feed
 
     dup_trailer = "\n".join(
-        ["H000000000", _d_rec(8, "ALICE", 12345, "AUTO"),
-         _t_rec(1, 12345), _t_rec(1, 12345)]
+        ["H000000000", fw_detail_rec(8, "ALICE", 12345, "AUTO"),
+         fw_trailer_rec(1, 12345), fw_trailer_rec(1, 12345)]
     )
     feeds = spark.createDataFrame([(0, dup_trailer)], "shard int, content string")
     rows = parse_fixed_width_feed(feeds).collect()
@@ -98,7 +83,7 @@ def test_fixed_width_tamper_matrix_seeded_fuzz(spark):
         keys = []
         for _ in range(n_recs):
             cents = rng.randint(-10**10, 10**10)
-            lines.append(_d_rec(key, "N%d" % key, cents, "SEG"))
+            lines.append(fw_detail_rec(key, "N%d" % key, cents, "SEG"))
             total += cents
             keys.append(key)
             key += 1
@@ -108,9 +93,9 @@ def test_fixed_width_tamper_matrix_seeded_fuzz(spark):
         elif mode == "sum":
             sum_decl += rng.choice([-1, 1, 1000])
         if mode != "no_trailer":
-            lines.append(_t_rec(n_decl, sum_decl))
+            lines.append(fw_trailer_rec(n_decl, sum_decl))
             if mode == "dup_trailer":  # second, self-consistent trailer —
-                lines.append(_t_rec(n_decl, sum_decl))  # the COUNT is the tamper
+                lines.append(fw_trailer_rec(n_decl, sum_decl))  # the COUNT is the tamper
         shards.append((shard, "\n".join(lines)))
         count_ok = mode in ("ok", "sum")
         checksum_ok = mode in ("ok", "count")
@@ -145,7 +130,7 @@ def test_sniffer_trailing_newline_emits_no_junk_row(spark):
     assert all(r["detected"] == "comma" for r in rows)
 
 
-# --- 2. alias hygiene: zero trivially-true-equals warnings in CI ------------
+# --- alias hygiene: zero trivially-true-equals warnings in CI ------------
 #
 # Spark's analyzer logs "Join condition is missing or trivially true" /
 # "trivially true" style warnings through log4j when a self-join condition
@@ -176,7 +161,7 @@ def _jvm_log_capture(spark):
     sw = jvm.java.io.StringWriter()
     ctx = jvm.org.apache.logging.log4j.core.LoggerContext.getContext(False)
     cfg = ctx.getConfiguration()
-    layout = jvm.org.apache.logging.log4j.core.layout.PatternLayout.newBuilder() \
+    layout = jvm.org.apache.logging.log4j.core.layout.PatternLayout.newBuilder()\
         .withPattern("%p %c: %m%n").withConfiguration(cfg).build()
     app = jvm.org.apache.logging.log4j.core.appender.WriterAppender.createAppender(
         layout, None, sw, "pytest_r9_capture", False, True
@@ -205,7 +190,7 @@ def test_capture_detects_deliberate_offender(spark, _jvm_log_capture):
     from gcp_cloudsql_to_bigquery_spark.catalog import load
 
     _jvm_log_capture()
-    n = load(spark, SF, "nation")
+    n = load(spark, SF0001, "nation")
     n.join(n, n.n_nationkey == n.n_nationkey)  # deliberate offender
     assert "trivially true" in _jvm_log_capture()
 
@@ -215,13 +200,13 @@ def test_alias_hygiene_no_trivially_true_join_warnings(spark, _jvm_log_capture, 
     from gcp_cloudsql_to_bigquery_spark.workload import queries
 
     _jvm_log_capture()  # drain anything earlier tests logged
-    df = queries()[name](spark, SF)
+    df = queries()[name](spark, SF0001)
     df._jdf.queryExecution().executedPlan()  # force full analysis/planning
     captured = _jvm_log_capture()
     assert "trivially true" not in captured, (name, captured[-2000:])
 
 
-# --- 3. partition invariance pinned in CI (sampled) -------------------------
+# --- partition invariance pinned in CI (sampled) -------------------------
 #
 # The per-round full-registry sweep at the hostile local[3]/shuffle=7
 # config is the repo's strongest transfers-to-a-real-cluster evidence, but
@@ -261,17 +246,17 @@ def test_partition_invariance_ci_sample(spark, name):
     from gcp_cloudsql_to_bigquery_spark.workload import queries
 
     q = queries()[name]
-    base = _canon_rows(q(spark, SF))
+    base = _canon_rows(q(spark, SF0001))
     # drop shared cache entries so the alternate session genuinely
     # re-executes under its own partitioning (the CacheManager is
     # SparkContext-scoped and substitutes by plan equality)
     spark.catalog.clearCache()
     alt = spark.newSession()
     alt.conf.set("spark.sql.shuffle.partitions", "5")
-    assert _canon_rows(q(alt, SF)) == base, name
+    assert _canon_rows(q(alt, SF0001)) == base, name
 
 
-# --- 4. bench contract ------------------------------------------------------
+# --- bench contract ------------------------------------------------------
 #
 # perfbench checks every query result against its oracle_sql() digest and
 # scripts/dump_plans.py reads the same query lists — pin the wiring so a
@@ -290,7 +275,7 @@ def test_bench_query_sets_are_registered_and_oracle_backed():
         assert name in sqls, f"bench query {name} lacks an oracle"
 
 
-# --- 5. PNG integrity kernel: seeded structural fuzz ------------------------
+# --- PNG integrity kernel: seeded structural fuzz ------------------------
 #
 # The round-8 tests pin each rejection branch individually; this fuzzes the
 # WHOLE decode tuple against an independent model over random dimensions,
@@ -346,7 +331,7 @@ def test_png_integrity_seeded_structural_fuzz():
             assert px_sum is None, (case, mode)
 
 
-# --- 6. BMFF box walker: seeded structural fuzz -----------------------------
+# --- BMFF box walker: seeded structural fuzz -----------------------------
 #
 # Random box TREES (the fixture's tree is fixed-shape): leaves with random
 # tags/body sizes, containers (moov/trak) recursing to random depth, plus
@@ -401,7 +386,7 @@ def test_bmff_walker_seeded_structural_fuzz():
                 list(walk_bmff(case, bytes(payload)))
 
 
-# --- 7. TIFF IFD walker: seeded structural fuzz -----------------------------
+# --- TIFF IFD walker: seeded structural fuzz -----------------------------
 #
 # Random endianness, a random header->IFD gap (real scanners place data
 # before the IFD; the offset field must be honored, not assumed 8), extra

@@ -1,9 +1,7 @@
 """Scale-pattern tests: bucketed join eliminates exchanges; salted join is
 semantics-preserving."""
 
-import math
 import os
-from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,7 +14,6 @@ from gcp_cloudsql_to_bigquery_spark.operators.scale import (
     write_bucketed,
 )
 from gcp_cloudsql_to_bigquery_spark.plans.inspect import exchange_count
-from gcp_cloudsql_to_bigquery_spark.workload import queries
 from tests.conftest import SF0001
 
 
@@ -607,136 +604,3 @@ def test_ttl_horizon_bounds_lsh_candidates_linear_on_degenerate_corpus(spark):
     # the absolute bound the fold asserts per batch, here corpus-wide:
     # each doc pairs with at most TTL predecessors
     assert windowed[1200] <= 1200 * TTL, windowed
-
-
-def test_bloom_filter_never_false_negative(spark):
-    rows = queries()["scale_bloom_filter_audit"](spark, SF0001).collect()
-    cells = {(r["is_member"], r["maybe_present"]): r["n"] for r in rows}
-    assert (True, False) not in cells, "Bloom filters must never miss a member"
-    assert cells.get((True, True), 0) > 0
-
-
-def test_hash_uniformity_chi2_matches_bruteforce(spark):
-    """Recomputes the md5-bucket histogram and the integer cross-multiplied
-    chi-square from first principles."""
-    import hashlib
-
-    keys = [
-        r["o_orderkey"]
-        for r in spark.read.parquet(SF0001 + "/orders.parquet").select("o_orderkey").collect()
-    ]
-    counts = Counter(
-        int(hashlib.md5(str(k).encode()).hexdigest()[:8], 16) % 64 for k in keys
-    )
-    n = len(keys)
-    chi2 = math.floor(
-        sum((64 * o - n) ** 2 for o in counts.values()) / (64.0 * n) * 1000 + 0.5
-    )
-    r = queries()["scale_hash_uniformity_chi2"](spark, SF0001).collect()[0]
-    assert r["n"] == n and r["n_buckets"] == len(counts)
-    assert r["spread"] == max(counts.values()) - min(counts.values())
-    assert r["chi2_x1000"] == chi2
-    assert r["uniform_at_p001"] == (chi2 < 111000)
-
-
-def test_ntile_rank_formula_exhaustive():
-    """distributed_ntile derives the bucket from (rank, n_total) with pure
-    integer arithmetic — check it against SQL ntile semantics (first n%k
-    buckets one row larger) for every n in 1..400 and several k, i.e.
-    every rank of every size: an off-by-one here would silently misbin
-    boundary rows at any scale."""
-    for k in (2, 3, 4, 7, 10, 16):
-        for n in range(1, 401):
-            rem, q = n % k, n // k
-            # ground truth: sizes ceil for first rem buckets, floor after
-            truth = []
-            for b in range(1, k + 1):
-                truth.extend([b] * ((q + 1) if b <= rem else q))
-            for rn in range(1, n + 1):
-                if rn <= rem * (q + 1):
-                    bin_ = (rn - 1) // (q + 1) + 1
-                else:
-                    bin_ = rem + (rn - rem * (q + 1) - 1) // max(q, 1) + 1
-                assert bin_ == truth[rn - 1], (n, k, rn, bin_, truth[rn - 1])
-
-
-# ---------------------------------------------------------------------------
-# global_order_stats branch-divergence bug (the round's worst find): the
-# offsets branch and the final-join branch each re-executed the range
-# exchange, and RangePartitioner's boundary sample depends on the upstream
-# aggregate's row order — which differs between the branches' column-pruned
-# plans.  At sf0.1 volume EVERY partition's count described different
-# contents than the rows being ranked; ranks interleaved silently (rfm
-# quintiles off by one for hundreds of customers).  Fixed by an eager
-# localCheckpoint fence pinning ONE physical layout for both branches.
-# ---------------------------------------------------------------------------
-
-
-def test_global_order_stats_ranks_are_a_permutation_in_order(spark, skewed_sf):
-    """On the exposing data (wide rollup + tie-heavy order key), the rank
-    column must be exactly 1..n AND walking ranks in order must never
-    violate the sort order — the unfenced form failed both (297 seam
-    violations)."""
-    from gcp_cloudsql_to_bigquery_spark.catalog import load
-    from gcp_cloudsql_to_bigquery_spark.operators.scale import global_order_stats
-    from pyspark.sql import functions as F
-
-    o = load(spark, skewed_sf, "orders")
-    tx = o.groupBy(F.col("o_custkey").alias("custkey")).agg(
-        F.max("o_orderdate").alias("last_order"),
-        F.count(F.lit(1)).alias("frequency"),
-    )
-    ranked = global_order_stats(
-        tx, [F.col("frequency").desc(), F.asc_nulls_first("custkey")]
-    )
-    rows = sorted((r["_rn"], r["frequency"], r["custkey"]) for r in ranked.collect())
-    assert [r[0] for r in rows] == list(range(1, len(rows) + 1))
-    keys = [(-r[1], r[2]) for r in rows]
-    assert keys == sorted(keys), "rank walk violates the sort order"
-
-
-# ---------------------------------------------------------------------------
-# integer-exact rank selection == percentile_disc (r16 buffer-agg fixes)
-# ---------------------------------------------------------------------------
-# elt_incremental_bookmark_extract and elt_range_partition_layout replaced
-# their GLOBAL percentile_disc aggregates (value->count buffer merged on a
-# single reducer — plan_audit invariant 5) with rank selection over
-# scale.global_order_stats: percentile_disc(p) == the smallest value whose
-# exact 1-based rank r satisfies r >= p*n, cross-multiplied to integers
-# (r*q >= n*p_num) so no double comparison exists on the Spark side.  The
-# registry oracles witness this against DuckDB's independent quantile_disc
-# on 8 data geometries; this net pins the equivalence ON CRAFTED EDGE
-# FIXTURES (exact-boundary n, duplicates straddling the cut, n=1, all-
-# equal values) directly against Spark's own percentile_disc aggregate,
-# so a future refactor of the rank arithmetic fails here first.
-
-
-@pytest.mark.parametrize(
-    "values",
-    [
-        list(range(1, 11)),            # n=10: 0.6*n exact integer boundary
-        list(range(1, 8)),             # n=7: ceil lands mid-gap
-        [5, 5, 5, 7, 7, 9, 9, 9, 9],   # duplicates straddling every cut
-        [42],                          # n=1: every percentile is the value
-        [3, 3, 3, 3],                  # all-equal, n divisible by 4
-        list(range(1, 6)),             # n=5: 0.25/0.75 non-integer ranks
-    ],
-)
-def test_rank_selection_matches_percentile_disc(spark, values):
-    from pyspark.sql import functions as F
-
-    from gcp_cloudsql_to_bigquery_spark.operators.scale import global_order_stats
-
-    df = spark.createDataFrame([(float(v),) for v in values], "x double")
-    ranked = global_order_stats(df, ["x"])
-    got = ranked.agg(
-        F.min(F.when(F.col("_rn") * 4 >= F.col("_n_total"), F.col("x"))).alias("p25"),
-        F.min(F.when(F.col("_rn") * 10 >= F.col("_n_total") * 6, F.col("x"))).alias("p60"),
-        F.min(F.when(F.col("_rn") * 4 >= F.col("_n_total") * 3, F.col("x"))).alias("p75"),
-    ).first()
-    want = df.agg(
-        F.expr("percentile_disc(0.25) WITHIN GROUP (ORDER BY x)").alias("p25"),
-        F.expr("percentile_disc(0.6) WITHIN GROUP (ORDER BY x)").alias("p60"),
-        F.expr("percentile_disc(0.75) WITHIN GROUP (ORDER BY x)").alias("p75"),
-    ).first()
-    assert (got.p25, got.p60, got.p75) == (want.p25, want.p60, want.p75), values

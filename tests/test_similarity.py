@@ -1,20 +1,9 @@
 """Similarity operator tests: IVF recall vs brute force, anchor-LSH
 candidate validity, blocked-cosine equivalence to direct computation."""
 
-import math
-
 import numpy as np
-import pyarrow as pa
-import pyarrow.parquet as pq
 
 from gcp_cloudsql_to_bigquery_spark.catalog import load
-from gcp_cloudsql_to_bigquery_spark.operators.similarity import (
-    _PQ_K,
-    _PQ_M,
-    _PQ_SUB,
-    _PQ_TOPK,
-    _pq_build_kernel,
-)
 from gcp_cloudsql_to_bigquery_spark.workload import queries
 from tests.conftest import SF0001
 
@@ -294,575 +283,3 @@ def test_pq_candidates_match_pq_topk(spark):
     want = sorted((r.query_id, r.neighbor_id, r.rnk) for r in top.collect())
     assert len(want) == 50
     assert got == want
-
-
-def test_label_centroid_arrow_matches_numpy(spark):
-    import numpy as np
-
-    from gcp_cloudsql_to_bigquery_spark.catalog import load
-
-    got = {
-        (r["label"], r["dim"]): (r["n"], r["centroid_micro"])
-        for r in queries()["embedding_label_centroid_arrow"](spark, SF0001).collect()
-    }
-    raw = load(spark, SF0001, "embeddings").select("label", "embedding").collect()
-    by_label = {}
-    for r in raw:
-        by_label.setdefault(r["label"], []).append(np.asarray(r["embedding"], dtype="float64"))
-    for label, vecs in by_label.items():
-        m = np.floor(np.stack(vecs) * 1e6 + 0.5).astype("int64")
-        n = m.shape[0]
-        cent = (2 * m.sum(axis=0) + n) // (2 * n)
-        for d in range(m.shape[1]):
-            assert got[(label, d + 1)] == (n, cent[d])
-
-
-# ----------------------------------------------------------------------- PCA
-
-
-def test_pca_aligns_with_numpy_eigenvector(spark):
-    import numpy as np
-
-    emb = load(spark, SF0001, "embeddings").select("vec_id", "embedding").collect()
-    X = np.array([r[1] for r in emb], dtype=np.float64)
-    Xc = X - X.mean(axis=0)
-    cov = Xc.T @ Xc
-    vals = np.linalg.eigvalsh(cov)
-    rows = sorted(queries()["embedding_pca_top_component"](spark, SF0001).collect(), key=lambda r: r["dim"])
-    v = np.array([r["pc1_x1e9"] for r in rows], dtype=np.float64)
-    v /= np.linalg.norm(v)
-    rq = v @ cov @ v
-    ones = np.ones(64) / 8.0
-    # this corpus's spectrum is nearly flat (λ1/λ2 ≈ 1.07), so 3 rounds
-    # cannot pin the exact eigenvector — assert the power-iteration
-    # INVARIANT instead: the Rayleigh quotient amplifies strictly past the
-    # start vector and lands in the top of the spectrum
-    assert rq > ones @ cov @ ones, (rq, vals[-1])
-    assert rq >= 0.75 * vals[-1], (rq, vals[-1])
-    assert rq <= vals[-1] + 1e-9
-
-
-def test_quantize_int8_matches_bruteforce(spark):
-    """Symmetric int8 quantization: per-vector abs-max scale, round-half-up
-    codes, max reconstruction error — recomputed in numpy-free Python."""
-    rows = spark.read.parquet(SF0001 + "/embeddings.parquet").select(
-        "vec_id", "embedding"
-    ).collect()
-    expect = {}
-    for r in rows:
-        v = [float(x) for x in r["embedding"]]
-        scale = max(abs(x) for x in v)
-        q = [math.floor(x / scale * 127 + 0.5) for x in v]
-        err = max(abs(x - qi * scale / 127) for x, qi in zip(v, q))
-        expect[r["vec_id"]] = (
-            math.floor(scale * 1e6 + 0.5),
-            ",".join(str(int(c)) for c in q),
-            math.floor(err * 1e6 + 0.5),
-        )
-    got = {
-        r["vec_id"]: (r["scale_micro"], r["q"], r["err_micro"])
-        for r in queries()["embedding_quantize_int8"](spark, SF0001).collect()
-    }
-    assert set(got) == set(expect)
-    for k, (sm, q, em) in expect.items():
-        gsm, gq, gem = got[k]
-        assert gq == q, k
-        assert abs(gsm - sm) <= 1 and abs(gem - em) <= 1, (k, gsm, sm, gem, em)
-
-
-def test_matryoshka_rerank_matches_numpy(spark):
-    """Coarse-by-16-dim-prefix then full-dim rerank, replayed in numpy.
-    Also proves no cosine in this corpus sits within 1e-9 of a 6dp
-    rounding boundary, so the implementation's round-half-even and the
-    oracle's round-half-up cannot diverge here."""
-    t = pq.read_table(SF0001 + "/embeddings.parquet")
-    ids = np.array(t.column("vec_id").to_pylist(), dtype=np.int64)
-    mat = np.stack([np.asarray(v, dtype=np.float64) for v in t.column("embedding").to_pylist()])
-    order = np.argsort(ids)
-    ids, mat = ids[order], mat[order]
-    D0, C, K = 16, 20, 5
-
-    def cos_rounded(a, b):
-        c = float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b)))
-        # rounding-boundary guard: no cosine in this corpus sits near a
-        # x.5e-6 tie, so half-up (oracle) and half-even (numpy/python)
-        # produce the same 6dp value and the witness is mode-independent
-        frac = (c * 1e6) % 1.0
-        assert abs(frac - 0.5) > 1e-6, c
-        return round(c, 6)
-
-    want = set()
-    for qi in np.where(ids < 10)[0]:
-        scored = [
-            (cos_rounded(mat[qi][:D0], mat[ci][:D0]), int(ids[ci]))
-            for ci in range(len(ids)) if ci != qi
-        ]
-        coarse = sorted(scored, key=lambda t2: (-t2[0], t2[1]))[:C]
-        rer = [
-            (cos_rounded(mat[qi], mat[np.searchsorted(ids, nid)]), nid, crnk + 1)
-            for crnk, (_, nid) in enumerate(coarse)
-        ]
-        for rnk, (c, nid, crnk) in enumerate(
-            sorted(rer, key=lambda t3: (-t3[0], t3[1]))[:K], start=1
-        ):
-            want.add((int(ids[qi]), nid, crnk, c, rnk))
-    got = {
-        (r["query_id"], r["neighbor_id"], r["coarse_rnk"],
-         round(r["cosine"], 6), r["rnk"])
-        for r in queries()["ann_matryoshka_rerank"](spark, SF0001).collect()
-    }
-    assert got == want and len(want) == 10 * K
-
-
-def test_ann_recall_report_matches_manual_intersection(spark):
-    """The report layer (join/agg/floor) witnessed against a manual
-    intersection: numpy exact top-5 vs each method's own collected top-5."""
-    import math
-
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    from gcp_cloudsql_to_bigquery_spark.operators import similarity as S
-
-    tbl = pq.read_table(f"{SF0001}/embeddings.parquet", columns=["vec_id", "embedding"])
-    ids = np.array(tbl["vec_id"].to_pylist())
-    mat = np.array(tbl["embedding"].to_pylist(), dtype=np.float64)
-    order = np.argsort(ids)
-    ids, mat = ids[order], mat[order]
-    norms = np.linalg.norm(mat, axis=1)
-    q_mask = ids < 10
-    cos = np.round(mat[q_mask] @ mat.T / np.outer(norms[q_mask], norms), 6)
-    exact = set()
-    for qi, qid in enumerate(ids[q_mask]):
-        mask = ids != qid
-        cand_ids, cand_cos = ids[mask], cos[qi][mask]
-        for j in np.lexsort((cand_ids, -cand_cos))[:5]:
-            exact.add((int(qid), int(cand_ids[j])))
-    n_q = int(q_mask.sum())
-    assert len(exact) == 5 * n_q
-
-    rep = {r["method"]: r for r in S.ann_recall_report(spark, SF0001).collect()}
-    fns = {
-        "ann_ivf_topk": S.ann_ivf_topk,
-        "ann_ivf_kmeans_topk": S.ann_ivf_kmeans_topk,
-        "ann_ivfpq_topk": S.ann_ivfpq_topk,
-        "ann_matryoshka_rerank": S.ann_matryoshka_rerank,
-        "ann_pq_topk": S.ann_pq_topk,
-        "ann_pq_rerank": S.ann_pq_rerank,
-    }
-    assert set(rep) == set(fns)
-    for m, fn in fns.items():
-        approx = {
-            (r["query_id"], r["neighbor_id"]) for r in fn(spark, SF0001).collect()
-        }
-        hits = len(exact & approx)
-        assert rep[m]["n_queries"] == n_q, m
-        assert rep[m]["hits"] == hits, (m, rep[m]["hits"], hits)
-        assert rep[m]["recall_at5_x1e4"] == math.floor(
-            hits * 1e4 / len(exact) + 0.5
-        ), m
-
-
-def test_zero_vector_excluded_from_cosine_ranking(spark, hostile_sf):
-    """vec_id 0 is the all-zero vector: it must appear in NEITHER the query
-    nor the neighbor column of any cosine-ranking ANN output (the nonzero()
-    contract), and every emitted cosine must be non-NULL."""
-    import __spark_entry__ as entry
-
-    for name in ("ann_bruteforce_topk", "ann_ivf_topk"):
-        rows = entry.queries()[name](spark, hostile_sf).collect()
-        assert rows, name
-        for r in rows:
-            assert r["query_id"] != 0, name
-            assert r["neighbor_id"] != 0, name
-            assert r["cosine"] is not None, name
-
-
-# ---------------------------------------------------------------------------
-# _nonzero_sql interpolation drift-guard (ADVICE r12, low)
-# ---------------------------------------------------------------------------
-
-
-def test_nonzero_contract_interpolated_into_oracles():
-    from gcp_cloudsql_to_bigquery_spark.operators.similarity import _nonzero_sql
-
-    import __spark_entry__ as entry
-
-    oracles = entry.oracle_sql()
-    for name in ("ann_bruteforce_topk", "ann_ivf_topk", "ann_ivf_kmeans_topk",
-                 "dedup_semdedup"):
-        assert _nonzero_sql() in oracles[name], name
-    assert _nonzero_sql("v") in oracles["ann_pq_rerank"]
-
-
-def test_pq_topk_deterministic_across_runs(spark):
-    """Determinism only: two runs of the registered query agree and yield
-    exactly 10 x 5 ranked rows.  (ADVICE r14 low: this test's old name
-    claimed scalar-vs-vector agreement it never checked — the REAL
-    agreement test,
-    test_pq_kernel_scalar_and_vector_paths_agree_with_reference, drives
-    the extracted _pq_build_kernel on mixed clean/degenerate Arrow
-    batches against a pure-Python reference.)"""
-    from gcp_cloudsql_to_bigquery_spark.workload import queries
-
-    a = queries()["ann_pq_topk"](spark, SF0001).collect()
-    b = queries()["ann_pq_topk"](spark, SF0001).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-    assert len(a) == 50
-
-
-DIM = _PQ_M * _PQ_SUB
-
-
-# ---------------------------------------------------------------------------
-# Pure-Python reference: same contracts as the kernel docstrings state
-# (sequential-fold dot, NULL poisons, NULL-q-wins argmin with lowest-j ties,
-# ADC sum skips NULL table entries, all-NULL -> None).
-# ---------------------------------------------------------------------------
-
-
-def _pydot(a, b):
-    if a is None or b is None:
-        return None
-    s = 0.0
-    for i in range(max(len(a), len(b))):
-        x = a[i] if i < len(a) else None
-        y = b[i] if i < len(b) else None
-        if x is None or y is None:
-            return None
-        s += x * y
-    return s
-
-
-def _sub_of(v, m):
-    return None if v is None else v[m * _PQ_SUB : m * _PQ_SUB + _PQ_SUB]
-
-
-def _q_of(sub, cw):
-    d1, dx, d3 = _pydot(sub, sub), _pydot(sub, cw), _pydot(cw, cw)
-    if d1 is None or dx is None or d3 is None:
-        return None
-    return int(math.floor((d1 - 2 * dx + d3) * 1e6 + 0.5))
-
-
-def _ref_pairs(head, ids, vecs):
-    """All (query_id, neighbor_id) -> approx (or None) for one batch."""
-    cb_js = sorted(head)
-    q_ids = [j for j in cb_js if j < 10]
-    out = {}
-    for rid, vec in zip(ids, vecs):
-        codes = []
-        for m in range(_PQ_M):
-            best = None
-            for j in cb_js:
-                q = _q_of(_sub_of(vec, m), _sub_of(head[j], m))
-                key = (1, q, j) if q is not None else (0, 0, j)
-                if best is None or key < best:
-                    best = key
-            codes.append(best[2])
-        for qid in q_ids:
-            if rid == qid:
-                continue
-            terms = [
-                _q_of(_sub_of(head[qid], m), _sub_of(head[codes[m]], m))
-                for m in range(_PQ_M)
-            ]
-            nn = [t for t in terms if t is not None]
-            out[(qid, rid)] = sum(nn) if nn else None
-    return out
-
-
-def _run_kernel(head, ids, vecs, topk=None):
-    kernel = _pq_build_kernel(head, **({} if topk is None else {"topk": topk}))
-    assert kernel is not None
-    batch = pa.RecordBatch.from_arrays(
-        [pa.array(ids, type=pa.int64()), pa.array(vecs, type=pa.list_(pa.float64()))],
-        names=["vec_id", "v"],
-    )
-    rows = []
-    for out in kernel(iter([batch])):
-        tbl = out.to_pydict()
-        rows += list(
-            zip(tbl["query_id"], tbl["neighbor_id"], tbl["approx_d2_x1e6"])
-        )
-    return rows
-
-
-def _mk_head(rng):
-    return {j: [float(x) for x in rng.normal(size=DIM)] for j in range(_PQ_K)}
-
-
-# ---------------------------------------------------------------------------
-# ADVICE r14 medium — the exact triggering geometry
-# ---------------------------------------------------------------------------
-
-
-def test_pq_kernel_trailing_null_element_at_buffer_end_is_not_missed():
-    """Row 0 is 64 elements whose LAST element is NULL and ends exactly at
-    the values-buffer end; rows 1-2 are a null row and an empty row (both
-    contribute no values).  Pre-fix, the clamped reduceat counted row 0 as
-    clean -> NaN -> garbage int64 code.  Post-fix it must route to the
-    scalar path and match the reference exactly."""
-    rng = np.random.default_rng(15)
-    head = _mk_head(rng)
-    v0 = [float(x) for x in rng.normal(size=DIM)]
-    v0[-1] = None
-    ids = [100, 101, 102]
-    vecs = [v0, None, []]
-    got = {(q, n): d for q, n, d in _run_kernel(head, ids, vecs, topk=10**9)}
-    want = _ref_pairs(head, ids, vecs)
-    assert got == want
-    # load-bearing: the fixture really does exercise the old bug's geometry
-    varr = pa.array(vecs, type=pa.list_(pa.float64()))
-    offs = varr.offsets.to_numpy(zero_copy_only=False)
-    elem_null = varr.values.is_null().to_numpy(zero_copy_only=False)
-    assert offs[1] == len(elem_null) and elem_null[-1]
-    old = np.add.reduceat(elem_null, np.minimum(offs[:-1], len(elem_null) - 1))
-    assert old[0] == 0, "old mask must miss the trailing NULL (the r14 bug)"
-
-
-# ---------------------------------------------------------------------------
-# scalar-vs-vector agreement (the honest version of the r14 test)
-# ---------------------------------------------------------------------------
-
-
-def test_pq_kernel_scalar_and_vector_paths_agree_with_reference():
-    """One batch mixing 40 clean rows (vectorized path) with degenerate
-    rows (scalar path: null row, empty, short, long, mid-NULL, trailing-
-    NULL): every emitted (query, neighbor, approx) triple must equal the
-    pure-Python reference, which computes BOTH kinds of row one way."""
-    rng = np.random.default_rng(151)
-    head = _mk_head(rng)
-    ids, vecs = [], []
-    for i in range(40):  # clean -> vectorized
-        ids.append(100 + i)
-        vecs.append([float(x) for x in rng.normal(size=DIM)])
-    degenerate = [
-        None,  # null row
-        [],  # empty
-        [1.0] * (DIM - 1),  # short
-        [0.5] * (DIM + 3),  # long
-    ]
-    mid = [float(x) for x in rng.normal(size=DIM)]
-    mid[17] = None  # NULL inside subspace 1
-    tail = [float(x) for x in rng.normal(size=DIM)]
-    tail[-1] = None  # trailing NULL
-    degenerate += [mid, tail]
-    for i, v in enumerate(degenerate):
-        ids.append(200 + i)
-        vecs.append(v)
-    got = {(q, n): d for q, n, d in _run_kernel(head, ids, vecs, topk=10**9)}
-    want = _ref_pairs(head, ids, vecs)
-    assert got == want
-
-
-# ---------------------------------------------------------------------------
-# batch-local top-k boundedness + exactness (VERDICT r14 item 2)
-# ---------------------------------------------------------------------------
-
-
-def test_pq_kernel_emits_at_most_topk_rows_per_query_per_batch():
-    rng = np.random.default_rng(152)
-    head = _mk_head(rng)
-    ids = list(range(100, 300))
-    vecs = [[float(x) for x in rng.normal(size=DIM)] for _ in ids]
-    # a couple of degenerate rows so the NULL-distance branch is in play
-    vecs[0] = None
-    vecs[1] = [1.0] * (DIM - 1)
-    rows = _run_kernel(head, ids, vecs)  # default topk=_PQ_TOPK
-    per_q = {}
-    for q, n, d in rows:
-        per_q.setdefault(q, []).append((n, d))
-    assert per_q and all(len(v) <= _PQ_TOPK for v in per_q.values())
-    # and the kept rows are the TRUE batch top-k under the window order
-    # (approx ASC NULLS FIRST, neighbor ASC)
-    want = _ref_pairs(head, ids, vecs)
-    for qid, kept in per_q.items():
-        cand = [(n, d) for (q, n), d in want.items() if q == qid]
-        cand.sort(key=lambda t: (t[1] is not None, t[1] or 0, t[0]))
-        assert sorted(kept) == sorted(cand[:_PQ_TOPK])
-
-
-# ---------------------------------------------------------------------------
-# NULL-codeword argmin convention (oracle-inexpressible; pinned here)
-# ---------------------------------------------------------------------------
-
-
-def test_pq_null_codeword_convention():
-    """A NULL element inside a vec_id<16 codebook vector makes that
-    codeword's q NULL against EVERY row, and NULL-q wins the argmin at
-    the lowest such j (Spark ASC-nulls-first).  DuckDB cannot state this
-    case (list_inner_product errors on NULL elements), so the convention
-    is pinned Spark-side: clean rows take the fast cb_null path, scalar
-    rows take code_py — both must agree with the reference."""
-    rng = np.random.default_rng(154)
-    head = _mk_head(rng)
-    head[12][5] = None  # subspace 0 of codeword 12 degenerates
-    head[14][3] = None  # a second NULL codeword: min(null_js) must win
-    ids = [100, 101, 102]
-    clean = [float(x) for x in rng.normal(size=DIM)]
-    short = [1.0] * (DIM - 2)  # scalar path
-    tail = [float(x) for x in rng.normal(size=DIM)]
-    tail[-1] = None  # scalar path
-    got = {(q, n): d for q, n, d in _run_kernel(head, ids, [clean, short, tail], topk=10**9)}
-    want = _ref_pairs(head, ids, [clean, short, tail])
-    assert got == want
-    # and the convention itself, stated directly: for a clean sub in
-    # subspace 0, codeword 12 (the lowest NULL-q j) is the argmin even
-    # though numeric codewords exist
-    best = None
-    for j in sorted(head):
-        q = _q_of(_sub_of(clean, 0), _sub_of(head[j], 0))
-        key = (1, q, j) if q is not None else (0, 0, j)
-        if best is None or key < best:
-            best = key
-    assert best[2] == 12
-
-
-def test_pq_build_kernel_empty_head_returns_none():
-    assert _pq_build_kernel({}) is None
-    # codewords but no queries (all ids >= 10): adc CTE empty on both sides
-    rng = np.random.default_rng(155)
-    assert (
-        _pq_build_kernel({12: [float(x) for x in rng.normal(size=DIM)]}) is None
-    )
-
-
-# ---------------------------------------------------------------------------
-# _pq_head_from_parquet parity with the Spark collect it replaced
-# ---------------------------------------------------------------------------
-
-
-def _collect_head(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from gcp_cloudsql_to_bigquery_spark.catalog import load
-    from gcp_cloudsql_to_bigquery_spark.operators.similarity import _PQ_K
-
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    return {
-        int(r["vec_id"]): r["v"] for r in e.filter(F.col("vec_id") < _PQ_K).collect()
-    }
-
-
-def test_pq_head_parquet_read_matches_spark_collect(spark):
-    from gcp_cloudsql_to_bigquery_spark.operators.similarity import (
-        _pq_head_from_parquet,
-    )
-    from gcp_cloudsql_to_bigquery_spark.workload import queries
-
-    assert _pq_head_from_parquet(SF0001) == _collect_head(spark, SF0001)
-    # and the head drives the full ranked result: 10 queries x top 5
-    assert len(queries()["ann_pq_topk"](spark, SF0001).collect()) == 50
-
-
-def test_pq_head_parquet_read_matches_on_degenerate_rows(
-    spark, nullelem_embeddings_sf
-):
-    """NULL elements, empty lists, short vectors, and the row-NULL all
-    round-trip identically through pyarrow and the Spark collect (ids
-    100-106 of the fixture are inside the vec_id<16 head only when <16,
-    but the full-dict compare catches any divergence either way)."""
-    from gcp_cloudsql_to_bigquery_spark.operators.similarity import (
-        _pq_head_from_parquet,
-    )
-
-    got = _pq_head_from_parquet(nullelem_embeddings_sf)
-    assert got == _collect_head(spark, nullelem_embeddings_sf)
-
-
-def test_pq_head_parquet_read_empty_tier(tmp_path):
-    """Zero-row embeddings -> empty head -> ann_pq_topk's empty-result
-    branch (the day-one-pipeline contract)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from gcp_cloudsql_to_bigquery_spark.operators.similarity import (
-        _pq_head_from_parquet,
-    )
-
-    t = pa.table(
-        {
-            "vec_id": pa.array([], pa.int64()),
-            "embedding": pa.array([], pa.list_(pa.float32())),
-            "label": pa.array([], pa.int32()),
-        }
-    )
-    pq.write_table(t, tmp_path / "embeddings.parquet")
-    assert _pq_head_from_parquet(str(tmp_path)) == {}
-
-
-# ---------------------------------------------------------------------------
-# per-row fast/exact split in the label-centroid kernel
-# ---------------------------------------------------------------------------
-
-_D = 64
-
-
-def _ref_centroids(vecs):
-    """Pure-Python oracle semantics: per dim, sum floor(x*1e6+0.5) over
-    NON-NULL elements at that dim; n = len(vecs); centroid
-    (2S+n)//(2n), NULL when no element contributed."""
-    n = len(vecs)
-    out = []
-    for di in range(_D):
-        s, c = 0, 0
-        for v in vecs:
-            if v is not None and di < len(v) and v[di] is not None:
-                s += int(math.floor(v[di] * 1e6 + 0.5))
-                c += 1
-        out.append((2 * s + n) // (2 * n) if c else None)
-    return out
-
-
-def _drive_kernel(vecs, label=7):
-    import pyarrow as pa
-
-    from gcp_cloudsql_to_bigquery_spark.operators.similarity import (
-        _label_centroid_kernel,
-    )
-
-    t = pa.table(
-        {
-            "label": pa.array([label] * len(vecs), pa.int32()),
-            "v": pa.array(vecs, pa.list_(pa.float64())),
-        }
-    )
-    got = _label_centroid_kernel(t)
-    assert got.column("n").to_pylist() == [len(vecs)] * _D
-    assert got.column("dim").to_pylist() == list(range(1, _D + 1))
-    return got.column("centroid_micro").to_pylist()
-
-
-def test_centroid_kernel_mixed_group_matches_reference():
-    """One degenerate row in a 500-row group: the vectorized clean subset
-    plus the scalar tail must combine to EXACTLY the pure-Python
-    per-dim sums (ADVICE r15: per-row split, not per-group)."""
-    import numpy as np
-
-    rng = np.random.default_rng(16)
-    clean = [[float(x) for x in rng.normal(size=_D)] for _ in range(500)]
-    degenerate = [
-        clean[0][:5] + [None] + clean[0][6:],  # mid NULL
-        clean[1][:32],  # short vector
-        [None] * _D,  # all-NULL
-        [],  # empty
-        [float(x) for x in rng.normal(size=_D + 9)],  # long vector
-    ]
-    vecs = clean[: len(clean) // 2] + degenerate + clean[len(clean) // 2 :]
-    assert _drive_kernel(vecs) == _ref_centroids(vecs)
-
-
-def test_centroid_kernel_all_degenerate_group_matches_reference():
-    vecs = [[None] * _D, [], [1.25] * 10, [None, 2.5] * 32]
-    assert _drive_kernel(vecs) == _ref_centroids(vecs)
-
-
-def test_centroid_kernel_clean_group_unchanged():
-    import numpy as np
-
-    rng = np.random.default_rng(61)
-    vecs = [[float(x) for x in rng.normal(size=_D)] for _ in range(64)]
-    assert _drive_kernel(vecs) == _ref_centroids(vecs)

@@ -1,12 +1,6 @@
 """Source/sink tests: JDBC against embedded Derby (live) + option assembly,
 partition pruning on the date layout, streaming foreachBatch sink."""
 
-import datetime
-import math
-import os
-import random
-import string
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -17,8 +11,7 @@ from gcp_cloudsql_to_bigquery_spark.sources.jdbc import (
     derby_create_nation,
     derby_source,
 )
-from gcp_cloudsql_to_bigquery_spark.workload import queries
-from tests.conftest import SF0001, SF001, parquet_col
+from tests.conftest import SF0001
 
 
 def _src():
@@ -324,626 +317,3 @@ def test_stream_query_stops_only_between_triggers():
     q = FakeQuery([True] * 1000)
     _stop_between_triggers(q, time.time() - 1)
     assert q.calls == ["status", "stop", "await"]
-
-
-def test_range_partition_layout_disjoint_ordered_balanced(spark):
-    rows = {r["pid"]: r for r in queries()["elt_range_partition_layout"](spark, SF0001).collect()}
-    assert set(rows) == {0, 1, 2, 3}
-    # ranges disjoint and ordered
-    for pid in range(3):
-        assert rows[pid]["hi"] <= rows[pid + 1]["lo"]
-    # ~25% balance (disc boundaries on distinct-ish values)
-    total = sum(r["n"] for r in rows.values())
-    for r in rows.values():
-        assert abs(r["n"] - total / 4) <= total * 0.05 + 2
-
-
-# ------------------------------------------------- streaming python source
-
-
-def test_export_queue_reader_offset_contract():
-    from gcp_cloudsql_to_bigquery_spark.sources.pysource import ExportQueueStreamReader
-
-    r = ExportQueueStreamReader({"path": f"{SF0001}/customer.parquet"})
-    off = r.initialOffset()
-    seen = []
-    for _ in range(6):
-        rows, nxt = r.read(off)
-        rows = list(rows)
-        if nxt == off:
-            assert rows == []  # drained queue must not advance
-            break
-        assert rows, "advancing offset must carry rows at this SF"
-        seen.extend(rows)
-        off = nxt
-    ks = [k for k, _, _ in seen]
-    assert len(ks) == len(set(ks))  # exactly-once across blocks
-    # block lineage is consistent with key ranges
-    for k, _, block in seen:
-        assert k // 500 == block
-
-
-# --- §2A #27: secret resolution -------------------------------------------
-
-
-def test_secret_resolution_chain(spark, monkeypatch):
-    """conf wins over env wins over default; missing -> loud SecretNotFound
-    naming the whole chain (get_secret.py raises on a missing version too —
-    never a silent empty credential)."""
-    from gcp_cloudsql_to_bigquery_spark.sources.secrets import (
-        SecretNotFound,
-        resolve_secret,
-    )
-
-    monkeypatch.setenv("DB_PASSWORD", "from-env")
-    # 1. conf beats env
-    spark.conf.set("spark.secrets.db.password", "from-conf")
-    try:
-        assert resolve_secret(spark, "db.password") == "from-conf"
-    finally:
-        spark.conf.unset("spark.secrets.db.password")
-    # 2. env when conf is absent (name mangling: db.password -> DB_PASSWORD)
-    assert resolve_secret(spark, "db.password") == "from-env"
-    # 3. default only when both are absent
-    monkeypatch.delenv("DB_PASSWORD")
-    assert resolve_secret(spark, "db.password", default="") == ""
-    # 4. loud failure, chain in the message
-    with pytest.raises(SecretNotFound, match="spark.secrets.db.password"):
-        resolve_secret(spark, "db.password")
-
-
-def test_jdbc_source_from_conf_reads_live_derby(spark, tmp_path):
-    """The full §2A #27 wiring: credentials injected into spark.conf, a
-    JdbcSource assembled purely from them, and a REAL scan through it
-    (embedded Derby) returning the source-of-truth rows."""
-    from gcp_cloudsql_to_bigquery_spark.sources.jdbc import (
-        DERBY_DRIVER,
-        derby_create_nation,
-    )
-    from gcp_cloudsql_to_bigquery_spark.sources.secrets import jdbc_source_from_conf
-
-    dbdir = derby_create_nation(spark, SF0001)
-    spark.conf.set("spark.secrets.db.url", f"jdbc:derby:{dbdir}")
-    spark.conf.set("spark.secrets.db.user", "app")
-    spark.conf.set("spark.secrets.db.password", "")
-    try:
-        src = jdbc_source_from_conf(spark, "db")
-        src.extra["driver"] = DERBY_DRIVER
-        got = src.read(spark, "nation").count()
-    finally:
-        for k in ("db.url", "db.user", "db.password"):
-            spark.conf.unset("spark.secrets." + k)
-    assert got == load(spark, SF0001, "nation").count() == 25
-
-
-# --- §2A #26: retention-sweep enforcement ----------------------------------
-
-
-@pytest.fixture()
-def aged_layout(spark, tmp_path):
-    """A date-partitioned events layout whose partition ages are KNOWN
-    relative to a fixed as_of date (no wall clock anywhere)."""
-    from gcp_cloudsql_to_bigquery_spark.sources.files import write_date_partitioned
-
-    ev = load(spark, SF0001, "events").select("event_id", "user_id", "ts", "value")
-    base = str(tmp_path / "aged")
-    write_date_partitioned(ev, base, "ts", "day")
-    days = sorted(
-        d.split("=", 1)[1] for d in os.listdir(base) if d.startswith("export_date=")
-    )
-    assert len(days) >= 4, days
-    return base, days
-
-
-def test_retention_sweep_dry_run_deletes_nothing(spark, aged_layout):
-    from gcp_cloudsql_to_bigquery_spark.sources.files import retention_sweep
-
-    base, days = aged_layout
-    as_of = datetime.date.fromisoformat(days[-1])
-    max_age = (as_of - datetime.date.fromisoformat(days[2])).days
-    before = spark.read.parquet(base).count()
-    report = retention_sweep(spark, base, max_age, as_of, dry_run=True)
-    # report marks exactly the partitions at least max_age old (GCS
-    # lifecycle semantics: condition {age = N} fires at age >= N)
-    would = {r["partition"] for r in report if r["action"] == "would_delete"}
-    expect = {
-        f"export_date={d}"
-        for d in days
-        if (as_of - datetime.date.fromisoformat(d)).days >= max_age
-    }
-    assert would == expect and expect
-    assert all(r["action"] in ("would_delete", "kept") for r in report)
-    # ... and nothing was touched
-    assert spark.read.parquet(base).count() == before
-    assert all(r["bytes"] > 0 for r in report)
-
-
-def test_retention_sweep_enforces_and_preserves_rest(spark, aged_layout):
-    from gcp_cloudsql_to_bigquery_spark.sources.files import retention_sweep
-
-    base, days = aged_layout
-    as_of = datetime.date.fromisoformat(days[-1])
-    cutoff = datetime.date.fromisoformat(days[2])
-    max_age = (as_of - cutoff).days
-    keep_rows = (
-        spark.read.parquet(base)
-        .filter(F.col("export_date") > F.lit(cutoff.isoformat()))
-        .count()
-    )
-    report = retention_sweep(spark, base, max_age, as_of, dry_run=False)
-    deleted = {r["partition"] for r in report if r["action"] == "deleted"}
-    assert deleted == {
-        f"export_date={d}"
-        for d in days
-        if (as_of - datetime.date.fromisoformat(d)).days >= max_age
-    }
-    left = sorted(d for d in os.listdir(base) if d.startswith("export_date="))
-    assert left == [
-        f"export_date={d}"
-        for d in days
-        if (as_of - datetime.date.fromisoformat(d)).days < max_age
-    ]
-    # surviving data is byte-complete: same rows as the static filter
-    assert spark.read.parquet(base).count() == keep_rows
-
-
-def test_retention_sweep_never_deletes_unparseable(spark, aged_layout):
-    """A malformed partition dir degrades to a report line, never a delete —
-    the lifecycle-rule failure mode (silently matching the wrong objects)
-    is structurally impossible."""
-    from gcp_cloudsql_to_bigquery_spark.sources.files import retention_sweep
-
-    base, days = aged_layout
-    bad = os.path.join(base, "export_date=not-a-date")
-    os.makedirs(bad)
-    with open(os.path.join(bad, "orphan.parquet"), "w") as f:
-        f.write("x")
-    as_of = datetime.date.fromisoformat(days[-1])
-    report = retention_sweep(spark, base, 0, as_of, dry_run=False)
-    byp = {r["partition"]: r["action"] for r in report}
-    assert byp["export_date=not-a-date"] == "skipped_unparseable"
-    assert os.path.exists(bad)
-    # every parseable partition (age >= 0, i.e. all of them) was still
-    # enforced around the malformed one
-    assert all(
-        a == "deleted" for p, a in byp.items() if p != "export_date=not-a-date"
-    )
-
-
-# --- BigQuery connector wiring (VERDICT r6 item 7) -------------------------
-
-
-def test_bigquery_write_options_reference_faithful():
-    """The option dict mirrors bq-importer's load-job config: indirect mode
-    stages via a GCS bucket (the reference's csv_exports_staging role) and
-    WRITE_TRUNCATE is the overwrite SaveMode, not an option."""
-    from gcp_cloudsql_to_bigquery_spark.sources.bigquery import (
-        bigquery_write_options,
-    )
-
-    opts = bigquery_write_options(
-        "proj.dataset.nation", temporary_gcs_bucket="staging"
-    )
-    assert opts == {
-        "table": "proj.dataset.nation",
-        "writeMethod": "indirect",
-        "createDisposition": "CREATE_IF_NEEDED",
-        "temporaryGcsBucket": "staging",
-        "intermediateFormat": "parquet",
-    }
-    direct = bigquery_write_options("d.t", write_method="direct")
-    assert "temporaryGcsBucket" not in direct and direct["writeMethod"] == "direct"
-    # indirect without a bucket is a config error, caught at assembly
-    with pytest.raises(ValueError, match="temporary_gcs_bucket"):
-        bigquery_write_options("d.t")
-    # extra may not silently override an explicitly-passed option
-    with pytest.raises(ValueError, match="already set"):
-        bigquery_write_options("d.t", write_method="direct",
-                               extra={"table": "other.ds.t2"})
-    # ... but documented options absent from the positional args pass through
-    ranged = bigquery_write_options(
-        "d.t", write_method="direct",
-        extra={"partitionRangeStart": "0", "partitionRangeEnd": "1000",
-               "partitionRangeInterval": "10", "credentials": "base64..."},
-    )
-    assert ranged["partitionRangeInterval"] == "10"
-    # unknown options fail fast instead of reaching the API as typos
-    with pytest.raises(ValueError, match="unknown"):
-        bigquery_write_options("d.t", write_method="direct",
-                               extra={"tempraryGcsBucket": "oops"})
-
-
-def test_bigquery_writer_configured_and_reaches_loader(spark):
-    """bigquery_writer returns a configured, unexecuted writer; driving it
-    with .save() must reach Spark's datasource resolution and fail on the
-    absent jar BY NAME — real wiring, no pretended execution."""
-    from gcp_cloudsql_to_bigquery_spark.sources.bigquery import bigquery_writer
-
-    n = load(spark, SF0001, "nation")
-    w = bigquery_writer(n, "proj.dataset.nation", write_method="direct",
-                        extra={"clusteredFields": "n_regionkey"})
-    with pytest.raises(Exception, match="(?i)bigquery"):
-        w.save()
-
-
-def test_retention_sweep_driven_by_tiering_plan(spark, aged_layout):
-    """The two halves of §2A #26 compose: elt_storage_tiering_plan is the
-    DECISION (cold = older than 21 days vs the newest partition) and
-    retention_sweep is the ENFORCEMENT — sweeping with the plan's own
-    cutoff deletes exactly the partition count the plan classified cold.
-    The plan's cold tier is age > 21; the sweep deletes age >= N (GCS
-    lifecycle semantics), so the matching sweep argument is 22."""
-    from gcp_cloudsql_to_bigquery_spark.ingest.queries import elt_storage_tiering_plan
-    from gcp_cloudsql_to_bigquery_spark.sources.files import retention_sweep
-
-    base, days = aged_layout
-    plan = {r["tier"]: r for r in elt_storage_tiering_plan(spark, SF0001).collect()}
-    as_of = max(datetime.date.fromisoformat(d) for d in days)
-    assert plan["hot"]["newest_day"].isoformat() == as_of.isoformat()
-    report = retention_sweep(spark, base, 22, as_of, dry_run=True)
-    would = [r for r in report if r["action"] == "would_delete"]
-    if "cold" in plan:
-        assert len(would) == plan["cold"]["n_partitions"]
-        assert max(r["partition"].split("=")[1] for r in would) == (
-            plan["cold"]["newest_day"].isoformat()
-        )
-    else:
-        assert not would
-
-
-def test_python_datasource_stream_delivers_each_key_once(spark):
-    """Exactly-once block delivery of the streaming Python data source at
-    sf0.01 (1500 keys -> 3 distinct 500-key blocks, so offset advancement
-    is exercised across multiple micro-batches): every customer key lands
-    exactly once, with its acctbal in integer cents and the block lineage
-    k // 500 the offset contract promises."""
-    keys = parquet_col(SF001, "customer", "c_custkey")
-    bals = parquet_col(SF001, "customer", "c_acctbal")
-    want = {
-        k: (math.floor(b * 100 + 0.5), k // 500) for k, b in zip(keys, bals)
-    }
-
-    rows = queries()["src_python_datasource_stream"](spark, SF001).collect()
-    assert len(rows) == len(want)  # no duplicate delivery, no loss
-    got = {r["k"]: (r["cents"], r["block"]) for r in rows}
-    assert got == want
-    # multi-batch: the offset really advanced across >=3 blocks
-    assert len({b for _, b in got.values()}) >= 3
-
-
-# --- fixed-width trailer audit: tamper paths (src_fixed_width_trailer) ---
-#
-# The producer inside the query is consistent by construction, so the
-# audit's false branches never fire on fixture data.  These feeds are
-# crafted by hand from the format spec (D = 1+9 key+18 name+1 sign+11
-# cents+10 segment; T = 1+9 count+1 sign+15 total) — an independent
-# witness of the offsets as well as of the audit verdicts.
-
-
-def _d_rec(key, name, cents, seg):
-    sign = "-" if cents < 0 else "+"
-    return f"D{key:09d}{name:<18.18}{sign}{abs(cents):011d}{seg:<10.10}"
-
-
-def _t_rec(count, total):
-    sign = "-" if total < 0 else "+"
-    return f"T{count:09d}{sign}{abs(total):015d}"
-
-
-def test_fixed_width_trailer_audit_flags_tampering(spark):
-    from gcp_cloudsql_to_bigquery_spark.sources.files import parse_fixed_width_feed
-
-    good = "\n".join(
-        ["H000000000", _d_rec(8, "ALICE", 12345, "AUTO"),
-         _d_rec(16, "BOB", -678, "MACHINERY"), _t_rec(2, 11667)]
-    )
-    bad_count = "\n".join(
-        ["H000000001", _d_rec(24, "CAROL", 500, "HOUSEHOLD"), _t_rec(2, 500)]
-    )
-    bad_sum = "\n".join(
-        ["H000000002", _d_rec(32, "DAVE", -40, "FURNITURE"), _t_rec(1, 40)]
-    )
-    feeds = spark.createDataFrame(
-        [(0, good), (1, bad_count), (2, bad_sum)], "shard int, content string"
-    )
-    rows = {r["custkey"]: r for r in parse_fixed_width_feed(feeds).collect()}
-
-    assert rows[8]["name"] == "ALICE" and rows[8]["bal_cents"] == 12345
-    assert rows[16]["segment"] == "MACHINERY" and rows[16]["bal_cents"] == -678
-    assert rows[8]["count_ok"] and rows[8]["checksum_ok"]
-    # count tampered: count_ok false, checksum still consistent
-    assert not rows[24]["count_ok"] and rows[24]["checksum_ok"]
-    # checksum tampered (sign flipped): checksum_ok false, count fine
-    assert rows[32]["count_ok"] and not rows[32]["checksum_ok"]
-    assert rows[32]["bal_cents"] == -40
-
-
-# --- delimiter sniffing: plurality + tie-break (elt_delimiter_sniffing) ---
-
-
-def test_sniffing_plurality_and_tiebreak(spark):
-    from gcp_cloudsql_to_bigquery_spark.sources.files import sniff_and_parse_feed
-
-    feeds = spark.createDataFrame(
-        [
-            # header holds 1 comma AND 2 pipes: plurality must pick pipe
-            (0, "a,b|c|d\n5|x,y|SEG"),
-            # exact tie comma-vs-pipe: greatest((1,'comma'),(1,'pipe'))
-            # breaks to the lexicographically larger name — pipe, stably
-            (1, "k,v|w\n7|n|s"),
-            (2, "k\tv\tw\n9\tTABBY\tTS"),
-        ],
-        "shard int, content string",
-    )
-    got = {r["custkey"]: r for r in sniff_and_parse_feed(feeds).collect()}
-    assert got[5]["detected"] == "pipe" and got[5]["name"] == "x,y"
-    assert got[7]["detected"] == "pipe" and got[7]["segment"] == "s"
-    assert got[9]["detected"] == "tab" and got[9]["name"] == "TABBY"
-
-
-# --- fixed-width feed: seeded fuzz over boundary widths, one Spark call ---
-
-_NAME_CHARS = string.ascii_letters + string.digits + "#,|&- "
-
-
-def _rand_name(rng):
-    # exercise <18, ==18 and >18 (truncation); rstrip because the parse
-    # side rtrims padding — a trailing space is not representable
-    n = rng.choice([0, 1, 17, 18, 19, 25, rng.randint(2, 16)])
-    return "".join(rng.choice(_NAME_CHARS) for _ in range(n)).rstrip()
-
-
-def test_fixed_width_feed_seeded_fuzz(spark):
-    from gcp_cloudsql_to_bigquery_spark.sources.files import parse_fixed_width_feed
-
-    rng = random.Random(0xF1D)
-    shards, truth = [], {}
-    key = 1
-    for shard in range(8):
-        recs = []
-        for _ in range(25):
-            cents = rng.choice(
-                [0, -1, 1, 99_999_999_999, -99_999_999_999, rng.randint(-10**10, 10**10)]
-            )
-            name, seg = _rand_name(rng), _rand_name(rng)[:10]
-            truth[key] = (name[:18].rstrip(), cents, seg.rstrip())
-            recs.append((key, name, cents, seg))
-            key += 1
-        lines = [f"H{shard:09d}"]
-        total = 0
-        for k, name, cents, seg in recs:
-            sign = "-" if cents < 0 else "+"
-            lines.append(f"D{k:09d}{name:<18.18}{sign}{abs(cents):011d}{seg:<10.10}")
-            total += cents
-        tsign = "-" if total < 0 else "+"
-        lines.append(f"T{len(recs):09d}{tsign}{abs(total):015d}")
-        shards.append((shard, "\n".join(lines)))
-
-    feeds = spark.createDataFrame(shards, "shard int, content string")
-    rows = parse_fixed_width_feed(feeds).collect()
-    assert len(rows) == len(truth)
-    for r in rows:
-        name, cents, seg = truth[r["custkey"]]
-        assert (r["name"], r["bal_cents"], r["segment"]) == (name, cents, seg)
-        assert r["count_ok"] and r["checksum_ok"]
-
-
-# --- delimiter sniffer: seeded fuzz, separator-free fields ---
-
-
-def test_sniffer_seeded_fuzz(spark):
-    from gcp_cloudsql_to_bigquery_spark.sources.files import (
-        _SNIFF_DELIMS,
-        _SNIFF_NAMES,
-        sniff_and_parse_feed,
-    )
-
-    rng = random.Random(0x5F1F)
-    clean = string.ascii_letters + string.digits + " #&-"
-    feeds, truth = [], {}
-    key = 1
-    for shard in range(9):
-        d_idx = rng.randrange(3)
-        d, d_name = _SNIFF_DELIMS[d_idx], _SNIFF_NAMES[d_idx]
-        lines = [d.join(["custkey", "name", "segment"])]
-        for _ in range(20):
-            name = "".join(rng.choice(clean) for _ in range(rng.randint(1, 12))).strip() or "x"
-            seg = "".join(rng.choice(clean) for _ in range(rng.randint(1, 8))).strip() or "y"
-            truth[key] = (name, seg, d_name)
-            lines.append(d.join([str(key), name, seg]))
-            key += 1
-        feeds.append((shard, "\n".join(lines)))
-
-    df = spark.createDataFrame(feeds, "shard int, content string")
-    rows = sniff_and_parse_feed(df).collect()
-    assert len(rows) == len(truth)
-    for r in rows:
-        assert (r["name"], r["segment"], r["detected"]) == truth[r["custkey"]]
-
-
-def test_fixed_width_missing_trailer_flags_rows_not_drops(spark):
-    from gcp_cloudsql_to_bigquery_spark.sources.files import parse_fixed_width_feed
-
-    good = "\n".join(
-        ["H000000000", _d_rec(8, "ALICE", 12345, "AUTO"), _t_rec(1, 12345)]
-    )
-    # truncated mid-feed: header + body records, no T trailer at all
-    truncated = "\n".join(
-        ["H000000001", _d_rec(16, "BOB", -678, "MACHINERY"),
-         _d_rec(24, "CAROL", 500, "HOUSEHOLD")]
-    )
-    feeds = spark.createDataFrame(
-        [(0, good), (1, truncated)], "shard int, content string"
-    )
-    rows = {r["custkey"]: r for r in parse_fixed_width_feed(feeds).collect()}
-
-    # the truncated shard's rows SURVIVE, correctly parsed, with both
-    # verdicts false — the r8 inner join dropped them entirely
-    assert set(rows) == {8, 16, 24}
-    assert rows[8]["count_ok"] and rows[8]["checksum_ok"]
-    for key in (16, 24):
-        assert not rows[key]["count_ok"], rows[key]
-        assert not rows[key]["checksum_ok"], rows[key]
-    assert rows[16]["bal_cents"] == -678 and rows[24]["segment"] == "HOUSEHOLD"
-
-
-def test_fixed_width_duplicate_trailer_flags_without_fanout(spark):
-    """A shard carrying TWO trailer lines must not fan the audit join out
-    into duplicate body rows (load poisoning the verdicts can't signal);
-    it yields each body row exactly once with both verdicts false."""
-    from gcp_cloudsql_to_bigquery_spark.sources.files import parse_fixed_width_feed
-
-    dup_trailer = "\n".join(
-        ["H000000000", _d_rec(8, "ALICE", 12345, "AUTO"),
-         _t_rec(1, 12345), _t_rec(1, 12345)]
-    )
-    feeds = spark.createDataFrame([(0, dup_trailer)], "shard int, content string")
-    rows = parse_fixed_width_feed(feeds).collect()
-    assert len(rows) == 1  # exactly once, no join fan-out
-    assert rows[0]["custkey"] == 8 and rows[0]["bal_cents"] == 12345
-    assert not rows[0]["count_ok"] and not rows[0]["checksum_ok"]
-
-
-def test_fixed_width_tamper_matrix_seeded_fuzz(spark):
-    """Seeded fuzz over the full tamper matrix: each shard independently
-    draws a mode from {consistent, count-tampered, checksum-tampered,
-    trailer-missing, duplicate-trailer}; expected per-row verdicts are
-    computed pure-Python from the mode, so the audit's truth table
-    (including the r9 missing-trailer and duplicate-trailer branches) is
-    witnessed on feeds the consistent producer can never emit."""
-    import random
-
-    from gcp_cloudsql_to_bigquery_spark.sources.files import parse_fixed_width_feed
-
-    rng = random.Random(0x9A0D)
-    modes_drawn = set()
-    shards, expect = [], {}
-    key = 1
-    for shard in range(15):
-        mode = rng.choice(["ok", "count", "sum", "no_trailer", "dup_trailer"])
-        modes_drawn.add(mode)
-        n_recs = rng.randint(1, 20)
-        lines = [f"H{shard:09d}"]
-        total = 0
-        keys = []
-        for _ in range(n_recs):
-            cents = rng.randint(-10**10, 10**10)
-            lines.append(_d_rec(key, "N%d" % key, cents, "SEG"))
-            total += cents
-            keys.append(key)
-            key += 1
-        n_decl, sum_decl = n_recs, total
-        if mode == "count":
-            n_decl += rng.choice([-1, 1, 7])
-        elif mode == "sum":
-            sum_decl += rng.choice([-1, 1, 1000])
-        if mode != "no_trailer":
-            lines.append(_t_rec(n_decl, sum_decl))
-            if mode == "dup_trailer":  # second, self-consistent trailer —
-                lines.append(_t_rec(n_decl, sum_decl))  # the COUNT is the tamper
-        shards.append((shard, "\n".join(lines)))
-        count_ok = mode in ("ok", "sum")
-        checksum_ok = mode in ("ok", "count")
-        for k in keys:
-            expect[k] = (count_ok, checksum_ok)
-    # seed-fragility guard: the truth table is only witnessed if every
-    # branch was actually drawn — a future edit shifting RNG consumption
-    # must re-pick the seed, not silently drop a branch
-    assert modes_drawn == {"ok", "count", "sum", "no_trailer", "dup_trailer"}
-
-    feeds = spark.createDataFrame(shards, "shard int, content string")
-    rows = parse_fixed_width_feed(feeds).collect()
-    assert len(rows) == len(expect)  # no mode drops rows
-    for r in rows:
-        assert (r["count_ok"], r["checksum_ok"]) == expect[r["custkey"]], (
-            r["custkey"], r["shard"],
-        )
-
-
-def test_sniffer_trailing_newline_emits_no_junk_row(spark):
-    """A feed delivered with a trailing newline (the common real-world
-    variant the fixture producer never emits) must not parse the final
-    empty line into an all-null row."""
-    from gcp_cloudsql_to_bigquery_spark.sources.files import sniff_and_parse_feed
-
-    content = "custkey,name,segment\n1,ALICE,AUTO\n2,BOB,MACHINERY\n"
-    feeds = spark.createDataFrame([(0, content)], "shard int, content string")
-    rows = sorted(sniff_and_parse_feed(feeds).collect(), key=lambda r: r["custkey"])
-    assert len(rows) == 2, rows  # trailing empty line dropped, not a null row
-    assert [r["custkey"] for r in rows] == [1, 2]
-    assert rows[0]["name"] == "ALICE" and rows[1]["segment"] == "MACHINERY"
-    assert all(r["detected"] == "comma" for r in rows)
-
-
-def test_sniffer_interior_blank_line_stays_visible(spark):
-    """An interior blank line — a corruption the consistent producer never
-    emits — must parse into a visible all-null row, not disappear."""
-    from gcp_cloudsql_to_bigquery_spark.sources.files import sniff_and_parse_feed
-
-    content = "custkey,name,segment\n1,ALICE,AUTO\n\n2,BOB,MACHINERY\n"
-    feeds = spark.createDataFrame([(0, content)], "shard int, content string")
-    rows = sniff_and_parse_feed(feeds).collect()
-    assert len(rows) == 3, rows  # 2 data rows + 1 visible junk row
-    junk = [r for r in rows if r["custkey"] is None]
-    assert len(junk) == 1
-    assert junk[0]["name"] is None and junk[0]["segment"] is None
-    keys = sorted(r["custkey"] for r in rows if r["custkey"] is not None)
-    assert keys == [1, 2]
-
-
-def test_sniffer_double_trailing_newline_keeps_one_blank(spark):
-    """A feed ending in two newlines: exactly ONE is the delivery artifact;
-    the blank line before it is data-side corruption and stays visible."""
-    from gcp_cloudsql_to_bigquery_spark.sources.files import sniff_and_parse_feed
-
-    content = "custkey,name,segment\n1,ALICE,AUTO\n\n"
-    feeds = spark.createDataFrame([(0, content)], "shard int, content string")
-    rows = sniff_and_parse_feed(feeds).collect()
-    assert len(rows) == 2, rows  # 1 data row + 1 visible blank-line row
-    assert sorted([r["custkey"] for r in rows], key=lambda x: (x is None, x)) == [1, None]
-
-
-def test_sniffer_roundtrip_property(spark):
-    """Property test over the r10-changed sniffer read-side: random rows
-    rendered with each delimiter (with and without the trailing-newline
-    delivery artifact) must parse back exactly, with the right delimiter
-    detected."""
-    import random
-
-    from gcp_cloudsql_to_bigquery_spark.sources.files import sniff_and_parse_feed
-
-    r = random.Random(4)
-    delims = {",": "comma", "|": "pipe", "\t": "tab"}
-    feeds, expect = [], {}
-    for shard, (d, name) in enumerate(
-        (d, n) for d, n in delims.items() for _ in range(3)
-    ):
-        rows = [
-            (
-                r.randint(1, 10**6),
-                "".join(r.choice("ABCDEFGHIJKLMNOPQRSTUVWXYZ ") for _ in range(r.randint(3, 12))).strip() or "X",
-                r.choice(("AUTO", "MACHINERY", "FURNITURE")),
-            )
-            for _ in range(r.randint(1, 8))
-        ]
-        header = d.join(("custkey", "name", "segment"))
-        body = "\n".join(d.join((str(k), nm, seg)) for k, nm, seg in rows)
-        content = header + "\n" + body + ("\n" if r.random() < 0.5 else "")
-        feeds.append((shard, content))
-        expect[shard] = (name, sorted(rows))
-    df = spark.createDataFrame(feeds, "shard int, content string")
-    out = sniff_and_parse_feed(df)
-    # group rows back per detected delimiter name; every shard must
-    # round-trip its rows exactly and detect its own delimiter
-    got = {}
-    for row in out.collect():
-        got.setdefault(row["detected"], []).append(
-            (row["custkey"], row["name"], row["segment"])
-        )
-    for shard, (name, rows) in expect.items():
-        for t in rows:
-            assert t in got[name], (shard, t)
-    # global row-count conservation: nothing dropped, nothing invented
-    assert sum(len(v) for v in got.values()) == sum(
-        len(rows) for _, rows in expect.values()
-    )

@@ -6,7 +6,6 @@ import glob
 import os
 import tempfile
 
-import pytest
 from pyspark.sql import functions as F
 
 from gcp_cloudsql_to_bigquery_spark.catalog import load
@@ -15,7 +14,6 @@ from gcp_cloudsql_to_bigquery_spark.streaming.elt import (
     run_streaming_elt,
     write_arrival_files,
 )
-from gcp_cloudsql_to_bigquery_spark.workload import queries
 from tests.conftest import SF0001
 
 
@@ -85,572 +83,3 @@ def test_streaming_elt_resume_is_exactly_once(spark):
     run_once()
     n2 = spark.read.schema(_ARRIVAL_SCHEMA).parquet(sink).count()
     assert n1 == n2 == load(spark, SF0001, "customer").count()
-
-
-def test_incremental_topk_matches_batch(spark):
-    from gcp_cloudsql_to_bigquery_spark.catalog import load
-    from pyspark.sql import functions as F
-
-    got = {
-        (r["event_id"], r["cents"], r["rnk"])
-        for r in queries()["stream_incremental_topk"](spark, SF0001).collect()
-    }
-    ev = (
-        load(spark, SF0001, "events")
-        .filter("event_type = 'purchase'")
-        .select("event_id", F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("cents"))
-        .orderBy(F.col("cents").desc(), "event_id")
-        .limit(20)
-        .collect()
-    )
-    want = {(r["event_id"], r["cents"], i + 1) for i, r in enumerate(ev)}
-    assert got == want
-
-
-# --- round-10 registry additions (gap analysis, VERDICT r9 item 2) ----------
-
-
-def _py_shingles(text: str) -> set:
-    """Pure-Python mirror of SHINGLE_EXPR: distinct char 3-grams at
-    1-indexed positions 1..max(len-2, 1)."""
-    return {text[i - 1 : i + 2] for i in range(1, max(len(text) - 2, 1) + 1)}
-
-
-def test_stream_lsh_dedup_ttl_matches_python_bruteforce(spark):
-    """Third witness (pure Python, independent of Spark AND DuckDB): the
-    streaming TTL dedup's verified pairs equal the exact all-pairs Jaccard
-    >= 0.8 within the TTL window, computed row-by-row from the parquet."""
-    import pyarrow.parquet as pq
-
-    from gcp_cloudsql_to_bigquery_spark.streaming.elt import (
-        _LSH_TTL,
-        stream_lsh_dedup_ttl,
-    )
-
-    tbl = pq.read_table(f"{SF0001}/documents.parquet", columns=["doc_id", "text"])
-    docs = sorted(zip(tbl["doc_id"].to_pylist(), tbl["text"].to_pylist()))
-    sh = {d: _py_shingles(t) for d, t in docs}
-    expect = {}
-    ids = [d for d, _ in docs]
-    for i, a in enumerate(ids):
-        for b in ids[i + 1 :]:
-            if b - a > _LSH_TTL:
-                continue
-            inter = len(sh[a] & sh[b])
-            jac = round(inter / (len(sh[a]) + len(sh[b]) - inter), 6)
-            if jac >= 0.8:
-                expect[(a, b)] = jac
-    got = {
-        (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in stream_lsh_dedup_ttl(spark, SF0001).collect()
-    }
-    assert set(got) == set(expect), (
-        sorted(set(expect) - set(got)),
-        sorted(set(got) - set(expect)),
-    )
-    for k, v in expect.items():
-        assert abs(got[k] - v) < 1e-9, (k, got[k], v)
-
-
-def test_banded_buckets_shift_invariant(spark):
-    """Regression for the transform-arity bug: a two-parameter lambda
-    (``lambda s, i=i:``) is called by ``F.transform`` as (element, INDEX),
-    so the array index silently shadowed the minhash seed and coupled
-    every hash to shingle POSITION — two near-identical docs offset by a
-    3-char prefix then shared ZERO bands (caught live at sf0.1: a
-    j=0.983 pair missed).  Correct MinHash is position-free: the shifted
-    pair must collide on (nearly) every band."""
-    from collections import defaultdict
-
-    from gcp_cloudsql_to_bigquery_spark.streaming.elt import _banded_buckets
-
-    t = "the quick brown fox jumps over the lazy dog " * 10
-    docs = spark.createDataFrame(
-        [(0, t), (1, "xy " + t)], "doc_id long, text string"
-    )
-    m = defaultdict(dict)
-    for r in _banded_buckets(docs).collect():
-        m[r["band"]][r["doc_id"]] = r["bucket"]
-    shared = sum(
-        1 for d in m.values() if len(d) == 2 and len(set(d.values())) == 1
-    )
-    assert shared >= 8, f"only {shared}/16 bands shared — position-coupled hash?"
-
-
-def test_row_minhash_sig_equals_batch_minhash_signatures(spark):
-    """Equivalence net for the arity bug class: the streaming per-row
-    signature expression must produce BIT-IDENTICAL values to the batch
-    explode/groupBy ``minhash_signatures`` on random documents — any
-    silent divergence between the two formulations (position coupling,
-    seed shadowing, hash-argument drift) fails here instead of as a
-    recall loss at some SF."""
-    import random
-
-    from gcp_cloudsql_to_bigquery_spark.operators.dedup import (
-        minhash_signatures,
-        with_shingles,
-    )
-    from gcp_cloudsql_to_bigquery_spark.streaming.elt import _row_minhash_sig
-
-    r = random.Random(99)
-    docs = spark.createDataFrame(
-        [
-            (
-                i,
-                " ".join(
-                    "".join(
-                        r.choice("abcdefghijklmnopqrstuvwxyz0123456789 .,")
-                        for _ in range(r.randint(3, 9))
-                    )
-                    for _ in range(r.randint(5, 40))
-                ),
-            )
-            for i in range(40)
-        ],
-        "doc_id long, text string",
-    )
-    sh = with_shingles(docs)
-    batch = {r_["doc_id"]: list(r_["sig"]) for r_ in minhash_signatures(sh).collect()}
-    mine = {
-        r_["doc_id"]: list(r_["sig"])
-        for r_ in sh.withColumn("sig", _row_minhash_sig()).select("doc_id", "sig").collect()
-    }
-    assert batch == mine
-
-
-def _bases_added_during(prefix, fn):
-    """Run fn(); return (result, the trees fn left in this process's temp
-    home, basename-prefix filtered).  Eagerly removed trees are gone from
-    the home before fn returns, so they are not listed."""
-    from gcp_cloudsql_to_bigquery_spark.tmputil import home
-
-    before = set(os.listdir(home()))
-    result = fn()
-    added = [
-        os.path.join(home(), n)
-        for n in os.listdir(home())
-        if n not in before and n.startswith(prefix)
-    ]
-    return result, added
-
-
-def _mk_docs(spark, ids):
-    return spark.createDataFrame(
-        [(int(i), f"document text number {i} padded") for i in ids],
-        "doc_id long, text string",
-    )
-
-
-def _read_shards(spark, feed_dir):
-    shards = []
-    for d in sorted(glob.glob(os.path.join(feed_dir, "arr_*"))):
-        rows = spark.read.parquet(d).collect()
-        shards.append(sorted(r["doc_id"] for r in rows))
-    return shards
-
-
-# --- ADVICE item 3: shard fallback ------------------------------------------
-
-
-def test_lshttl_shards_quantile_primary(spark, tmp_path):
-    """A well-spread id domain uses the quantile path and yields three
-    non-empty, disjoint, contiguous, id-ordered shards covering all rows."""
-    from gcp_cloudsql_to_bigquery_spark.streaming.elt import _write_id_ordered_shards
-
-    docs = _mk_docs(spark, range(300))
-    feed = str(tmp_path / "feed")
-    assert _write_id_ordered_shards(docs, feed) == "quantile"
-    shards = _read_shards(spark, feed)
-    assert len(shards) == 3 and all(shards)
-    assert sorted(x for s in shards for x in s) == list(range(300))
-    for a, b in zip(shards, shards[1:]):
-        assert max(a) < min(b)  # contiguous id ranges, in order
-
-
-def test_lshttl_shards_fallback_on_quantile_collision(spark, tmp_path):
-    """Heavily skewed but valid id domain: q33 == q66 collide — the ntile
-    fallback must still produce three non-empty disjoint id ranges."""
-    from gcp_cloudsql_to_bigquery_spark.streaming.elt import _write_id_ordered_shards
-
-    docs = _mk_docs(spark, [7] * 20 + [8, 9])
-    feed = str(tmp_path / "feed")
-    assert _write_id_ordered_shards(docs, feed) == "ntile"
-    shards = _read_shards(spark, feed)
-    assert [len(s) for s in shards] == [20, 1, 1]
-    assert shards[1] == [8] and shards[2] == [9]
-
-
-def test_lshttl_shards_fallback_on_empty_quantile_shard(spark, tmp_path):
-    """Distinct cut points can still leave an EMPTY first shard (nothing
-    below q33) — the per-shard count check must trigger the fallback too."""
-    from gcp_cloudsql_to_bigquery_spark.streaming.elt import _write_id_ordered_shards
-
-    docs = _mk_docs(spark, [7] * 10 + [8] * 10 + [9])
-    feed = str(tmp_path / "feed")
-    assert _write_id_ordered_shards(docs, feed) == "ntile"
-    shards = _read_shards(spark, feed)
-    assert [len(s) for s in shards] == [10, 10, 1]
-
-
-def test_lshttl_shards_too_few_distinct_ids_names_skew(spark, tmp_path):
-    """Fewer than 3 distinct ids: the error names the skewed id domain,
-    not the downstream >=3-fold-count symptom (ADVICE r10 item 3)."""
-    from gcp_cloudsql_to_bigquery_spark.streaming.elt import _write_id_ordered_shards
-
-    docs = _mk_docs(spark, [5] * 10 + [6] * 5)
-    with pytest.raises(RuntimeError, match="distinct doc_id"):
-        _write_id_ordered_shards(docs, str(tmp_path / "feed"))
-
-
-def test_lshttl_shards_empty_table_raises(spark, tmp_path):
-    from gcp_cloudsql_to_bigquery_spark.streaming.elt import _write_id_ordered_shards
-
-    docs = _mk_docs(spark, [5]).filter("doc_id < 0")
-    with pytest.raises(RuntimeError, match="empty"):
-        _write_id_ordered_shards(docs, str(tmp_path / "feed"))
-
-
-# --- ADVICE item 2: doc states the miss probability --------------------------
-
-
-def test_lshttl_doc_states_lsh_miss_probability():
-    from gcp_cloudsql_to_bigquery_spark.registry import REGISTRY
-
-    doc = REGISTRY["stream_lsh_dedup_ttl"].doc
-    assert "(1-0.8^4)^16" in doc and "2.2e-4" in doc
-
-
-# --- ADVICE item 1: working-tree cleanup -------------------------------------
-
-
-def test_lshttl_post_drain_cleanup_and_atexit_hook(spark):
-    """After the stream drains, the base holds ONLY the candidate dirs the
-    returned DataFrame still reads (feed, all idx versions, and the
-    checkpoint are gone); the base itself stays in the temp home, which
-    the atexit hook removes."""
-    import shutil
-
-    from gcp_cloudsql_to_bigquery_spark.streaming.elt import stream_lsh_dedup_ttl
-    from gcp_cloudsql_to_bigquery_spark.tmputil import home
-
-    df, bases = _bases_added_during("lshttl_", lambda: stream_lsh_dedup_ttl(spark, SF0001))
-    (base,) = bases
-    assert df.count() >= 0  # consume while cand_b* is still on disk
-    entries = sorted(os.listdir(base))
-    assert entries == [e for e in entries if e.startswith("cand_b")], entries
-    assert entries, "candidate dirs must exist until the result is consumed"
-    # remove ONLY this test's base: removing the whole home here would
-    # rmtree live trees other tests in the same session still read lazily
-    assert os.path.dirname(base) == home()
-    shutil.rmtree(base)
-    assert not os.path.exists(base)
-
-
-# --- VERDICT item 2: executed crash-resume ------------------------------------
-
-
-def _collect_run_state(spark, base):
-    """(sorted candidate pairs, top index version, sorted final index rows)."""
-    cands = sorted(
-        (r["doc_a"], r["doc_b"])
-        for r in spark.read.schema("doc_a long, doc_b long")
-        .parquet(os.path.join(base, "cand_b*"))
-        .collect()
-    )
-    idx_dirs = glob.glob(os.path.join(base, "idx_v*"))
-    top = max(int(os.path.basename(d)[5:]) for d in idx_dirs)
-    idx = sorted(
-        tuple(r)
-        for r in spark.read.parquet(os.path.join(base, f"idx_v{top}")).collect()
-    )
-    return cands, top, idx
-
-
-def test_lshttl_crash_resume_replay_is_idempotent(spark, tmp_path):
-    """Kill between folds + resume from the SAME checkpoint: batch 1's fold
-    crashes AFTER its writes land but BEFORE the checkpoint commit (the
-    worst-case real crash — dirty cand_b1/idx_v2 on disk); the resumed
-    query must REPLAY batch 1 (same batch_id, same file per the offset
-    log), overwrite those artifacts idempotently, and finish with the
-    exact candidate set and final index of an uninterrupted run."""
-    from gcp_cloudsql_to_bigquery_spark.catalog import load
-    from gcp_cloudsql_to_bigquery_spark.streaming.elt import (
-        _run_lsh_ttl_stream,
-        _write_id_ordered_shards,
-    )
-
-    docs = load(spark, SF0001, "documents").select("doc_id", "text")
-
-    # uninterrupted reference run
-    base1, ckpt1 = str(tmp_path / "run1"), str(tmp_path / "ckpt1")
-    os.makedirs(base1)
-    _write_id_ordered_shards(docs, os.path.join(base1, "feed"))
-    _run_lsh_ttl_stream(spark, docs.schema, base1, ckpt1)
-    ref = _collect_run_state(spark, base1)
-    assert ref[1] == 3  # three folds completed
-
-    # crashed run: injection after batch 1's writes, before its commit
-    base2, ckpt2 = str(tmp_path / "run2"), str(tmp_path / "ckpt2")
-    os.makedirs(base2)
-    _write_id_ordered_shards(docs, os.path.join(base2, "feed"))
-
-    def crash(batch_id: int) -> None:
-        if batch_id == 1:
-            raise RuntimeError("injected crash after batch 1 writes")
-
-    with pytest.raises(Exception, match="injected crash"):
-        _run_lsh_ttl_stream(spark, docs.schema, base2, ckpt2, on_fold_done=crash)
-    # the uncommitted batch's dirty artifacts exist — a real crash's state
-    assert os.path.isdir(os.path.join(base2, "cand_b1"))
-    assert os.path.isdir(os.path.join(base2, "idx_v2"))
-
-    # resume on the same checkpoint: batch 1 replays, then batch 2 runs
-    folds = []
-    _run_lsh_ttl_stream(spark, docs.schema, base2, ckpt2, on_fold_done=folds.append)
-    assert folds == [1, 2], folds  # batch 0 NOT re-read; batch 1 replayed
-    assert _collect_run_state(spark, base2) == ref
-
-
-@pytest.mark.parametrize("crash_at", [0, 2])
-def test_lshttl_crash_resume_at_edge_batches(spark, tmp_path, crash_at):
-    """Replay idempotence at the edge positions too: batch 0 (no prior
-    index, frontier None — the prev_v=0 path) and the FINAL batch (resume
-    with nothing after the replay)."""
-    from gcp_cloudsql_to_bigquery_spark.catalog import load
-    from gcp_cloudsql_to_bigquery_spark.streaming.elt import (
-        _run_lsh_ttl_stream,
-        _write_id_ordered_shards,
-    )
-
-    docs = load(spark, SF0001, "documents").select("doc_id", "text")
-    base1, ckpt1 = str(tmp_path / "run1"), str(tmp_path / "ckpt1")
-    os.makedirs(base1)
-    _write_id_ordered_shards(docs, os.path.join(base1, "feed"))
-    _run_lsh_ttl_stream(spark, docs.schema, base1, ckpt1)
-    ref = _collect_run_state(spark, base1)
-
-    base2, ckpt2 = str(tmp_path / "run2"), str(tmp_path / "ckpt2")
-    os.makedirs(base2)
-    _write_id_ordered_shards(docs, os.path.join(base2, "feed"))
-
-    def crash(batch_id: int) -> None:
-        if batch_id == crash_at:
-            raise RuntimeError("injected crash")
-
-    with pytest.raises(Exception, match="injected crash"):
-        _run_lsh_ttl_stream(spark, docs.schema, base2, ckpt2, on_fold_done=crash)
-    folds = []
-    _run_lsh_ttl_stream(spark, docs.schema, base2, ckpt2, on_fold_done=folds.append)
-    assert folds[0] == crash_at, folds  # the crashed batch replays first
-    assert _collect_run_state(spark, base2) == ref
-
-
-# --- crash-resume extended to the whole versioned-fold family (round 11) ----
-
-
-_ISESS_SCHEMA = "user_id bigint, t_us bigint, cents bigint"
-
-
-def _fold_stream_cfg(name):
-    from gcp_cloudsql_to_bigquery_spark.streaming import elt as E
-
-    return {
-        "cdc": (E._write_cdc_feed, E._cdc_fold_body, "chg_*", None),
-        "topk": (E._write_topk_feed, E._topk_fold_body, "arr_*", None),
-        "isess": (E._write_isess_feed, E._isess_fold_body, "t*", _ISESS_SCHEMA),
-    }[name]
-
-
-def _final_snapshot(spark, base):
-    """(sorted final-snapshot rows, top version) — read from DISK, the way
-    the post-drain epilogue does."""
-    vdirs = glob.glob(os.path.join(base, "v[0-9]*"))
-    top = max(int(os.path.basename(d)[1:]) for d in vdirs)
-    rows = spark.read.parquet(os.path.join(base, f"v{top}")).collect()
-    return sorted(repr(sorted(r.asDict().items())) for r in rows), top
-
-
-@pytest.mark.parametrize("name", ["cdc", "topk", "isess"])
-def test_versioned_fold_crash_resume_idempotent(spark, tmp_path, name):
-    """The batch_id-derived versioning makes ALL three incremental-
-    materialization folds replay-safe: crash injected after batch 1's
-    writes but before its commit (dirty v2 on disk), resume from the same
-    checkpoint, batch 1 replays against the pre-batch snapshot and the
-    final materialization equals the uninterrupted run's.  (The round-10
-    driver-dict versioning would have read the post-batch snapshot AND
-    crashed on the existing create-mode v{N} path.)"""
-    from gcp_cloudsql_to_bigquery_spark.streaming.elt import (
-        _run_versioned_fold_stream,
-    )
-
-    write_feed, fold_body, glob_pat, fixed_schema = _fold_stream_cfg(name)
-
-    def prep(base):
-        schema = write_feed(spark, SF0001, os.path.join(base, "feed"))
-        return fixed_schema if fixed_schema is not None else schema
-
-    # uninterrupted reference run
-    base1, ckpt1 = str(tmp_path / "b1"), str(tmp_path / "c1")
-    os.makedirs(base1)
-    schema = prep(base1)
-    _run_versioned_fold_stream(
-        spark, schema, base1, os.path.join(base1, "feed", glob_pat), ckpt1,
-        fold_body(base1),
-    )
-    ref = _final_snapshot(spark, base1)
-    assert ref[1] >= 3
-
-    # crashed run + resume
-    base2, ckpt2 = str(tmp_path / "b2"), str(tmp_path / "c2")
-    os.makedirs(base2)
-    prep(base2)
-
-    def crash(batch_id: int) -> None:
-        if batch_id == 1:
-            raise RuntimeError("injected crash after batch 1 writes")
-
-    with pytest.raises(Exception, match="injected crash"):
-        _run_versioned_fold_stream(
-            spark, schema, base2, os.path.join(base2, "feed", glob_pat), ckpt2,
-            fold_body(base2), on_fold_done=crash,
-        )
-    assert os.path.isdir(os.path.join(base2, "v2"))  # dirty uncommitted write
-
-    folds = []
-    _run_versioned_fold_stream(
-        spark, schema, base2, os.path.join(base2, "feed", glob_pat), ckpt2,
-        fold_body(base2), on_fold_done=folds.append,
-    )
-    assert folds[0] == 1, folds  # batch 0 NOT re-read; batch 1 replayed
-    assert _final_snapshot(spark, base2) == ref
-
-
-@pytest.mark.parametrize(
-    "qname",
-    ["stream_cdc_upsert", "stream_incremental_topk", "stream_incremental_sessionize"],
-)
-def test_versioned_stream_post_drain_cleanup(spark, qname):
-    """After the stream drains, only the FINAL snapshot (which the returned
-    DataFrame lazily reads) survives in the base — feed, checkpoint, and
-    superseded versions are gone (ADVICE r10 item 1, family-wide)."""
-    from gcp_cloudsql_to_bigquery_spark.registry import REGISTRY
-
-    prefix = {
-        "stream_cdc_upsert": "cdc_",
-        "stream_incremental_topk": "topk_",
-        "stream_incremental_sessionize": "isess_",
-    }[qname]
-    df, bases = _bases_added_during(prefix, lambda: REGISTRY[qname].fn(spark, SF0001))
-    (base,) = bases
-    assert df.count() > 0
-    entries = os.listdir(base)
-    assert len(entries) == 1 and entries[0].startswith("v"), entries
-
-
-def test_lshttl_out_of_order_arrival_raises(spark, tmp_path):
-    """The in-order guard is load-bearing for TTL eviction soundness: a
-    feed whose FIRST file carries the HIGH id range (mtime-ordered ahead
-    of the low range) must raise the out-of-order error, not silently
-    miss pairs."""
-    from gcp_cloudsql_to_bigquery_spark.streaming.elt import _run_lsh_ttl_stream
-
-    docs = _mk_docs(spark, range(60))
-    base, ckpt = str(tmp_path / "b"), str(tmp_path / "c")
-    feed = os.path.join(base, "feed")
-    os.makedirs(base)
-    for shard, (lo, hi, mtime) in enumerate(
-        [(40, 60, 1_700_000_000), (0, 40, 1_700_000_001)]  # HIGH range first
-    ):
-        path = os.path.join(feed, f"arr_{shard}")
-        docs.filter(f"doc_id >= {lo} and doc_id < {hi}").coalesce(1).write.parquet(path)
-        for f in os.listdir(path):
-            os.utime(os.path.join(path, f), (mtime, mtime))
-    with pytest.raises(Exception, match="out-of-order arrival"):
-        _run_lsh_ttl_stream(spark, docs.schema, base, ckpt)
-
-
-def test_finish_versioned_stream_fold_count_from_disk(spark, tmp_path):
-    """The >=min_folds assertion reads the version from DISK — the property
-    that survives a crash-resume where any driver counter restarts at 0."""
-    from gcp_cloudsql_to_bigquery_spark.streaming.elt import (
-        _finish_versioned_stream,
-    )
-    from gcp_cloudsql_to_bigquery_spark.tmputil import home
-
-    base = str(tmp_path / "b")
-    for v in (1, 2):
-        spark.range(3).write.parquet(os.path.join(base, f"v{v}"))
-    with pytest.raises(RuntimeError, match=">=3 incremental folds, got 2"):
-        _finish_versioned_stream(spark, base, str(tmp_path / "c"), 3, "t")
-
-    spark.range(5).write.parquet(os.path.join(base, "v3"))
-    home_before = os.listdir(home())
-    out = _finish_versioned_stream(spark, base, str(tmp_path / "c"), 3, "t")
-    assert out.count() == 5
-    assert os.listdir(base) == ["v3"]  # superseded versions removed
-    # the query functions allocate the base in the temp home (error paths
-    # stay covered); the epilogue allocates nothing
-    assert sorted(os.listdir(home())) == sorted(home_before)
-
-
-@pytest.mark.parametrize("seed", [11, 22, 33])
-def test_shard_writer_property_hostile_id_domains(spark, tmp_path, seed):
-    """Seeded property net over hostile-but-valid doc_id domains (negative
-    offsets, million-wide gaps, duplicates): the writer always produces
-    three non-empty, value-disjoint, id-ordered shards covering every row,
-    or raises the named <3-distinct-ids error."""
-    import random
-
-    from gcp_cloudsql_to_bigquery_spark.streaming.elt import _write_id_ordered_shards
-
-    r = random.Random(seed)
-    ids, cur = [], r.randint(-(10**9), 10**9)
-    for _ in range(r.randint(3, 400)):
-        ids.append(cur)
-        if r.random() >= 0.3:  # else: duplicate the current id
-            cur += r.randint(1, 10**6)
-    r.shuffle(ids)
-    docs = _mk_docs(spark, ids)
-    feed = str(tmp_path / "feed")
-    if len(set(ids)) < 3:
-        with pytest.raises(RuntimeError, match="distinct doc_id"):
-            _write_id_ordered_shards(docs, feed)
-        return
-    _write_id_ordered_shards(docs, feed)
-    shards = _read_shards(spark, feed)
-    assert len(shards) == 3 and all(shards)
-    assert sorted(x for s in shards for x in s) == sorted(ids)
-    for a, b in zip(shards, shards[1:]):
-        assert max(a) < min(b)  # duplicates never split across a boundary
-
-
-def test_elt_file_arrival_post_drain_cleanup(spark):
-    """The watch dir's raw CSV arrivals are removed once the sink is
-    committed; only the sink remains for the returned DataFrame."""
-    from gcp_cloudsql_to_bigquery_spark.registry import REGISTRY
-
-    df, bases = _bases_added_during(
-        "stream_elt_", lambda: REGISTRY["stream_elt_file_arrival"].fn(spark, SF0001)
-    )
-    (base,) = bases
-    assert df.count() > 0
-    assert os.listdir(base) == ["loaded"]
-
-
-def test_sentinel_export_every_field_coalesced(spark, hostile_nulls_sf, tmp_path):
-    """A NULL in ANY exported column must become the sentinel, never a
-    silently-dropped field: every rendered line has exactly 4 fields and
-    the null balance row carries the sentinel."""
-    from gcp_cloudsql_to_bigquery_spark.streaming.elt import write_arrival_files
-
-    out = str(tmp_path / "exports")
-    write_arrival_files(spark, hostile_nulls_sf, out, n_files=2)
-    import glob
-
-    lines = []
-    for f in glob.glob(out + "/arrival=*/part-*"):
-        with open(f) as fh:
-            lines += [ln.rstrip("\n") for ln in fh if ln.strip()]
-    assert lines
-    assert all(len(ln.split(",")) == 4 for ln in lines)
-    assert any(ln.split(",")[3] == '"N' for ln in lines)  # null acctbal row

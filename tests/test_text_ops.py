@@ -1,18 +1,11 @@
 """Tests for the hashed-classifier scorer (zero-shuffle plan contract) and
 the corpus-duplicated span fraction (synthetic known-duplicate fixture)."""
 
-import math
 import os
-import unicodedata
-from collections import Counter, defaultdict
 
-import pyarrow as pa
-import pyarrow.parquet as pq
-
-from gcp_cloudsql_to_bigquery_spark.catalog import load
 from gcp_cloudsql_to_bigquery_spark.plans.inspect import exchange_count
 from gcp_cloudsql_to_bigquery_spark.workload import queries
-from tests.conftest import SF0001, md5_hex
+from tests.conftest import SF0001
 
 
 def test_classifier_score_is_zero_shuffle(spark):
@@ -60,337 +53,3 @@ def test_duplicate_span_short_doc_whole_text_shingle(spark, tmp_path):
     assert out[0].n_shingles == 1 and out[0].n_dup_shingles == 1
     assert out[1].dup_frac_x1e6 == 1000000
     assert out[2].n_dup_shingles == 0
-
-
-def test_unicode_normalize_recomposes(spark):
-    df = queries()["text_unicode_normalize"](spark, SF0001)
-    rows = df.limit(50).collect()
-    assert rows
-    for r in rows:
-        assert r["n_nfc"] <= r["n_deco"]
-    # cross-check one row end-to-end against stdlib on the raw text
-    from gcp_cloudsql_to_bigquery_spark.catalog import load
-
-    raw = (
-        load(spark, SF0001, "documents")
-        .filter("doc_id = %d" % rows[0]["doc_id"])
-        .collect()[0]["text"]
-    )
-    deco = raw[:120].replace("e", "e\u0301")
-    assert rows[0]["n_deco"] == len(deco)
-    assert rows[0]["n_nfc"] == len(unicodedata.normalize("NFC", deco))
-
-
-# ------------------------------------------------------------ feature hashing
-
-
-def test_feature_hashing_matches_bruteforce(spark):
-    docs = load(spark, SF0001, "documents").select("doc_id", "text").collect()
-    expected = {}
-    for doc_id, text in docs:
-        for t in text.lower().split(" "):
-            idx = int(md5_hex(f"fh:{t}")[:8], 16) % 32
-            sgn = 1 if md5_hex(f"fs:{t}")[0] <= "7" else -1
-            key = (doc_id, idx)
-            expected[key] = expected.get(key, 0) + sgn
-    expected = {k: v for k, v in expected.items() if v != 0}
-    got = {
-        (r["doc_id"], r["feature_idx"]): r["val"]
-        for r in queries()["text_feature_hashing"](spark, SF0001).collect()
-    }
-    assert got == expected
-
-
-# ------------------------------------------------------------- CDC chunking
-
-
-def _cdc_chunks(text: str) -> list[str]:
-    toks = text.lower().split(" ")
-    chunks, cur = [], []
-    for i, t in enumerate(toks):
-        brk = False
-        if i >= 2:
-            tri = " ".join(toks[i - 2 : i + 1])
-            brk = int(md5_hex(tri)[:8], 16) % 8 == 0
-        if brk and cur:
-            chunks.append(cur)
-            cur = []
-        cur.append(t)
-    if cur:
-        chunks.append(cur)
-    return [" ".join(c) for c in chunks]
-
-
-def test_cdc_chunks_match_bruteforce(spark):
-    docs = load(spark, SF0001, "documents").select("doc_id", "text").collect()
-    rows = {}
-    for r in queries()["text_cdc_chunk_dedup"](spark, SF0001).collect():
-        rows.setdefault(r["doc_id"], {})[r["chunk_idx"]] = r
-    for doc_id, text in docs:
-        chunks = _cdc_chunks(text)
-        got = rows.get(doc_id, {})
-        assert len(got) == len(chunks), doc_id
-        for idx, chunk in enumerate(chunks):
-            r = got[idx]
-            assert r["chunk_fp"] == md5_hex(chunk)
-            assert r["n_toks"] == len(chunk.split(" "))
-
-
-def test_cdc_chunking_is_shift_robust():
-    # THE property fixed-width slicing lacks: prepending a sentence must
-    # leave the chunk fingerprints of the untouched tail intact
-    base = (
-        "the quick brown fox jumps over the lazy dog while the cat "
-        "sleeps near the warm stove and the rain falls softly outside "
-        "the old wooden house on the quiet hill beyond the river"
-    )
-    shifted = "breaking news update " + base
-    a, b = _cdc_chunks(base), _cdc_chunks(shifted)
-    # all but the first chunk(s) around the insertion survive verbatim
-    common = set(a) & set(b)
-    assert len(common) >= len(a) - 2, (a, b)
-
-
-# ------------------------------------------------------------- Kneser-Ney
-
-
-def test_kneser_ney_matches_bruteforce(spark):
-    docs = load(spark, SF0001, "documents").select("doc_id", "text").collect()
-    bi = {}
-    for _, text in docs:
-        toks = [t for t in text.lower().split(" ") if t]
-        for a, b in zip(toks, toks[1:]):
-            if b:
-                bi[(a, b)] = bi.get((a, b), 0) + 1
-    cw, n1p_fwd, n1p_rev = {}, {}, {}
-    for (a, b), c in bi.items():
-        cw[a] = cw.get(a, 0) + c
-        n1p_fwd[a] = n1p_fwd.get(a, 0) + 1
-        n1p_rev[b] = n1p_rev.get(b, 0) + 1
-    nbt = len(bi)
-    rows = queries()["text_bigram_kneser_ney"](spark, SF0001).collect()
-    assert len(rows) == 200
-    top = sorted(bi.items(), key=lambda kv: (-kv[1], kv[0]))[:200]
-    assert {(r["w"], r["nxt"]) for r in rows} == {k for k, _ in top}
-    for r in rows:
-        w, nxt, cb = r["w"], r["nxt"], bi[(r["w"], r["nxt"])]
-        assert r["cb"] == cb
-        pkn = (
-            max(cb - 0.75, 0.0) / cw[w]
-            + 0.75 * n1p_fwd[w] / cw[w] * (n1p_rev[nxt] / nbt)
-        )
-        assert r["pkn_x1e9"] == math.floor(pkn * 1e9 + 0.5)
-    # the KN property: probabilities are valid and discounted below MLE
-    for r in rows:
-        assert 0 < r["pkn_x1e9"] <= 10**9
-
-
-# --------------------------------------------------------------- secrets scan
-
-
-def test_secrets_scan_full_recall_no_false_positives(spark):
-    docs = [r[0] for r in load(spark, SF0001, "documents").select("doc_id").collect()]
-    rows = queries()["text_secrets_scan"](spark, SF0001).collect()
-    by_kind = {}
-    for r in rows:
-        by_kind.setdefault(r["kind"], set()).add((r["doc_id"], r["hit"]))
-    want_keys = {d for d in docs if d % 17 == 0}
-    want_toks = {d for d in docs if d % 23 == 0}
-    assert {d for d, _ in by_kind.get("aws_access_key", set())} == want_keys
-    assert {d for d, _ in by_kind.get("hex_token_32", set())} == want_toks
-    tr = str.maketrans("0123456789abcdef", "ABCDEFGHIJKLMNOP")
-    for d, hit in by_kind.get("aws_access_key", set()):
-        assert hit == "AKIA" + md5_hex(f"sk:{d}").translate(tr)[:16]
-    for d, hit in by_kind.get("hex_token_32", set()):
-        assert hit == "tok_" + md5_hex(f"tk:{d}")
-
-
-_KN_D = 0.75
-
-
-def _write_documents(tmp_path, rows):
-    tbl = pa.table(
-        {
-            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-            "text": pa.array([r[1] for r in rows], pa.string()),
-            "lang": pa.array(["en"] * len(rows), pa.string()),
-            "source": pa.array(["src0"] * len(rows), pa.string()),
-            "n_chars": pa.array([len(r[1]) for r in rows], pa.int64()),
-        }
-    )
-    pq.write_table(tbl, str(tmp_path / "documents.parquet"))
-    return str(tmp_path)
-
-
-def _kn_bruteforce(texts):
-    """Positional-bigram Kneser-Ney from first principles: bigram (w, nxt)
-    exists iff slot i is non-empty AND the literal next slot i+1 is
-    non-empty — a run of consecutive spaces yields NO bigram across it."""
-    bi = Counter()
-    for t in texts:
-        slots = t.lower().split(" ")
-        for i, w in enumerate(slots[:-1]):
-            nxt = slots[i + 1]
-            if w != "" and nxt != "":
-                bi[(w, nxt)] += 1
-    cw = Counter()
-    n1p_fwd = Counter()
-    n1p_rev = Counter()
-    for (w, nxt), c in bi.items():
-        cw[w] += c
-        n1p_fwd[w] += 1
-        n1p_rev[nxt] += 1
-    nbt = len(bi)
-    out = {}
-    for (w, nxt), cb in bi.items():
-        pkn = (
-            max(cb - _KN_D, 0.0) / cw[w]
-            + _KN_D * n1p_fwd[w] / cw[w] * (n1p_rev[nxt] / nbt)
-        )
-        out[(w, nxt)] = (cb, cw[w], n1p_rev[nxt], math.floor(pkn * 1e9 + 0.5))
-    return out
-
-
-def test_kneser_ney_positional_bigrams_on_consecutive_spaces(spark, tmp_path):
-    # "a  b" (two spaces) must yield NO (a,b) bigram; "x y" repeated pins
-    # the counts; an empty leading slot (" z q") exercises the w='' drop.
-    rows = [
-        (1, "a  b x y"),
-        (2, "x y x y"),
-        (3, " z q"),
-        (4, "a b"),
-    ]
-    sf_dir = _write_documents(tmp_path, rows)
-    expect = _kn_bruteforce([t for _, t in rows])
-    got = {
-        (r["w"], r["nxt"]): (r["cb"], r["cw"], r["n1p_rev"], r["pkn_x1e9"])
-        for r in queries()["text_bigram_kneser_ney"](spark, sf_dir).collect()
-    }
-    # every produced pair must match brute force exactly
-    assert got == {k: v for k, v in expect.items()}  # top-200 >> 6 pairs here
-    # the regression scenario itself: no bigram spans the double space
-    assert ("a", "b") in got and got[("a", "b")][0] == 1  # only from doc 4
-    assert ("y", "x") in got  # doc 2 interior pair still present
-
-
-def _shannon_unats(s):
-    n = len(s)
-    cnt = Counter(s)
-    # sorted distinct fold order, as both engines compute it
-    acc = 0.0
-    for ch in sorted(cnt):
-        acc += cnt[ch] * math.log(cnt[ch])
-    return math.floor((math.log(n) - acc / n) * 1e6 + 0.5)
-
-
-def test_secrets_scan_plants_jwt_and_entropy_gate(spark):
-    rows = queries()["text_secrets_scan"](spark, SF0001).collect()
-    by_kind = {}
-    for r in rows:
-        by_kind.setdefault(r["kind"], []).append(r)
-    n_docs = 500  # sf0.001 documents table
-    # recall: every planted secret is found, exactly once per planted doc
-    assert len(by_kind["aws_access_key"]) == len(range(0, n_docs, 17))
-    assert len(by_kind["hex_token_32"]) == len(range(0, n_docs, 23))
-    assert len(by_kind["jwt"]) == len(range(0, n_docs, 29))
-    # precision: the low-entropy decoy (tok_ + 32*'a', planted every 31st
-    # doc) matches the hex pattern but must be dropped by the entropy gate
-    assert all("a" * 32 not in r["hit"] for r in by_kind["hex_token_32"])
-    # jwt shape: three dot-separated parts, first two base64url-of-'{"'
-    for r in by_kind["jwt"]:
-        parts = r["hit"].split(".")
-        assert len(parts) == 3 and parts[0].startswith("eyJ") and parts[1].startswith("eyJ")
-    # entropy witness: recompute Shannon micro-nats in pure Python
-    for r in rows:
-        assert r["entropy_unats"] == _shannon_unats(r["hit"])
-        assert r["entropy_unats"] >= (0 if r["kind"] == "aws_access_key" else 1_500_000)
-
-
-def test_novelty_rate_matches_bruteforce(spark):
-    """First-seen 5-gram novelty per doc (min-doc_id ownership), exact
-    integer ppm, recomputed with plain dict bookkeeping."""
-    docs = sorted(
-        (r["doc_id"], r["text"])
-        for r in spark.read.parquet(SF0001 + "/documents.parquet").collect()
-        if len(r["text"]) > 0
-    )
-    gram_sets = {}
-    for did, text in docs:
-        toks = text.lower().split(" ")
-        n = max(len(toks) - 4, 1)
-        gram_sets[did] = {" ".join(toks[i : i + 5]) for i in range(n)}
-    first = {}
-    for did in sorted(gram_sets):
-        for g in gram_sets[did]:
-            first.setdefault(g, did)
-    expect = {}
-    for did, gs in gram_sets.items():
-        total = len(gs)
-        novel = sum(1 for g in gs if first[g] == did)
-        expect[did] = (total, novel, (2 * 1_000_000 * novel + total) // (2 * total))
-    got = {
-        r["doc_id"]: (r["n_shingles"], r["n_novel"], r["novelty_ppm"])
-        for r in queries()["text_novelty_rate"](spark, SF0001).collect()
-    }
-    assert got == expect
-
-
-def test_lang_confusion_crosstab_math(spark):
-    """Witnesses the confusion-matrix arithmetic (counts + exact ppm
-    shares + the binary-correctness flag) against the langid operator's
-    own predictions collected once — langid's heuristic itself is covered
-    by its oracle differential."""
-    from gcp_cloudsql_to_bigquery_spark.operators.text import text_langid
-
-    pred = [
-        (r["lang"], r["pred_lang"])
-        for r in text_langid(spark, SF0001).select("lang", "pred_lang").collect()
-    ]
-    n_total = len(pred)
-    cm = defaultdict(int)
-    for a, p in pred:
-        cm[(a, p)] += 1
-    expect = {
-        k: (n, (a == "en") == (p == "en"), (2 * 1_000_000 * n + n_total) // (2 * n_total))
-        for (a, p), n in cm.items()
-        for k in [(a, p)]
-        for a, p in [k]
-    }
-    got = {
-        (r["actual"], r["pred_lang"]): (r["n"], r["correct"], r["share_ppm"])
-        for r in queries()["text_lang_confusion"](spark, SF0001).collect()
-    }
-    assert got == expect
-
-
-def test_short_doc_ngram_zero_grams(spark, hostile_sf):
-    """Docs shorter than the n-gram width produce ZERO grams (no crash, no
-    descending sequence): the empty doc reports n_grams=0 and NULL
-    dup_fraction/flagged on the Spark side."""
-    import __spark_entry__ as entry
-
-    out = {
-        r["doc_id"]: r
-        for r in entry.queries()["text_repetition_filter"](spark, hostile_sf).collect()
-    }
-    # '', 'a', '\n\t\n' — each a single space-token, so zero 3-grams
-    # (doc 2, '   ', splits into FOUR empty tokens and legally has 2 grams)
-    for doc_id in (0, 1, 3):
-        assert out[doc_id]["n_grams"] == 0
-        assert out[doc_id]["dup_fraction"] is None
-        assert out[doc_id]["flagged"] is None
-    assert out[2]["n_grams"] == 2
-    assert out[6]["n_grams"] > 0  # the 10k-char doc still scores
-
-
-def test_contamination_planted_pair_found(spark, hostile_sf):
-    """The generator plants a 12-token overlap between eval doc 20 and
-    train doc 55 — the contamination scan must flag exactly that pair
-    above its >= 5 shared-5-gram threshold."""
-    import __spark_entry__ as entry
-
-    rows = entry.queries()["text_contamination_ngram"](spark, hostile_sf).collect()
-    pairs = {(r["eval_doc"], r["train_doc"]) for r in rows}
-    assert (20, 55) in pairs
-    flagged = [r for r in rows if (r["eval_doc"], r["train_doc"]) == (20, 55)]
-    assert flagged[0]["n_shared"] >= 5
